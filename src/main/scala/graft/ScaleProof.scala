@@ -117,36 +117,18 @@ object ScaleProof {
       }
       store
     }
-    // manifest-mode twin of admitSetup (the publish-mode A/B)
-    val admitMfSeeded = scala.collection.mutable.Set.empty[Long]
-    def admitManifestSetup(n: Long, docs: DataFrame): String = {
-      val store = s"$work/admmanifest_$n"
-      if (!admitMfSeeded(n)) {
-        for (b <- 0 until 4)
-          Dedup.nearDupFilterBatch(
-            docs.filter(pmod(col("doc_id"), lit(4L)) === b),
-            store, "doc_id", "text",
-            nBuckets = admitBucketsFor(n), autoCompactFiles = 16,
-            manifestStore = true)
-        admitMfSeeded += n
-      }
-      store
-    }
     val admitRep = new java.util.concurrent.atomic.AtomicLong(0)
-    val admitMaintRep = new java.util.concurrent.atomic.AtomicLong(0)
     val admitMaintMfRep = new java.util.concurrent.atomic.AtomicLong(0)
     val admitSplitRep = new java.util.concurrent.atomic.AtomicLong(0)
-    val admitSplitDirs =
-      scala.collection.mutable.Map.empty[Long, Array[Int]]
-    // removal-ONLY manifest leg: deterministic 8-doc batches, admitted
+    // removal-ONLY leg: deterministic 8-doc batches, admitted
     // UNTIMED at setup so each timed rep pays exactly one takedown
     def admitRemovalBatch(r: Int): DataFrame = CorpusGenerator
       .documents(spark, 8, seed = 9900 + r)
       .select((col("doc_id") + lit(40000000L + r * 1000L)).as("doc_id"),
         col("text"))
     // own store, seeded FULLY FOLDED (tailFoldFiles = 0, the
-    // admitSplitSetup rule): admitManifestSetup's store sits entirely
-    // in the L0 tail at small n, so a takedown there rewrites one tail
+    // admitSplitSetup rule): admitSetup's store sits entirely in the
+    // L0 tail at small n, so a takedown there rewrites one tail
     // file while the big store's takedown walks the bucket path — the
     // exponent would compare shapes, not scales
     val admitRemoveSeeded = scala.collection.mutable.Set.empty[Long]
@@ -158,7 +140,7 @@ object ScaleProof {
             docs.filter(pmod(col("doc_id"), lit(4L)) === b),
             store, "doc_id", "text",
             nBuckets = admitBucketsFor(n), autoCompactFiles = 16,
-            tailFoldFiles = 0, manifestStore = true)
+            tailFoldFiles = 0)
         for (r <- 0 to reps + 1)
           Dedup.nearDupFilterBatch(admitRemovalBatch(r), store,
             "doc_id", "text", nBuckets = admitBucketsFor(n),
@@ -479,36 +461,16 @@ object ScaleProof {
         // followed by a content-keyed TAKEDOWN of that same batch.
         // Admission reads the pruned slice under the window filter;
         // the takedown re-derives the batch's keys and rewrites only
-        // its touched bucket directories — both O(batch), so expect a
-        // near-flat exponent like admit_steady's (a full-sweep
-        // removal here would be exponent ≈ 1 by construction). The
-        // removal also returns the store to its pre-rep key set, so
-        // reps don't grow state.
-        "admit_maint" -> (() => {
-          val store = admitSetup(n, docs)
-          val r = admitMaintRep.incrementAndGet()
-          val batch = CorpusGenerator
-            .documents(spark, 8, seed = 9000 + r)
-            .select((col("doc_id") + lit(20000000L + r * 1000L))
-              .as("doc_id"), col("text"))
-          val now = System.currentTimeMillis()
-          Dedup.nearDupFilterBatch(batch, store, "doc_id", "text",
-            nBuckets = admitBucketsFor(n), autoCompactFiles = 16,
-            admittedAt = now,
-            suppressSince = now - 24L * 3600 * 1000).count()
-          Dedup.nearDupRemove(batch, store, "doc_id", "text",
-            nBuckets = admitBucketsFor(n))
-        }),
-        // the SAME windowed-admit + takedown turn against a MANIFEST
-        // store — prices the commit-log publish mode's per-turn
-        // overhead (CAS commits, manifest parse/serialize, staged
-        // dirs) against admit_maint's listing layout at both scales.
-        // Manifest size grows with the store's file count, so this
-        // leg also watches that the O(1)-publish claim is not hiding
-        // an O(manifest) parse term: expect admit_maint's near-flat
-        // exponent plus a constant.
+        // its touched buckets' file lists — both O(batch), so expect a
+        // near-flat exponent like admit_steady's plus the per-turn
+        // commit constant (a full-sweep removal here would be exponent
+        // ≈ 1 by construction). The manifest size grows with the
+        // store's file count, so this leg also watches that the
+        // O(touched) commit claim is not hiding an O(manifest) parse
+        // term. The removal returns the store to its pre-rep key set,
+        // so reps don't grow state.
         "admit_maint_manifest" -> (() => {
-          val store = admitManifestSetup(n, docs)
+          val store = admitSetup(n, docs)
           val r = admitMaintMfRep.incrementAndGet()
           val batch = CorpusGenerator
             .documents(spark, 8, seed = 9500 + r)
@@ -522,15 +484,15 @@ object ScaleProof {
           Dedup.nearDupRemove(batch, store, "doc_id", "text",
             nBuckets = admitBucketsFor(n))
         }),
-        // the TAKEDOWN alone against the manifest store — the removal
-        // cost curve the combined admit_maint_manifest turn folds into
-        // its admission: batches were admitted at setup (untimed), so
-        // each rep is exactly one content-keyed takedown — re-derive
-        // the batch's keys, read its touched chains through their
-        // group manifests, one serializable commit (no drain). Both
-        // the detection read and the group rewrites are O(batch
-        // chains), so expect a near-flat exponent like admit_maint's;
-        // this is the GDPR-latency number an operator actually quotes.
+        // the TAKEDOWN alone — the removal cost curve the combined
+        // admit_maint_manifest turn folds into its admission: batches
+        // were admitted at setup (untimed), so each rep is exactly one
+        // content-keyed takedown — re-derive the batch's keys, read its
+        // touched chains through their group manifests, one
+        // serializable commit. Both the detection read and the group
+        // rewrites are O(batch chains), so expect a near-flat exponent
+        // like admit_maint_manifest's; this is the GDPR-latency number
+        // an operator actually quotes.
         "admit_remove_manifest" -> (() => {
           val store = admitRemoveSetup(n, docs)
           val r = admitRemoveRep.updateWith(n)(
@@ -545,11 +507,11 @@ object ScaleProof {
         // baseline the O(batch) admit legs contrast against: each rep
         // re-buckets the whole seeded store to twice its modulus and
         // back (two full migrations, ending at the original layout so
-        // the other admit legs see it unchanged). The batched
-        // implementation is a constant FOUR jobs however many bucket
-        // directories exist; expect exponent ≈ 1 (data-linear — every
-        // key row moves twice), NOT super-linear (a per-directory job
-        // loop would add an O(modulus) scheduling term on top).
+        // the other admit legs see it unchanged). Each migration is a
+        // constant number of jobs however many buckets exist; expect
+        // exponent ≈ 1 (data-linear — every key row moves twice), NOT
+        // super-linear (a per-bucket job loop would add an O(modulus)
+        // scheduling term on top).
         "admit_rebucket" -> (() => {
           val store = admitSetup(n, docs)
           val nb = admitBucketsFor(n)
@@ -567,43 +529,22 @@ object ScaleProof {
         // where the full migration is data-linear. This is the growth
         // cost an ingest actually pays per maintenance turn, with no
         // exclusivity window at all. (The policy pass that CHOOSES
-        // the bucket is a driver-side O(buckets) listing, priced
-        // separately in its Scaladoc; the split is the data mover.)
+        // the bucket is a driver-side O(groups) manifest read; the
+        // split is the data mover.)
         "admit_split" -> (() => {
           val store = admitSplitSetup(n, docs)
           val r = admitSplitRep.incrementAndGet()
-          // pick the target from a FRESH listing of existing bucket
-          // directories (arithmetic over the modulus could land on a
-          // bucket an earlier split emptied into its sibling — whose
-          // directory is then gone — and abort the whole bench run on
-          // the moved>0 non-vacuity gate at small per-bucket counts).
-          // ONE root listing per (store, n) — cached across reps (a
-          // stale entry for a later-emptied dir is absorbed by the
-          // walk-forward probe); non-emptiness is probed walking
-          // forward from the rep's deterministic start (almost always
-          // the first candidate), never a per-bucket listing sweep —
-          // the selection must stay O(1)-ish or it, not the split, is
-          // what the exponent measures.
-          val fs = new org.apache.hadoop.fs.Path(store)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val dirs = admitSplitDirs.getOrElseUpdate(n,
-            fs.listStatus(new org.apache.hadoop.fs.Path(store))
-              .filter(s => s.isDirectory &&
-                s.getPath.getName.startsWith("adm_kb="))
-              .map(_.getPath.getName.stripPrefix("adm_kb=").toInt)
-              .sorted)
-          require(dirs.nonEmpty, s"admit_split has no bucket at n=$n")
-          val start = ((r * 31L) % dirs.length).toInt
-          val addr = (0 until dirs.length).iterator
-            .map(i => dirs((start + i) % dirs.length))
-            .find { a =>
-              scala.util.Try(fs.listStatus(new org.apache.hadoop.fs.Path(
-                  store, s"adm_kb=$a"))).getOrElse(Array.empty)
-                .exists(f => f.isFile &&
-                  f.getPath.getName.endsWith(".parquet"))
-            }
-            .getOrElse(sys.error(
-              s"admit_split has no non-empty bucket at n=$n"))
+          // pick the target from the manifest's per-bucket sizes
+          // (driver-side, no filesystem listing): arithmetic over the
+          // modulus could land on a bucket an earlier split emptied into
+          // its sibling, and abort the whole bench run on the moved>0
+          // non-vacuity gate. Each rep picks a deterministic index
+          // into the non-empty buckets.
+          val live = graft.functions.AdmissionManifestStore(store)
+            .bucketSizes(spark).filter(_._3 > 0L).map(_._1).sorted
+          require(live.nonEmpty,
+            s"admit_split has no non-empty bucket at n=$n")
+          val addr = live(((r * 31L) % live.length).toInt)
           val moved = Dedup.splitAdmittedBucket(spark, store, addr)
           require(moved > 0L,
             s"admit_split is vacuous: bucket $addr at n=$n was empty")
@@ -994,13 +935,10 @@ object ScaleProof {
       if (selected.exists(_._1.startsWith("restore_copyback")))
         restoreSetup(n, docs)
       if (selected.exists(s => s._1.startsWith("admit_") &&
-          s._1 != "admit_split" && s._1 != "admit_maint_manifest" &&
-          s._1 != "admit_remove_manifest"))
+          s._1 != "admit_split" && s._1 != "admit_remove_manifest"))
         admitSetup(n, docs)
       if (selected.exists(_._1 == "admit_split"))
         admitSplitSetup(n, docs)
-      if (selected.exists(_._1 == "admit_maint_manifest"))
-        admitManifestSetup(n, docs)
       if (selected.exists(_._1 == "admit_remove_manifest"))
         admitRemoveSetup(n, docs)
       for ((name, f) <- selected) {

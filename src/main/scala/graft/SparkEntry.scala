@@ -2999,16 +2999,7 @@ object SparkEntry {
     // minhash family, fixed split), so the sequential admission —
     // within-batch smaller-id rule, then the store join with
     // self-exclusion — mirrors in SQL over the shared bands CTE.
-    // DELIBERATE publish-mode assignment (not incidental): the
-    // docs_minhash_admission* family runs MANIFEST publish mode (the
-    // object-store-safe commit-log layout an S3-backed deployment
-    // would pick; decisions identical by the parity spec) while
-    // docs_embed_admission keeps the LISTING layout (the
-    // HDFS-semantics default) — so the oracle gate crosses BOTH
-    // publish modes every round. The decision rule itself lives on
-    // nearDupFilterBatch's scaladoc (`manifestStore`). Mode
-    // non-vacuity is asserted in the query: the store must actually
-    // carry a commit log.
+    // Non-vacuity: the store must carry its commit log.
     "docs_minhash_admission" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val r = docs.agg(min(col("doc_id")).cast("long"),
@@ -3016,8 +3007,7 @@ object SparkEntry {
       val thr = (r.getLong(0) + r.getLong(1)) / 2
       val store = scratchDir(s, "mhadm") // fresh per invocation
       val a1 = Dedup.nearDupFilterBatch(
-        docs.filter(col("doc_id") <= thr), store, "doc_id", "text",
-        manifestStore = true)
+        docs.filter(col("doc_id") <= thr), store, "doc_id", "text")
         .select(col("doc_id"), lit(1L).as("batch"))
       val a2 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") > thr), store, "doc_id", "text")
@@ -3025,7 +3015,7 @@ object SparkEntry {
       val fs = new org.apache.hadoop.fs.Path(store)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       require(fs.exists(new org.apache.hadoop.fs.Path(store, "_commits")),
-        "docs_minhash_admission did not run in manifest publish mode")
+        "docs_minhash_admission did not write an admission commit log")
       a1.unionAll(a2)
     }),
 
@@ -3034,13 +3024,13 @@ object SparkEntry {
     // migration (16 buckets → 32) between the two batches — the
     // modulus is engine-internal, so the oracle is the SAME
     // sequential-admission SQL. Runs the migration (re-key, staged
-    // partitioned publish, pending-marker lifecycle) through the hash
+    // partitioned write, one layout-swapping commit) through the hash
     // gate every round; batch 2 probes the MIGRATED layout. The
     // moduli are deliberately SMALLER than production defaults: the
     // decision-invariance coverage is identical at any modulus pair
-    // (the migration re-keys every row either way), while staging /
-    // rename / listing fan-out — pure proof-row overhead — scales
-    // with the directory count.
+    // (the migration re-keys every row either way), while staging
+    // fan-out — pure proof-row overhead — scales with the bucket
+    // count.
     "docs_minhash_admission_rebucket" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val r = docs.agg(min(col("doc_id")).cast("long"),
@@ -3049,7 +3039,7 @@ object SparkEntry {
       val store = scratchDir(s, "mhadmrb") // fresh per invocation
       val a1 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") <= thr), store, "doc_id", "text",
-        nBuckets = 16, manifestStore = true)
+        nBuckets = 16)
         .select(col("doc_id"), lit(1L).as("batch"))
       Dedup.rebucketAdmitted(s, store, 32)
       val a2 = Dedup.nearDupFilterBatch(
@@ -3063,9 +3053,9 @@ object SparkEntry {
     // stop-the-world migration above: admissions run with a byte
     // budget that auto-SPLITS over-budget buckets into power-of-two
     // children inside the writer's own turns (extendible hashing; no
-    // pending marker, no exclusivity — cost bounded by one bucket's
-    // data per split). The split layout is engine-internal, so the
-    // oracle is the sequential-admission SQL over the same slice: any
+    // exclusivity — cost bounded by one bucket's data per split). The
+    // split layout is engine-internal, so the oracle is the
+    // sequential-admission SQL over the same slice: any
     // split that strands a key off its probe chain, or a chain probe
     // that misses a depth, hash-fails this row. Non-vacuity is
     // asserted in the query itself: the store must actually have
@@ -3087,8 +3077,7 @@ object SparkEntry {
       val a1 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") <= thr), store, "doc_id", "text",
         nBuckets = 4, tailFoldFiles = 0,
-        maxBucketBytes = 1L, maxSplitsPerTurn = 2,
-        manifestStore = true)
+        maxBucketBytes = 1L, maxSplitsPerTurn = 2)
         .select(col("doc_id"), lit(1L).as("batch"))
       val a2 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") > thr), store, "doc_id", "text",
@@ -3120,8 +3109,7 @@ object SparkEntry {
       val thr = (r.getLong(0) + r.getLong(1)) / 2
       val store = scratchDir(s, "mhadmrm") // fresh per invocation
       val a1 = Dedup.nearDupFilterBatch(
-        docs.filter(col("doc_id") <= thr), store, "doc_id", "text",
-        manifestStore = true)
+        docs.filter(col("doc_id") <= thr), store, "doc_id", "text")
         .select(col("doc_id"), lit(1L).as("batch"))
       Dedup.nearDupRemove(
         docs.filter(col("doc_id") <= thr && col("doc_id") % 5 === 2),
@@ -3151,7 +3139,7 @@ object SparkEntry {
       val store = scratchDir(s, "mhadmw") // fresh per invocation
       val a1 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") <= t1), store, "doc_id", "text",
-        admittedAt = 1000L, manifestStore = true)
+        admittedAt = 1000L)
         .select(col("doc_id"), lit(1L).as("batch"))
       val a2 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") > t1 && col("doc_id") <= t2), store,

@@ -269,30 +269,23 @@ object StreamScaleProof {
           s""""feed_rows":${feed.count()},"view_rows":${view1.count()}}""")
       }
       } // medallionWanted
-      // ---- streaming ADMISSION + mid-stream takedown, BOTH publish
-      // modes ----
-      // The batch-side ScaleProof prices admit_steady/admit_maint (and
-      // the admit_maint_manifest A/B) as raw library calls; these legs
-      // price the SAME maintenance shape THROUGH the streaming wrapper
+      // ---- streaming ADMISSION + mid-stream takedown ----
+      // The batch-side ScaleProof prices admit_steady and
+      // admit_maint_manifest as raw library calls; this leg prices the
+      // SAME maintenance shape THROUGH the streaming wrapper
       // (readStream → foreachBatch → nearDupFilterBatch +
       // nearDupRemove per micro-batch, windowed stamps active) against
       // a store seeded at n/20 docs — at the recorded factor-100 run
       // that is the 500k-doc store. Batch count AND batch size are
       // FIXED (8 × 64 docs) while the store scales with n, so the
       // exponent isolates per-batch cost vs store size: expect ≈
-      // admit_maint's near-flat curve, the foreachBatch harness adding
-      // only constant per-trigger overhead. The `_manifest` twin runs
-      // the commit-log publish mode — the configuration built FOR
-      // production object stores, priced through the same streaming
-      // topology it would actually run under.
-      for (mf <- Seq(false, true)) {
-      val stage =
-        if (mf) "admission_stream_manifest" else "admission_stream"
-      if (want(stage)) {
-      record(stage, n, {
+      // admit_maint_manifest's near-flat curve, the foreachBatch
+      // harness adding only constant per-trigger overhead.
+      if (want("admission_stream")) {
+      record("admission_stream", n, {
         import org.apache.spark.sql.functions.{col, lit, pmod}
         val nDocs = math.max(512L, n / 20)
-        val store = s"$root/admstore_$mf"
+        val store = s"$root/admstore"
         val seed = graft.sources.CorpusGenerator
           .documents(spark, nDocs, seed = 41L)
         // tailFoldFiles = 0: seed fully FOLDED into L1 buckets at BOTH
@@ -304,9 +297,8 @@ object StreamScaleProof {
             seed.filter(pmod(col("doc_id"), lit(4L)) === b),
             store, "doc_id", "text",
             nBuckets = math.max(16, (nDocs / 100).toInt),
-            autoCompactFiles = 16, tailFoldFiles = 0, admittedAt = 1000L,
-            manifestStore = mf)
-        val feedDir = s"$root/admfeed_$mf"
+            autoCompactFiles = 16, tailFoldFiles = 0, admittedAt = 1000L)
+        val feedDir = s"$root/admfeed"
         graft.sources.CorpusGenerator
           .documents(spark, 512, seed = 42L)
           .select((col("doc_id") + lit(50000000L)).as("doc_id"),
@@ -330,16 +322,14 @@ object StreamScaleProof {
               nBuckets = math.max(16, (nDocs / 100).toInt))
             ()
           }
-          .option("checkpointLocation", s"$root/ckpt_admission_$mf")
+          .option("checkpointLocation", s"$root/ckpt_admission")
           .trigger(Trigger.AvailableNow)
           .start())
       })
-      }
-      } // admission_stream(_manifest)
-      // ---- streaming admission with ONLINE SPLITS riding the turns,
-      // both publish modes ----
+      } // admission_stream
+      // ---- streaming admission with ONLINE SPLITS riding the turns ----
       // The batch-side admit_split leg prices one extendible-hashing
-      // bucket split as a raw library call; these legs price the
+      // bucket split as a raw library call; this leg prices the
       // POLICY'S split path live in the stream: every micro-batch
       // admission runs with a 1-byte bucket budget (any non-empty
       // bucket is over-budget at every scale) and tailFoldFiles = 0,
@@ -349,28 +339,21 @@ object StreamScaleProof {
       // one near-constant bucket's data — expect an exponent ≈
       // admit_split's near-flat 0.01-0.1 band, the foreachBatch
       // harness adding only constant per-trigger overhead. Non-vacuity
-      // is asserted inside the leg: the store must have split. The
-      // `_manifest` twin declares depth atomically with the rekeyed
-      // lists (one commit), so it additionally proves online growth
-      // under the commit-log mode inside the live stream.
-      for (mf <- Seq(false, true)) {
-      val stage = if (mf) "admission_stream_split_manifest"
-        else "admission_stream_split"
-      if (want(stage)) {
-      record(stage, n, {
+      // is asserted inside the leg: the store must have split.
+      if (want("admission_stream_split")) {
+      record("admission_stream_split", n, {
         import org.apache.spark.sql.functions.{col, lit, pmod}
         val nDocs = math.max(512L, n / 20)
         val nb = math.max(16, (nDocs / 100).toInt)
-        val store = s"$root/admsplitstore_$mf"
+        val store = s"$root/admsplitstore"
         val seed = graft.sources.CorpusGenerator
           .documents(spark, nDocs, seed = 43L)
         for (b <- 0 until 4)
           graft.functions.Dedup.nearDupFilterBatch(
             seed.filter(pmod(col("doc_id"), lit(4L)) === b),
             store, "doc_id", "text", nBuckets = nb,
-            autoCompactFiles = 16, tailFoldFiles = 0, admittedAt = 1000L,
-            manifestStore = mf)
-        val feedDir = s"$root/admsplitfeed_$mf"
+            autoCompactFiles = 16, tailFoldFiles = 0, admittedAt = 1000L)
+        val feedDir = s"$root/admsplitfeed"
         graft.sources.CorpusGenerator
           .documents(spark, 512, seed = 44L)
           .select((col("doc_id") + lit(60000000L)).as("doc_id"),
@@ -390,23 +373,21 @@ object StreamScaleProof {
               maxBucketBytes = 1L, maxSplitsPerTurn = 1).count()
             ()
           }
-          .option("checkpointLocation", s"$root/ckpt_admission_split_$mf")
+          .option("checkpointLocation", s"$root/ckpt_admission_split")
           .trigger(Trigger.AvailableNow)
           .start())
         val stats = graft.functions.Dedup.admissionStoreStats(spark, store)
         require(stats.maxDepth > 0 && stats.splitBuckets > 0,
-          s"$stage is vacuous: no online split ran " +
+          "admission_stream_split is vacuous: no online split ran " +
             s"(maxDepth=${stats.maxDepth})")
         metrics
       })
-      }
-      } // admission_stream_split(_manifest)
+      } // admission_stream_split
     }
 
     val stages = Seq("bronze", "silver", "gold_bounded", "gold_complete",
       "totals_tws", "ss_join", "admission_stream",
-      "admission_stream_manifest", "admission_stream_split",
-      "admission_stream_split_manifest", "gold_ivm")
+      "admission_stream_split", "gold_ivm")
       .filter(s => results.contains((s, small)) && results.contains((s, big)))
     val exponents = stages.map { s =>
       val e = math.log(results((s, big)).batchSec.sum /

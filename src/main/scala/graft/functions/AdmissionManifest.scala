@@ -3,15 +3,14 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** MANIFEST publish mode for the streaming-admission stores — the
-  * object-store-safe alternative to the default listing layout
-  * ([[Dedup.admitByKeys]]'s `adm_kb=` directories + rename-as-commit
-  * publishes). The default layout is correct on HDFS-semantics
-  * filesystems, but on object stores rename is a copy and listing is
-  * eventually consistent, so the store's source of truth must move
-  * into a commit log. This mode reuses the codes stores' exact
-  * discipline ([[GenerationLog]] — tmp-write + rename-without-
-  * overwrite CAS on `_commits/<v>`, retention GC, orphan vacuum):
+/** The streaming-admission store ([[Dedup.admitByKeys]]'s persisted
+  * key relation): a commit log over immutable parquet files. The
+  * store's source of truth is the log, never a directory listing, so
+  * the protocol holds on object stores (where rename is a copy and
+  * listing is eventually consistent) exactly as on HDFS. It reuses the
+  * codes stores' discipline ([[GenerationLog]] — tmp-write +
+  * rename-without-overwrite CAS on `_commits/<v>`, retention GC, orphan
+  * vacuum):
   *
   *  - the committed generation is a MANIFEST-LIST: a small ROOT
   *    manifest carrying the layout declaration (`nBuckets`,
@@ -21,16 +20,12 @@ import org.apache.spark.sql.functions._
   *    turn carry `bucket addr -> [files]`. A mutation stages fresh
   *    group manifests for ONLY the groups its touched addresses fall
   *    in and commits a root swapping those references — O(touched)
-  *    commit payload however many files the store holds, the same
-  *    invariant every other operation in this store already has. (A
-  *    single-level manifest was the r19 shape; its full-file-list
-  *    serialization was the store's one O(store files)-per-commit
-  *    term, measured at exponent 0.092 in the maintenance A/B.)
+  *    commit payload however many files the store holds.
   *  - every file entry carries the BYTE SIZE recorded at staging
   *    time, so `stats`/`bucketSizes`/the fold's byte budget read the
   *    manifest instead of issuing one `getFileStatus` round-trip per
-  *    file — on an object store that sweep was O(files) sequential
-  *    RPCs per maintenance turn;
+  *    file — on an object store that sweep would be O(files)
+  *    sequential RPCs per maintenance turn;
   *  - data files NEVER move: every mutation (tail append, fold,
   *    compact, split, removal, expiry, stamp, rebucket) writes fresh
   *    uniquely-named directories BESIDE the live ones and commits a
@@ -43,32 +38,17 @@ import org.apache.spark.sql.functions._
   *    attempt ([[GenerationLog.commitWithRetry]], the codes stores'
   *    append rule): a lost CAS race deletes the attempt's staging
   *    (data files AND group manifests) and re-derives against the
-  *    winner's manifest, so commits are SERIALIZABLE — the listing
-  *    layout's drain loops (a removal re-scanning until provably
-  *    clean beside a concurrent fold) and its transient
-  *    FAILED_READ_FILE turn failures structurally disappear, as does
-  *    the decision-window split race ([[Dedup.admitByKeys]]'s
-  *    re-validation loop): a completed split never deletes the files
-  *    a concurrent decision is reading, and maintenance only MOVES
-  *    rows, so a decision against any generation sees the complete
-  *    key set.
+  *    winner's manifest, so commits are SERIALIZABLE — a removal
+  *    completes in one call beside a concurrent fold, and a completed
+  *    split never deletes the files a concurrent decision is reading
+  *    (maintenance only moves rows, so a decision against any
+  *    generation sees the complete key set).
   *
-  * The admission SEMANTICS are byte-identical to the listing layout
-  * (same key derivation, same routed/deep addressing, same window
-  * rules — the parity spec pins it); only publication differs. Mode
-  * is declared at store creation ([[Dedup.nearDupFilterBatch]]'s
-  * `manifestStore` flag) and detected from the store root (`_commits`
-  * exists) ever after — every maintenance entry point dispatches
-  * automatically.
-  *
-  * CHOOSING the publish mode: the listing layout is the default and
-  * the right call on HDFS-semantics filesystems (atomic rename,
-  * consistent listing) — no commit log to maintain, no manifest to
-  * serialize. Pick `manifestStore = true` for object stores (S3-like:
-  * rename is a copy, listing is eventually consistent) or whenever
-  * takedown latency must not depend on drain rescans beside a hot
-  * writer. The decision is per-store and permanent (no in-place
-  * conversion; migrate by replaying admissions into a fresh store).
+  * The first admission creates the store ([[initIfAbsent]]); every
+  * other entry point opens an existing one ([[AdmissionManifestStore.open]]).
+  * A root in the retired listing layout (bucket directories renamed
+  * into place, no `_commits`) is refused with a pointer to the replay
+  * migration — admit its documents into a fresh store.
   */
 private[graft] final class AdmissionManifestStore(storePath: String) {
   import AdmissionManifestStore._
@@ -97,12 +77,15 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** First-admission initialization: commit generation 0 declaring
     * the layout. Idempotent; a concurrent twin loses the CAS and
-    * no-ops against the winner's declaration.
+    * no-ops against the winner's declaration. Only this creation path
+    * checks for a retired listing-layout root — a turn on an existing
+    * store pays no extra listing.
     */
   def initIfAbsent(spark: SparkSession, nBuckets: Int): AdmissionManifest = {
     resolve(spark) match {
       case Some(m) => requireLayout(m, nBuckets); m
       case None =>
+        requireNoListingLayout(hfs(spark), storePath)
         log.commitWithRetry(spark, None, _ => (), cleanupPerRace = true) {
           (_, manOpt) =>
             manOpt match {
@@ -251,27 +234,24 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
     * `dir` while KEEPING `adm_kb` as a data column: the partition
     * directory (`adm_kb_p=`) exists only so [[stagedByAddr]] can
     * assign staged files to addresses from the listing, never so a
-    * reader can re-infer the address. In manifest mode the MANIFEST
-    * is the address map, so reads must not depend on directory
-    * structure — keeping the column in the data lets every read be
-    * ONE plain parquet read of the manifest's file lists (no
-    * basePath partition discovery, no per-generation reader). The
-    * per-generation-reader shape this replaces was the store's real
-    * residual scale term: live generation-dir count grows with churn,
-    * and each reader creation paid its own driver-side schema job per
-    * probe/detection read (measured: the admit_maint A/B's manifest
-    * gap at the 500k store survived the manifest-list split because
-    * of it).
+    * reader can re-infer the address. The MANIFEST is the address
+    * map, so reads must not depend on directory structure — keeping
+    * the column in the data lets every read be ONE plain parquet read
+    * of the manifest's file lists (no basePath partition discovery,
+    * no per-generation reader; live generation-dir count grows with
+    * churn, and a reader per generation would pay its own driver-side
+    * schema job per probe/detection read).
     */
   /** `inputBytes`: the staged relation's source size, read off the
     * manifest's recorded file sizes — drives the shuffle fan-out
-    * ([[Dedup.stagePartitions]]); a turn-sized fold must not pay a
-    * machine-parallelism task wave, a corpus-sized rebucket keeps it.
+    * ([[AdmissionManifestStore.stagePartitions]]); a turn-sized fold
+    * must not pay a machine-parallelism task wave, a corpus-sized
+    * rebucket keeps it.
     */
   private def stageByAddr(df: DataFrame, dir: String,
       inputBytes: Long): Unit =
     df.withColumn("adm_kb_p", col("adm_kb"))
-      .repartition(Dedup.stagePartitions(df.sparkSession, inputBytes),
+      .repartition(stagePartitions(df.sparkSession, inputBytes),
         col("adm_kb_p"))
       .write.mode("overwrite").partitionBy("adm_kb_p")
       .parquet(log.subPath(dir))
@@ -342,7 +322,7 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
     val bucketFiles = bucketsFor(spark, man, touched)
       .values.flatten.toSeq
     readFiles(spark, bucketFiles ++ man.tail)
-      .map(df => Dedup.inWindow(df, suppressSince)
+      .map(df => inWindow(df, suppressSince)
         .select(col("doc_id").as("s_id") +:
           keyCols.map(c => col(c).as(s"s_$c")): _*))
   }
@@ -372,11 +352,11 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Fold the tail into the bucket lists when it exceeds the file or
     * byte budget (byte sizes read from the manifest — no status
-    * RPCs), then compact folded buckets over the file budget — the
-    * listing layout's [[Dedup.foldAdmissionTail]] under manifest
-    * commits. Everything derives inside the attempt, so a raced fold
-    * re-reads the winner's tail. Only the folded addresses' groups
-    * rewrite. Returns the folded bucket addresses.
+    * RPCs), then compact folded buckets over the file budget.
+    * Everything derives inside the attempt, so a raced fold re-reads
+    * the winner's tail. Only the folded addresses' groups rewrite;
+    * expired rows (`expireBefore`) are shed in the fold itself and
+    * never reach L1. Returns the folded bucket addresses.
     */
   def foldAndCompact(spark: SparkSession, autoCompactFiles: Int,
       tailFoldFiles: Int, expireBefore: Long): Seq[Int] = {
@@ -389,13 +369,15 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
       else {
         val bytes = man.tail.map(_.size).sum
         if (man.tail.length <= tailFoldFiles &&
-            bytes <= Dedup.admissionTailMaxBytes) None
+            bytes <= tailMaxBytes) None
         else {
-          val raw = Dedup.inWindow(
+          val raw = inWindow(
             readFiles(spark, man.tail).get, expireBefore)
           // re-route through the CURRENT depth map (stored adm_kb was
-          // routed at admission time and may predate splits since) —
-          // same rule as the listing fold
+          // routed at admission time and may predate splits since) so
+          // folded rows land in their live — deepest — bucket; stale
+          // placement would still be probe-correct (shallower on the
+          // same chain), this just keeps deep buckets from re-growing
           val splits = man.splits
           val routed =
             if (splits.depthByAddr.isEmpty) raw
@@ -427,7 +409,9 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
   /** Rewrite any of `buckets` holding more than `maxFiles` files into
     * one deduplicated (newest-stamp) file each — one staged
     * partitioned write, one commit swapping the touched groups'
-    * lists.
+    * lists. `expireBefore` > 0 folds retention into the rewrite for
+    * free: a bucket that keeps growing keeps crossing the file budget
+    * and keeps shedding expired rows.
     */
   def compactBuckets(spark: SparkSession, buckets: Seq[Int],
       maxFiles: Int, expireBefore: Long): Seq[Int] = {
@@ -442,10 +426,14 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
       else {
         val cur = readFiles(spark, over.values.flatten.toSeq).get
         val live =
-          if (expireBefore <= 0L) cur else Dedup.inWindow(cur, expireBefore)
-        // collapse replayed appends keeping the NEWEST stamp (max
-        // ignores nulls; all-legacy groups stay null = in-window
-        // forever) — identical to the listing compactor
+          if (expireBefore <= 0L) cur else inWindow(cur, expireBefore)
+        // collapse replayed appends keeping the NEWEST stamp — max is
+        // the suppression-conservative choice for windowed dedup;
+        // plain distinct would keep one row per (key, ts) and let
+        // replays grow the store. max ignores nulls, so an unstamped
+        // row merged with a stamped re-admission takes the concrete
+        // stamp, and an all-unstamped group stays null (= in-window
+        // forever, the fail-closed rule)
         val dedup =
           if (!live.columns.contains("adm_ts")) live.distinct()
           else live.groupBy(live.columns.filterNot(_ == "adm_ts")
@@ -467,9 +455,8 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Split ONE bucket into its power-of-two children — the online
     * growth step. One commit carries the rekeyed lists AND the depth
-    * declaration atomically, so the listing layout's declare-depth-
-    * before-moving ordering (and its decision-window race) has no
-    * manifest-mode counterpart. Returns rows rewritten.
+    * declaration atomically, so no reader ever sees moved rows without
+    * the deeper chain that reaches them. Returns rows rewritten.
     */
   def splitBucket(spark: SparkSession, addr: Int): Long = {
     var moved = 0L
@@ -515,9 +502,9 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
   /** The shared store rewrite under removal/expiry/stamp: read the
     * target addresses' files (and the tail), stage `keepOf`'s output,
     * commit the swapped lists. `targetsOf = Some(f)` re-derives the
-    * touched addresses from the CURRENT manifest on every attempt
-    * (the serializable-commit twin of the listing drain's per-pass
-    * chain re-expansion) and reads only their groups; `None` is the
+    * touched addresses from the CURRENT manifest on every attempt (so
+    * a concurrent split can never move a target row off the rewrite's
+    * chains) and reads only their groups; `None` is the
     * full sweep (every bucket — O(groups) manifest reads, which a
     * sweep's O(store) data read dominates anyway). Returns `hitsOf`'s
     * row count.
@@ -596,11 +583,10 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Full layout migration to `newN` base buckets — one read of every
     * row, one staged partitioned write, ONE commit swapping the whole
-    * layout (nBuckets, depth map reset, every group). Unlike the
-    * listing layout's [[Dedup.rebucketAdmitted]] this is NOT
-    * exclusive: concurrent probes keep their generation, and a raced
-    * mutation simply re-derives against the migrated manifest.
-    * Returns rows moved.
+    * layout (nBuckets, depth map reset, every group). Not exclusive:
+    * concurrent probes keep their generation, and a raced mutation
+    * simply re-derives against the migrated manifest. Returns rows
+    * moved.
     */
   def rebucket(spark: SparkSession, newN: Int): Long = {
     require(newN > 0, s"newN must be positive: $newN")
@@ -643,8 +629,8 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Operational snapshot from the manifest alone — byte sizes were
     * recorded at staging time, so this issues ZERO per-file status
-    * RPCs (the r19 shape swept one `getFileStatus` per file — O(files)
-    * sequential round-trips per maintenance turn on an object store).
+    * RPCs (one `getFileStatus` per file would be O(files) sequential
+    * round-trips per maintenance turn on an object store).
     */
   def stats(spark: SparkSession): Dedup.AdmissionStoreStats = {
     val man = resolved(spark)
@@ -658,7 +644,6 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
         if (perBucket.isEmpty) 0 else perBucket.map(_._1).max,
       tailFiles = man.tail.length,
       tailBytes = man.tail.map(_.size).sum,
-      rebucketPending = false, // migrations commit atomically here
       declaredBuckets = Some(man.nBuckets),
       maxDepth = man.maxDepth,
       splitBuckets = man.depthByAddr.size)
@@ -682,8 +667,7 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
     * directory names against referenced entries, which are FILE paths
     * here — so the admission store carries its own sweep.)
     *
-    * Default horizon 24 h, matching the listing layout's stale-staging
-    * rationale: every mutation here derives its staging INSIDE the
+    * Default horizon 24 h: every mutation here derives its staging INSIDE the
     * commit-retry attempt, so an attempt stalled past the horizon (GC
     * pause, slow object store) whose staging a vacuum swept can still
     * WIN its CAS and commit a manifest referencing deleted files —
@@ -731,12 +715,58 @@ private[graft] object AdmissionManifestStore {
     */
   private val defaultGroupCount = 64
 
+  /** One hard byte budget on the L0 tail, independent of the file
+    * budget: a single bulk-load batch writes one file but can be
+    * corpus-fraction-sized, and the next batch would pay that full
+    * read — the byte trigger folds it into L1 immediately.
+    */
+  private val tailMaxBytes: Long = 8L << 20
+
+  /** Shuffle-partition count for a staged store rewrite, derived from
+    * the KNOWN input byte size (the manifest-carried file sizes)
+    * instead of the session-wide default: a keyed `repartition(col)`
+    * always fans out to `spark.sql.shuffle.partitions`, and AQE's
+    * coalescing leaves user repartitions at machine parallelism under
+    * the default parallelismFirst policy — so every fold/compact/split
+    * of a turn-sized (KB-scale) slice would pay a full task wave. One
+    * task per ~`graft.admission.stageTargetBytes` (default 32 MB, a
+    * healthy post-compression partition), clamped to the session's
+    * configured parallelism — large inputs keep exactly the previous
+    * fan-out, so this is scale-adaptive, not a local-mode constant.
+    */
+  private def stagePartitions(spark: SparkSession,
+      bytes: Long): Int = {
+    val target = spark.conf.getOption("graft.admission.stageTargetBytes")
+      .map(_.toLong).getOrElse(32L << 20)
+    val max = scala.util.Try(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(200)
+    math.max(1L, math.min(max.toLong,
+      (bytes + target - 1) / math.max(1L, target))).toInt
+  }
+
+  /** Keep only key rows admitted at or after `suppressSince` — the
+    * query-time half of windowed dedup. Rows without a stamp (no
+    * `adm_ts` column, or null) FAIL CLOSED: an unknown-age key is
+    * treated as in-window, so turning windowing on against rows
+    * written before the retention column existed keeps every
+    * previously admitted key suppressing (the conservative default —
+    * the alternative silently re-admits duplicates of the whole
+    * unstamped corpus). Run [[Dedup.stampAdmitted]] once to give such
+    * rows a concrete stamp if they should eventually expire.
+    */
+  private def inWindow(df: DataFrame, suppressSince: Long): DataFrame =
+    if (suppressSince <= 0L) df
+    else if (!df.columns.contains("adm_ts")) df
+    else df.filter(
+      coalesce(col("adm_ts"), lit(Long.MaxValue)) >= lit(suppressSince))
+
   /** One store handle per path, reused across every entry-point
     * dispatch: the handle's [[GenerationLog]] carries the parsed-
     * commit cache (commit files are immutable, so a shared handle is
     * always coherent), and a per-call `new` would re-parse the whole
     * retained manifest history on every operation — the measured
-    * scale term in the manifest-mode maintenance turn.
+    * scale term in the maintenance turn.
     *
     * LRU-capped: a long-lived driver that creates many short-lived
     * stores (fresh scratch paths per run — exactly what the bench and
@@ -769,12 +799,51 @@ private[graft] object AdmissionManifestStore {
   private[graft] def cachedHandleCount: Int =
     instances.synchronized(instances.size)
 
-  /** Mode detection: a store whose root carries a `_commits` log is a
-    * manifest store; everything else is the listing layout.
+  /** The store at `storePath` for a maintenance or read entry point:
+    * Some when its root carries a `_commits` log, None when there is
+    * nothing to open (an absent or empty root — every such entry point
+    * is then a no-op). A retired listing-layout root is refused.
     */
-  def isManifestStore(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(storePath, "_commits"))
+  def open(spark: SparkSession,
+      storePath: String): Option[AdmissionManifestStore] = {
+    val fs = new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new org.apache.hadoop.fs.Path(storePath, "_commits")))
+      Some(apply(storePath))
+    else { requireNoListingLayout(fs, storePath); None }
+  }
+
+  /** Refuse a root without a commit log that holds the retired listing
+    * layout: `adm_kb=` bucket directories, a `tail/` directory, or the
+    * root marker files that layout kept (`_`-prefixed — its declared
+    * modulus, split map and migration marker, and the `_SUCCESS` of
+    * its partitioned fold writes). One root listing, paid only on the
+    * paths that find no `_commits`.
+    */
+  private def requireNoListingLayout(fs: org.apache.hadoop.fs.FileSystem,
+      storePath: String): Unit = {
+    val legacy = scala.util.Try(
+        fs.listStatus(new org.apache.hadoop.fs.Path(storePath)))
+      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
+      .exists { s =>
+        val n = s.getPath.getName
+        if (s.isDirectory) n.startsWith("adm_kb=") || n == "tail"
+        else n.startsWith("_")
+      }
+    if (legacy) refuseListingLayout(storePath)
+  }
+
+  /** The legacy-store error: the listing layout is retired and cannot
+    * be opened or converted in place. The migration is a replay.
+    */
+  def refuseListingLayout(storePath: String): Nothing =
+    throw new UnsupportedOperationException(
+      s"admission store at $storePath is in the retired listing layout " +
+        "(bucket directories and a tail published by rename, no " +
+        "_commits log), which is no longer supported and cannot be " +
+        "converted in place. Migrate by replay: admit the store's " +
+        "documents into a fresh store path with nearDupFilterBatch / " +
+        "embedNearDupFilterBatch.")
 
   /** Test seam: invoked after an attempt's staging is fully written,
     * immediately before its commit claim (the codes stores' seam) —
@@ -790,8 +859,7 @@ private[graft] object AdmissionManifestStore {
   */
 private[graft] final case class AdmFile(path: String, size: Long)
 
-/** The ROOT of one committed generation of a manifest-mode admission
-  * store: the layout declaration (base buckets, group slicing, the
+/** The ROOT of one committed generation of an admission store: the layout declaration (base buckets, group slicing, the
   * depth map — O(split buckets), collapsed by a rebase), the bounded
   * tail's file list, and one reference per non-empty address group to
   * the immutable group-manifest file carrying that slice's
@@ -852,9 +920,9 @@ private[graft] object AdmissionManifest {
     }
     require(nBuckets > 0, "manifest missing nbuckets")
     require(nGroups > 0, "manifest missing ngroups")
-    // the listing layout's _splits read-bounds, applied to the folded-
-    // in declaration: a damaged manifest must fail loudly, not
-    // mis-route probe chains
+    // bound the split declaration on read: a damaged manifest with a
+    // huge maxdepth would make `nBuckets << maxDepth` overflow into
+    // garbage bucket addresses, silently mis-routing probe chains
     require(maxDepth >= 0 && maxDepth <= 30 &&
       (nBuckets.toLong << maxDepth) <= Int.MaxValue.toLong,
       s"manifest maxdepth $maxDepth out of range for base $nBuckets")

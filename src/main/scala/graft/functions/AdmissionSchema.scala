@@ -9,9 +9,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * column must read as null — the fail-closed legacy rule). mergeSchema
   * runs a Spark JOB that fetches and merges every file's footer on
   * every read — a planning+scheduling round-trip per probe, per fold,
-  * per compact, on files that are IMMUTABLE in both publish modes
-  * (listing-layout mutations publish fresh unique names; manifest data
-  * files are write-once by the commit protocol).
+  * per compact, on files that are IMMUTABLE (the store's data files
+  * are write-once by the commit protocol).
   *
   * This helper resolves the same merged schema driver-side instead:
   * each file's Spark schema is read ONCE from its parquet footer's
@@ -40,26 +39,33 @@ private[functions] object AdmissionSchema {
 
   private val sparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
+  /** One file's footer schema, memoized only when DEFINITIVE: a
+    * footer that was read, with or without a parseable Spark schema
+    * key. A failed read (a transient filesystem error) returns None
+    * for this call alone — caching it would disable the fast path for
+    * that file for the life of the JVM.
+    */
   private def footerSchema(
       conf: org.apache.hadoop.conf.Configuration,
       path: org.apache.hadoop.fs.Path, len: Long): Option[StructType] = {
     val k = (path.toString, len)
     val hit = cache.get(k)
     if (hit != null) return hit
-    val resolved: Option[StructType] = scala.util.Try {
+    val json = scala.util.Try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(path, conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val json =
-        try reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(sparkSchemaKey)
-        finally reader.close()
-      Option(json).flatMap(j => scala.util.Try(
-        DataType.fromJson(j).asInstanceOf[StructType]).toOption)
-    }.toOption.flatten
-    if (cache.size() >= maxEntries) cache.clear()
-    cache.put(k, resolved)
-    resolved
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(sparkSchemaKey))
+      finally reader.close()
+    }
+    json.toOption.fold(Option.empty[StructType]) { j =>
+      val resolved = j.flatMap(s => scala.util.Try(
+        DataType.fromJson(s).asInstanceOf[StructType]).toOption)
+      if (cache.size() >= maxEntries) cache.clear()
+      cache.put(k, resolved)
+      resolved
+    }
   }
 
   /** Name-wise merge in first-seen order; all fields nullable (a

@@ -644,46 +644,21 @@ object Dedup {
     *   4. append the survivors' keys to the store, then return the
     *      surviving rows for the caller's sink.
     *
-    * Exactly-once under micro-batch REPLAY (crash between the store
-    * append and the caller's sink write): the store join excludes a
-    * doc's OWN keys (`store.doc_id != batch.doc_id`), so a replayed
-    * batch — whose survivors' keys are already stored — reproduces the
-    * identical survivor set, and duplicate store rows only repeat
-    * join matches that were already matches. Store appends are
-    * monotone.
-    *
-    * The store is an LSM-style two-level layout — a bounded plain
-    * `tail/` absorbing the per-batch appends, folded into
-    * hash-partitioned bucket directories in the writer's own turn —
-    * so each batch joins only its buckets' partition-pruned slice
-    * plus the bounded tail (see [[admitByKeys]]'s scale notes;
-    * `nBuckets` is the BASE layout contract — constant for a store's
-    * lifetime, though over-budget buckets may split incrementally
-    * into power-of-two children, online, via `maxBucketBytes` /
-    * [[splitAdmittedBucket]] — `autoCompactFiles` is the per-bucket
-    * fragmentation budget, and `tailFoldFiles` the tail's).
-    *
-    * Candidate-level semantics, like [[lshCandidatePairs]]: dropping
-    * is probabilistic on true near-dups (tune k/bands), with the same
-    * degenerate-cluster guard (`maxBucketSize`) applied WITHIN the
-    * batch. Docs shorter than one shingle produce no keys and always
-    * survive. Wire it into a stream with
-    * `writeStream.foreachBatch((b, _) => nearDupFilterBatch(b, …)
+    * The store is an [[AdmissionManifestStore]] — a commit log of
+    * immutable parquet files, with the store layout, crash safety,
+    * replay and concurrency contracts documented on [[admitByKeys]]
+    * (the shared core). Candidate-level semantics, like
+    * [[lshCandidatePairs]]: dropping is probabilistic on true
+    * near-dups (tune k/bands), with the same degenerate-cluster guard
+    * (`maxBucketSize`) applied WITHIN the batch. Docs shorter than one
+    * shingle produce no keys and always survive. Wire it into a stream
+    * with `writeStream.foreachBatch((b, _) => nearDupFilterBatch(b, …)
     * .write.mode("append")…)`.
     *
-    * `manifestStore` — the PUBLISH-MODE decision, made once at store
-    * creation (detected from disk ever after; no in-place
-    * conversion). The rule: default `false` (the listing layout —
-    * rename-as-commit, no commit log to maintain) on HDFS-semantics
-    * filesystems, where atomic rename and consistent listing hold;
-    * `true` (the [[AdmissionManifestStore]] commit log — O(touched)
-    * manifest-list commits, serializable mutations, snapshot
-    * isolation) on object stores, where rename is a copy and listing
-    * is eventually consistent, or when takedown latency must not
-    * depend on drain rescans beside a hot writer. The per-turn price
-    * of manifest mode is its CAS commits and group-manifest writes —
-    * measured ≈ at parity with listing at small stores and a small
-    * constant at corpus-scale ones (ScaleProof admit_maint A/B).
+    * `manifestStore` is DEPRECATED and accepted only as `true` (the
+    * default): the commit log is the one store protocol. `false` used
+    * to select the retired listing layout and is refused with the
+    * legacy-store error.
     */
   def nearDupFilterBatch(batch: DataFrame, storePath: String,
                          idCol: String, textCol: String,
@@ -697,7 +672,8 @@ object Dedup {
                          expireBefore: Long = 0L,
                          maxBucketBytes: Long = 0L,
                          maxSplitsPerTurn: Int = 2,
-                         manifestStore: Boolean = false): DataFrame =
+                         manifestStore: Boolean = true): DataFrame = {
+    if (!manifestStore) AdmissionManifestStore.refuseListingLayout(storePath)
     admitByKeys(batch,
       dropOversizedBuckets(
         lshBands(minhashSignatures(
@@ -705,7 +681,8 @@ object Dedup {
         Seq("band", "band_key"), maxBucketSize, "nearDupFilterBatch"),
       storePath, idCol, nBuckets, autoCompactFiles, tailFoldFiles,
       admittedAt, suppressSince, expireBefore, maxBucketBytes,
-      maxSplitsPerTurn, manifestStore)
+      maxSplitsPerTurn)
+  }
 
   /** The shared admission core of the streaming near-dup filters
     * ([[nearDupFilterBatch]]'s minhash bands,
@@ -724,35 +701,39 @@ object Dedup {
     * duplicate store rows only repeat join matches that were already
     * matches. Store appends are monotone.
     *
-    * Scale shape (the 100 TB ingest story) — an LSM-style two-level
-    * layout:
+    * Store protocol ([[AdmissionManifestStore]]): every generation is
+    * a manifest committed by CAS on `_commits/<v>`, referencing
+    * immutable data files in an LSM-style two-level layout —
     *
     *   - L1: the bulk of the store, HASH-PARTITIONED on the key
-    *     columns (`adm_kb = hash(keys) mod nBuckets`, a directory per
-    *     bucket), so the store join reads only the buckets the
-    *     batch's own keys land in (PartitionFilters — at steady state
-    *     a small batch touches a fraction of a corpus-scale store);
-    *   - L0: a bounded `tail/` of plain parquet appends. Each batch
-    *     appends ONE file there (no partitioned write on the hot
-    *     path — a micro-batch's keys can spray across every bucket,
-    *     and paying a directory-per-bucket commit per batch is the
+    *     columns (`adm_kb = hash(keys) mod nBuckets`, one manifest file
+    *     list per bucket), so the store join reads only the buckets the
+    *     batch's own keys land in (the manifest lookup is the pruning —
+    *     at steady state a small batch touches a fraction of a
+    *     corpus-scale store);
+    *   - L0: a bounded tail of plain parquet appends. Each batch
+    *     appends ONE file there (a micro-batch's keys can spray across
+    *     every bucket, and paying a file per bucket per batch is the
     *     write amplification this level exists to absorb) and joins
     *     the whole tail alongside the pruned L1 slice; the tail is
     *     budget-bounded, so that read is O(budget), never
     *     corpus-scale.
     *
-    * Maintenance rides the writer's own turn, hands-free (the upsert
-    * sink's AutoCompact discipline): when the tail exceeds
-    * `tailFoldFiles` files (or a fixed byte budget, so one giant
-    * bulk-load batch can't linger), it is FOLDED — one partitioned
-    * write moves its rows into their L1 buckets, amortizing the
-    * directory fan-out over many batches — and any folded bucket
-    * holding more than `autoCompactFiles` files is rewritten to a
-    * single deduplicated file. Every rewrite publishes new files
-    * BEFORE deleting superseded ones — any crash point leaves at
-    * worst duplicate key rows, which the admission semantics already
-    * tolerate (duplicates only repeat matches), so maintenance
-    * preserves replay idempotence by construction.
+    * `nBuckets` is the base layout, declared by the first admission
+    * and refused loudly when a caller disagrees (probing the wrong
+    * addresses would silently under-suppress); over-budget buckets may
+    * split online into power-of-two children via `maxBucketBytes` /
+    * [[splitAdmittedBucket]], and [[rebucketAdmitted]] migrates the
+    * base. Maintenance rides the writer's own turn, hands-free: when
+    * the tail exceeds `tailFoldFiles` files (or a fixed byte budget, so
+    * one giant bulk-load batch can't linger), it is FOLDED into its L1
+    * buckets, and any folded bucket holding more than
+    * `autoCompactFiles` files is rewritten to a single deduplicated
+    * file. Data files never move: every mutation stages fresh files
+    * and commits a manifest swapping the affected file lists, so a
+    * crash at any point leaves at worst unreferenced staging (reclaimed
+    * by [[AdmissionManifestStore.vacuum]]), never a half-published
+    * store.
     *
     * Retention (windowed dedup — "suppress against the last N days",
     * the bounded-state regime an endless ingest needs): every
@@ -764,44 +745,41 @@ object Dedup {
     * window-bounded). Replay idempotence holds as long as a batch is
     * replayed within the retention window of the keys that suppressed
     * it — replays are seconds-to-minutes late in practice, windows
-    * are days. Rows from stores written before this column existed
-    * read as adm_ts = null and FAIL CLOSED: an unknown-age key is
+    * are days. Rows without a stamp (files written before the
+    * retention column existed) FAIL CLOSED: an unknown-age key is
     * treated as in-window (still suppressing, never auto-expired) —
-    * run [[stampAdmitted]] once to give legacy rows a concrete stamp
-    * before window semantics should apply to them. Windowed admission
-    * requires an explicit `admittedAt` (the wall-clock default is
-    * refused when a window is set: a replayed batch re-stamped at
-    * replay time would extend suppression windows, breaking the
-    * determinism this stamp exists for).
+    * run [[stampAdmitted]] once to give such rows a concrete stamp.
+    * Windowed admission requires an explicit `admittedAt` (the
+    * wall-clock default is refused when a window is set: a replayed
+    * batch re-stamped at replay time would extend suppression
+    * windows, breaking the determinism this stamp exists for).
     *
-    * Concurrency contract (one ADMISSION writer; maintenance may run
-    * beside it): admissions are strictly single-writer — two
-    * concurrent `admitByKeys` calls can violate exactly-once. The
-    * standalone maintenance ops ([[nearDupRemove]] /
-    * [[removeAdmittedIds]] / [[expireAdmitted]] / [[stampAdmitted]] /
-    * [[splitAdmittedBucket]] / [[maintainAdmitted]])
-    * MAY run concurrently with the live writer (the natural shape of
-    * a retention cron beside an endless ingest): every directory
-    * mutation on either side publishes its surviving rows BEFORE
-    * deleting the files it read, so any interleaving preserves the
-    * store's data invariants — kept keys are never lost (at worst
-    * duplicated, which admission semantics tolerate) and a removal
-    * raced by a concurrent fold/compact is at worst INCOMPLETE
-    * (re-running it completes; all removals are idempotent). Splits
-    * are the one maintenance op that RELOCATES rows across
-    * directories, so publish-before-delete alone does not protect a
-    * reader whose probe chains were computed before a depth-raising
-    * split completed — the writer therefore re-reads the `_splits`
-    * declaration after its decision materializes and retries the
-    * decision when it changed (see the loop in this method), and
-    * content-keyed takedowns re-expand their chains inside every
-    * drain pass. What IS
-    * possible under contention is a transient per-turn failure — one
-    * side reading files the other just superseded — which the caller
-    * retries like any task failure; no state is damaged.
-    * [[rebucketAdmitted]] is the exception: it is exclusive (nothing
-    * else may run during a migration, and its pending marker enforces
-    * that loudly).
+    * Batch determinism: the decision (the drop-id list) is
+    * materialized before the store mutates, but the returned
+    * survivors stay LAZY over the caller's `batch` — each downstream
+    * action re-reads it, anti-joined against that list. A
+    * nondeterministic batch (sampling, a source whose files change)
+    * could therefore yield survivors inconsistent with the recorded
+    * decision and the appended keys; such a caller must materialize
+    * the batch (checkpoint or write it) before passing it in.
+    *
+    * Concurrency contract: admissions are strictly single-writer —
+    * two concurrent `admitByKeys` calls can violate exactly-once (each
+    * decides against a generation that lacks the other's keys). Every
+    * maintenance op ([[nearDupRemove]] / [[removeAdmittedIds]] /
+    * [[expireAdmitted]] / [[stampAdmitted]] / [[splitAdmittedBucket]]
+    * / [[maintainAdmitted]] / [[rebucketAdmitted]]) MAY run beside the
+    * live writer: each derives its output from the generation it
+    * commits over and re-derives after a lost CAS race, so commits are
+    * serializable, and probes read one resolved generation's immutable
+    * files (snapshot isolation; retention keeps recent generations'
+    * files alive for in-flight readers). Maintenance only moves rows,
+    * so a decision against any generation sees the complete key set.
+    *
+    * A root in the retired listing layout (`adm_kb=` bucket
+    * directories, a `tail/` directory or root marker files, with no
+    * `_commits` log) is refused, never converted in place: migrate it
+    * by replay — admit its documents into a fresh store.
     */
   private[functions] def admitByKeys(batch: DataFrame, keys0: DataFrame,
                                      storePath: String, idCol: String,
@@ -812,8 +790,7 @@ object Dedup {
                                      suppressSince: Long = 0L,
                                      expireBefore: Long = 0L,
                                      maxBucketBytes: Long = 0L,
-                                     maxSplitsPerTurn: Int = 2,
-                                     manifestStore: Boolean = false)
+                                     maxSplitsPerTurn: Int = 2)
       : DataFrame = {
     val spark = batch.sparkSession
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
@@ -830,148 +807,69 @@ object Dedup {
       if (admittedAt >= 0L) admittedAt else System.currentTimeMillis()
     val keyCols = admissionKeyColumns(keys0.columns.toSeq)
     require(keyCols.nonEmpty, "admitByKeys: no key columns beside doc_id")
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // `manifestStore` selects the publish mode at CREATION; an existing
-    // store's on-disk mode always wins (the layout is a property of the
-    // store, not of any one caller — exactly the nBuckets rule). A
-    // store "exists in the listing layout" once it carries listing
-    // state (the `_nbuckets` declaration, bucket dirs, or a tail) —
-    // an empty or absent root is creatable in either mode.
-    def hasListingState: Boolean =
-      fs.exists(layoutMarker(storePath)) ||
-        scala.util.Try(fs.listStatus(new org.apache.hadoop.fs.Path(
-            storePath))).getOrElse(Array.empty)
-          .exists(s => s.isDirectory &&
-            (s.getPath.getName.startsWith("adm_kb=") ||
-              s.getPath.getName == "tail"))
-    if (AdmissionManifestStore.isManifestStore(fs, storePath) ||
-        (manifestStore && !hasListingState))
-      return admitByKeysManifest(batch, keys0, keyCols, storePath, idCol,
-        nBuckets, autoCompactFiles, tailFoldFiles, admittedTs,
-        suppressSince, expireBefore, maxBucketBytes, maxSplitsPerTurn)
-    require(!manifestStore,
-      s"admission store at $storePath already exists in the listing " +
-        "layout — manifestStore=true cannot convert it in place " +
-        "(create a new store, or keep the listing mode)")
-    requireNoPendingRebucket(spark, storePath)
-    // layout check LAST among the validations: stamping `_nbuckets` is
-    // a store mutation, and a call that then fails validation must not
-    // have permanently declared a (possibly wrong) layout first
-    requireLayout(fs, storePath, nBuckets, stampIfAbsent = true) // 1 writer
-    // The DECISION loop. A concurrent split is the one maintenance op
-    // that RELOCATES rows across directories, so a writer mid-turn can
-    // race it dangerously: if a split that RAISES the declared max
-    // depth completes entirely between this turn's readSplits and its
-    // slice reads, the moved keys sit in a deeper directory off this
-    // turn's probe chains and the parent's files are already gone —
-    // the publish-before-delete rule only protects readers whose
-    // chains INCLUDE the children. So the turn re-reads `_splits`
-    // AFTER its decision has fully materialized and retries when the
-    // declaration changed. This closes every dangerous interleaving:
-    // a depth-raising split declares the deeper chain BEFORE moving
-    // any row, so if its moves could have affected our reads, its
-    // depth bump precedes them and is visible to the re-read; a split
-    // at or below our declared depth only moves rows between
-    // directories already ON our chains (covered either way by
-    // publish-before-delete).
-    var keys: DataFrame = null
-    var dropIds: DataFrame = null
-    var attempts = 0
-    var decided = false
-    while (!decided) {
-      val splits = readSplits(fs, storePath)
-      requireChainAddressable(storePath, nBuckets, splits)
-      // keys feed four consumers (bucket probe, store join, self-join,
-      // append) — materialize once; a micro-batch is bounded, so
-      // executor-memory checkpointing is the right tool here (unlike
-      // the corpus-sized jaccard index). The bucket id is engine-
-      // internal (never compared across engines), so xxhash64 is fine;
-      // int-typed so partition-value inference round-trips it exactly.
-      // adm_kb is the ROUTED live address (what the tail append carries
-      // and the fold partitions on); adm_deep is the deepest-modulus
-      // address, collected to expand each key's probe CHAIN — both equal
-      // pmod(h, nBuckets) on a never-split store.
-      val keyHash = xxhash64(keyCols.map(col): _*)
-      val (k2, deepSet) = checkpointKeysWithDeepSet(keys0
-        .withColumn("adm_kb", routedAddr(keyHash, nBuckets, splits))
-        .withColumn("adm_deep",
-          pmod(keyHash, lit(nBuckets.toLong << splits.maxDepth)).cast("int")))
-      keys = k2
-
-      // the buckets this batch can possibly collide in — every existing
-      // directory on each key's address chain; ≤ distinct batch keys ×
-      // (maxDepth + 1) values, never data-sized
-      val touched: Seq[Int] =
-        deepSet.flatMap(chainOf(_, nBuckets, splits.maxDepth)).distinct
-      val storeRel =
-        (admissionStoreSlice(spark, storePath, keyCols, touched,
-            suppressSince).toSeq ++
-          admissionTailSlice(spark, storePath, keyCols, suppressSince).toSeq)
-          .reduceOption(_ unionByName _)
-      // Materialize the DECISION, not the surviving batch rows: the
-      // drop-id relation is all every downstream consumer needs (the
-      // tail append anti-joins it; the returned survivors anti-join it
-      // against the caller's own batch), it is bounded by the batch's
-      // id count, and checkpointing it is what pins the decision
-      // before the store mutates. The former spelling checkpointed the
-      // full surviving rows — corpus-row-width (including text) in
-      // executor storage for a decision that is a set of ids.
-      dropIds = decideDropIds(keys, keyCols, storeRel)
-        .localCheckpoint(true) // materialize before mutating the store
-      admitDecisionFence() // test seam: no-op in production
-      val recheck = readSplits(fs, storePath)
-      if (recheck == splits) decided = true
-      else {
-        attempts += 1
-        require(attempts < 6,
-          s"admitByKeys at $storePath: the split declaration kept " +
-            "changing under this turn's reads — persistent concurrent " +
-            "splitting; retry the turn (transient, per the " +
-            "maintenance-beside-writer contract)")
-      }
-    }
-    // L0 append: one plain file per batch (repartition, not coalesce —
-    // coalesce(1) would collapse the join itself to one task). The
-    // drop list is batch-bounded (the same bound the keys checkpoint
-    // already assumes), so the anti-join broadcasts it and the keys
-    // never shuffle.
-    keys.join(broadcast(dropIds), Seq("doc_id"), "left_anti")
-      .drop("adm_deep") // probe-side only, never persisted
-      .withColumn("adm_ts", lit(admittedTs))
-      .repartition(1)
-      .write.mode("append").parquet(admissionTailPath(storePath))
-    val folded = foldAdmissionTail(spark, storePath, autoCompactFiles,
-      tailFoldFiles, expireBefore)
-    // auto-split riding the same turn (opt-in via maxBucketBytes):
-    // growth only ever lands through a fold, so checking just-folded
-    // buckets catches every over-budget bucket eventually — O(folded)
-    // driver listings, and each split is bounded by ONE bucket's data.
-    // Hysteresis is structural: a split halves a bucket in expectation,
-    // so a fresh child re-triggers only after doubling again.
-    if (maxBucketBytes > 0L && folded.nonEmpty) {
-      val oversized = folded.distinct.map { b =>
-        val dir = new org.apache.hadoop.fs.Path(storePath, s"adm_kb=$b")
-        b -> scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getLen).sum
-      }.filter(_._2 > maxBucketBytes)
-        .sortBy(-_._2).take(math.max(0, maxSplitsPerTurn))
-      oversized.foreach { case (b, _) =>
-        splitAdmittedBucket(spark, storePath, b) }
+    val store = AdmissionManifestStore(storePath)
+    val man = store.initIfAbsent(spark, nBuckets)
+    val splits = man.splits
+    // keys feed four consumers (bucket probe, store join, self-join,
+    // append) — materialize once; a micro-batch is bounded, so
+    // executor-memory checkpointing is the right tool here (unlike the
+    // corpus-sized jaccard index). The bucket id is engine-internal
+    // (never compared across engines), so xxhash64 is fine. adm_kb is
+    // the ROUTED live address (what the tail append carries and the
+    // fold places by); adm_deep is the deepest-modulus address,
+    // collected to expand each key's probe CHAIN — both equal
+    // pmod(h, nBuckets) on a never-split store.
+    val keyHash = xxhash64(keyCols.map(col): _*)
+    val (keys, deepSet, keyRows) = checkpointKeysWithDeepSet(keys0
+      .withColumn("adm_kb", routedAddr(keyHash, nBuckets, splits))
+      .withColumn("adm_deep",
+        pmod(keyHash, lit(nBuckets.toLong << splits.maxDepth)).cast("int")))
+    // the buckets this batch can possibly collide in — every address on
+    // each key's chain; ≤ distinct batch keys × (maxDepth + 1) values,
+    // never data-sized
+    val touched: Seq[Int] =
+      deepSet.flatMap(chainOf(_, nBuckets, splits.maxDepth)).distinct
+    val storeRel = store.probeRel(spark, man, keyCols, touched,
+      suppressSince)
+    // Materialize the DECISION, not the surviving batch rows: the
+    // drop-id relation is all every downstream consumer needs (the
+    // tail append anti-joins it; the returned survivors anti-join it
+    // against the caller's own batch), it is bounded by the batch's id
+    // count, and checkpointing it pins the decision before the store
+    // mutates.
+    val dropIds = decideDropIds(keys, keyCols, storeRel, keyRows)
+      .localCheckpoint(true)
+    // L0 append: one plain file per batch. The drop list is
+    // batch-bounded (the same bound the keys checkpoint already
+    // assumes), so the anti-join broadcasts it and the keys never
+    // shuffle.
+    store.appendTail(spark,
+      keys.join(broadcast(dropIds), Seq("doc_id"), "left_anti")
+        .drop("adm_deep") // probe-side only, never persisted
+        .withColumn("adm_ts", lit(admittedTs)),
+      nBuckets)
+    store.foldAndCompact(spark, autoCompactFiles, tailFoldFiles,
+      expireBefore)
+    // auto-split riding the same turn (opt-in via maxBucketBytes): each
+    // split is bounded by ONE bucket's data. Hysteresis is structural:
+    // a split halves a bucket in expectation, so a fresh child
+    // re-triggers only after doubling again.
+    if (maxBucketBytes > 0L) {
+      store.bucketSizes(spark)
+        .filter(_._3 > maxBucketBytes)
+        .sortBy(-_._3).take(math.max(0, maxSplitsPerTurn))
+        .foreach { case (b, _, _) => store.splitBucket(spark, b) }
     }
     // The returned survivors derive from the caller's batch and the
     // CHECKPOINTED drop list alone — they never read the store, so the
-    // mutations above cannot disturb them and no full-row
-    // materialization is needed (the caller's sink pays one batch scan
-    // filtered through a broadcast anti-join).
+    // mutations above cannot disturb them (see the batch-determinism
+    // contract above).
     survivorsOf(batch, idCol, dropIds)
   }
 
   /** The surviving batch rows of a checkpointed admission decision:
     * the batch anti-joined against the (batch-bounded, broadcast)
-    * drop-id list. Identical rows to the former checkpoint-the-
-    * survivors spelling — the drop set is exactly the complement.
+    * drop-id list.
     */
   private def survivorsOf(batch: DataFrame, idCol: String,
                           dropIds: DataFrame): DataFrame =
@@ -979,121 +877,65 @@ object Dedup {
       Seq(idCol), "left_anti")
 
   /** Materialize a batch's key relation and collect its distinct
-    * deepest-modulus addresses IN THE SAME JOB (an Observation riding
-    * the checkpoint action): the probe-chain expansion needs the
-    * distinct `adm_deep` set, which used to be a second collect job —
-    * planning + scheduling per batch for a value the materializing
-    * pass already saw. The set is ≤ distinct batch keys, the same
-    * bound the collect had.
+    * deepest-modulus addresses and its row count IN THE SAME JOB (an
+    * Observation riding the checkpoint action): the probe-chain
+    * expansion needs the distinct `adm_deep` set and the decision's
+    * broadcast gate needs the row count, and neither is worth a job of
+    * its own. The set is ≤ distinct batch keys.
     */
   private def checkpointKeysWithDeepSet(withAddrs: DataFrame)
-      : (DataFrame, Seq[Int]) = {
+      : (DataFrame, Seq[Int], Long) = {
     val obs = org.apache.spark.sql.Observation()
     val keys = withAddrs
-      .observe(obs, collect_set(col("adm_deep")).as("deep"))
+      .observe(obs, collect_set(col("adm_deep")).as("deep"),
+        count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val deep = obs.get("deep") match {
+    val m = obs.get
+    val deep = m("deep") match {
       case s: scala.collection.Seq[_] => s.toSeq.map(_.asInstanceOf[Int])
       case other => throw new IllegalStateException(
         s"unexpected observation payload: $other")
     }
-    (keys, deep)
+    (keys, deep, m("n").asInstanceOf[Long])
   }
 
-  /** The admission decision — shared verbatim by both publish modes
-    * (parity is a correctness property, not a convention): the ids of
-    * docs whose keys collide with the store (excluding their own id —
-    * the replay-idempotence rule) or with a smaller id inside the
-    * batch. Consumers anti-join this list, so duplicate ids are
-    * harmless and no distinct() is paid.
+  /** The admission decision: the ids of docs whose keys collide with
+    * the store (excluding their own id — the replay-idempotence rule)
+    * or with a smaller id inside the batch. Consumers anti-join this
+    * list, so duplicate ids are harmless and no distinct() is paid.
     *
     * Join shapes pick the bounded build side deliberately (§3.1): the
     * pruned store slice is the UNBOUNDED side at corpus scale, so the
-    * store join streams it against a BROADCAST of the batch-bounded
-    * keys (an inner join projecting the key-side id — duplicates only
-    * repeat drops the anti-join ignores; the former keys-side
-    * left_semi forced the store slice through a sort-merge exchange
-    * every batch). The within-batch self-join broadcasts its build
-    * side under the same batch-boundedness the keys checkpoint
-    * already assumes.
+    * store join streams it against the batch's keys as the build side
+    * (an inner join projecting the key-side id — duplicates only
+    * repeat drops the anti-join ignores). The keys are BROADCAST while
+    * `keyRows` stays within [[ModelJoin.broadcastMaxRows]] (the
+    * `graft.model.broadcastMaxRows` gate every size-gated join shares)
+    * and hash-shuffled past it — a bulk-load batch can be
+    * corpus-fraction-sized, and a broadcast of that would be a driver
+    * OOM. The within-batch self-join follows the same gate.
     */
-  private def decideDropIds(keys: DataFrame, keyCols: Seq[String],
-      storeRel: Option[DataFrame]): DataFrame = {
+  private[graft] def decideDropIds(keys: DataFrame, keyCols: Seq[String],
+      storeRel: Option[DataFrame], keyRows: Long): DataFrame = {
+    val build: DataFrame => DataFrame =
+      if (keyRows <= ModelJoin.broadcastMaxRows(keys)) broadcast(_)
+      else _.hint("shuffle_hash")
     val vsStore =
       storeRel match {
         case Some(store) =>
-          store.join(broadcast(keys),
+          store.join(build(keys),
               keyCols.map(c => col(c) === col(s"s_$c")).reduce(_ && _)
                 && col("doc_id") =!= col("s_id"), // replay self-exclusion
               "inner")
             .select(col("doc_id"))
         case None => keys.select(col("doc_id")).limit(0)
       }
-    val withinBatch = keys.as("l").join(broadcast(keys.as("r")),
+    val withinBatch = keys.as("l").join(build(keys.as("r")),
         keyCols.map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _) &&
         col("r.doc_id") < col("l.doc_id"), "left_semi")
       .select(col("doc_id"))
     vsStore.union(withinBatch)
   }
-
-  /** [[admitByKeys]] under MANIFEST publish mode (see
-    * [[AdmissionManifestStore]]): the same decision against the
-    * resolved generation's immutable files, the same per-turn
-    * maintenance cadence, with every publish a manifest commit. No
-    * decision re-validation loop: a concurrent split cannot delete
-    * the files this decision reads, and maintenance only moves rows,
-    * so any resolved generation carries the complete key set.
-    */
-  private def admitByKeysManifest(batch: DataFrame, keys0: DataFrame,
-      keyCols: Seq[String], storePath: String, idCol: String,
-      nBuckets: Int, autoCompactFiles: Int, tailFoldFiles: Int,
-      admittedTs: Long, suppressSince: Long, expireBefore: Long,
-      maxBucketBytes: Long, maxSplitsPerTurn: Int): DataFrame = {
-    val spark = batch.sparkSession
-    val store = AdmissionManifestStore(storePath)
-    val man = store.initIfAbsent(spark, nBuckets)
-    val splits = man.splits
-    requireChainAddressable(storePath, nBuckets, splits)
-    val keyHash = xxhash64(keyCols.map(col): _*)
-    val (keys, deepSet) = checkpointKeysWithDeepSet(keys0
-      .withColumn("adm_kb", routedAddr(keyHash, nBuckets, splits))
-      .withColumn("adm_deep",
-        pmod(keyHash, lit(nBuckets.toLong << splits.maxDepth)).cast("int")))
-    val touched: Seq[Int] =
-      deepSet.flatMap(chainOf(_, nBuckets, splits.maxDepth)).distinct
-    val storeRel = store.probeRel(spark, man, keyCols, touched,
-      suppressSince)
-    // checkpoint the DECISION (batch-bounded ids), not the surviving
-    // rows — see the listing-mode twin for the rationale
-    val dropIds = decideDropIds(keys, keyCols, storeRel)
-      .localCheckpoint(true)
-    store.appendTail(spark,
-      keys.join(broadcast(dropIds), Seq("doc_id"), "left_anti")
-        .drop("adm_deep")
-        .withColumn("adm_ts", lit(admittedTs)),
-      nBuckets)
-    store.foldAndCompact(spark, autoCompactFiles, tailFoldFiles,
-      expireBefore)
-    if (maxBucketBytes > 0L) {
-      val oversized = store.bucketSizes(spark)
-        .filter(_._3 > maxBucketBytes)
-        .sortBy(-_._3).take(math.max(0, maxSplitsPerTurn))
-      oversized.foreach { case (b, _, _) => store.splitBucket(spark, b) }
-    }
-    survivorsOf(batch, idCol, dropIds)
-  }
-
-  /** Test seam for the decision re-validation above: invoked between
-    * the decision's materialization and the `_splits` re-read, so a
-    * spec can fabricate the exact dangerous interleaving (a
-    * depth-raising split completing entirely inside the window).
-    * No-op in production; suites run sequentially in the forked test
-    * JVM, so the var is race-free there.
-    */
-  @volatile private[graft] var admitDecisionFence: () => Unit = () => ()
-
-  private def admissionTailPath(storePath: String): String =
-    new org.apache.hadoop.fs.Path(storePath, "tail").toString
 
   /** The key columns of an admission relation or stored file schema:
     * everything except the identity (`doc_id`) and bookkeeping
@@ -1106,423 +948,30 @@ object Dedup {
   private[functions] def admissionKeyColumns(columns: Seq[String]): Seq[String] =
     columns.filterNot(c => c == "doc_id" || c == "adm_ts" || c == "adm_kb")
 
-  /** One hard byte budget on the L0 tail, independent of the file
-    * budget: a single bulk-load batch writes one file but can be
-    * corpus-fraction-sized, and the next batch would pay that full
-    * read — the byte trigger folds it into L1 immediately.
-    */
-  private[graft] val admissionTailMaxBytes: Long = 8L << 20
-
-  /** Shuffle-partition count for a staged store rewrite, derived from
-    * the KNOWN input byte size (manifest-carried sizes or the
-    * directory listing that selected the files) instead of the
-    * session-wide default: a keyed `repartition(col)` always fans out
-    * to `spark.sql.shuffle.partitions`, and AQE's coalescing leaves
-    * user repartitions at machine parallelism under the default
-    * parallelismFirst policy — so every fold/compact/split of a
-    * turn-sized (KB-scale) slice paid a full task wave. One task per
-    * ~`graft.admission.stageTargetBytes` (default 32 MB, a healthy
-    * post-compression partition), clamped to the session's configured
-    * parallelism — large inputs keep exactly the previous fan-out, so
-    * this is scale-adaptive, not a local-mode constant.
-    */
-  private[functions] def stagePartitions(spark: SparkSession,
-      bytes: Long): Int = {
-    val target = spark.conf.getOption("graft.admission.stageTargetBytes")
-      .map(_.toLong).getOrElse(32L << 20)
-    val max = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(200)
-    math.max(1L, math.min(max.toLong,
-      (bytes + target - 1) / math.max(1L, target))).toInt
-  }
-
-  /** Admission-store parquet read with the per-read mergeSchema
-    * footer-merge JOB elided whenever every footer's Spark schema is
-    * driver-resolvable ([[AdmissionSchema]] — store files are
-    * immutable and Spark-written, so the memoized driver-side merge is
-    * mergeSchema's result without its planning+scheduling round-trip
-    * per probe/fold/compact); bit-identical mergeSchema fallback
-    * otherwise. `basePath` reads derive the `adm_kb` partition column
-    * from the directory layout — appended to the resolved schema
-    * exactly where mergeSchema puts it (the end; listing-layout bucket
-    * files never carry it as data).
-    */
-  private def readAdmissionFiles(spark: SparkSession,
-      files: Seq[org.apache.hadoop.fs.FileStatus],
-      basePath: Option[String] = None): DataFrame = {
-    val paths = files.map(_.getPath.toString)
-    val reader0 = basePath.fold(spark.read)(bp =>
-      spark.read.option("basePath", bp))
-    AdmissionSchema.of(spark.sparkContext.hadoopConfiguration,
-        files.map(s => (s.getPath, s.getLen))) match {
-      case Some(schema) =>
-        val full =
-          if (basePath.isDefined && !schema.fieldNames.contains("adm_kb"))
-            schema.add("adm_kb", org.apache.spark.sql.types.IntegerType)
-          else schema
-        reader0.schema(full).parquet(paths: _*)
-      case None =>
-        reader0.option("mergeSchema", "true").parquet(paths: _*)
-    }
-  }
-
-  /** The L0 slice every micro-batch joins in addition to the pruned
-    * L1 bucket slice: all current tail files, read explicitly (never
-    * via the store root). Bounded by the fold budgets, so this read
-    * is O(budget) regardless of store size.
-    */
-  private[graft] def admissionTailSlice(spark: SparkSession,
-      storePath: String, keyCols: Seq[String],
-      suppressSince: Long = 0L): Option[DataFrame] = {
-    val tail = new org.apache.hadoop.fs.Path(admissionTailPath(storePath))
-    val fs = tail.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = scala.util.Try(fs.listStatus(tail)).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) None
-    else Some(inWindow(
-        readAdmissionFiles(spark, files.toIndexedSeq),
-        suppressSince)
-      .select(col("doc_id").as("s_id") +:
-        keyCols.map(c => col(c).as(s"s_$c")): _*))
-  }
-
-  /** Keep only key rows admitted at or after `suppressSince` — the
-    * query-time half of windowed dedup. Rows from pre-retention files
-    * (no `adm_ts` column, or null) FAIL CLOSED: an unknown-age key is
-    * treated as in-window, so turning windowing on against a store
-    * written before the retention column existed keeps every
-    * previously admitted key suppressing (the conservative default —
-    * the alternative silently re-admits duplicates of the whole
-    * legacy corpus). Run [[stampAdmitted]] once to give legacy rows a
-    * concrete stamp if they should eventually expire.
-    */
-  private[functions] def inWindow(df: DataFrame, suppressSince: Long): DataFrame =
-    if (suppressSince <= 0L) df
-    else if (!df.columns.contains("adm_ts")) df
-    else df.filter(
-      coalesce(col("adm_ts"), lit(Long.MaxValue)) >= lit(suppressSince))
-
-  /** Fold the L0 tail into the L1 buckets when it exceeds the file or
-    * byte budget: ONE partitioned write moves every tail row into its
-    * `adm_kb=` bucket directory (amortizing the directory fan-out a
-    * per-batch partitioned write would pay every time), then the
-    * folded buckets over the `autoCompactFiles` budget are compacted.
-    * Publication order is crash-safe: the bucketed copy commits before
-    * the tail files are deleted — a crash between the two duplicates
-    * keys (tolerated; the next fold re-folds them and compaction
-    * dedups), never loses them. Returns the folded buckets (empty =
-    * no fold ran).
-    */
-  private[graft] def foldAdmissionTail(spark: SparkSession,
-      storePath: String, autoCompactFiles: Int,
-      tailFoldFiles: Int, expireBefore: Long = 0L): Seq[Int] = {
-    val tail = new org.apache.hadoop.fs.Path(admissionTailPath(storePath))
-    val fs = tail.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = scala.util.Try(fs.listStatus(tail)).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) return Nil
-    if (files.length <= tailFoldFiles &&
-        files.map(_.getLen).sum <= admissionTailMaxBytes) return Nil
-    // reclaim staging dirs a crashed fold/compact/remove attempt
-    // orphaned (dot-prefixed — invisible to readers). Stale = a DAY
-    // old: live attempts are seconds old, so even a maintenance op
-    // running beside the writer (see the concurrency contract on
-    // [[expireAdmitted]]) or a pathologically stalled publish (GC
-    // pause, slow object-store rename) has a 24 h margin before its
-    // staging could be swept from under it.
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val stale = System.currentTimeMillis() - 24L * 60 * 60 * 1000
-    scala.util.Try(fs.listStatus(root)).getOrElse(Array.empty)
-      .filter(s => s.isDirectory &&
-        (s.getPath.getName.startsWith(".compact-") ||
-          s.getPath.getName.startsWith(".remove-") ||
-          s.getPath.getName.startsWith(".rebucket-")) &&
-        s.getModificationTime < stale)
-      .foreach(s => fs.delete(s.getPath, true))
-    // expired rows are shed in the fold itself — they never reach L1
-    val raw = inWindow(readAdmissionFiles(spark, files.toIndexedSeq),
-        expireBefore)
-    // under a SPLIT layout, re-route each tail row through the CURRENT
-    // depth map (its stored adm_kb was routed at admission time and may
-    // predate splits since) so folded rows land in their live — deepest
-    // — bucket; stale placement would still be probe-correct (shallower
-    // on the same chain), this just keeps deep buckets from re-growing.
-    // Never-split stores skip the recompute entirely.
-    val splits = readSplits(fs, storePath)
-    val routed =
-      if (splits.depthByAddr.isEmpty) raw
-      else declaredBuckets(fs, storePath) match {
-        case Some(n) =>
-          requireChainAddressable(storePath, n, splits)
-          val keyCols = admissionKeyColumns(raw.columns.toSeq)
-          raw.drop("adm_kb").withColumn("adm_kb",
-            routedAddr(xxhash64(keyCols.map(col): _*), n, splits))
-        case None => raw
-      }
-    val df = routed.localCheckpoint(true) // tail is budget-bounded
-    val folded = df.select("adm_kb").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    df.repartition(stagePartitions(spark, files.map(_.getLen).sum),
-        col("adm_kb"))
-      .write.mode("append").partitionBy("adm_kb").parquet(storePath)
-    files.foreach(s => fs.delete(s.getPath, false)) // publish-then-delete
-    compactAdmissionBuckets(spark, storePath, folded, autoCompactFiles,
-      expireBefore)
-    folded
-  }
-
-  /** The partition-PRUNED slice of an admission store a micro-batch
-    * joins against: ONLY the `touched` buckets' directories are
-    * listed and read — discovery cost is O(batch buckets), not
-    * O(store buckets); a plain partition-filtered read of the root
-    * would still list every `adm_kb=` directory per micro-batch,
-    * which dominated at corpus-scale stores (same-key rows share a
-    * bucket by construction, so the slice can never lose a
-    * collision). Returns None when no touched bucket exists yet (a
-    * fresh store — nothing to collide with). Factored out so the
-    * plan property — a scan over just the touched directories, still
-    * carrying the adm_kb partition filter — is pinned by a spec on
-    * the exact production relation.
-    */
-  private[graft] def admissionStoreSlice(spark: SparkSession,
-      storePath: String, keyCols: Seq[String],
-      touched: Seq[Int], suppressSince: Long = 0L): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (touched.isEmpty || !fs.exists(root)) return None
-    // enumerate the touched directories' files here (one listStatus
-    // per touched dir — the same listing Spark's file index would do)
-    // so the read can resolve its schema driver-side; file paths stay
-    // under their adm_kb= directories, preserving the partition column
-    val files = touched.map(b => new org.apache.hadoop.fs.Path(root,
-        s"adm_kb=$b"))
-      .flatMap(d => scala.util.Try(fs.listStatus(d))
-        .getOrElse(Array.empty).toSeq)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) return None
-    // basePath keeps adm_kb a partition column of the slice; the
-    // redundant IN filter costs nothing and keeps the pruning
-    // property visible in (and pinned on) the physical plan
-    Some(inWindow(readAdmissionFiles(spark, files, Some(storePath))
-      .filter(col("adm_kb").isInCollection(touched)), suppressSince)
-      .select(col("doc_id").as("s_id") +:
-        keyCols.map(c => col(c).as(s"s_$c")): _*))
-  }
-
-  /** Rewrite any of `buckets` holding more than `maxFiles` parquet
-    * files into one deduplicated file each — the admission store's
-    * AutoCompact, riding the single writer's own batch. Publication
-    * order is crash-safe for the admission semantics: the consolidated
-    * file lands (atomic rename from a dot-prefixed staging dir Spark
-    * readers ignore) BEFORE the superseded files are deleted, so every
-    * crash point leaves at worst duplicate key rows, never missing
-    * ones. Returns the buckets rewritten.
-    *
-    * `expireBefore` > 0 folds retention into the rewrite for free:
-    * rows stamped before it are dropped while the bucket is being
-    * rewritten anyway, so any bucket that keeps growing keeps
-    * crossing the file budget and keeps shedding expired rows —
-    * growing state stays window-bounded with no extra maintenance
-    * pass (cold buckets hold only non-growing stale rows, reclaimed
-    * by the manual [[expireAdmitted]] cadence).
-    */
-  private[graft] def compactAdmissionBuckets(spark: SparkSession,
-      storePath: String, buckets: Seq[Int], maxFiles: Int,
-      expireBefore: Long = 0L): Seq[Int] = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // snapshot exactly the over-budget buckets' current files: keys
-    // that land between the listing and the rewrite stay out of both
-    // the read and the delete set, so they survive untouched
-    val byDir = buckets.distinct.map { b =>
-      val dir = new org.apache.hadoop.fs.Path(root, s"adm_kb=$b")
-      (b, dir, scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-    }.filter(_._3.length > maxFiles)
-    if (byDir.isEmpty) return Nil
-    // ALL over-budget buckets ride ONE read + ONE partitioned staged
-    // write (a bulk-load fold can push hundreds of buckets over
-    // budget at once — a per-bucket job loop is the driver-scheduling
-    // scale bug the takedown/expiry paths already shed); repartition
-    // on adm_kb lands each bucket's rows in one task = one file
-    val cur = readAdmissionFiles(spark, byDir.flatMap(_._3),
-      Some(storePath))
-    // collapse duplicate keys (replayed appends) keeping the
-    // NEWEST admission stamp — max is the suppression-conservative
-    // choice for windowed dedup; plain distinct would keep one row
-    // per (key, ts) and let replays grow the store. max ignores
-    // nulls, so a legacy (unstamped) row merged with a stamped
-    // re-admission takes the concrete stamp, and an all-legacy
-    // group stays null (= in-window forever, the fail-closed rule).
-    // Same-key rows share a bucket by construction, so the global
-    // group-by (adm_kb among the keys) equals per-bucket dedup.
-    val live =
-      if (expireBefore <= 0L) cur
-      else inWindow(cur, expireBefore)
-    val dedup =
-      if (!live.columns.contains("adm_ts")) live.distinct()
-      else live.groupBy(live.columns.filterNot(_ == "adm_ts")
-          .map(col).toIndexedSeq: _*)
-        .agg(max(col("adm_ts")).as("adm_ts"))
-    val staging = new org.apache.hadoop.fs.Path(root,
-      s".compact-${java.util.UUID.randomUUID().toString.take(8)}")
-    dedup.repartition(
-        stagePartitions(spark, byDir.flatMap(_._3).map(_.getLen).sum),
-        col("adm_kb"))
-      .write.mode("overwrite").partitionBy("adm_kb")
-      .parquet(staging.toString)
-    byDir.foreach { case (_, dir, old) =>
-      val staged = new org.apache.hadoop.fs.Path(staging, dir.getName)
-      val stagedFiles = scala.util.Try(fs.listStatus(staged))
-        .getOrElse(Array.empty)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      stagedFiles.foreach { s =>
-        renameOrThrow(fs, s.getPath, new org.apache.hadoop.fs.Path(dir,
-          s"compacted-${s.getPath.getName}"))
-      }
-      old.foreach(s => fs.delete(s.getPath, false))
-      // a bucket whose rows ALL expired at compact time ends file-less:
-      // drop the dir so probe slices never read a schema-less directory
-      if (stagedFiles.isEmpty)
-        scala.util.Try(fs.delete(dir, false))
-    }
-    fs.delete(staging, true)
-    byDir.map(_._1)
-  }
-
-  /** Name of the root marker a [[rebucketAdmitted]] migration holds
-    * while in flight. While it exists every admission/removal/expiry
-    * entry point REFUSES to run: a crashed migration leaves rows split
-    * across two bucket moduli, where a pruned probe under either
-    * modulus can miss collisions — failing loudly beats silently
-    * under-suppressing. Re-running [[rebucketAdmitted]] completes the
-    * migration and clears the marker.
-    */
-  private[graft] val rebucketMarkerName = "_rebucket_pending"
-
-  private def rebucketMarker(storePath: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(storePath, rebucketMarkerName)
-
-  /** Name of the root file recording the store's bucket modulus. The
-    * `nBuckets` parameter was a silent fail-open foot-gun: a caller
-    * passing a modulus other than the store's probes the WRONG bucket
-    * directories — same-key rows live elsewhere, the pruned join
-    * misses the collision, and duplicates are admitted with no error
-    * anywhere. The store now declares its layout: the first admission
-    * writes this file, [[rebucketAdmitted]] updates it, and every
-    * bucket-addressed entry point refuses a mismatched caller loudly.
-    * (Stores created before this file existed get it stamped on their
-    * next admission — single-writer, so the write is safe.)
-    */
-  private[graft] val layoutMarkerName = "_nbuckets"
-
-  private def layoutMarker(storePath: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(storePath, layoutMarkerName)
-
-  /** The store's declared bucket modulus, if stamped. */
-  private[graft] def declaredBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String): Option[Int] = {
-    val marker = layoutMarker(storePath)
-    if (!fs.exists(marker)) None
-    else scala.util.Try {
-      val in = fs.open(marker)
-      val content = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-      content.toInt
-    }.toOption
-  }
-
-  /** Refuse a caller whose nBuckets disagrees with the store's
-    * declared layout (the silent-under-suppression guard); stamp the
-    * declaration on stores that predate it.
-    */
-  private def requireLayout(fs: org.apache.hadoop.fs.FileSystem,
-                            storePath: String, nBuckets: Int,
-                            stampIfAbsent: Boolean): Unit =
-    declaredBuckets(fs, storePath) match {
-      case Some(stored) =>
-        require(stored == nBuckets,
-          s"admission store at $storePath is laid out over $stored " +
-            s"buckets but the caller passed nBuckets=$nBuckets — probing " +
-            s"the wrong directories silently under-suppresses; pass " +
-            s"nBuckets=$stored (or migrate with rebucketAdmitted)")
-      case None =>
-        if (stampIfAbsent) {
-          // stamping a LEGACY store (pre-declaration, bucket dirs
-          // already on disk): sanity-check the claimed modulus against
-          // the observed layout — a single wrong-modulus admission
-          // would otherwise permanently declare the wrong layout and
-          // refuse every subsequent correct-modulus caller. Legacy
-          // stores predate bucket splitting, so every bucket id is
-          // strictly below the true modulus.
-          val observedMax = scala.util.Try(
-              fs.listStatus(new org.apache.hadoop.fs.Path(storePath)))
-            .getOrElse(Array.empty)
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("adm_kb="))
-            .map(_.getPath.getName.stripPrefix("adm_kb=").toInt)
-            .foldLeft(-1)(math.max)
-          require(observedMax < nBuckets,
-            s"admission store at $storePath has bucket adm_kb=$observedMax " +
-              s"on disk, impossible under the claimed nBuckets=$nBuckets — " +
-              "refusing to declare a layout narrower than the store")
-          val out = fs.create(layoutMarker(storePath), true)
-          try out.write(nBuckets.toString.getBytes("UTF-8"))
-          finally out.close()
-        }
-    }
-
-  private def requireNoPendingRebucket(spark: SparkSession,
-                                       storePath: String): Unit = {
-    val marker = rebucketMarker(storePath)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(marker),
-      s"admission store at $storePath has an incomplete rebucket " +
-        "migration — re-run rebucketAdmitted to complete it before " +
-        "admitting, removing, or expiring")
-  }
-
   // --------------- incremental bucket splitting (online growth) -------------
   //
-  // [[rebucketAdmitted]] migrates the whole layout at once — O(store)
-  // and EXCLUSIVE, a stop-the-world ingest outage exactly when a grown
-  // store is busiest. Extendible-hashing-style splitting removes that
-  // outage: one over-budget bucket at a time is split into power-of-two
-  // children, riding the writer's own maintenance turn, with per-turn
-  // cost bounded by ONE bucket's data and no exclusivity at all.
+  // Extendible-hashing-style splitting: one over-budget bucket at a
+  // time is split into power-of-two children, riding the writer's own
+  // maintenance turn, with per-turn cost bounded by ONE bucket's data —
+  // the online alternative to a full [[rebucketAdmitted]] migration.
   //
-  // Addressing. The base layout hashes keys to `pmod(h, N)` (N =
-  // `_nbuckets`). A bucket at local depth d holds rows with
+  // Addressing. The base layout hashes keys to `pmod(h, N)` (N = the
+  // declared base modulus). A bucket at local depth d holds rows with
   // `pmod(h, N·2^d) == addr`; splitting it rewrites its rows under
   // modulus N·2^(d+1), landing them in child addresses `addr` and
   // `addr + N·2^d` (N·2^(d+1) is a multiple of every coarser modulus,
   // so a row's deeper address always REFINES its shallower ones). The
-  // `_splits` root file declares the layout: the global max depth plus
-  // one `addr=depth` line per split bucket (absent = depth 0).
+  // manifest declares the layout: the global max depth plus the local
+  // depth of each split bucket (absent = depth 0).
   //
-  // The ONE hard probe-safety invariant: every directory that contains
-  // a row for key h is named `pmod(h, N·2^d)` for some d ≤ the DECLARED
-  // max depth. Probes read, for each key, the whole address CHAIN
-  // {pmod(h, N·2^d) : 0 ≤ d ≤ maxDepth} — so they can never miss a
-  // same-key row no matter how stale the per-bucket depth map is, and
-  // admission decisions are bit-identical to the unsplit store (the
-  // suppression join is equality-on-keys; placement only affects which
-  // directories are read). A split therefore bumps the declared max
-  // depth BEFORE moving any row; everything else (the depth map, the
-  // routed placement of new rows) is a cost optimization that degrades
-  // gracefully when stale — a row placed shallower than the live map
-  // still sits on its key's chain.
-  //
-  // Every split publishes before deleting (the store-wide crash rule):
-  // any crash point leaves at worst duplicate key rows on the same
-  // chain, which admission semantics already tolerate; re-splitting is
-  // idempotent. Splits are part of the single WRITER's turn (or a
-  // maintenance run under the documented maintenance-beside-writer
-  // contract) — probes and takedowns keep running throughout.
-
-  private[graft] val splitsMarkerName = "_splits"
+  // Probe safety: every address holding a row for key h is
+  // `pmod(h, N·2^d)` for some d ≤ the declared max depth, and probes
+  // read each key's whole address CHAIN {pmod(h, N·2^d) : 0 ≤ d ≤
+  // maxDepth} — so admission decisions are identical to the unsplit
+  // store (the suppression join is equality-on-keys; placement only
+  // affects which files are read). A split commits the rekeyed file
+  // lists and the deeper declaration in ONE manifest, so no reader
+  // ever sees one without the other.
 
   /** Declared split state: the global max depth (probe chain length)
     * and the local depth of each split bucket (absent = 0).
@@ -1530,68 +979,10 @@ object Dedup {
   private[graft] final case class AdmissionSplits(maxDepth: Int,
                                                   depthByAddr: Map[Int, Int])
 
-  private def splitsMarker(storePath: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(storePath, splitsMarkerName)
-
-  private[graft] def readSplits(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String): AdmissionSplits = {
-    val marker = splitsMarker(storePath)
-    if (!fs.exists(marker)) return AdmissionSplits(0, Map.empty)
-    val in = fs.open(marker)
-    val content = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val lines = content.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    val maxDepth = lines.headOption
-      .filter(_.startsWith("maxdepth=")) match {
-        case Some(l) => l.stripPrefix("maxdepth=").toInt
-        case None => throw new IllegalStateException(
-          s"malformed $splitsMarkerName at $storePath: first line must " +
-            s"be maxdepth=<d>, got ${lines.headOption.getOrElse("<empty>")}")
-      }
-    val map = lines.drop(1).map { l =>
-      val Array(a, d) = l.split("=", 2)
-      a.toInt -> d.toInt
-    }.toMap
-    // bound the declaration on READ, not just on write: a corrupted or
-    // hand-edited marker with a huge maxdepth would make the callers'
-    // `nBuckets << maxDepth` moduli overflow into garbage (possibly
-    // negative) bucket addresses, silently mis-routing probe chains —
-    // fail loudly like the maxdepth= parse check instead. 30 is the
-    // hard ceiling any base modulus admits (splitAdmittedBucket's own
-    // write guard caps n·2^d at Int.MaxValue, and n ≥ 1).
-    require(maxDepth >= 0 && maxDepth <= 30,
-      s"malformed $splitsMarkerName at $storePath: maxdepth=$maxDepth " +
-        "out of range [0, 30]")
-    require(map.forall { case (a, d) => a >= 0 && d >= 0 && d <= maxDepth },
-      s"malformed $splitsMarkerName at $storePath: bucket depth entries " +
-        s"must satisfy 0 <= depth <= maxdepth ($maxDepth)")
-    AdmissionSplits(maxDepth, map)
-  }
-
-  /** Refuse a declared split depth whose deepest modulus overflows the
-    * int bucket address space for this store's base modulus — the
-    * read-side twin of [[splitAdmittedBucket]]'s write guard (a marker
-    * can outlive the code that wrote it, or be hand-damaged).
-    */
-  private[functions] def requireChainAddressable(storePath: String, nBuckets: Int,
-      splits: AdmissionSplits): Unit =
-    require((nBuckets.toLong << splits.maxDepth) <= Int.MaxValue.toLong,
-      s"malformed $splitsMarkerName at $storePath: maxdepth=" +
-        s"${splits.maxDepth} over base modulus $nBuckets overflows the " +
-        "int bucket address space")
-
-  private def writeSplits(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String, splits: AdmissionSplits): Unit = {
-    val body = (s"maxdepth=${splits.maxDepth}" +:
-      splits.depthByAddr.toSeq.sorted.map { case (a, d) => s"$a=$d" })
-      .mkString("\n")
-    val out = fs.create(splitsMarker(storePath), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
   /** The address chain of a deepest-modulus bucket id: its bucket id
     * under every coarser modulus down to the base layout. Probes and
-    * content-keyed takedowns read every existing directory on the
-    * chain (see the probe-safety invariant above).
+    * content-keyed takedowns read every existing address on the chain
+    * (see the probe-safety note above).
     */
   private[functions] def chainOf(deep: Int, nBuckets: Int, maxDepth: Int): Seq[Int] =
     (0 to maxDepth).map(d => (deep.toLong % (nBuckets.toLong << d)).toInt)
@@ -1619,98 +1010,16 @@ object Dedup {
 
   /** Split ONE admission bucket into its two power-of-two children —
     * the incremental, ONLINE alternative to [[rebucketAdmitted]]: cost
-    * is bounded by this bucket's data, no pending marker, no
-    * exclusivity (admissions, probes, and takedowns keep running under
-    * the standard maintenance-beside-writer contract). Decision
-    * invariance and crash safety per the section notes above: the
-    * declared max depth is bumped BEFORE any row moves, children are
-    * published before the parent's files are deleted, and a crash at
-    * any point leaves only duplicate rows on the same probe chain.
-    * Returns the number of key rows rewritten (0 when the bucket
-    * directory is absent or empty).
+    * is bounded by this bucket's data, and admissions, probes, and
+    * takedowns keep running beside it. One commit carries the rekeyed
+    * file lists and the deeper depth declaration. Returns the number
+    * of key rows rewritten (0 when the store or the bucket is absent
+    * or empty).
     */
   def splitAdmittedBucket(spark: SparkSession, storePath: String,
-                          addr: Int): Long = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    if (AdmissionManifestStore.isManifestStore(fs, storePath))
-      return AdmissionManifestStore(storePath).splitBucket(spark, addr)
-    requireNoPendingRebucket(spark, storePath)
-    val n = declaredBuckets(fs, storePath).getOrElse {
-      // no declaration: an EMPTY root is a no-op (nothing to split);
-      // bucket directories without a declaration mean a legacy store
-      // that must take one admission (which stamps `_nbuckets` after
-      // the sanity check) before its layout can be split
-      val hasBuckets = scala.util.Try(fs.listStatus(root))
-        .getOrElse(Array.empty)
-        .exists(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-      if (!hasBuckets) return 0L
-      throw new IllegalStateException(
-        s"splitAdmittedBucket: no declared layout at $storePath — the " +
-          "store must have taken at least one admission")
-    }
-    val splits0 = readSplits(fs, storePath)
-    val depth = splits0.depthByAddr.getOrElse(addr, 0)
-    val newDepth = depth + 1
-    require((n.toLong << newDepth) <= Int.MaxValue.toLong,
-      s"splitAdmittedBucket: depth $newDepth over base $n overflows " +
-        "the int bucket address space")
-    val dir = new org.apache.hadoop.fs.Path(root, s"adm_kb=$addr")
-    val old = scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (old.isEmpty) return 0L
-    // probe safety FIRST: declare the deeper chain before any row can
-    // land at the deeper address — a probe that over-reads by one
-    // depth is harmless, one that under-reads misses collisions
-    if (newDepth > splits0.maxDepth)
-      writeSplits(fs, storePath, splits0.copy(maxDepth = newDepth))
-    val cur = readAdmissionFiles(spark, old.toIndexedSeq)
-    val keyCols = admissionKeyColumns(cur.columns.toSeq)
-    require(keyCols.nonEmpty,
-      s"splitAdmittedBucket: no key columns under $storePath")
-    val rekeyed = cur.drop("adm_kb").withColumn("adm_kb",
-      pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong << newDepth))
-        .cast("int"))
-    val obs = new org.apache.spark.sql.Observation(
-      s"split-$addr-${java.util.UUID.randomUUID().toString.take(8)}")
-    val staging = new org.apache.hadoop.fs.Path(root,
-      s".split-${java.util.UUID.randomUUID().toString.take(8)}")
-    rekeyed.observe(obs, count(lit(1)).as("n"))
-      .repartition(stagePartitions(spark, old.map(_.getLen).sum),
-        col("adm_kb"))
-      .write.mode("overwrite").partitionBy("adm_kb")
-      .parquet(staging.toString)
-    val moved = obs.get("n").asInstanceOf[Long]
-    val children = fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath.getName.stripPrefix("adm_kb=").toInt).toSeq
-    fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-      .foreach { bdir =>
-        val target = new org.apache.hadoop.fs.Path(root, bdir.getPath.getName)
-        fs.listStatus(bdir.getPath)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            renameOrThrow(fs, f.getPath, new org.apache.hadoop.fs.Path(
-              target, s"split$newDepth-${f.getPath.getName}"))
-          }
-      }
-    old.foreach(s => fs.delete(s.getPath, false)) // publish-then-delete
-    fs.delete(staging, true)
-    // a parent whose rows ALL moved to the sibling ends file-less —
-    // drop the dir so probe slices never read a schema-less directory
-    if (scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-        .forall(s => !s.isFile || !s.getPath.getName.endsWith(".parquet")))
-      scala.util.Try(fs.delete(dir, false))
-    // record the children at their new local depth (map written LAST —
-    // a crash before this line re-splits idempotently; the map is a
-    // placement optimization, never a correctness input)
-    writeSplits(fs, storePath, AdmissionSplits(
-      math.max(splits0.maxDepth, newDepth),
-      splits0.depthByAddr - addr ++ children.map(_ -> newDepth)))
-    moved
-  }
+                          addr: Int): Long =
+    AdmissionManifestStore.open(spark, storePath)
+      .fold(0L)(_.splitBucket(spark, addr))
 
   /** Threshold policy for [[maintainAdmitted]] — the wiring between
     * [[admissionStoreStats]]'s WHEN signals and the maintenance
@@ -1721,23 +1030,13 @@ object Dedup {
     * again, and a compacted bucket re-triggers only after
     * `compactOverFiles` further appends.
     */
-  /** `rebaseExclusive`: in the LISTING layout a rebase executes
-    * [[rebucketAdmitted]], which is EXCLUSIVE — it must not run beside
-    * the live writer (a crash mid-migration leaves the pending marker
-    * blocking the writer until the migration re-runs to completion).
-    * `autoRebase` in listing mode is therefore REFUSED unless the
-    * caller also sets this flag, certifying the writer is quiesced for
-    * this run. Manifest mode ignores it: its rebase is one atomic
-    * commit, fully online.
-    */
   final case class AdmissionMaintenancePolicy(
       maxBucketBytes: Long = 0L,
       maxSplitsPerRun: Int = 4,
       compactOverFiles: Int = 0,
       expireBefore: Long = 0L,
       maxDepthBeforeRebase: Int = 0,
-      autoRebase: Boolean = false,
-      rebaseExclusive: Boolean = false)
+      autoRebase: Boolean = false)
 
   final case class AdmissionMaintenanceReport(expired: Long,
                                               compacted: Seq[Int],
@@ -1753,82 +1052,53 @@ object Dedup {
     * (`autoCompactFiles` / `expireBefore` / `maxBucketBytes` riding
     * the writer): run it on a schedule, or from the writer's own
     * process between batches. Safe beside the live writer (every
-    * constituent op follows the maintenance-beside-writer contract);
-    * per-run cost is O(store listing) driver-side plus the triggered
-    * rewrites, with splits capped at `maxSplitsPerRun` buckets' data.
+    * constituent op is a serializable commit); per-run cost is
+    * O(manifest groups) driver-side plus the triggered rewrites, with
+    * splits capped at `maxSplitsPerRun` buckets' data.
     */
   def maintainAdmitted(spark: SparkSession, storePath: String,
       policy: AdmissionMaintenancePolicy): AdmissionMaintenanceReport = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root))
-      return AdmissionMaintenanceReport(0L, Nil, Nil)
-    val manifest = AdmissionManifestStore.isManifestStore(fs, storePath)
-    if (!manifest) requireNoPendingRebucket(spark, storePath)
+    val store = AdmissionManifestStore.open(spark, storePath) match {
+      case Some(st) => st
+      case None => return AdmissionMaintenanceReport(0L, Nil, Nil)
+    }
     val expired =
       if (policy.expireBefore <= 0L) 0L
       else expireAdmitted(spark, storePath, policy.expireBefore)
-    def bucketSizes(): Seq[(Int, Int, Long)] = // (addr, files, bytes)
-      if (manifest) AdmissionManifestStore(storePath).bucketSizes(spark)
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-        .map { d =>
-          val fsz = scala.util.Try(fs.listStatus(d.getPath))
-            .getOrElse(Array.empty)
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          (d.getPath.getName.stripPrefix("adm_kb=").toInt,
-            fsz.length, fsz.map(_.getLen).sum)
-        }.toSeq
     val compacted =
       if (policy.compactOverFiles <= 0) Nil
-      else {
-        val over = bucketSizes().filter(_._2 > policy.compactOverFiles)
-        if (manifest)
-          AdmissionManifestStore(storePath).compactBuckets(spark,
-            over.map(_._1), policy.compactOverFiles, policy.expireBefore)
-        else compactAdmissionBuckets(spark, storePath, over.map(_._1),
-          policy.compactOverFiles, policy.expireBefore)
-      }
+      else store.compactBuckets(spark,
+        store.bucketSizes(spark).filter(_._2 > policy.compactOverFiles)
+          .map(_._1),
+        policy.compactOverFiles, policy.expireBefore)
     // split AFTER compaction so the byte signal reflects deduplicated
-    // data, not replay/crash duplicates a compact would have removed
+    // data, not replay duplicates a compact would have removed
     val split =
       if (policy.maxBucketBytes <= 0L) Nil
-      else bucketSizes().filter(_._3 > policy.maxBucketBytes)
+      else store.bucketSizes(spark).filter(_._3 > policy.maxBucketBytes)
         .sortBy(-_._3).take(math.max(0, policy.maxSplitsPerRun))
-        .map { case (addr, _, _) =>
-          splitAdmittedBucket(spark, storePath, addr); addr
-        }
+        .map { case (addr, _, _) => store.splitBucket(spark, addr); addr }
     // DEPTH GOVERNANCE: probes and takedowns read each key's address
-    // chain across ALL depths 0..maxDepth, so the per-probe existence
-    // checks grow linearly with the declared depth and nothing above
-    // ever shrinks it — a store that splits hot buckets round after
-    // round accretes chain cost forever. When the declared depth
-    // crosses the threshold, the report RECOMMENDS rebasing to the
-    // deepest modulus (nBuckets·2^maxDepth — the full migration that
-    // collapses every chain back to length 1), and `autoRebase` opts
-    // into executing it in this run. In the listing layout that
-    // migration is EXCLUSIVE (quiesce the writer first — the pending
-    // marker makes a violation loud, never silent); in manifest mode
-    // it is one atomic commit and fully online.
-    val depthStats = // one stats listing serves decision AND target
+    // chain across ALL depths 0..maxDepth, so the per-probe reads grow
+    // linearly with the declared depth and nothing above ever shrinks
+    // it — a store that splits hot buckets round after round accretes
+    // chain cost forever. When the declared depth crosses the
+    // threshold, the report RECOMMENDS rebasing to the deepest modulus
+    // (nBuckets·2^maxDepth — the full migration that collapses every
+    // chain back to length 1), and `autoRebase` opts into executing it
+    // in this run (one atomic commit, online like every other op).
+    val depthStats = // one stats read serves decision AND target
       if (policy.maxDepthBeforeRebase <= 0) None
-      else Some(admissionStoreStats(spark, storePath))
+      else Some(store.stats(spark))
     val depthNow = depthStats.map(_.maxDepth).getOrElse(0)
     val rebaseRecommended = policy.maxDepthBeforeRebase > 0 &&
       depthNow >= policy.maxDepthBeforeRebase
     val rebasedTo =
       if (!rebaseRecommended || !policy.autoRebase) None
-      else {
-        require(manifest || policy.rebaseExclusive,
-          s"autoRebase on the listing-layout store at $storePath " +
-            "executes an EXCLUSIVE rebucketAdmitted migration — quiesce " +
-            "the writer and set rebaseExclusive = true to certify it " +
-            "(manifest-mode stores rebase online, no flag needed)")
-        depthStats.flatMap(_.declaredBuckets).map { n =>
-          val grown = (n.toLong << depthNow).toInt // bounded by readSplits
-          rebucketAdmitted(spark, storePath, grown)
-          grown
-        }
+      else depthStats.flatMap(_.declaredBuckets).map { n =>
+        val grown = (n.toLong << depthNow).toInt // bounded by the parser
+        store.rebucket(spark, grown)
+        grown
       }
     AdmissionMaintenanceReport(expired, compacted, split,
       rebaseRecommended, rebasedTo)
@@ -1841,9 +1111,9 @@ object Dedup {
     * far past the layout's design point, every batch is touching a
     * corpus-fraction slice again), how fragmented buckets are
     * (`autoCompactFiles` tuning), and how much L0 tail is riding
-    * between folds. Driver-side listing only — O(buckets) namenode
-    * calls, no Spark job; byte sizes are the row-count proxy that
-    * costs nothing.
+    * between folds. Read from the manifest alone — O(groups) small
+    * manifest reads, no Spark job, no per-file status call; byte sizes
+    * are the row-count proxy that costs nothing.
     */
   final case class AdmissionStoreStats(buckets: Int,
                                        bucketFiles: Long,
@@ -1851,14 +1121,13 @@ object Dedup {
                                        maxBucketFiles: Int,
                                        tailFiles: Int,
                                        tailBytes: Long,
-                                       rebucketPending: Boolean,
                                        declaredBuckets: Option[Int],
                                        maxDepth: Int = 0,
                                        splitBuckets: Int = 0) {
     def avgBucketBytes: Long =
       if (buckets == 0) 0L else bucketBytes / buckets
 
-    /** Directories probed per distinct batch key (the chain cost a
+    /** Addresses probed per distinct batch key (the chain cost a
       * probe or content-keyed takedown pays): one address per declared
       * depth. The depth-governance signal —
       * [[AdmissionMaintenancePolicy.maxDepthBeforeRebase]] watches
@@ -1868,178 +1137,36 @@ object Dedup {
   }
 
   def admissionStoreStats(spark: SparkSession,
-                          storePath: String): AdmissionStoreStats = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root))
-      return AdmissionStoreStats(0, 0L, 0L, 0, 0, 0L,
-        rebucketPending = false, declaredBuckets = None)
-    if (AdmissionManifestStore.isManifestStore(fs, storePath))
-      return AdmissionManifestStore(storePath).stats(spark)
-    val perBucket = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-      .map { d =>
-        val fsz = scala.util.Try(fs.listStatus(d.getPath))
-          .getOrElse(Array.empty)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        (fsz.length, fsz.map(_.getLen).sum)
-      }
-    val tail = scala.util.Try(fs.listStatus(
-        new org.apache.hadoop.fs.Path(admissionTailPath(storePath))))
-      .getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val splits = readSplits(fs, storePath)
-    AdmissionStoreStats(
-      buckets = perBucket.length,
-      bucketFiles = perBucket.map(_._1.toLong).sum,
-      bucketBytes = perBucket.map(_._2).sum,
-      maxBucketFiles = if (perBucket.isEmpty) 0 else perBucket.map(_._1).max,
-      tailFiles = tail.length,
-      tailBytes = tail.map(_.getLen).sum,
-      rebucketPending = fs.exists(rebucketMarker(storePath)),
-      declaredBuckets = declaredBuckets(fs, storePath),
-      maxDepth = splits.maxDepth,
-      splitBuckets = splits.depthByAddr.size)
-  }
+                          storePath: String): AdmissionStoreStats =
+    AdmissionManifestStore.open(spark, storePath).fold(
+      AdmissionStoreStats(0, 0L, 0L, 0, 0, 0L, declaredBuckets = None))(
+      _.stats(spark))
 
-  /** Crash-safe re-bucketing migration for the admission stores — the
+  /** Full re-bucketing migration for the admission stores — the
     * endless-ingest growth path: `nBuckets` fixes the L1 layout at
     * store creation, and the per-batch pruning win (the measured-flat
     * scale shape) requires nBuckets ≫ distinct batch keys. An ingest
     * that outgrows its layout degrades back toward whole-store joins;
-    * this op migrates the store to `newN` buckets in place, after
-    * which every caller passes `nBuckets = newN` (same
-    * layout-for-lifetime contract as before, one generation later).
+    * this op migrates the store to `newN` buckets, after which every
+    * caller passes `nBuckets = newN`.
     *
-    * Shape: every bucket directory's rows (and the L0 tail's, whose
-    * stored `adm_kb` values are stale under the new modulus) are
-    * re-keyed by re-hashing the KEY COLUMNS — the same
-    * `pmod(xxhash64(keys), n)` admission itself computes, so same-key
-    * rows land in the same new bucket by construction and no collision
-    * can be lost. Each directory is rewritten independently: its rows
-    * are staged as a partitioned write (dot-prefixed — invisible to
-    * readers), renamed into their target bucket directories with this
-    * migration's `rb<newN>-` file prefix, and only then are the
-    * superseded files deleted (the compactor's publish-before-delete
-    * discipline). Single-writer, like all store maintenance.
-    *
-    * Crash safety: the `_rebucket_pending` marker is written BEFORE
-    * any file moves and cleared after the last, and every store entry
-    * point refuses to run while it exists — a half-migrated layout can
-    * never silently under-suppress. Re-running after a crash resumes
-    * exactly where it left off (the `rb<newN>-` prefix marks files
-    * already under the target modulus; everything else is reprocessed
-    * — at worst re-copied, leaving duplicate key rows the admission
-    * semantics already tolerate). Admission decisions are
-    * bit-identical across the migration: the store's key multiset is
-    * preserved (modulo benign duplicates) and suppression joins are
-    * equality-on-keys, never bucket-id-dependent.
-    *
-    * Returns the number of key rows moved.
+    * Every stored row (L1 and the L0 tail, whose stored `adm_kb` is
+    * stale under the new modulus) is re-keyed by re-hashing the KEY
+    * COLUMNS — the same `pmod(xxhash64(keys), n)` admission itself
+    * computes, so same-key rows land in the same new bucket by
+    * construction — and ONE commit swaps the whole layout (modulus,
+    * depth map reset, every file list). Online like every other
+    * maintenance op: concurrent probes keep their generation, and a
+    * raced mutation re-derives against the migrated manifest.
+    * Admission decisions are identical across the migration
+    * (suppression joins are equality-on-keys, never
+    * bucket-id-dependent). Returns the number of key rows moved.
     */
   def rebucketAdmitted(spark: SparkSession, storePath: String,
                        newN: Int): Long = {
     require(newN > 0, s"newN must be positive: $newN")
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    if (AdmissionManifestStore.isManifestStore(fs, storePath))
-      return AdmissionManifestStore(storePath).rebucket(spark, newN)
-    val marker = rebucketMarker(storePath)
-    // (re)write the marker first — a re-run may target a different
-    // modulus than the crashed attempt; the file prefix below keys on
-    // the CURRENT target, so earlier half-moved files just reprocess
-    fs.delete(marker, false)
-    val out = fs.create(marker, true)
-    try out.write(newN.toString.getBytes("UTF-8")) finally out.close()
-    val prefix = s"rb$newN-"
-    // snapshot every directory's to-migrate files once (the prefix
-    // marks files already under the target modulus — the resume rule)
-    def pendingIn(dir: org.apache.hadoop.fs.Path) =
-      scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-          !s.getPath.getName.startsWith(prefix))
-    val bucketDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath).toSeq
-    val tailDir = new org.apache.hadoop.fs.Path(admissionTailPath(storePath))
-    var moved = 0L
-    // TWO batched passes (all bucket dirs; the tail, whose stored
-    // adm_kb is a DATA column that would collide with the partition
-    // column of a combined read) — each is one scan + one partitioned
-    // staged write, not a job triple per directory: a corpus-scale
-    // store has thousands of bucket dirs and the migration must scale
-    // with its data, not with driver-sequential job scheduling.
-    val passes = Seq(
-      bucketDirs.map(d => d -> pendingIn(d)).filter(_._2.nonEmpty),
-      Seq(tailDir -> pendingIn(tailDir)).filter(_._2.nonEmpty))
-    passes.foreach { byDir =>
-      if (byDir.nonEmpty) {
-        val cur = readAdmissionFiles(spark,
-          byDir.flatMap(_._2.toIndexedSeq))
-        // the SAME derivation admission itself uses (xxhash64 is
-        // order-sensitive; admitByKeys' keys0 order wrote these files)
-        val keyCols = admissionKeyColumns(cur.columns.toSeq)
-        require(keyCols.nonEmpty,
-          s"rebucketAdmitted: no key columns under $storePath")
-        val rekeyed = cur.drop("adm_kb").withColumn("adm_kb",
-          pmod(xxhash64(keyCols.map(col): _*), lit(newN)).cast("int"))
-        val staging = new org.apache.hadoop.fs.Path(root,
-          s".rebucket-${java.util.UUID.randomUUID().toString.take(8)}")
-        // moved-row count observed ON the staging write itself — a
-        // separate count() action would re-scan the whole store once
-        // more per pass, pure overhead on a migration that already
-        // reads every row exactly once
-        val obs = new org.apache.spark.sql.Observation(
-          s"rebucket-${staging.getName}")
-        rekeyed.observe(obs, count(lit(1)).as("n"))
-          .repartition(stagePartitions(spark,
-              byDir.flatMap(_._2).map(_.getLen).sum),
-            col("adm_kb"))
-          .write.mode("overwrite").partitionBy("adm_kb")
-          .parquet(staging.toString)
-        moved += obs.get("n").asInstanceOf[Long]
-        // publish-then-delete, globally: every staged file renames in
-        // under the prefix, then every superseded file is deleted — a
-        // crash between the two leaves duplicate key rows (tolerated),
-        // and the re-run's prefix rule skips what already landed
-        fs.listStatus(staging)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-          .foreach { bdir =>
-            val target = new org.apache.hadoop.fs.Path(root,
-              bdir.getPath.getName)
-            fs.mkdirs(target)
-            fs.listStatus(bdir.getPath)
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .foreach { f =>
-                renameOrThrow(fs, f.getPath,
-                  new org.apache.hadoop.fs.Path(target,
-                    s"$prefix${f.getPath.getName}"))
-              }
-          }
-        byDir.foreach { case (_, old) =>
-          old.foreach(s => fs.delete(s.getPath, false))
-        }
-        fs.delete(staging, true)
-      }
-    }
-    // source dirs left empty (all rows moved elsewhere) are dropped so
-    // future probes don't list hollow directories
-    bucketDirs.foreach { dir =>
-      if (scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-          .forall(s => !s.isFile || !s.getPath.getName.endsWith(".parquet")))
-        fs.delete(dir, true)
-    }
-    // declare the migrated layout BEFORE clearing the pending marker:
-    // a crash between the two re-runs the (idempotent) migration, and
-    // once the marker is gone every entry point holds the caller to
-    // the new modulus. A full migration re-keys everything to depth 0
-    // under newN, so any incremental-split state is reset with it.
-    val lm = fs.create(layoutMarker(storePath), true)
-    try lm.write(newN.toString.getBytes("UTF-8")) finally lm.close()
-    fs.delete(splitsMarker(storePath), false)
-    fs.delete(marker, false)
-    moved
+    AdmissionManifestStore.open(spark, storePath)
+      .fold(0L)(_.rebucket(spark, newN))
   }
 
   /** Remove documents from a minhash admission store — the takedown /
@@ -2054,11 +1181,11 @@ object Dedup {
     * `docs` must carry the removed documents' TEXT, and the key
     * parameters must match the store's (same contract as `nBuckets`,
     * which fixes the layout until a [[rebucketAdmitted]] migration
-    * moves it to a new modulus): the keys are
-    * re-derived to locate the touched buckets, so only O(removal
-    * batch) bucket directories are read and rewritten — never the
-    * corpus-scale store. When the text is no longer available, use
-    * [[removeAdmittedIds]] (full sweep). Returns rows removed.
+    * moves it to a new modulus): the keys are re-derived to locate the
+    * touched buckets, so only O(removal batch) bucket file lists are
+    * read and rewritten — never the corpus-scale store. When the text
+    * is no longer available, use [[removeAdmittedIds]] (full sweep).
+    * Returns rows removed.
     */
   def nearDupRemove(docs: DataFrame, storePath: String,
                     idCol: String, textCol: String,
@@ -2071,17 +1198,16 @@ object Dedup {
 
   /** The shared removal core (minhash bands / SRP buckets — the same
     * two callers as [[admitByKeys]]): drop every store row whose
-    * doc_id belongs to `keys0`, reading and rewriting ONLY the bucket
-    * directories the re-derived keys hash into (a doc's keys land in
-    * exactly these buckets by construction, so pruning is lossless).
+    * doc_id belongs to `keys0`, reading and rewriting ONLY the buckets
+    * on the re-derived keys' address chains (a doc's keys land on
+    * exactly these chains by construction, so pruning is lossless)
+    * plus the bounded tail.
     *
-    * Same single-writer discipline as the appends. Crash-safe the
-    * same way the compactor is — the filtered file is renamed in
-    * BEFORE the superseded files are deleted, so a crash leaves at
-    * worst the removed keys still present (removal incomplete;
-    * re-running completes it — the operation is idempotent) plus
-    * duplicated kept keys (which admission semantics tolerate); kept
-    * keys are never lost, preserving the store's monotone contract.
+    * One serializable commit: the touched chains are re-derived from
+    * the exact manifest the rewrite commits over (per CAS attempt), so
+    * a concurrent split or fold can never hide a relocated row, and
+    * the call returns only once the removal is complete. Kept keys are
+    * never lost. Idempotent — a second run finds nothing.
     *
     * Removal is PHYSICAL and immediate (no tombstones — unlike the
     * codes stores there is no frozen-artifact segment to anti-join
@@ -2089,95 +1215,14 @@ object Dedup {
     * replayed upstream batch that still contains a removed document
     * will re-admit it, which is an upstream-retention concern, not a
     * store invariant.
-    *
-    * DRAINS internally: a removal raced by the writer's concurrent
-    * fold/compact can leave target keys alive in the concurrently
-    * rewritten copy while this pass still reports a positive count —
-    * the one-shot GDPR-style caller would read that as "done". So
-    * every removal entry point re-runs its pass until one proves the
-    * store clean, and the returned total is only ever reported
-    * alongside that proof. The common no-contention case SKIPS the
-    * extra data scan: every rewrite records the exact file-name sets
-    * its touched directories must hold after its publishes (snapshot
-    * minus deletions plus staged names — every store writer uses
-    * fresh unique names, so name-set equality is as strong as
-    * re-reading contents), and a post-pass re-listing that matches
-    * them proves no concurrent rewrite could have re-materialized a
-    * target row: any fold/compact/split that read files before this
-    * pass deleted them must publish INTO a directory this pass
-    * listed. Only a mismatch — real contention — pays the extra
-    * detection scan (which keeps re-running until a pass both finds
-    * nothing and verifies, exactly the prior contract).
-    *
-    * FULL sweeps (no key derivation to bound the touched chains) must
-    * additionally prove no bucket directory APPEARED: a concurrent
-    * fold can publish target rows into a brand-new `adm_kb=` directory
-    * the pass never listed while every examined-dir expectation still
-    * matches — so a full-sweep pass also carries the root's dir-NAME
-    * set (snapshot minus the dirs the pass itself dropped), and any
-    * deviation forces a rescan. The root check applies to 0-hit passes
-    * too (one listing — it cannot starve the drain the way per-dir
-    * tail churn would, because the dir-name set changes only on the
-    * bounded-frequency fold/split/migrate events, never on appends).
-    * Key-derived removals need no root expectation: a target key can
-    * only ever live at its chain addresses, and the pass enumerates
-    * the full chain including not-yet-existing directories.
     */
-  private def drainRemoval(fs: org.apache.hadoop.fs.FileSystem)(
-      pass: () => (Long, Seq[(org.apache.hadoop.fs.Path, Set[String])],
-        Seq[(org.apache.hadoop.fs.Path, Set[String])])): Long = {
-    var total = 0L
-    var done = false
-    while (!done) {
-      val (n, expected, rootExpected) = pass()
-      drainPassFence() // test seam: no-op in production
-      total += n
-      def rootOk = rootExpected.forall { case (root, names) =>
-        scala.util.Try(fs.listStatus(root)).getOrElse(Array.empty)
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("adm_kb="))
-          .map(_.getPath.getName).toSet == names
-      }
-      // a 0-hit pass is detection-scan-proven clean over every
-      // directory it listed (the prior contract's stop condition —
-      // also the drain's termination guarantee beside a writer that
-      // never stops appending), PLUS the full-sweep root proof above;
-      // a hit pass stops without the extra scan only on both proofs
-      done =
-        if (n == 0L) rootOk
-        else rootOk && expected.forall {
-          case (dir, names) =>
-            scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-              .filter(s => s.isFile &&
-                s.getPath.getName.endsWith(".parquet"))
-              .map(_.getPath.getName).toSet == names
-        }
-    }
-    total
-  }
-
-  /** Test seam for the drain: invoked between a removal pass and its
-    * uncontended-listing verification, so a spec can fabricate the
-    * exact mid-drain contention (a concurrent fold or split
-    * re-materializing rows after a pass's snapshot). No-op in
-    * production.
-    */
-  @volatile private[graft] var drainPassFence: () => Unit = () => ()
-
   private[functions] def removeByKeys(keys0: DataFrame, storePath: String,
                                       nBuckets: Int): Long = {
     val spark = keys0.sparkSession
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    val fsEarly = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = AdmissionManifestStore.isManifestStore(fsEarly, storePath)
-    if (!manifest) {
-      requireNoPendingRebucket(spark, storePath)
-      // a takedown against a mismatched layout would rewrite the wrong
-      // directories and report removal complete while the keys survive —
-      // refuse like admission does (no stamping: removal is not the
-      // writer and must not create layout state)
-      requireLayout(fsEarly, storePath, nBuckets, stampIfAbsent = false)
+    val store = AdmissionManifestStore.open(spark, storePath) match {
+      case Some(st) => st
+      case None => return 0L
     }
     val keyCols = admissionKeyColumns(keys0.columns.toSeq)
     require(keyCols.nonEmpty, "removeByKeys: no key columns beside doc_id")
@@ -2188,462 +1233,112 @@ object Dedup {
     // Spark's numeric coercion (matching removeAdmittedIds' cast).
     // ONE collect of the takedown-batch-bounded (id, key-hash) pairs:
     // every downstream consumer (the removal INSET, the touched-chain
-    // expansion — re-derived per drain pass / CAS attempt against the
-    // CURRENT depth map, but from the same immutable hash set) is
-    // driver-side, so the former checkpoint + three collect jobs were
-    // three plans and three scheduler round-trips for one value.
+    // expansion — re-derived per CAS attempt against the CURRENT depth
+    // map, but from the same immutable hash set) is driver-side.
     val pairs = keys0.select(col("doc_id").cast("long").as("doc_id"),
         xxhash64(keyCols.map(col): _*).as("adm_kh"))
       .distinct().collect()
     val ids = pairs.map(_.getLong(0)).toSet
     val khs = pairs.map(_.getLong(1)).distinct.toIndexedSeq
     def pm(h: Long, m: Long): Int = (((h % m) + m) % m).toInt
-    if (manifest) {
-      // serializable commits replace the drain: the rewrite derives
-      // its touched chains from the exact manifest it commits over
-      // (targetsOf re-runs per CAS attempt), so no interleaving can
-      // hide a relocated row
-      val store = AdmissionManifestStore(storePath)
-      return store.rewriteStore(spark,
-        Some { man =>
-          require(man.nBuckets == nBuckets,
-            s"admission store at $storePath is laid out over " +
-              s"${man.nBuckets} buckets but the caller passed " +
-              s"nBuckets=$nBuckets")
-          val m = man.nBuckets.toLong << man.maxDepth
-          khs.map(pm(_, m))
-            .flatMap(chainOf(_, man.nBuckets, man.maxDepth)).distinct
-        },
-        d => d.filter(col("doc_id").isInCollection(ids)),
-        d => d.filter(!col("doc_id").isInCollection(ids)))
-    }
-    val fs = fsEarly
-    // the split declaration and the touched-chain expansion are
-    // re-derived INSIDE every drain pass (mirroring removeAdmittedIds'
-    // per-pass bucket re-snapshot): a concurrent split — e.g. the
-    // writer's own maxBucketBytes auto-split riding an admission turn —
-    // can relocate target rows to a deeper directory mid-takedown, and
-    // a chain computed once before the drain would leave those rows
-    // off every subsequent pass while the drain reports the store
-    // clean. Each pass expands the chain against the CURRENT deepest
-    // modulus, so relocated rows are back on it.
-    drainRemoval(fs) { () =>
-      val splits = readSplits(fs, storePath)
-      requireChainAddressable(storePath, nBuckets, splits)
-      val m = nBuckets.toLong << splits.maxDepth
-      val touched = khs.map(pm(_, m))
-        .flatMap(chainOf(_, nBuckets, splits.maxDepth)).distinct
-      removeIdsInBuckets(spark, storePath, ids, Some(touched))
-    }
+    store.rewriteStore(spark,
+      Some { man =>
+        require(man.nBuckets == nBuckets,
+          s"admission store at $storePath is laid out over " +
+            s"${man.nBuckets} buckets but the caller passed " +
+            s"nBuckets=$nBuckets")
+        val m = man.nBuckets.toLong << man.maxDepth
+        khs.map(pm(_, m))
+          .flatMap(chainOf(_, man.nBuckets, man.maxDepth)).distinct
+      },
+      d => d.filter(col("doc_id").isInCollection(ids)),
+      d => d.filter(!col("doc_id").isInCollection(ids)))
   }
 
   /** Full-sweep removal by id — for takedowns where the document
     * content is gone (so the touched buckets can't be re-derived):
-    * every existing bucket directory is read and the ones holding a
-    * target id rewritten. O(store) read cost — acceptable for the
-    * rare takedown path; prefer [[nearDupRemove]] /
-    * [[Similarity.embedNearDupRemove]] while the content is at hand.
-    * `ids` is takedown-sized (driver-held); chunk very large lists.
+    * every bucket's files are read and the ones holding a target id
+    * rewritten. O(store) read cost — acceptable for the rare takedown
+    * path; prefer [[nearDupRemove]] / [[Similarity.embedNearDupRemove]]
+    * while the content is at hand. `ids` is takedown-sized
+    * (driver-held); chunk very large lists or use the DataFrame
+    * overload.
     */
   def removeAdmittedIds(spark: SparkSession, storePath: String,
                         ids: Set[Long]): Long = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    if (AdmissionManifestStore.isManifestStore(fs, storePath)) {
-      if (ids.isEmpty) return 0L
-      return AdmissionManifestStore(storePath).rewriteStore(spark, None,
+    AdmissionManifestStore.open(spark, storePath).fold(0L) { store =>
+      if (ids.isEmpty) 0L
+      else store.rewriteStore(spark, None,
         d => d.filter(col("doc_id").isInCollection(ids)),
         d => d.filter(!col("doc_id").isInCollection(ids)))
-    }
-    requireNoPendingRebucket(spark, storePath)
-    // bucket list snapshotted INSIDE each pass (rewriteBuckets' None
-    // shape), which also records the root dir-name expectation the
-    // full-sweep drain proof requires
-    drainRemoval(fs) { () =>
-      removeIdsInBuckets(spark, storePath, ids, None)
     }
   }
 
   /** Full-sweep removal by a DISTRIBUTED id relation — the shape a
     * large decontamination list needs (millions of ids fit neither an
-    * INSET literal nor the driver): every bucket directory and the
-    * tail are rewritten through an anti-join against `ids` (its first
-    * column, cast to long). Same crash discipline and idempotence as
-    * the Set overload; directories with no hit stay physically
-    * untouched. Returns rows removed.
+    * INSET literal nor the driver): every bucket and the tail are
+    * checked through a semi-join against `ids` (its first column, cast
+    * to long) and the hit buckets rewritten through the anti-join. Same
+    * commit discipline and idempotence as the Set overload; buckets
+    * with no hit stay untouched. Returns rows removed.
     */
   def removeAdmittedIds(spark: SparkSession, storePath: String,
                         ids: DataFrame): Long = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    // one distinct projection feeding the detection semi-join and the
-    // surviving-rows anti-join — materialize once
-    val rm = ids.select(col(ids.columns.head).cast("long").as("rm_id"))
-      .distinct().localCheckpoint(true)
-    if (AdmissionManifestStore.isManifestStore(fs, storePath))
-      return AdmissionManifestStore(storePath).rewriteStore(spark, None,
+    AdmissionManifestStore.open(spark, storePath).fold(0L) { store =>
+      // one distinct projection feeding the detection semi-join and the
+      // surviving-rows anti-join — materialize once
+      val rm = ids.select(col(ids.columns.head).cast("long").as("rm_id"))
+        .distinct().localCheckpoint(true)
+      store.rewriteStore(spark, None,
         d => d.join(rm, d("doc_id") === rm("rm_id"), "left_semi"),
         d => d.join(rm, d("doc_id") === rm("rm_id"), "left_anti"))
-    requireNoPendingRebucket(spark, storePath)
-    drainRemoval(fs) { () =>
-      val b = rewriteBucketsJoining(spark, storePath, rm)
-      val t = rewriteDirJoining(spark, root,
-        new org.apache.hadoop.fs.Path(admissionTailPath(storePath)), rm)
-      (b.hits + t.hits, b.expected ++ t.expected, b.rootExpected)
     }
-  }
-
-  /** Join-shaped single-directory rewrite (the L0 tail under a
-    * distributed removal relation): same publish-before-delete
-    * discipline as [[rewriteDirDropping]].
-    */
-  private def rewriteDirJoining(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, dir: org.apache.hadoop.fs.Path,
-      rm: DataFrame): RewriteOutcome =
-    rewriteDirTransforming(spark, root, dir,
-      d => d.join(rm, d("doc_id") === rm("rm_id"), "left_semi"),
-      d => d.join(rm, d("doc_id") === rm("rm_id"), "left_anti"))
-
-  /** Publish one staged file into a live directory. Hadoop's rename
-    * reports failure by RETURNING FALSE (e.g. the target directory was
-    * concurrently dropped by an empty-dir cleanup running beside this
-    * writer) — unchecked, the caller would proceed to delete the
-    * superseded files while the staged replacement never landed,
-    * silently dropping rows. So: re-create the target (covers the
-    * dropped-dir race) and treat a still-failing rename as the
-    * transient per-turn failure the concurrency contract already
-    * prescribes retrying — the staged rows stay recoverable in the
-    * staging directory, and nothing superseded has been deleted yet.
-    */
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit = {
-    fs.mkdirs(dst.getParent)
-    require(fs.rename(src, dst),
-      s"publish rename failed: $src -> $dst — aborting this turn " +
-        "BEFORE deleting any superseded file (re-run to retry; staged " +
-        "rows remain in the staging directory)")
-  }
-
-  /** Stage `keep` as one parquet file, rename it into `dir`, then
-    * delete the superseded `old` files — the shared publish-before-
-    * delete rewrite every store-directory mutation uses (see
-    * [[removeByKeys]] for the crash analysis).
-    */
-  private def publishRewrite(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, dir: org.apache.hadoop.fs.Path,
-      keep: DataFrame,
-      old: Array[org.apache.hadoop.fs.FileStatus]): Set[String] = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(root,
-      s".remove-${java.util.UUID.randomUUID().toString.take(8)}")
-    keep.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val published = fs.listStatus(staging)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val name = s"removed-${s.getPath.getName}"
-        renameOrThrow(fs, s.getPath,
-          new org.apache.hadoop.fs.Path(dir, name))
-        name
-      }
-    old.foreach(s => fs.delete(s.getPath, false))
-    fs.delete(staging, true)
-    published.toSet
-  }
-
-  /** Rewrite the `buckets` holding target rows (plus the L0 tail,
-    * which is not bucket-addressable but budget-bounded) dropping
-    * rows whose doc_id ∈ `ids`; directories with no hit are left
-    * physically untouched (their files' identity is part of the
-    * pruning spec).
-    *
-    * All touched bucket directories ride a CONSTANT number of Spark
-    * jobs — one hit-detection pass over the touched slice, one
-    * partitioned staging write over the hit buckets — rather than a
-    * read+count+rewrite job triple per directory: a takedown whose
-    * keys spray across dozens of buckets is otherwise dominated by
-    * driver-sequential job scheduling, which is exactly the overhead
-    * that grows with store size (more buckets per batch at a bigger
-    * modulus) while the data per bucket stays constant.
-    *
-    * Publication order per directory is unchanged (staged file
-    * renamed in, then exactly the files the pass read are deleted —
-    * see [[removeByKeys]] for the crash analysis); a bucket whose
-    * rows are ALL removed ends empty and its directory is dropped so
-    * probe-slice reads never face a schema-less directory.
-    */
-  private def removeIdsInBuckets(spark: SparkSession, storePath: String,
-      ids: Set[Long], buckets: Option[Seq[Int]])
-      : (Long, Seq[DirExpectation], Seq[DirExpectation]) = {
-    if (ids.isEmpty) return (0L, Nil, Nil)
-    val pred = (df: DataFrame) => col("doc_id").isInCollection(ids)
-    val b = rewriteBucketsDropping(spark, storePath, buckets, pred)
-    val t = rewriteDirDropping(spark,
-      new org.apache.hadoop.fs.Path(storePath),
-      new org.apache.hadoop.fs.Path(admissionTailPath(storePath)), pred)
-    (b.hits + t.hits, b.expected ++ t.expected, b.rootExpected)
-  }
-
-  /** The batched bucket-directory rewrite under every full-sweep or
-    * multi-bucket store mutation (takedown, expiry): drop the rows
-    * `dropPredOf` selects from the given buckets (None = every
-    * existing bucket directory) in a CONSTANT number of Spark jobs —
-    * one hit-detection pass (per-bucket hit counts), one partitioned
-    * staging write of the hit buckets' surviving rows — rather than a
-    * read+count+rewrite job triple per directory, which made
-    * maintenance turns scale with driver-sequential job scheduling
-    * rather than data (ScaleProof admit_maint: exponent 0.26 → 0.08).
-    *
-    * Crash discipline per directory is unchanged (staged file renamed
-    * in, then exactly the files this pass read are deleted — see
-    * [[removeByKeys]]); no-hit directories stay physically untouched
-    * (the pruning spec's pin); a fully-emptied bucket's directory is
-    * dropped (non-recursively — refused if a concurrent writer landed
-    * rows meanwhile) so probe slices never read a schema-less
-    * directory. The L0 tail is NOT covered here (its adm_kb is a data
-    * column, not a partition) — callers pair this with
-    * [[rewriteDirDropping]] on the tail. Returns rows dropped.
-    */
-  private def rewriteBucketsDropping(spark: SparkSession,
-      storePath: String, buckets: Option[Seq[Int]],
-      dropPredOf: DataFrame => Column): RewriteOutcome =
-    rewriteBuckets(spark, storePath, buckets,
-      d => d.filter(dropPredOf(d)), d => d.filter(!dropPredOf(d)))
-
-  /** [[rewriteBucketsDropping]]'s join-shaped twin for removal sets
-    * too large for an IN literal: drop every row whose doc_id appears
-    * in `rm` (single column `rm_id`, long) from every bucket
-    * directory — one semi-join detection pass, one anti-join staged
-    * write, same crash discipline and empty-dir handling.
-    */
-  private def rewriteBucketsJoining(spark: SparkSession,
-      storePath: String, rm: DataFrame): RewriteOutcome =
-    rewriteBuckets(spark, storePath, None,
-      d => d.join(rm, d("doc_id") === rm("rm_id"), "left_semi"),
-      d => d.join(rm, d("doc_id") === rm("rm_id"), "left_anti"))
-
-  /** A directory rewrite's hit count plus, for every directory it
-    * examined, the exact parquet file-name set the directory must
-    * hold once the rewrite's publishes land (untouched snapshot /
-    * staged replacements / empty when dropped) — the drain's
-    * uncontended proof: every writer publishes under fresh unique
-    * names, so a post-pass listing equal to `expected` certifies no
-    * concurrent rewrite slipped rows past this pass's snapshot.
-    */
-  private type DirExpectation = (org.apache.hadoop.fs.Path, Set[String])
-  /** `rootExpected` (full sweeps only): the set of `adm_kb=` directory
-    * NAMES the store root must hold once the sweep's publishes land —
-    * the drain's proof that no concurrent fold published target rows
-    * into a directory the sweep never listed.
-    */
-  private final case class RewriteOutcome(hits: Long,
-                                          expected: Seq[DirExpectation],
-                                          rootExpected: Seq[DirExpectation] =
-                                            Nil)
-
-  /** The shared core of the two shapes above: `hitsOf` selects the
-    * rows to drop, `keepOf` the complement.
-    */
-  private def rewriteBuckets(spark: SparkSession,
-      storePath: String, buckets: Option[Seq[Int]],
-      hitsOf: DataFrame => DataFrame,
-      keepOf: DataFrame => DataFrame): RewriteOutcome = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return RewriteOutcome(0L, Nil)
-    val targets: Seq[org.apache.hadoop.fs.Path] = buckets match {
-      case Some(bs) => bs.distinct.map(b =>
-        new org.apache.hadoop.fs.Path(root, s"adm_kb=$b"))
-      case None => fs.listStatus(root)
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("adm_kb="))
-        .map(_.getPath).toSeq
-    }
-    // full sweep: the drain's root proof — snapshot dir names now,
-    // subtract the dirs this pass drops below
-    val rootNames: Option[Set[String]] =
-      if (buckets.isEmpty) Some(targets.map(_.getName).toSet) else None
-    def rootExpectation(dropped: Set[String]): Seq[DirExpectation] =
-      rootNames.map(ns => root -> (ns -- dropped)).toSeq
-    // snapshot the targeted buckets' current files ONCE: the staging
-    // write reads exactly these and the delete removes exactly these,
-    // so rows landing concurrently stay out of both (the concurrency
-    // contract's publish-before-delete discipline)
-    val byDir = targets.map { dir =>
-      dir -> scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }.filter(_._2.nonEmpty)
-    // examined-but-untouched directories expect their snapshot names
-    // (empty for target dirs that had no files) — any deviation at
-    // verification time is concurrent activity the drain must rescan
-    def snapshotExpectation(dirs: Seq[(org.apache.hadoop.fs.Path,
-        Array[org.apache.hadoop.fs.FileStatus])]): Seq[DirExpectation] =
-      dirs.map { case (dir, fsz) =>
-        dir -> fsz.map(_.getPath.getName).toSet }
-    val emptyTargets: Seq[DirExpectation] =
-      targets.filterNot(byDir.map(_._1).contains)
-        .map(_ -> Set.empty[String])
-    if (byDir.isEmpty)
-      return RewriteOutcome(0L, emptyTargets, rootExpectation(Set.empty))
-    val cur = readAdmissionFiles(spark, byDir.flatMap(_._2.toIndexedSeq),
-      Some(storePath))
-    // one job: per-bucket hit counts (≤ targeted buckets rows)
-    val hits = hitsOf(cur).groupBy(col("adm_kb"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (hits.isEmpty)
-      return RewriteOutcome(0L, snapshotExpectation(byDir) ++ emptyTargets,
-        rootExpectation(Set.empty))
-    val (hitDirs, cleanDirs) = byDir.partition { case (dir, _) =>
-      hits.contains(dir.getName.stripPrefix("adm_kb=").toInt) }
-    val staging = new org.apache.hadoop.fs.Path(root,
-      s".remove-${java.util.UUID.randomUUID().toString.take(8)}")
-    // one job: surviving rows of every hit bucket, re-partitioned into
-    // their directories in a single staged write (the adm_kb filter
-    // partition-prunes the same snapshot relation down to exactly the
-    // hit buckets' files)
-    keepOf(cur.filter(col("adm_kb").isInCollection(hits.keySet.toSeq)))
-      .repartition(stagePartitions(spark,
-          hitDirs.flatMap(_._2).map(_.getLen).sum),
-        col("adm_kb"))
-      .write.mode("overwrite").partitionBy("adm_kb")
-      .parquet(staging.toString)
-    val droppedDirs = Set.newBuilder[String]
-    val rewritten: Seq[DirExpectation] = hitDirs.map { case (dir, old) =>
-      val staged = new org.apache.hadoop.fs.Path(staging, dir.getName)
-      val stagedFiles = scala.util.Try(fs.listStatus(staged))
-        .getOrElse(Array.empty)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      val published = stagedFiles.map { s =>
-        val name = s"removed-${s.getPath.getName}"
-        renameOrThrow(fs, s.getPath,
-          new org.apache.hadoop.fs.Path(dir, name))
-        name
-      }
-      old.foreach(s => fs.delete(s.getPath, false))
-      if (stagedFiles.isEmpty &&
-          scala.util.Try(fs.delete(dir, false)).getOrElse(false))
-        droppedDirs += dir.getName // a refused (non-empty) delete keeps
-                                   // the dir in the root expectation —
-                                   // the mismatch forces the rescan
-      dir -> published.toSet
-    }
-    fs.delete(staging, true)
-    RewriteOutcome(hits.values.sum,
-      rewritten ++ snapshotExpectation(cleanDirs) ++ emptyTargets,
-      rootExpectation(droppedDirs.result()))
   }
 
   /** Physically drop admitted keys older than `cutoffMs` from every
-    * bucket directory and the tail — the maintenance half of windowed
-    * dedup (see [[admitByKeys]]'s retention notes; `suppressSince`
-    * already hides them at query time): state stays bounded by the
-    * window however long the ingest runs. A full-store pass, like the
-    * codes stores' `consolidate()` — run it on the retention cadence,
-    * not per batch. Same per-directory crash discipline as removal;
-    * idempotent. Returns rows expired.
+    * bucket and the tail — the maintenance half of windowed dedup (see
+    * [[admitByKeys]]'s retention notes; `suppressSince` already hides
+    * them at query time): state stays bounded by the window however
+    * long the ingest runs. A full-store pass, like the codes stores'
+    * `consolidate()` — run it on the retention cadence, not per batch.
+    * One serializable commit; idempotent. Returns rows expired.
     */
   def expireAdmitted(spark: SparkSession, storePath: String,
                      cutoffMs: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root) || cutoffMs <= 0L) return 0L
     val pred = (df: DataFrame) =>
       if (df.columns.contains("adm_ts"))
-        // null stamps fail closed (kept), mirroring [[inWindow]]: an
+        // null stamps fail closed (kept), mirroring the probe's window: an
         // unknown-age key is never silently expired — [[stampAdmitted]]
-        // is the explicit migration that makes legacy rows expirable
+        // is the explicit migration that makes unstamped rows expirable
         coalesce(col("adm_ts"), lit(Long.MaxValue)) < lit(cutoffMs)
-      else lit(false) // whole directory pre-retention: keep it all
-    if (AdmissionManifestStore.isManifestStore(fs, storePath))
-      return AdmissionManifestStore(storePath).rewriteStore(spark, None,
+      else lit(false) // unstamped files: keep them all
+    AdmissionManifestStore.open(spark, storePath).fold(0L) { store =>
+      if (cutoffMs <= 0L) 0L
+      else store.rewriteStore(spark, None,
         d => d.filter(pred(d)), d => d.filter(!pred(d)))
-    requireNoPendingRebucket(spark, storePath)
-    // every bucket directory in ONE detection pass + ONE staged write
-    // (the retention cron runs this over thousands of buckets — a
-    // per-directory job loop would scale with the modulus)
-    rewriteBucketsDropping(spark, storePath, None, pred).hits +
-      rewriteDirDropping(spark, root,
-        new org.apache.hadoop.fs.Path(admissionTailPath(storePath)), pred)
-        .hits
+    }
   }
 
-  /** One-time migration for admission stores written before the
-    * retention column existed: stamp every key row whose `adm_ts` is
-    * absent or null with `tsMs`, after which window semantics
-    * (`suppressSince` hiding, [[expireAdmitted]] expiry) apply to them
-    * like any other row. Unknown-age rows otherwise FAIL CLOSED
-    * (suppress forever, never expire) by design — this is the explicit
-    * opt-in that makes legacy state expirable. Per-directory
-    * publish-before-delete (see [[removeByKeys]] for the crash
-    * analysis; a crash can leave a key row duplicated in stamped and
-    * unstamped form, which suppression tolerates and compaction merges
-    * to the concrete stamp); idempotent — a second run finds nothing
-    * unstamped. Returns rows stamped.
+  /** One-time migration for key rows written before the retention
+    * column existed: stamp every key row whose `adm_ts` is absent or
+    * null with `tsMs`, after which window semantics (`suppressSince`
+    * hiding, [[expireAdmitted]] expiry) apply to them like any other
+    * row. Unknown-age rows otherwise FAIL CLOSED (suppress forever,
+    * never expire) by design — this is the explicit opt-in that makes
+    * them expirable. One serializable commit; idempotent — a second
+    * run finds nothing unstamped. Returns rows stamped.
     */
   def stampAdmitted(spark: SparkSession, storePath: String,
                     tsMs: Long): Long = {
     require(tsMs >= 0L, s"stampAdmitted needs a concrete epoch-ms stamp: $tsMs")
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    // hit = a row with no concrete stamp; the rewrite keeps EVERY row,
-    // stamping the unstamped — the transform shape of the shared
-    // batched core (one detection pass + one staged write over all
-    // hit buckets, not a job pair per directory)
-    val hitsOf = (d: DataFrame) =>
-      if (!d.columns.contains("adm_ts")) d
-      else d.filter(col("adm_ts").isNull)
-    val keepOf = (d: DataFrame) =>
-      if (!d.columns.contains("adm_ts")) d.withColumn("adm_ts", lit(tsMs))
-      else d.withColumn("adm_ts", coalesce(col("adm_ts"), lit(tsMs)))
-    if (AdmissionManifestStore.isManifestStore(fs, storePath))
-      return AdmissionManifestStore(storePath)
-        .transformStore(spark, hitsOf, keepOf)
-    requireNoPendingRebucket(spark, storePath)
-    rewriteBuckets(spark, storePath, None, hitsOf, keepOf).hits +
-      rewriteDirTransforming(spark, root,
-        new org.apache.hadoop.fs.Path(admissionTailPath(storePath)),
-        hitsOf, keepOf).hits
-  }
-
-  /** Rewrite one store directory dropping the rows `dropPredOf`
-    * selects; no-hit directories are left physically untouched.
-    * Publication order: staged filtered file renamed in, then
-    * superseded files deleted — see [[removeByKeys]] for the crash
-    * analysis. Returns rows dropped.
-    */
-  private def rewriteDirDropping(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, dir: org.apache.hadoop.fs.Path,
-      dropPredOf: DataFrame => Column): RewriteOutcome =
-    rewriteDirTransforming(spark, root, dir,
-      d => d.filter(dropPredOf(d)), d => d.filter(!dropPredOf(d)))
-
-  /** The single-directory core under every tail/dir mutation:
-    * `hitsOf` selects the rows whose presence makes a rewrite
-    * necessary, `keepOf` produces the directory's new content (the
-    * complement for removals; ALL rows transformed for stamping).
-    * No-hit directories stay physically untouched; publication order
-    * is staged-rename-then-delete — see [[removeByKeys]] for the
-    * crash analysis. Returns the hit count.
-    */
-  private def rewriteDirTransforming(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, dir: org.apache.hadoop.fs.Path,
-      hitsOf: DataFrame => DataFrame,
-      keepOf: DataFrame => DataFrame): RewriteOutcome = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (old.isEmpty) return RewriteOutcome(0L, Seq(dir -> Set.empty))
-    val cur = readAdmissionFiles(spark, old.toIndexedSeq)
-    val hit = hitsOf(cur).count()
-    if (hit == 0L)
-      return RewriteOutcome(0L,
-        Seq(dir -> old.map(_.getPath.getName).toSet))
-    val published = publishRewrite(spark, root, dir, keepOf(cur), old)
-    RewriteOutcome(hit, Seq(dir -> published))
+    // hit = a row with no concrete stamp; the rewrite keeps EVERY row
+    // of a hit bucket, stamping the unstamped
+    AdmissionManifestStore.open(spark, storePath).fold(0L)(
+      _.transformStore(spark,
+        d => if (!d.columns.contains("adm_ts")) d
+          else d.filter(col("adm_ts").isNull),
+        d => if (!d.columns.contains("adm_ts")) d.withColumn("adm_ts", lit(tsMs))
+          else d.withColumn("adm_ts", coalesce(col("adm_ts"), lit(tsMs)))))
   }
 
   // ------------------- duplicate-cluster formation -------------------
@@ -2739,7 +1434,6 @@ object Dedup {
     val p = materialize(
       pairs.select(col(aCol).as("a"), col(bCol).as("b"))
         .filter(col("a").isNotNull && col("b").isNotNull), "pairs")
-    val pairCount = p.count()
     // every input node, remembered before self-loops are dropped
     val nodesDf = p.select(col("a").as("node"))
       .union(p.select(col("b").as("node")))
@@ -2761,8 +1455,9 @@ object Dedup {
     // 2× it bounds the node count), then collects the pair list in
     // ONE pass and derives nodes, edges and components driver-side:
     // two jobs total instead of two counts + two collects. Duplicate
-    // and self pairs are handled naturally by union-find.
-    if (longKeys && pairCount <= driverThreshold) {
+    // and self pairs are handled naturally by union-find. Non-long
+    // keys never take the fast path, so they skip the count job.
+    if (longKeys && p.count() <= driverThreshold) {
       // driver union-find (union-by-min + path compression): the root
       // of every set is its minimum element, matching the distributed
       // fixpoint's min-label contract exactly

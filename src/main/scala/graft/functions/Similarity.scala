@@ -552,8 +552,7 @@ object Similarity {
                               suppressSince: Long = 0L,
                               expireBefore: Long = 0L,
                               maxBucketBytes: Long = 0L,
-                              maxSplitsPerTurn: Int = 2,
-                              manifestStore: Boolean = false)
+                              maxSplitsPerTurn: Int = 2)
       : DataFrame =
     Dedup.admitByKeys(batch,
       Dedup.dropOversizedBuckets(
@@ -563,15 +562,15 @@ object Similarity {
         Seq("tbl", "b"), maxBucketSize, "embedNearDupFilterBatch"),
       storePath, idCol, nBuckets, autoCompactFiles, tailFoldFiles,
       admittedAt, suppressSince, expireBefore, maxBucketBytes,
-      maxSplitsPerTurn, manifestStore)
+      maxSplitsPerTurn)
 
   /** Remove vectors from an SRP admission store — the semantic-side
     * takedown path, mirroring [[Dedup.nearDupRemove]] (shared core
     * [[Dedup.removeByKeys]]): the removed vectors' SRP buckets are
     * re-derived (parameters must match the store's — the layout
-    * contract), so only the O(removal batch) touched bucket
-    * directories are read and rewritten. Physical, idempotent,
-    * kept-keys-never-lost (see the core's crash analysis). When the
+    * contract), so only the O(removal batch) touched buckets' files
+    * are read and rewritten. Physical, idempotent, one serializable
+    * commit, kept keys never lost (see the core's notes). When the
     * vectors are no longer available, [[Dedup.removeAdmittedIds]] is
     * the full-sweep fallback. Returns rows removed.
     */

@@ -85,8 +85,7 @@ object CoreScaling {
         max(col("doc_id")).cast("long")).head()
       val thr = (r.getLong(0) + r.getLong(1)) / 2
       val a1 = Dedup.nearDupFilterBatch(
-        docs.filter(col("doc_id") <= thr), store, "doc_id", "text",
-        manifestStore = true)
+        docs.filter(col("doc_id") <= thr), store, "doc_id", "text")
         .select(col("doc_id"), lit(1L).as("batch"))
       val a2 = Dedup.nearDupFilterBatch(
         docs.filter(col("doc_id") > thr), store, "doc_id", "text")

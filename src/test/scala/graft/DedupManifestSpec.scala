@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Dedup
 
-/** MANIFEST publish mode for the admission stores
-  * ([[graft.functions.AdmissionManifestStore]]): the full behavioral
-  * matrix the listing-layout specs pin — admission/replay/windowing,
-  * takedowns, expiry, stamping, online splits, rebucket, the policy
-  * pass — plus the mode-specific properties (commit-log source of
-  * truth, data files never moved, serializable commits under a lost
-  * CAS race, retention GC, orphan vacuum) and LISTING-MODE PARITY on
-  * an identical operation sequence.
+/** The admission stores' commit-log protocol
+  * ([[graft.functions.AdmissionManifestStore]]): creation and the
+  * legacy-layout refusal, the commit-log source of truth, data files
+  * never moved, serializable commits under a lost CAS race, retention
+  * GC, orphan vacuum, manifest-list pruning — the protocol properties
+  * beside DedupSpec's admission semantics.
   */
 class DedupManifestSpec extends SparkTestBase {
   import spark.implicits._
@@ -37,33 +35,79 @@ class DedupManifestSpec extends SparkTestBase {
     val fs = fsOf(store)
     val s1 = Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", manifestStore = true)
+      store, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s1 === Set(0L, 1L))
     assert(fs.exists(new org.apache.hadoop.fs.Path(store, "_commits")),
-      "manifest store must carry a _commits log")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(store,
-      Dedup.layoutMarkerName)),
-      "manifest store must not write listing-layout markers")
-    // mode detection: a caller WITHOUT the flag lands on the same store
+      "the store must carry a _commits log")
+    val top = fs.listStatus(new org.apache.hadoop.fs.Path(store))
+      .map(_.getPath.getName).toSet
+    assert(!top.exists(n => n.startsWith("adm_kb=") || n == "tail" ||
+      n == "_nbuckets"), s"store wrote listing-layout entries: $top")
+    // detection: a second turn lands on the same store
     val s2 = Dedup.nearDupFilterBatch(
       Seq((2L, textA), (3L, textC)).toDF("doc_id", "text"),
       store, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(s2 === Set(3L), s"manifest store not detected: $s2")
-    // layout contract: a mismatched modulus is refused like listing mode
+    assert(s2 === Set(3L), s"store not detected: $s2")
+    // layout contract: a mismatched modulus is refused
     intercept[IllegalArgumentException] {
       Dedup.nearDupFilterBatch(
         Seq((4L, textB)).toDF("doc_id", "text"),
         store, "doc_id", "text", nBuckets = 8)
     }
-    // an existing LISTING store cannot be converted in place
-    val listing = tmpDir("mfconvert")
-    Dedup.nearDupFilterBatch(Seq((0L, textA)).toDF("doc_id", "text"),
-      listing, "doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.nearDupFilterBatch(Seq((1L, textB)).toDF("doc_id", "text"),
-        listing, "doc_id", "text", manifestStore = true)
+    // a root in the retired LISTING layout (declared modulus, a bucket
+    // directory holding a parquet file, a tail directory — no commit
+    // log) is refused by every entry point with the replay-migration
+    // error, never converted in place
+    val legacy = tmpDir("mflegacy")
+    val lfs = fsOf(legacy)
+    val marker = lfs.create(new org.apache.hadoop.fs.Path(legacy,
+      "_nbuckets"), true)
+    marker.write("64".getBytes("UTF-8")); marker.close()
+    Seq((0L, 0, "k")).toDF("doc_id", "band", "band_key").coalesce(1)
+      .write.parquet(s"$legacy/adm_kb=0")
+    lfs.mkdirs(new org.apache.hadoop.fs.Path(legacy, "tail"))
+    val docs = Seq((9L, textA)).toDF("doc_id", "text")
+    val vecs = Seq((9L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
+    val entryPoints: Seq[(String, () => Any)] = Seq(
+      "nearDupFilterBatch" -> (() =>
+        Dedup.nearDupFilterBatch(docs, legacy, "doc_id", "text")),
+      "embedNearDupFilterBatch" -> (() =>
+        graft.functions.Similarity.embedNearDupFilterBatch(vecs, legacy,
+          planes = 8, dims = 8)),
+      "nearDupRemove" -> (() =>
+        Dedup.nearDupRemove(docs, legacy, "doc_id", "text")),
+      "removeAdmittedIds(Set)" -> (() =>
+        Dedup.removeAdmittedIds(spark, legacy, Set(0L))),
+      "removeAdmittedIds(DataFrame)" -> (() =>
+        Dedup.removeAdmittedIds(spark, legacy, Seq(0L).toDF("id"))),
+      "expireAdmitted" -> (() => Dedup.expireAdmitted(spark, legacy, 1L)),
+      "stampAdmitted" -> (() => Dedup.stampAdmitted(spark, legacy, 1L)),
+      "splitAdmittedBucket" -> (() =>
+        Dedup.splitAdmittedBucket(spark, legacy, 0)),
+      "maintainAdmitted" -> (() => Dedup.maintainAdmitted(spark, legacy,
+        Dedup.AdmissionMaintenancePolicy(compactOverFiles = 1))),
+      "admissionStoreStats" -> (() =>
+        Dedup.admissionStoreStats(spark, legacy)),
+      "rebucketAdmitted" -> (() => Dedup.rebucketAdmitted(spark, legacy, 8)))
+    entryPoints.foreach { case (name, call) =>
+      val e = intercept[UnsupportedOperationException](call())
+      assert(e.getMessage.contains("listing layout") &&
+        e.getMessage.contains("replay"),
+        s"$name: not the replay-migration error: ${e.getMessage}")
+    }
+    // the deprecated publish-mode flag accepts only `true`
+    val fresh = tmpDir("mflegacyflag")
+    val e = intercept[UnsupportedOperationException] {
+      Dedup.nearDupFilterBatch(docs, fresh, "doc_id", "text",
+        manifestStore = false)
+    }
+    assert(e.getMessage.contains("replay"))
+    // and no refused call started a commit log
+    Seq(legacy, fresh).foreach { p =>
+      assert(!fsOf(p).exists(new org.apache.hadoop.fs.Path(p, "_commits")),
+        s"a refused call created _commits under $p")
     }
   }
 
@@ -76,7 +120,7 @@ class DedupManifestSpec extends SparkTestBase {
     // store A: 4-bucket layout, resolved through the shared handle
     Dedup.nearDupFilterBatch(
       Seq((0L, textA)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 4, manifestStore = true)
+      store, "doc_id", "text", nBuckets = 4)
     assert(Dedup.admissionStoreStats(spark, store)
       .declaredBuckets.contains(4))
     // another process deletes the store and re-creates it at the SAME
@@ -86,7 +130,7 @@ class DedupManifestSpec extends SparkTestBase {
     fs.delete(new org.apache.hadoop.fs.Path(store), true)
     Dedup.nearDupFilterBatch(
       Seq((10L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2)
     val stats = Dedup.admissionStoreStats(spark, store)
     assert(stats.declaredBuckets.contains(2),
       s"stale cache served the dead store's manifest: $stats")
@@ -102,55 +146,13 @@ class DedupManifestSpec extends SparkTestBase {
       s"handle cache unbounded: ${AdmissionManifestStore.cachedHandleCount}")
   }
 
-  test("parity: an identical admit/fold/split/remove/expire sequence " +
-    "produces identical decisions in both publish modes") {
-    def run(manifest: Boolean): Seq[Set[Long]] = {
-      val store = tmpDir(s"mfparity$manifest")
-      val out = Seq.newBuilder[Set[Long]]
-      def admit(docs: Seq[(Long, String)], ts: Long): Set[Long] =
-        Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
-          "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-          admittedAt = ts, suppressSince = ts - 5000L,
-          manifestStore = manifest)
-          .select("doc_id").collect().map(_.getLong(0)).toSet
-      out += admit(Seq((0L, textA), (1L, textB), (2L, textC)), 1000L)
-      out += admit(Seq((10L, textA), (11L, textB)), 2000L) // both dups
-      // replay of the FIRST batch at its original stamp (idempotence)
-      out += admit(Seq((0L, textA), (1L, textB), (2L, textC)), 1000L)
-      // online growth, then decisions must hold
-      val splitAddr = (0 to 1).find(b =>
-        Dedup.splitAdmittedBucket(spark, store, b) > 0L)
-      assert(splitAddr.nonEmpty, "no bucket had rows to split")
-      out += admit(Seq((20L, textA), (21L, textC),
-        (22L, "deterministic replay semantics for micro batch sinks")),
-        3000L)
-      // takedown frees re-admission of similar content
-      assert(Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 2) > 0L)
-      out += admit(Seq((30L, textA), (31L, textB)), 4000L)
-      // window expiry: everything admitted before 4000 stops suppressing
-      // at suppressSince 4500 (admittedAt 9500)
-      out += admit(Seq((40L, textB), (41L, textC)), 9500L)
-      out.result()
-    }
-    val listing = run(manifest = false)
-    val manifest = run(manifest = true)
-    assert(manifest === listing,
-      s"publish modes diverged:\n listing=$listing\n manifest=$manifest")
-    // and the expected decisions themselves (guards both modes against
-    // agreeing on the wrong answer)
-    assert(listing === Seq(Set(0L, 1L, 2L), Set.empty,
-      Set(0L, 1L, 2L), Set(22L), Set(30L), Set(40L, 41L)))
-  }
-
   test("data files never move: every mutation commits a new " +
     "generation; the root holds only staged dirs and the commit log") {
     val store = tmpDir("mfnomove")
     val fs = fsOf(store)
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-      manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
     val v1 = commitCount(store)
     assert(v1 >= 2, "append + fold should each commit a generation")
     // file inventory after the turn
@@ -174,12 +176,12 @@ class DedupManifestSpec extends SparkTestBase {
     assert(before.subsetOf(after),
       s"a mutation moved or deleted files inside the retention window:" +
         s" ${before -- after}")
-    // top-level layout: only staged dirs + _commits, never adm_kb= or
-    // tail/ (those are the listing layout's)
+    // top-level layout: only staged dirs, group manifests and _commits,
+    // never adm_kb= or tail/ (the retired listing layout's entries)
     val top = fs.listStatus(new org.apache.hadoop.fs.Path(store))
       .map(_.getPath.getName).toSet
     assert(!top.exists(n => n.startsWith("adm_kb=") || n == "tail"),
-      s"manifest store leaked listing-layout directories: $top")
+      s"store leaked listing-layout directories: $top")
   }
 
   test("windowed admission, expiry in the fold, stamping, and id " +
@@ -189,7 +191,7 @@ class DedupManifestSpec extends SparkTestBase {
         : Set[Long] =
       Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
         "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-        admittedAt = ts, suppressSince = since, manifestStore = true)
+        admittedAt = ts, suppressSince = since)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admit(Seq((0L, textA), (1L, textB)), 1000L, 0L)
       === Set(0L, 1L))
@@ -215,7 +217,7 @@ class DedupManifestSpec extends SparkTestBase {
     def admit(docs: Seq[(Long, String)]): Set[Long] =
       Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
         "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-        autoCompactFiles = 1, manifestStore = true)
+        autoCompactFiles = 1)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admit(Seq((0L, textA), (1L, textB), (2L, textC)))
       === Set(0L, 1L, 2L))
@@ -226,7 +228,7 @@ class DedupManifestSpec extends SparkTestBase {
     assert(rep.split.nonEmpty, s"policy split nothing: $rep")
     val stats = Dedup.admissionStoreStats(spark, store)
     assert(stats.maxDepth >= 1 && stats.splitBuckets > 0 &&
-      stats.declaredBuckets.contains(2) && !stats.rebucketPending,
+      stats.declaredBuckets.contains(2),
       s"manifest stats wrong: $stats")
     assert(admit(Seq((10L, textA), (11L, textB), (12L, textC),
       (13L, "deterministic replay semantics for micro batch sinks")))
@@ -250,8 +252,7 @@ class DedupManifestSpec extends SparkTestBase {
     // seed with an un-folded tail (budget high enough not to fold)
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 16,
-      manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 16)
     val racedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
     graft.functions.AdmissionManifestStore.beforeCommitFence =
       (path, _) => {
@@ -314,7 +315,7 @@ class DedupManifestSpec extends SparkTestBase {
         Seq((i.toLong, s"subject$i alpha$i bravo$i charlie$i delta$i " +
           s"echo$i foxtrot$i")).toDF("doc_id", "text"),
         store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-        autoCompactFiles = 1, manifestStore = true)
+        autoCompactFiles = 1)
     val commits = commitCount(store)
     assert(commits <= 8,
       s"retention GC never dropped a commit: $commits on disk")
@@ -342,8 +343,7 @@ class DedupManifestSpec extends SparkTestBase {
       Dedup.nearDupFilterBatch(
         Seq((i.toLong, s"subject$i alpha$i bravo$i charlie$i delta$i " +
           s"echo$i foxtrot$i")).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 16,
-        manifestStore = true)
+        store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 16)
     val st = new graft.functions.AdmissionManifestStore(store)
     val man = st.resolve(spark).get
     val buckets = st.allBuckets(spark, man)
@@ -378,8 +378,7 @@ class DedupManifestSpec extends SparkTestBase {
     // immediately so the bucket lists exist
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB), (2L, textC)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 0,
-      manifestStore = true)
+      store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 0)
     val st = new graft.functions.AdmissionManifestStore(store)
     val man1 = st.resolve(spark).get
     val buckets1 = st.allBuckets(spark, man1)
@@ -424,7 +423,7 @@ class DedupManifestSpec extends SparkTestBase {
     val fs = fsOf(store)
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2)
     val commitsDir = new org.apache.hadoop.fs.Path(store, "_commits")
     val maxV = fs.listStatus(commitsDir)
       .map(_.getPath.getName.toLong).max
@@ -453,6 +452,21 @@ class DedupManifestSpec extends SparkTestBase {
       Seq((20L, textA), (21L, textB), (22L, textC))
         .toDF("doc_id", "text"),
       store, "doc_id", "text", nBuckets = 2).count() === 0L)
+    // a commit whose split declaration is out of range (a depth past
+    // the int bucket address space, or negative) never parses either:
+    // readers skip it instead of mis-routing probe chains
+    for (bad <- Seq("maxdepth 50", "maxdepth -1")) {
+      val v = fs.listStatus(commitsDir).map(_.getPath.getName.toLong).max
+      val body = s"nbuckets 2\nngroups 64\n$bad\n"
+      assert(graft.functions.AdmissionManifest.parse(body).isEmpty)
+      val dmg = fs.create(new org.apache.hadoop.fs.Path(commitsDir,
+        (v + 1).toString), true)
+      dmg.write(body.getBytes("UTF-8")); dmg.close()
+      assert(Dedup.nearDupFilterBatch(
+        Seq((30L, textA)).toDF("doc_id", "text"),
+        store, "doc_id", "text", nBuckets = 2).count() === 0L,
+        s"a damaged declaration <$bad> blinded the reader")
+    }
   }
 
   test("embedding (SRP) admission rides the same manifest core") {
@@ -466,7 +480,7 @@ class DedupManifestSpec extends SparkTestBase {
     val s1 = graft.functions.Similarity.embedNearDupFilterBatch(
       first.toDF("vec_id", "embedding"), store, planes = 8, dims = 8,
       idCol = "vec_id", vecCol = "embedding", nBuckets = 2,
-      tailFoldFiles = 0, manifestStore = true)
+      tailFoldFiles = 0)
     // random gaussians CAN share an SRP bucket (within-batch
     // suppression) — what must hold is that at least one was admitted
     // and every exact duplicate is then suppressed
@@ -523,8 +537,7 @@ class DedupManifestSpec extends SparkTestBase {
         val s = Dedup.nearDupFilterBatch(
           Seq((i.toLong, text(i))).toDF("doc_id", "text"),
           store, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
-          tailFoldFiles = 0, autoCompactFiles = 1, admittedAt = 1000L + i,
-          manifestStore = true)
+          tailFoldFiles = 0, autoCompactFiles = 1, admittedAt = 1000L + i)
           .select("doc_id").collect().map(_.getLong(0)).toSet
         assert(s === Set(i.toLong), s"distinct doc $i not admitted: $s")
         s.foreach(admitted.add(_))

@@ -10,6 +10,20 @@ import graft.functions.{Dedup, Text}
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The committed generation's per-bucket data files (absolute paths)
+    * of an admission store — what the store's probes and rewrites
+    * address.
+    */
+  private def bucketFiles(store: String): Map[Int, Seq[String]] = {
+    val st = graft.functions.AdmissionManifestStore(store)
+    st.allBuckets(spark, st.resolve(spark).get)
+      .map { case (a, fls) => a -> fls.map(f => s"$store/${f.path}") }
+  }
+
+  /** The files a relation scans, as plain local paths. */
+  private def scanned(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new java.net.URI(f).getPath).toSet
+
   private val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog near the river bank"),
     (1L, "the quick brown fox jumps over the lazy dog near the river bank"), // exact dup of 0
@@ -212,15 +226,9 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.nearDupFilterBatch(probe, ctl, "doc_id", "text")
       .count() === 0L, "control: dup should be rejected pre-removal")
 
-    // snapshot untouched-bucket files: removal of doc 0 must rewrite
-    // only the buckets doc 0's keys hash into
-    val root = new org.apache.hadoop.fs.Path(store)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Map[String, Long] = fs.listStatus(root)
-      .filter(_.isDirectory).flatMap(d => fs.listStatus(d.getPath))
-      .filter(_.isFile)
-      .map(s => s.getPath.toString -> s.getModificationTime).toMap
-    val before = files()
+    // snapshot the untouched buckets' file lists: removal of doc 0 must
+    // rewrite only the buckets doc 0's keys hash into
+    val before = bucketFiles(store)
     val doc0Buckets = Dedup.lshBands(Dedup.minhashSignatures(
         Dedup.docShingleHashes(Seq((0L, textA)).toDF("doc_id", "text"),
           "doc_id", "text", 3), 16), 16, 4)
@@ -231,12 +239,10 @@ class DedupSpec extends SparkTestBase {
     val removed = Dedup.nearDupRemove(
       Seq((0L, textA)).toDF("doc_id", "text"), store, "doc_id", "text")
     assert(removed > 0L, "takedown removed no rows")
-    val after = files()
-    val untouchedBefore = before.filterNot { case (p, _) =>
-      doc0Buckets.exists(b => p.contains(s"adm_kb=$b/")) }
-    untouchedBefore.foreach { case (p, m) =>
-      assert(after.get(p).contains(m),
-        s"untouched bucket file rewritten or deleted: $p") }
+    val after = bucketFiles(store)
+    (before -- doc0Buckets).foreach { case (b, fls) =>
+      assert(after.get(b).contains(fls),
+        s"untouched bucket $b rewritten: $fls -> ${after.get(b)}") }
 
     // idempotent: a second takedown of the same doc is a no-op
     assert(Dedup.nearDupRemove(
@@ -319,52 +325,40 @@ class DedupSpec extends SparkTestBase {
     "to the batch's own buckets") {
     import spark.implicits._
     val store = tmpDir("ndstore-prune")
-    // seed several batches so multiple bucket directories exist
-    // (tailFoldFiles=0 folds the L0 tail into the buckets every turn)
+    // seed several batches so multiple buckets exist (tailFoldFiles=0
+    // folds the L0 tail into the buckets every turn)
     for (i <- 0 until 4)
       Dedup.nearDupFilterBatch(
         Seq((i.toLong, s"unique document number $i with forty words " +
           s"about topic-$i and trailing filler tokens for shingles"))
           .toDF("doc_id", "text"), store, "doc_id", "text",
         tailFoldFiles = 0)
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val allBuckets = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .filter(_.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath.getName.stripPrefix("adm_kb=").toInt).sorted
-    assert(allBuckets.length >= 2,
-      s"seed batches landed in ${allBuckets.length} bucket(s) — the " +
+    val st = graft.functions.AdmissionManifestStore(store)
+    val man = st.resolve(spark).get
+    val buckets = bucketFiles(store)
+    assert(buckets.size >= 2,
+      s"seed batches landed in ${buckets.size} bucket(s) — the " +
         "pruning assertion below needs at least two")
-    // the EXACT production relation a batch joins, sliced to a strict
-    // subset of the existing buckets: the scan must list ONLY the
-    // touched directory (a full-store listing/scan here is the 100 TB
-    // regression this pin exists for) and still carry the adm_kb
-    // partition filter
-    val slice = Dedup.admissionStoreSlice(spark, store,
-      Seq("band", "band_key"), Seq(allBuckets.head)).get
-    val p = slice.queryExecution.executedPlan.toString
-    // a 1-value IN plans as equality, multi-value as IN/INSET — any of
-    // these is a static partition filter on the bucket column
-    assert(p.matches(
-      "(?s).*PartitionFilters: \\[[^\\]]*adm_kb#\\d+ (=|IN|INSET).*"),
-      s"store slice is not partition-pruned:\n$p")
-    assert(p.contains(s"adm_kb=${allBuckets.head}") &&
-      !allBuckets.tail.exists(b => p.contains(s"adm_kb=$b")),
-      s"slice listed untouched bucket directories:\n$p")
-    // untouched buckets (and a fresh store) yield no relation at all
-    val absentBucket = (0 until 64).find(b => !allBuckets.contains(b)).get
-    assert(Dedup.admissionStoreSlice(spark, store,
-      Seq("band", "band_key"), Seq(absentBucket)).isEmpty)
-    assert(Dedup.admissionStoreSlice(spark, tmpDir("ndstore-absent"),
-      Seq("band", "band_key"), Seq(0)).isEmpty)
+    assert(man.tail.isEmpty, "every turn folded, so the tail is empty")
+    // the EXACT production relation a batch joins, sliced to one of the
+    // existing buckets: the scan must read ONLY that bucket's files (a
+    // full-store scan here is the 100 TB regression this pin exists for)
+    val target = buckets.keys.min
+    val slice = st.probeRel(spark, man, Seq("band", "band_key"),
+      Seq(target), suppressSince = 0L).get
+    assert(scanned(slice) === buckets(target).toSet,
+      s"store slice read files outside bucket $target: ${scanned(slice)}")
+    // untouched buckets yield no relation at all
+    val absentBucket = (0 until 64).find(b => !buckets.contains(b)).get
+    assert(st.probeRel(spark, man, Seq("band", "band_key"),
+      Seq(absentBucket), suppressSince = 0L).isEmpty)
     // and the pruned slice really reads only that bucket's rows
     val sliceIds = slice.select("s_id").distinct().collect()
       .map(_.getLong(0)).toSet
-    val bucketIds = spark.read
-      .parquet(s"$store/adm_kb=${allBuckets.head}")
+    val bucketIds = spark.read.parquet(buckets(target): _*)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(sliceIds === bucketIds,
-      "pruned slice rows diverge from the bucket directory's contents")
+      "pruned slice rows diverge from the bucket's files")
   }
 
   test("admission store auto-compacts over-fragmented buckets; " +
@@ -385,12 +379,7 @@ class DedupSpec extends SparkTestBase {
     for (i <- 1L to 5L)
       admit(Seq((i, s"completely different subject matter $i " +
         s"covering topic-$i with enough words to shingle cleanly")))
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val perBucket = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .filter(_.getPath.getName.startsWith("adm_kb="))
-      .map(st => fs.listStatus(st.getPath)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
+    val perBucket = bucketFiles(store).values.map(_.length)
     // budget may be exceeded by exactly the one fresh append a bucket
     // untouched since compaction carries; never unbounded growth
     assert(perBucket.forall(_ <= 2),
@@ -456,12 +445,7 @@ class DedupSpec extends SparkTestBase {
     Dedup.nearDupFilterBatch(Seq((6L, textA)).toDF("doc_id", "text"), c,
       "doc_id", "text", admittedAt = 1500L, autoCompactFiles = 0,
       tailFoldFiles = 0) // replay, then fold+compact in the same turn
-    val fs = new org.apache.hadoop.fs.Path(c).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val rows = fs.listStatus(new org.apache.hadoop.fs.Path(c))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("adm_kb="))
-      .map(d => spark.read.parquet(d.getPath.toString))
-      .reduce(_ unionByName _)
+    val rows = spark.read.parquet(bucketFiles(c).values.flatten.toSeq: _*)
     assert(rows.count() === rows.select("band", "band_key", "doc_id")
       .distinct().count(), "replayed keys not collapsed at compaction")
     assert(rows.filter(col("adm_ts") =!= 1500L).count() === 0L,
@@ -610,19 +594,16 @@ class DedupSpec extends SparkTestBase {
       store, "doc_id", "text", nBuckets = 8)
     val moved = Dedup.rebucketAdmitted(spark, store, 32)
     assert(moved > 0L, "migration moved no rows")
-    // idempotent completion: everything already under the new modulus
-    assert(Dedup.rebucketAdmitted(spark, store, 32) === 0L,
-      "re-run of a completed migration moved rows")
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(store,
-      Dedup.rebucketMarkerName)), "marker survived a completed migration")
-    // the tail was folded into the new layout (no stale-modulus rows)
-    assert(scala.util.Try(fs.listStatus(
-        new org.apache.hadoop.fs.Path(store, "tail")))
-      .getOrElse(Array.empty)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet")) === 0,
-      "stale tail files survived the migration")
+    // the migration is one atomic commit: no pending state, the tail
+    // folded into the new layout (no stale-modulus rows), the new
+    // modulus declared
+    val stats = Dedup.admissionStoreStats(spark, store)
+    assert(stats.tailFiles === 0 && stats.declaredBuckets.contains(32),
+      s"migration left stale state: $stats")
+    // a re-run at the same modulus re-keys exactly the same rows —
+    // nothing lost, nothing duplicated
+    assert(Dedup.rebucketAdmitted(spark, store, 32) === moved,
+      "re-run of a completed migration changed the row set")
     // decisions identical at the new modulus: every admitted doc's
     // near-dups still rejected, fresh content still admitted
     val s1 = Dedup.nearDupFilterBatch(
@@ -633,42 +614,24 @@ class DedupSpec extends SparkTestBase {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s1 === Set(13L), s"post-migration decisions diverged: $s1")
     // pruned-scan pin on the NEW layout: the per-batch store join
-    // still lists only the touched bucket directory
-    val allBuckets = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .filter(_.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath.getName.stripPrefix("adm_kb=").toInt).sorted
-    assert(allBuckets.length >= 2, "need two buckets for the pruning pin")
-    val slice = Dedup.admissionStoreSlice(spark, store,
-      Seq("band", "band_key"), Seq(allBuckets.head)).get
-    val p = slice.queryExecution.executedPlan.toString
-    assert(p.matches(
-      "(?s).*PartitionFilters: \\[[^\\]]*adm_kb#\\d+ (=|IN|INSET).*"),
-      s"post-migration slice is not partition-pruned:\n$p")
-    assert(p.contains(s"adm_kb=${allBuckets.head}") &&
-      !allBuckets.tail.exists(b => p.contains(s"adm_kb=$b")),
-      s"post-migration slice listed untouched buckets:\n$p")
-    // a pending marker (crashed migration) makes every entry point
-    // refuse loudly instead of probing a half-migrated layout
-    val marker = new org.apache.hadoop.fs.Path(store,
-      Dedup.rebucketMarkerName)
-    val out = fs.create(marker, true)
-    out.write("64".getBytes("UTF-8")); out.close()
+    // still reads only the touched bucket's files
+    val st = graft.functions.AdmissionManifestStore(store)
+    val man = st.resolve(spark).get
+    val buckets = bucketFiles(store)
+    assert(buckets.size >= 2, "need two buckets for the pruning pin")
+    val slice = st.probeRel(spark, man, Seq("band", "band_key"),
+      Seq(buckets.keys.min), suppressSince = 0L).get
+    assert(scanned(slice) ===
+      (buckets(buckets.keys.min) ++ man.tail.map(f => s"$store/${f.path}"))
+        .toSet, s"post-migration slice read untouched buckets")
+    // a stale-modulus caller is refused loudly
     intercept[IllegalArgumentException] {
       Dedup.nearDupFilterBatch(Seq((20L, textA)).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 32)
+        store, "doc_id", "text", nBuckets = 8)
     }
-    intercept[IllegalArgumentException] {
-      Dedup.expireAdmitted(spark, store, 1L)
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 32)
-    }
-    // re-running the migration (here: on to a SMALLER modulus, which
-    // also reprocesses the previous migration's files) completes,
-    // clears the marker, and preserves every decision
+    // a successive migration (here: on to a SMALLER modulus) preserves
+    // every decision
     assert(Dedup.rebucketAdmitted(spark, store, 4) > 0L)
-    assert(!fs.exists(marker), "marker survived the completing re-run")
     val s2 = Dedup.nearDupFilterBatch(
       Seq((21L, textA), (22L, "entirely novel subject matter here with " +
         "enough words to shingle cleanly")).toDF("doc_id", "text"),
@@ -685,8 +648,8 @@ class DedupSpec extends SparkTestBase {
     val textA = "the quick brown fox jumps over the lazy dog near the river bank"
     val textB = "columnar execution engines vectorize parquet scans for analytic joins"
     val textC = "streaming watermarks bound state for late arriving event data"
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val st = graft.functions.AdmissionManifestStore(store)
+    def declared() = st.resolve(spark).get
     // splitting an absent store / bucket is a no-op
     assert(Dedup.splitAdmittedBucket(spark, store, 0) === 0L)
     // seed a TINY base layout (2 buckets) fully folded into L1
@@ -694,22 +657,20 @@ class DedupSpec extends SparkTestBase {
       Seq((0L, textA), (1L, textB), (2L, textC)).toDF("doc_id", "text"),
       store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
     assert(Dedup.splitAdmittedBucket(spark, store, 7) === 0L,
-      "splitting a bucket directory that does not exist moved rows")
-    val buckets0 = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .filter(_.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath.getName.stripPrefix("adm_kb=").toInt).sorted
+      "splitting a bucket that does not exist moved rows")
+    val buckets0 = bucketFiles(store).keys.toSeq.sorted
     assert(buckets0.nonEmpty)
-    // split the fattest base bucket: depth 0 -> 1, children in
+    // split the first base bucket: depth 0 -> 1, children in
     // {addr, addr + 2} under modulus 4
     val target = buckets0.head
     val moved1 = Dedup.splitAdmittedBucket(spark, store, target)
     assert(moved1 > 0L, "split moved no rows")
-    val splits1 = Dedup.readSplits(fs, store)
-    assert(splits1.maxDepth === 1, s"declared max depth wrong: $splits1")
-    assert(splits1.depthByAddr.nonEmpty &&
-      splits1.depthByAddr.values.forall(_ === 1) &&
-      splits1.depthByAddr.keys.forall(a => a == target || a == target + 2),
-      s"children not declared at depth 1: $splits1")
+    val man1 = declared()
+    assert(man1.maxDepth === 1, s"declared max depth wrong: $man1")
+    assert(man1.depthByAddr.nonEmpty &&
+      man1.depthByAddr.values.forall(_ === 1) &&
+      man1.depthByAddr.keys.forall(a => a == target || a == target + 2),
+      s"children not declared at depth 1: ${man1.depthByAddr}")
     val stats1 = Dedup.admissionStoreStats(spark, store)
     assert(stats1.maxDepth === 1 && stats1.splitBuckets > 0,
       s"stats must surface the split layout: $stats1")
@@ -723,10 +684,10 @@ class DedupSpec extends SparkTestBase {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s1 === Set(13L), s"post-split decisions diverged: $s1")
     // split a CHILD again (depth 1 -> 2): chains now span 3 depths
-    val child = Dedup.readSplits(fs, store).depthByAddr.keys.max
-    if (fs.exists(new org.apache.hadoop.fs.Path(store, s"adm_kb=$child"))) {
+    val child = declared().depthByAddr.keys.max
+    if (bucketFiles(store).contains(child)) {
       Dedup.splitAdmittedBucket(spark, store, child)
-      assert(Dedup.readSplits(fs, store).maxDepth === 2,
+      assert(declared().maxDepth === 2,
         "second-level split must deepen the declared chain")
     }
     val s2 = Dedup.nearDupFilterBatch(
@@ -737,12 +698,12 @@ class DedupSpec extends SparkTestBase {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s2 === Set(23L), s"post-deep-split decisions diverged: $s2")
     // pruned-scan pin on the SPLIT layout: a probe's store slice reads
-    // only the existing directories on its keys' address CHAINS
-    // (chain = the key hash under every declared modulus), and never
-    // an off-chain bucket — the probe-side half of the split design
+    // only the buckets on its keys' address CHAINS (chain = the key
+    // hash under every declared modulus), and never an off-chain
+    // bucket — the probe-side half of the split design
     locally {
-      val splitsNow = Dedup.readSplits(fs, store)
-      val moduli = (0 to splitsNow.maxDepth).map(d => 2L << d) // N = 2
+      val man = declared()
+      val moduli = (0 to man.maxDepth).map(d => 2L << d) // N = 2
       val chain = Dedup.lshBands(Dedup.minhashSignatures(
           Dedup.docShingleHashes(
             Seq((90L, textA)).toDF("doc_id", "text"),
@@ -751,20 +712,14 @@ class DedupSpec extends SparkTestBase {
           pmod(xxhash64(col("band"), col("band_key")), lit(m))
             .cast("int")): _*)).as("a"))
         .distinct().collect().map(_.getInt(0)).toSet
-      val existing = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-        .filter(_.getPath.getName.startsWith("adm_kb="))
-        .map(_.getPath.getName.stripPrefix("adm_kb=").toInt).toSet
-      val offChain = (existing -- chain)
-      val slice = Dedup.admissionStoreSlice(spark, store,
-        Seq("band", "band_key"), chain.toSeq).get
-      val plan = slice.queryExecution.executedPlan.toString
-      assert(plan.matches(
-        "(?s).*PartitionFilters: \\[[^\\]]*adm_kb#\\d+ (=|IN|INSET).*"),
-        s"split-layout slice is not partition-pruned:\n$plan")
-      offChain.foreach { b =>
-        assert(!plan.contains(s"adm_kb=$b"),
-          s"split-layout slice listed off-chain bucket $b:\n$plan")
-      }
+      val buckets = bucketFiles(store)
+      val slice = st.probeRel(spark, man, Seq("band", "band_key"),
+        chain.toSeq, suppressSince = 0L).get
+      val allowed = (buckets.filter(b => chain(b._1)).values.flatten ++
+        man.tail.map(f => s"$store/${f.path}")).toSet
+      assert(scanned(slice).subsetOf(allowed),
+        s"split-layout slice read off-chain files: " +
+          s"${scanned(slice) -- allowed}")
     }
     // content-keyed takedown reaches rows at ANY depth (chain-expanded
     // touched set): remove doc 0, its dup becomes admittable, the
@@ -781,9 +736,9 @@ class DedupSpec extends SparkTestBase {
     // a full rebucket migration collapses the split state: fresh
     // generation, depth map reset, decisions preserved
     Dedup.rebucketAdmitted(spark, store, 8)
-    val splitsAfter = Dedup.readSplits(fs, store)
-    assert(splitsAfter.maxDepth === 0 && splitsAfter.depthByAddr.isEmpty,
-      s"rebucket must reset the split declaration: $splitsAfter")
+    val after = declared()
+    assert(after.maxDepth === 0 && after.depthByAddr.isEmpty,
+      s"rebucket must reset the split declaration: $after")
     val s4 = Dedup.nearDupFilterBatch(
       Seq((40L, textB), (41L, textC),
         (42L, "yet another novel probe with plenty of distinct words here"))
@@ -791,301 +746,6 @@ class DedupSpec extends SparkTestBase {
       store, "doc_id", "text", nBuckets = 8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s4 === Set(42L), s"post-rebucket decisions diverged: $s4")
-  }
-
-  test("split crash windows stay probe-correct: bumped depth with " +
-    "nothing moved, published children with surviving originals and a " +
-    "lost map update — decisions hold, stamps intact, re-split " +
-    "completes") {
-    import spark.implicits._
-    val store = tmpDir("ndsplitcrash")
-    val textA = "the quick brown fox jumps over the lazy dog near the river bank"
-    val textB = "columnar execution engines vectorize parquet scans for analytic joins"
-    val textC = "streaming watermarks bound state for late arriving event data"
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def probe(docs: Seq[(Long, String)], ts: Long): Set[Long] =
-      Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
-        "doc_id", "text", nBuckets = 2, admittedAt = ts)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    Dedup.nearDupFilterBatch(
-      Seq((0L, textA), (1L, textB), (2L, textC)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-      admittedAt = 1000L)
-    def writeSplitsFile(body: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(store,
-        Dedup.splitsMarkerName), true)
-      out.write(body.getBytes("UTF-8")); out.close()
-    }
-    // crash window 1: the declared max depth was bumped but the crash
-    // hit before ANY row moved — probes read a one-deeper chain of
-    // (mostly non-existent) dirs, which must be harmless
-    writeSplitsFile("maxdepth=1")
-    assert(probe(Seq((10L, textA), (11L, "a wholly novel subject with " +
-      "plenty of words to shingle")), 2000L) === Set(11L),
-      "bumped-depth-no-move crash window changed decisions")
-    // crash window 2: a REAL split published its children, then the
-    // crash hit before the superseded parent files were deleted AND
-    // before the depth map was updated — rows live at BOTH depths on
-    // the same chain, and the map still calls the parent depth 0
-    val bucket = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .filter(_.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath.getName.stripPrefix("adm_kb=").toInt).min
-    assert(Dedup.splitAdmittedBucket(spark, store, bucket) > 0L)
-    val parent = new org.apache.hadoop.fs.Path(store, s"adm_kb=$bucket")
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(bucket, bucket + 2).foreach { c =>
-      val dir = new org.apache.hadoop.fs.Path(store, s"adm_kb=$c")
-      scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          fs.mkdirs(parent)
-          org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-            new org.apache.hadoop.fs.Path(parent,
-              s"resurrected-$c-${f.getPath.getName}"), false, conf)
-        }
-    }
-    writeSplitsFile("maxdepth=1") // the map update that never landed
-    assert(probe(Seq((20L, textA), (21L, textB), (22L, textC),
-      (23L, "deterministic replay semantics for micro batch sinks")),
-      3000L) === Set(23L),
-      "published-children-with-surviving-originals window changed decisions")
-    // re-running the split completes the move (the lost map means it
-    // re-targets depth 1 — same modulus, idempotent) and decisions
-    // still hold afterwards
-    Dedup.splitAdmittedBucket(spark, store, bucket)
-    assert(probe(Seq((30L, textA), (31L, "entirely different closing " +
-      "probe content with enough words")), 4000L) === Set(31L),
-      "post-recovery decisions diverged")
-    // the seed rows' admission stamps rode every copy and re-split
-    // bit-intact (the windowed-dedup invariant)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .filter(_.getPath.getName.startsWith("adm_kb="))
-      .map(_.getPath.toString)
-    val stamps = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-      .filter(col("doc_id") <= 2L).select("adm_ts").distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(stamps === Set(1000L),
-      s"seed admission stamps damaged across the crash windows: $stamps")
-  }
-
-  test("admission decision re-validates the split declaration: a " +
-    "depth-raising split completing inside the decision window cannot " +
-    "hide relocated keys") {
-    import spark.implicits._
-    val store = tmpDir("ndsplitrace")
-    val textA = "the quick brown fox jumps over the lazy dog near the river bank"
-    val textB = "columnar execution engines vectorize parquet scans for analytic joins"
-    val textC = "streaming watermarks bound state for late arriving event data"
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // seed a 2-bucket store fully folded into L1
-    Dedup.nearDupFilterBatch(
-      Seq((0L, textA), (1L, textB), (2L, textC)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
-    // the race is only dangerous when a stored key RELOCATES off the
-    // depth-0 chain (deep address != base address) — assert the seeds
-    // fabricate that, or the test would be vacuous
-    val seedKeys = Dedup.lshBands(Dedup.minhashSignatures(
-        Dedup.docShingleHashes(
-          Seq((0L, textA), (1L, textB), (2L, textC)).toDF("doc_id", "text"),
-          "doc_id", "text", 3), 16), 16, 4)
-      .select(pmod(xxhash64(col("band"), col("band_key")), lit(2L))
-          .cast("int").as("base"),
-        pmod(xxhash64(col("band"), col("band_key")), lit(4L))
-          .cast("int").as("deep"))
-      .collect()
-    assert(seedKeys.exists(r => r.getInt(1) != r.getInt(0)),
-      "vacuous race: no seed key relocates under the deeper modulus")
-    var fenceCalls = 0
-    var splitMoved = 0L
-    Dedup.admitDecisionFence = () => {
-      fenceCalls += 1
-      if (fenceCalls == 1) {
-        // simulate a concurrent maintenance run completing an entire
-        // depth-raising split INSIDE the writer's decision window
-        // (after its slice reads materialized, before its re-read):
-        // split every non-empty base bucket, deleting the parents'
-        // superseded files — the relocated keys are now invisible to
-        // the stale depth-0 chains
-        val bases = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-          .filter(_.getPath.getName.startsWith("adm_kb="))
-          .map(_.getPath.getName.stripPrefix("adm_kb=").toInt)
-          .filter(_ < 2).sorted
-        bases.foreach { b =>
-          splitMoved += Dedup.splitAdmittedBucket(spark, store, b)
-        }
-      }
-    }
-    try {
-      // duplicates of every seed plus one novel doc: the stale decision
-      // would re-admit any seed whose keys all relocated; the
-      // re-validated decision must suppress all three
-      val survivors = Dedup.nearDupFilterBatch(
-        Seq((10L, textA), (11L, textB), (12L, textC),
-          (13L, "deterministic replay semantics for micro batch sinks"))
-          .toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 2)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(splitMoved > 0L, "vacuous race: the fenced split moved no rows")
-      assert(fenceCalls >= 2,
-        "the decision was not retried after the declaration changed " +
-          s"(fence ran $fenceCalls time(s))")
-      assert(survivors === Set(13L),
-        s"decision raced by a completed split diverged: $survivors")
-    } finally Dedup.admitDecisionFence = () => ()
-  }
-
-  test("content-keyed takedown drain re-expands its chains per pass: " +
-    "rows a mid-drain split relocated deeper are still found, and an " +
-    "uncontended removal skips the extra detection scan") {
-    import spark.implicits._
-    val store = tmpDir("ndrmdrain")
-    val textA = "the quick brown fox jumps over the lazy dog near the river bank"
-    val textB = "columnar execution engines vectorize parquet scans for analytic joins"
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Dedup.nearDupFilterBatch(
-      Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
-    def doc0Rows(): Long = {
-      val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-        .filter(_.getPath.getName.startsWith("adm_kb="))
-        .map(_.getPath.toString)
-      if (dirs.isEmpty) 0L
-      else spark.read.option("mergeSchema", "true").parquet(dirs.toIndexedSeq: _*)
-        .filter(col("doc_id") === 0L).count()
-    }
-    var fenceCalls = 0
-    Dedup.drainPassFence = () => {
-      fenceCalls += 1
-      if (fenceCalls == 1) {
-        // fabricate the exact mid-drain contention: a concurrent
-        // writer re-materializes doc 0's keys (a replayed admission —
-        // the store join excludes a doc's own id, so its keys append
-        // again), folds them into L1, and an auto-split relocates
-        // them to depth-1 directories OFF the drain's original
-        // depth-0 chains
-        Dedup.nearDupFilterBatch(
-          Seq((0L, textA)).toDF("doc_id", "text"),
-          store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
-        val bases = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-          .filter(_.getPath.getName.startsWith("adm_kb="))
-          .map(_.getPath.getName.stripPrefix("adm_kb=").toInt)
-          .filter(_ < 2).sorted
-        bases.foreach(b => Dedup.splitAdmittedBucket(spark, store, b))
-        // non-vacuity: the replanted rows must live at a depth-1-only
-        // address (index >= base modulus), i.e. off the stale chain
-        val deepDirs = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-          .filter(_.getPath.getName.startsWith("adm_kb="))
-          .map(_.getPath.getName.stripPrefix("adm_kb=").toInt)
-          .filter(_ >= 2)
-        assert(deepDirs.nonEmpty, "vacuous drain race: no depth-1 dir")
-        assert(doc0Rows() > 0L, "vacuous drain race: no replanted rows")
-      }
-    }
-    try {
-      val removed = Dedup.nearDupRemove(
-        Seq((0L, textA)).toDF("doc_id", "text"), store, "doc_id", "text",
-        nBuckets = 2)
-      assert(removed > 0L)
-      assert(fenceCalls >= 2,
-        "the contended drain stopped after one pass " +
-          s"(fence ran $fenceCalls time(s))")
-      assert(doc0Rows() === 0L,
-        "drain reported clean while relocated target rows survive")
-    } finally Dedup.drainPassFence = () => ()
-    // doc 1 untouched throughout
-    assert(Dedup.nearDupFilterBatch(
-      Seq((3L, textB)).toDF("doc_id", "text"), store, "doc_id", "text",
-      nBuckets = 2).count() === 0L, "drain lost an unrelated doc's keys")
-    // and the UNCONTENDED case: a removal with hits but no concurrent
-    // activity stops after ONE pass on the listing proof
-    var quietCalls = 0
-    Dedup.drainPassFence = () => { quietCalls += 1 }
-    try {
-      assert(Dedup.nearDupRemove(
-        Seq((1L, textB)).toDF("doc_id", "text"), store, "doc_id", "text",
-        nBuckets = 2) > 0L)
-      assert(quietCalls === 1,
-        s"uncontended removal paid ${quietCalls - 1} extra detection " +
-          "scan(s) — the listing proof should have ended the drain")
-    } finally Dedup.drainPassFence = () => ()
-  }
-
-  test("full-sweep takedown drain: a concurrent fold publishing " +
-    "target rows into a brand-new bucket directory the pass never " +
-    "listed forces a rescan (the root dir-set proof), and an " +
-    "uncontended full sweep still stops after one pass") {
-    import spark.implicits._
-    val store = tmpDir("ndrootdrain")
-    val root = new org.apache.hadoop.fs.Path(store)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val textA = "the quick brown fox jumps over the lazy dog near the bank"
-    val textB = "columnar engines vectorize parquet scans for analytic joins"
-    Dedup.nearDupFilterBatch(
-      Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
-    def bucketDirs(): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("adm_kb="))
-        .map(_.getPath).toIndexedSeq
-    def doc0Rows(): Long = {
-      val dirs = bucketDirs().map(_.toString)
-      if (dirs.isEmpty) 0L
-      else spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-        .filter(col("doc_id") === 0L).count()
-    }
-    // the fold's replanted copy: doc 0's stored key rows, pinned
-    // independently of the source files the sweep will delete
-    val saved = spark.read.option("basePath", store)
-      .option("mergeSchema", "true")
-      .parquet(bucketDirs().map(_.toString): _*)
-      .filter(col("doc_id") === 0L).drop("adm_kb")
-      .localCheckpoint(true)
-    assert(saved.count() > 0L, "vacuous: no stored rows for doc 0")
-    val freshAddr = (0 to 1000).find { a =>
-      !bucketDirs().exists(_.getName == s"adm_kb=$a") }.get
-    var fenceCalls = 0
-    Dedup.drainPassFence = () => {
-      fenceCalls += 1
-      if (fenceCalls == 1) {
-        // fabricate the exact ADVICE race: between the sweep's pass
-        // and its verification, a concurrent fold publishes target
-        // rows into a brand-new adm_kb= directory the pass never
-        // listed, while every directory the pass examined keeps the
-        // exact file set the pass expects
-        val staging = new org.apache.hadoop.fs.Path(root, ".fold-sim")
-        saved.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val target = new org.apache.hadoop.fs.Path(root,
-          s"adm_kb=$freshAddr")
-        fs.mkdirs(target)
-        fs.listStatus(staging)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .foreach(s => fs.rename(s.getPath,
-            new org.apache.hadoop.fs.Path(target,
-              s"foldsim-${s.getPath.getName}")))
-        fs.delete(staging, true)
-        assert(doc0Rows() > 0L, "vacuous drain race: plant failed")
-      }
-    }
-    try {
-      val removed = Dedup.removeAdmittedIds(spark, store, Set(0L))
-      assert(removed > 0L)
-      assert(fenceCalls >= 2,
-        "the full sweep stopped despite a fold-created directory it " +
-          s"never listed (fence ran $fenceCalls time(s))")
-      assert(doc0Rows() === 0L,
-        "sweep reported done while target rows survive in the " +
-          "fold-created directory")
-    } finally Dedup.drainPassFence = () => ()
-    // uncontended full sweep: one pass, root + dir proofs both clean
-    var quietCalls = 0
-    Dedup.drainPassFence = () => { quietCalls += 1 }
-    try {
-      assert(Dedup.removeAdmittedIds(spark, store, Set(1L)) > 0L)
-      assert(quietCalls === 1,
-        s"uncontended full sweep paid ${quietCalls - 1} extra pass(es)")
-    } finally Dedup.drainPassFence = () => ()
   }
 
   test("maintainAdmitted wires stats to actions: threshold-triggered " +
@@ -1138,127 +798,62 @@ class DedupSpec extends SparkTestBase {
       "expired keys still suppress")
   }
 
-  test("a damaged _splits declaration fails loudly on read: huge or " +
-    "negative depths are refused before they can mis-route a chain") {
-    import spark.implicits._
-    val store = tmpDir("ndsplitbad")
-    val textA = "the quick brown fox jumps over the lazy dog near the river bank"
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Dedup.nearDupFilterBatch(Seq((0L, textA)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
-    def writeMarker(body: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(store,
-        Dedup.splitsMarkerName), true)
-      out.write(body.getBytes("UTF-8")); out.close()
-    }
-    // a maxdepth that overflows the int address space under ANY base:
-    // the read-side bound must refuse it (silent overflow mis-routes
-    // every probe chain)
-    for (bad <- Seq("maxdepth=50", "maxdepth=-1", "maxdepth=3\n1=7")) {
-      writeMarker(bad)
-      val e = intercept[IllegalArgumentException] {
-        Dedup.nearDupFilterBatch(Seq((1L, textA)).toDF("doc_id", "text"),
-          store, "doc_id", "text", nBuckets = 2)
-      }
-      assert(e.getMessage.contains("malformed"),
-        s"<$bad> not refused as malformed: ${e.getMessage}")
-      val e2 = intercept[IllegalArgumentException] {
-        Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
-          store, "doc_id", "text", nBuckets = 2)
-      }
-      assert(e2.getMessage.contains("malformed"))
-    }
-    // a depth legal for this marker's arithmetic but overflowing the
-    // CALLER's chain modulus is caught by the use-site guard
-    writeMarker("maxdepth=30")
-    val e3 = intercept[IllegalArgumentException] {
-      Dedup.nearDupFilterBatch(Seq((2L, textA)).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 2)
-    }
-    assert(e3.getMessage.contains("overflows"))
-    // restoring a sane declaration restores service
-    writeMarker("maxdepth=0")
-    assert(Dedup.nearDupFilterBatch(
-      Seq((3L, textA)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2).count() === 0L)
-  }
-
   test("depth governance: repeated splits accrete probe-chain cost " +
     "until the policy recommends a rebase; executing it collapses " +
     "chains to single-address reads with decisions unchanged " +
     "(both publish modes)") {
     import spark.implicits._
-    for (mf <- Seq(false, true)) {
-      val store = tmpDir(s"nddepth$mf")
-      def text(i: Int): String =
-        s"item$i alpha$i bravo$i charlie$i delta$i echo$i foxtrot$i " +
-          s"golf$i hotel$i india$i"
-      // grow through turns whose 1-byte budget splits every fold —
-      // depth accretes because each turn's split children stay over
-      // budget forever
-      var i = 0
-      while (Dedup.admissionStoreStats(spark, store).maxDepth < 2 &&
-          i < 12) {
-        Dedup.nearDupFilterBatch(
-          Seq((i.toLong, text(i))).toDF("doc_id", "text"),
-          store, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
-          nBuckets = 2, tailFoldFiles = 0, maxBucketBytes = 1L,
-          maxSplitsPerTurn = 2, manifestStore = mf)
-        i += 1
-      }
-      val stats0 = Dedup.admissionStoreStats(spark, store)
-      assert(stats0.maxDepth >= 2,
-        s"mode=$mf: splits never accreted depth: $stats0")
-      assert(stats0.probeChainLength === stats0.maxDepth + 1)
-      // below the threshold: no recommendation
-      val quiet = Dedup.maintainAdmitted(spark, store,
-        Dedup.AdmissionMaintenancePolicy(
-          maxDepthBeforeRebase = stats0.maxDepth + 1))
-      assert(!quiet.rebaseRecommended && quiet.rebasedTo.isEmpty,
-        s"mode=$mf: premature rebase recommendation: $quiet")
-      // at the threshold: recommended but NOT executed without opt-in
-      val rec = Dedup.maintainAdmitted(spark, store,
-        Dedup.AdmissionMaintenancePolicy(
-          maxDepthBeforeRebase = stats0.maxDepth))
-      assert(rec.rebaseRecommended && rec.rebasedTo.isEmpty,
-        s"mode=$mf: recommendation wrong: $rec")
-      assert(Dedup.admissionStoreStats(spark, store).maxDepth
-        === stats0.maxDepth, s"mode=$mf: report-only run mutated layout")
-      // listing-mode autoRebase without the exclusivity certification
-      // is refused (rebucketAdmitted must not run beside the writer);
-      // manifest mode rebases online without the flag
-      if (!mf) {
-        val eExcl = intercept[IllegalArgumentException] {
-          Dedup.maintainAdmitted(spark, store,
-            Dedup.AdmissionMaintenancePolicy(
-              maxDepthBeforeRebase = stats0.maxDepth, autoRebase = true))
-        }
-        assert(eExcl.getMessage.contains("rebaseExclusive"))
-        assert(Dedup.admissionStoreStats(spark, store).maxDepth
-          === stats0.maxDepth, "refused rebase mutated layout")
-      }
-      // opt-in executes: chains collapse to single-address reads at
-      // the grown modulus
-      val auto = Dedup.maintainAdmitted(spark, store,
-        Dedup.AdmissionMaintenancePolicy(
-          maxDepthBeforeRebase = stats0.maxDepth, autoRebase = true,
-          rebaseExclusive = !mf))
-      val grown = 2 << stats0.maxDepth
-      assert(auto.rebasedTo.contains(grown),
-        s"mode=$mf: auto rebase did not run: $auto")
-      val stats1 = Dedup.admissionStoreStats(spark, store)
-      assert(stats1.maxDepth === 0 && stats1.probeChainLength === 1 &&
-        stats1.declaredBuckets.contains(grown),
-        s"mode=$mf: rebase did not collapse chains: $stats1")
-      // decisions unchanged: every admitted doc's dup still rejected
-      val probe = Dedup.nearDupFilterBatch(
-        (0 until i).map(j => (100L + j, text(j))).toDF("doc_id", "text"),
+    val store = tmpDir("nddepth")
+    def text(i: Int): String =
+      s"item$i alpha$i bravo$i charlie$i delta$i echo$i foxtrot$i " +
+        s"golf$i hotel$i india$i"
+    // grow through turns whose 1-byte budget splits every fold —
+    // depth accretes because each turn's split children stay over
+    // budget forever
+    var i = 0
+    while (Dedup.admissionStoreStats(spark, store).maxDepth < 2 &&
+        i < 12) {
+      Dedup.nearDupFilterBatch(
+        Seq((i.toLong, text(i))).toDF("doc_id", "text"),
         store, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
-        nBuckets = grown)
-      assert(probe.count() === 0L,
-        s"mode=$mf: rebase changed admission decisions")
+        nBuckets = 2, tailFoldFiles = 0, maxBucketBytes = 1L,
+        maxSplitsPerTurn = 2)
+      i += 1
     }
+    val stats0 = Dedup.admissionStoreStats(spark, store)
+    assert(stats0.maxDepth >= 2, s"splits never accreted depth: $stats0")
+    assert(stats0.probeChainLength === stats0.maxDepth + 1)
+    // below the threshold: no recommendation
+    val quiet = Dedup.maintainAdmitted(spark, store,
+      Dedup.AdmissionMaintenancePolicy(
+        maxDepthBeforeRebase = stats0.maxDepth + 1))
+    assert(!quiet.rebaseRecommended && quiet.rebasedTo.isEmpty,
+      s"premature rebase recommendation: $quiet")
+    // at the threshold: recommended but NOT executed without opt-in
+    val rec = Dedup.maintainAdmitted(spark, store,
+      Dedup.AdmissionMaintenancePolicy(
+        maxDepthBeforeRebase = stats0.maxDepth))
+    assert(rec.rebaseRecommended && rec.rebasedTo.isEmpty,
+      s"recommendation wrong: $rec")
+    assert(Dedup.admissionStoreStats(spark, store).maxDepth
+      === stats0.maxDepth, "report-only run mutated layout")
+    // opt-in executes (online — one atomic commit): chains collapse to
+    // single-address reads at the grown modulus
+    val auto = Dedup.maintainAdmitted(spark, store,
+      Dedup.AdmissionMaintenancePolicy(
+        maxDepthBeforeRebase = stats0.maxDepth, autoRebase = true))
+    val grown = 2 << stats0.maxDepth
+    assert(auto.rebasedTo.contains(grown), s"auto rebase did not run: $auto")
+    val stats1 = Dedup.admissionStoreStats(spark, store)
+    assert(stats1.maxDepth === 0 && stats1.probeChainLength === 1 &&
+      stats1.declaredBuckets.contains(grown),
+      s"rebase did not collapse chains: $stats1")
+    // decisions unchanged: every admitted doc's dup still rejected
+    val probe = Dedup.nearDupFilterBatch(
+      (0 until i).map(j => (100L + j, text(j))).toDF("doc_id", "text"),
+      store, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
+      nBuckets = grown)
+    assert(probe.count() === 0L, "rebase changed admission decisions")
   }
 
   test("admissionStoreStats reflects layout, fragmentation, tail, and " +
@@ -1267,7 +862,7 @@ class DedupSpec extends SparkTestBase {
     val store = tmpDir("ndstats")
     val absent = Dedup.admissionStoreStats(spark, tmpDir("ndstats-absent"))
     assert(absent === Dedup.AdmissionStoreStats(0, 0L, 0L, 0, 0, 0L,
-      rebucketPending = false, declaredBuckets = None))
+      declaredBuckets = None))
     // one folded batch (L1 buckets), one tail-resident batch
     Dedup.nearDupFilterBatch(
       Seq((0L, "the quick brown fox jumps over the lazy dog near a bank"))
@@ -1283,24 +878,14 @@ class DedupSpec extends SparkTestBase {
       "first admission must declare the store's modulus")
     assert(s1.tailFiles === 1 && s1.tailBytes > 0,
       s"tail-resident batch not counted: $s1")
-    assert(!s1.rebucketPending)
     assert(s1.avgBucketBytes > 0 &&
       s1.avgBucketBytes <= s1.bucketBytes)
-    // the pending marker surfaces in the stats (the rebucket-due /
-    // migration-crashed signal a maintenance schedule watches)
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(store,
-      Dedup.rebucketMarkerName)
-    val out = fs.create(marker, true)
-    out.write("16".getBytes("UTF-8")); out.close()
-    assert(Dedup.admissionStoreStats(spark, store).rebucketPending)
-    fs.delete(marker, false)
-    // a completed migration reports the new layout
+    // a migration commits atomically: the next stats read reports the
+    // complete new layout, never an intermediate one
     Dedup.rebucketAdmitted(spark, store, 32)
     val s2 = Dedup.admissionStoreStats(spark, store)
     assert(s2.tailFiles === 0, "migration must fold the tail")
-    assert(!s2.rebucketPending && s2.buckets >= s1.buckets)
+    assert(s2.buckets >= s1.buckets)
     assert(s2.declaredBuckets === Some(32),
       "migration must update the declared modulus")
     // the silent-under-suppression guard: a caller probing with a
@@ -1327,16 +912,17 @@ class DedupSpec extends SparkTestBase {
     import spark.implicits._
     val textA = "the quick brown fox jumps over the lazy dog near the river bank"
     val store = tmpDir("ndlegacy")
-    // hand-write a PRE-RETENTION store layout: the doc's band keys in
-    // their L1 buckets with NO adm_ts column (what a store written
-    // before the retention column existed looks like)
-    Dedup.lshBands(Dedup.minhashSignatures(
+    // commit a PRE-RETENTION key file: the doc's band keys with NO
+    // adm_ts column (what rows written before the retention column
+    // existed look like)
+    val st = graft.functions.AdmissionManifestStore(store)
+    st.initIfAbsent(spark, 64)
+    st.appendTail(spark, Dedup.lshBands(Dedup.minhashSignatures(
         Dedup.docShingleHashes(Seq((0L, textA)).toDF("doc_id", "text"),
           "doc_id", "text", 3), 16), 16, 4)
       .withColumn("adm_kb",
-        pmod(xxhash64(col("band"), col("band_key")), lit(64)).cast("int"))
-      .repartition(1).write.partitionBy("adm_kb").mode("append")
-      .parquet(store)
+        pmod(xxhash64(col("band"), col("band_key")), lit(64)).cast("int")),
+      64)
     def probe(id: Long, since: Long): Set[Long] =
       Dedup.nearDupFilterBatch(Seq((id, textA)).toDF("doc_id", "text"),
           store, "doc_id", "text", admittedAt = 5000L,
@@ -1526,6 +1112,41 @@ class DedupSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { Dedup.lshBands(sigs, 4, 3) }
     intercept[IllegalArgumentException] { Dedup.lshBands(sigs, 4, 0) }
     assert(Dedup.lshBands(sigs, 4, 2).count() === 2L)
+  }
+
+  test("connected components: string-keyed pairs skip the fast-path " +
+    "count job that only long-keyed graphs use") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(run: => Unit): Int = {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0)
+      run
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      jobs.get()
+    }
+    // the same graph under both key types; single-digit labels keep the
+    // string order equal to the numeric one, so both runs take the
+    // identical distributed rounds
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L))
+    val strPairs = edges.map { case (a, b) => (s"n$a", s"n$b") }
+      .toDF("doc_a", "doc_b")
+    val longPairs = edges.toDF("doc_a", "doc_b")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val strJobs = jobsOf(Dedup.connectedComponents(strPairs).collect())
+      // long keys pay the pair count that gates the driver fast path
+      // even when the gate then sends them down the distributed path
+      val longJobs = jobsOf(Dedup.connectedComponents(longPairs,
+        driverThreshold = -1L).collect())
+      assert(strJobs < longJobs,
+        s"string-keyed run paid the fast-path count: $strJobs jobs vs " +
+          s"$longJobs for the counted long-keyed run")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("connected components: durable-checkpoint path ≡ localCheckpoint") {

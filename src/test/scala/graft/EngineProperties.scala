@@ -664,8 +664,7 @@ object EngineProperties extends Properties("graft") {
 
   property("admission with interleaved takedowns ≡ sequential reference " +
     "that forgets removed docs (both publish modes)") =
-    Prop.forAll(genAdmRemCorpus, Gen.oneOf(false, true)) {
-      case ((docs, nBatches, rmIds), mf) =>
+    Prop.forAll(genAdmRemCorpus) { case (docs, nBatches, rmIds) =>
       val s = spark; import s.implicits._
       val allDF = docs.toDF("doc_id", "text")
       val keyRows = graft.functions.Dedup.lshBands(
@@ -707,8 +706,7 @@ object EngineProperties extends Properties("graft") {
       val got = batches.flatMap { b =>
         val surv = graft.functions.Dedup.nearDupFilterBatch(
             b.toDF("doc_id", "text"),
-            dir, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
-            manifestStore = mf)
+            dir, "doc_id", "text", shingleN = 2, k = 4, bands = 2)
           .select("doc_id").collect().map(_.getLong(0))
         val rmB = b.filter { case (id, _) => rmIds(id) }
         if (rmB.nonEmpty)
@@ -717,7 +715,7 @@ object EngineProperties extends Properties("graft") {
         surv
       }.toSet
       (got == expected.toSet) :|
-        s"takedown admission (manifest=$mf) diverged: engine $got vs " +
+        s"takedown admission diverged: engine $got vs " +
           s"reference $expected"
     }
 
@@ -915,20 +913,16 @@ object EngineProperties extends Properties("graft") {
   // must stay bit-identical to the split-oblivious sequential
   // reference — no exclusivity, no pending marker, callers keep
   // passing the BASE modulus throughout.
-  // each run also draws the PUBLISH MODE (listing vs manifest): the
-  // decision law must hold identically under both layouts, so the two
-  // modes share one law instead of a copied pair
   private val genAdmSplitCorpus
-      : Gen[(Seq[(Long, String)], Int, Int, Boolean)] = for {
+      : Gen[(Seq[(Long, String)], Int, Int)] = for {
     (docs, nBatches) <- genAdmCorpus
     at <- Gen.choose(0, nBatches - 1)
-    mf <- Gen.oneOf(false, true)
-  } yield (docs, nBatches, at, mf)
+  } yield (docs, nBatches, at)
 
   property("admission with online bucket splits inside every turn ≡ " +
     "sequential reference (growth without exclusivity; both publish " +
     "modes)") =
-    Prop.forAll(genAdmSplitCorpus) { case (docs, nBatches, at, mf) =>
+    Prop.forAll(genAdmSplitCorpus) { case (docs, nBatches, at) =>
       val s = spark; import s.implicits._
       val allDF = docs.toDF("doc_id", "text")
       val keyRows = graft.functions.Dedup.lshBands(
@@ -971,12 +965,11 @@ object EngineProperties extends Properties("graft") {
         graft.functions.Dedup.nearDupFilterBatch(b.toDF("doc_id", "text"),
             dir, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
             nBuckets = 2, tailFoldFiles = 0,
-            maxBucketBytes = 1L, maxSplitsPerTurn = 2,
-            manifestStore = mf)
+            maxBucketBytes = 1L, maxSplitsPerTurn = 2)
           .select("doc_id").collect().map(_.getLong(0))
       }.toSet
       (got == expected.toSet) :|
-        s"split admission (manifest=$mf) diverged: engine $got vs " +
+        s"split admission diverged: engine $got vs " +
           s"reference $expected"
     }
 
@@ -986,17 +979,16 @@ object EngineProperties extends Properties("graft") {
   // is split-oblivious AND stamp-aware, so stamps must ride every
   // split (and the fold's re-routing) bit-intact
   private val genAdmWinSplitCorpus
-      : Gen[(Seq[(Long, String)], Int, Seq[Long], Int, Boolean)] = for {
+      : Gen[(Seq[(Long, String)], Int, Seq[Long], Int)] = for {
     (docs, nBatches, sinces) <- genAdmWinCorpus
     at <- Gen.choose(0, nBatches - 1)
-    mf <- Gen.oneOf(false, true)
-  } yield (docs, nBatches, sinces, at, mf)
+  } yield (docs, nBatches, sinces, at)
 
   property("windowed admission with online splits inside every turn ≡ " +
     "sequential stamped reference (stamps survive the splits; both " +
     "publish modes)") =
     Prop.forAll(genAdmWinSplitCorpus) {
-      case (docs, nBatches, sinces, at, mf) =>
+      case (docs, nBatches, sinces, at) =>
       val s = spark; import s.implicits._
       val allDF = docs.toDF("doc_id", "text")
       val keyRows = graft.functions.Dedup.lshBands(
@@ -1041,12 +1033,11 @@ object EngineProperties extends Properties("graft") {
             dir, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
             nBuckets = 2, tailFoldFiles = 0,
             maxBucketBytes = 1L, maxSplitsPerTurn = 2,
-            admittedAt = 1000L * (i + 1), suppressSince = sinces(i),
-            manifestStore = mf)
+            admittedAt = 1000L * (i + 1), suppressSince = sinces(i))
           .select("doc_id").collect().map(_.getLong(0))
       }.toSet
       (got == expected.toSet) :|
-        s"windowed+split admission (manifest=$mf) diverged: engine " +
+        s"windowed+split admission diverged: engine " +
           s"$got vs reference $expected"
     }
 

@@ -427,4 +427,35 @@ class PlanAuditSpec extends SparkTestBase {
     assert(kept.size <= 2 * keys.length,
       s"kept ${kept.size} files for ${keys.length} keys of $total")
   }
+
+  test("admission decision: batch keys broadcast up to the model-join " +
+    "row gate, shuffle-hashed past it") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.functions.{Dedup, ModelJoin}
+    // checkpointed like the production keys relation
+    def keysOf(ids: Range) = Dedup.lshBands(Dedup.minhashSignatures(
+        Dedup.docShingleHashes(ids.map(i => (i.toLong,
+          s"doc $i alpha$i bravo$i charlie$i delta$i echo$i"))
+          .toDF("doc_id", "text"), "doc_id", "text", 3), 16), 16, 4)
+      .localCheckpoint(true)
+    val store = keysOf(100 until 104).select(col("doc_id").as("s_id"),
+      col("band").as("s_band"), col("band_key").as("s_band_key"))
+    val small = keysOf(0 until 2) // 8 key rows
+    val big = keysOf(0 until 8) // 32 key rows
+    def decision(keys: org.apache.spark.sql.DataFrame): String =
+      Dedup.decideDropIds(keys, Seq("band", "band_key"), Some(store),
+        keys.count()).queryExecution.executedPlan.toString
+    spark.conf.set(ModelJoin.broadcastMaxRowsKey, "16")
+    try {
+      val ps = decision(small)
+      assert(count(ps, "BroadcastHashJoin") === 2 &&
+        !ps.contains("ShuffledHashJoin"),
+        s"keys within the gate must broadcast (store + self join):\n$ps")
+      val pb = decision(big)
+      assert(count(pb, "ShuffledHashJoin") === 2 &&
+        !pb.contains("BroadcastHashJoin"),
+        s"keys past the gate must shuffle-hash, never broadcast:\n$pb")
+    } finally spark.conf.unset(ModelJoin.broadcastMaxRowsKey)
+  }
 }
