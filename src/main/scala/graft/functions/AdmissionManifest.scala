@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.GenerationLog
 
 /** The streaming-admission store ([[Dedup.admitByKeys]]'s persisted
   * key relation): a commit log over immutable parquet files. The
@@ -62,7 +63,7 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
   private val retainVersions = 8
 
   private[graft] val log = new GenerationLog[AdmissionManifest](
-    storePath, AdmissionManifest.parse, _.serialize,
+    storePath, (_, s) => AdmissionManifest.parse(s), _.serialize,
     (sp, m) => transitiveFiles(sp, m), retainVersions)
 
   private def hfs(spark: SparkSession) = log.hfs(spark)

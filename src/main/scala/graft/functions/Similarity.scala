@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import graft.operators.GenerationLog
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -1448,11 +1449,11 @@ class IvfIndex(path: String, nCells: Int,
 
   // The shared versioned-manifest commit protocol ([[GenerationLog]]):
   // CAS version claims via AtomicClaim (exclusive publish +
-  // torn-destination healing, the upsert sink's commit-log rules),
-  // torn-commit-tolerant listing, commit-time retention GC, and
-  // orphan vacuum — one spelling across IvfIndex and the codes stores.
+  // torn-destination healing), torn-commit-tolerant listing,
+  // commit-time retention GC, and orphan vacuum — one spelling across
+  // every versioned store.
   private val log = new GenerationLog[Manifest](path,
-    Manifest.parse, _.serialize, (_, m) => m.dirs, retainVersions)
+    (_, s) => Manifest.parse(s), _.serialize, (_, m) => m.dirs, retainVersions)
 
   private def uid: String = log.uid
   private def resolve(spark: SparkSession): Option[Manifest] =
@@ -1839,7 +1840,8 @@ class IvfIndex(path: String, nCells: Int,
     */
   def vacuum(spark: SparkSession,
              olderThanMs: Long = 86400000L): Seq[String] =
-    log.vacuum(spark, Seq("seg-", "centroids-", "seeds-", "tomb-"),
+    log.vacuum(spark,
+      n => Seq("seg-", "centroids-", "seeds-", "tomb-").exists(n.startsWith),
       olderThanMs)
 }
 

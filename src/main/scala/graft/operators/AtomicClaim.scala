@@ -4,9 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 
 /** Atomically publish commit-file content at a destination iff no
-  * commit exists there yet — the claim primitive under every
-  * versioned commit log in the engine (the upsert sink, the IVF index
-  * manifest log).
+  * commit exists there yet — the claim primitive under
+  * [[GenerationLog]], the engine's one versioned commit log.
   *
   * The naive protocol — write a private tmp file, then
   * `FileContext.rename(tmp, dst)` with `Rename.NONE` — is atomic and

@@ -23,27 +23,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    file-level rewrite granularity. A batch that WIDENS the schema
   *    is the exception: it rewrites the whole table once so the
   *    on-disk schema stays uniform.
-  *  - Unpartitioned tables commit through a versioned layout with a
-  *    Delta-log-style commit directory: crash-safe (readers never see
-  *    a half-written version) and snapshot-isolated.
-  *  - Idempotence per micro-batch: each commit records its batchId;
-  *    replays are skipped, preserving exactly-once on restart.
-  *  - Concurrency: version claims are ATOMIC compare-and-swap
-  *    (tmp-write + rename-without-overwrite, the same primitive
-  *    Delta's HDFS LogStore uses) — exactly one concurrent writer
-  *    wins each version on stores with atomic rename. The versioned
-  *    (unpartitioned) layout is fully multi-writer: a loser discards
-  *    its orphan snapshot, re-merges against the winner's state, and
-  *    retries the next version. The partitioned layout rewrites data
-  *    files IN PLACE, where optimistic retry is UNSOUND — writer A
-  *    can overwrite a shared partition between writer B's overwrite
-  *    and B's claim, so even a writer that WINS its claim may have
-  *    had its partitions clobbered, and the loser's retry re-merges
-  *    against a base that already lost them. Partitioned writers are
-  *    therefore serialized through an exclusive writer-lock file
-  *    (mutual exclusion, the only sound multi-writer contract for
-  *    in-place rewrites); the failed-claim CME remains the backstop
-  *    against external writers that bypass the lock.
+  *  - The sink's commit log, idempotence and concurrency contract are
+  *    on [[ParquetUpsertSink]].
   */
 object Upsert {
 
@@ -81,45 +62,19 @@ object Upsert {
   }
 }
 
-/** File-backed upsert table — the stand-in for the reference's Delta
-  * gold table.
+/** Hands-free OPTIMIZE for [[ParquetUpsertSink]] (the Delta
+  * autoCompact analog): after a successful upsert whose new state
+  * holds more than `files` small files — in the versioned snapshot, or
+  * in any one partition directory of the partitioned layout — the
+  * sink immediately compacts ([[ParquetUpsertSink.compact]] /
+  * [[ParquetUpsertSink.compactPartitions]]) with the given layout
+  * spec, so a streaming sink never accumulates micro-batch
+  * fragmentation without operator intervention. Compaction rides the
+  * normal commit protocol (losing its version race to a concurrent
+  * writer just abandons the attempt), so auto mode adds no new failure
+  * surface.
   *
-  * Commit protocol (the essential slice of a Delta log): a commit is
-  * a file `_commits/<version>` whose content is the batchId; the
-  * current table state is defined by the HIGHEST committed version.
-  * Writers fully materialize the new state BEFORE writing the commit
-  * file, so a crash mid-write leaves the previous version intact and
-  * visible — readers never observe a torn table. The last two
-  * versions are retained (snapshot for in-flight readers), older ones
-  * are garbage-collected.
-  *
-  *  - `partitionCol = None`: uniquely-named snapshot directories
-  *    (`v<version>-<uuid>`, recorded in the commit file), whole-table
-  *    snapshot per commit — right for small/medium aggregate tables,
-  *    and safe under concurrent writers (see Concurrency above).
-  *  - `partitionCol = Some(c)`: data lives partitioned in place and
-  *    merges rewrite only touched partitions (dynamic partition
-  *    overwrite); commits then track batchId for idempotence, with
-  *    atomicity at partition granularity (the overwrite committer's
-  *    guarantee) rather than table granularity.
-  */
-/** @param retainVersions how many committed versions (snapshot dirs +
-  *   commit files) GC keeps, newest first. 2 is the single-writer
-  *   minimum (one spare for readers started before the last commit);
-  *   raise it under writer contention — a loser's lazily-scanned
-  *   merge base survives `retainVersions - 1` further commits, and
-  *   for time travel ([[readVersion]]).
-  */
-/** @param autoCompact hands-free OPTIMIZE (the Delta autoCompact
-  *   analog, versioned layout): after a successful upsert whose new
-  *   snapshot holds more than `files` small files, immediately run
-  *   [[compact]] with the given layout spec — a streaming sink then
-  *   never accumulates micro-batch fragmentation without operator
-  *   intervention. Compaction rides the normal commit protocol
-  *   (losing its version race to a concurrent writer just abandons
-  *   the attempt), so auto mode adds no new failure surface.
-  */
-/** @param maxBytesPerRun (partitioned layout) byte budget per rewrite
+  * @param maxBytesPerRun (partitioned layout) byte budget per rewrite
   *   round, the [[ParquetUpsertSink.compactPartitions]] knob — a
   *   pathologically fragmented table's first hands-free compaction
   *   then proceeds in bounded groups instead of materializing its
@@ -131,7 +86,101 @@ final case class AutoCompact(files: Int,
                              zorder: Boolean = false,
                              maxBytesPerRun: Option[Long] = None)
 
-/** @param bloomCols columns to maintain per-file bloom filters for
+/** One commit of [[ParquetUpsertSink]]'s log: the file
+  * `_commits/<version>` holding `<batchId> <dataDir> <epochMillis>
+  * <op>`.
+  *
+  *  - `batchId`: the streaming replay high-water mark (sentinel `-1`
+  *    writes carry the previous mark forward);
+  *  - `dataDir`: the UNIQUELY-NAMED snapshot directory
+  *    `v<version>-<uuid>` the version reads (versioned layout), or `-`
+  *    (partitioned layout, whose data lives in place). Unique names
+  *    are what make racing writers safe: each attempt writes its own
+  *    directory, so a loser discards its orphan without ever touching
+  *    the winner's data;
+  *  - `epochMillis` and `op` (upsert/delete/compact/restore) feed
+  *    [[ParquetUpsertSink.history]].
+  *
+  * Older and foreign writers' shorter forms still parse:
+  * `<batchId> <dataDir>`, and a bare `<batchId>` whose data directory
+  * is the legacy fixed name `v<version>` (`-` on the partitioned
+  * layout). Content whose first token is not a long is torn debris.
+  */
+private[graft] final case class UpsertCommit(batchId: Long, dataDir: String,
+    epochMillis: Option[Long], op: Option[String]) {
+  def serialize: String =
+    (Seq(batchId.toString, dataDir) ++ epochMillis.map(_.toString) ++ op)
+      .mkString(" ")
+}
+
+private[graft] object UpsertCommit {
+  def now(batchId: Long, dataDir: String, op: String): UpsertCommit =
+    UpsertCommit(batchId, dataDir, Some(System.currentTimeMillis()), Some(op))
+
+  /** `bareDir` is the data directory of a bare `<batchId>` commit. */
+  def parse(content: String, bareDir: => String): Option[UpsertCommit] =
+    scala.util.Try {
+      val p = content.trim.split("\\s+")
+      UpsertCommit(p(0).toLong, p.lift(1).getOrElse(bareDir),
+        p.lift(2).flatMap(t => scala.util.Try(t.toLong).toOption), p.lift(3))
+    }.toOption
+}
+
+/** File-backed upsert table — the stand-in for the reference's Delta
+  * gold table.
+  *
+  * Commit protocol (the essential slice of a Delta log): the table
+  * commits through a [[GenerationLog]] of [[UpsertCommit]]s — the same
+  * log the IVF index, the codes stores and the admission store commit
+  * through. The current table state is defined by the HIGHEST
+  * committed version. Writers fully materialize the new state BEFORE
+  * claiming the version, so a crash mid-write leaves the previous
+  * version intact and visible — readers never observe a torn table.
+  * The newest `retainVersions` versions are retained (snapshots for
+  * in-flight readers and time travel); older ones are
+  * garbage-collected, reference-counted because [[restore]]
+  * re-references an old snapshot.
+  *
+  *  - `partitionCol = None`: uniquely-named snapshot directories
+  *    (`v<version>-<uuid>`, recorded in the commit), whole-table
+  *    snapshot per commit — right for small/medium aggregate tables,
+  *    and safe under concurrent writers (see Concurrency below).
+  *  - `partitionCol = Some(c)`: data lives partitioned in place and
+  *    merges rewrite only touched partitions (dynamic partition
+  *    overwrite); commits then track batchId for idempotence, with
+  *    atomicity at partition granularity (the overwrite committer's
+  *    guarantee) rather than table granularity — table granularity
+  *    with `retainHistory`.
+  *
+  * Idempotence per micro-batch: each commit records its batchId;
+  * replays are skipped, preserving exactly-once on restart.
+  *
+  * Concurrency: version claims are ATOMIC compare-and-swap
+  * ([[AtomicClaim]], the same primitive Delta's HDFS LogStore uses) —
+  * exactly one concurrent writer wins each version. The versioned
+  * layout is fully multi-writer: a loser discards its orphan snapshot,
+  * re-merges against the winner's state, and retries the next version
+  * ([[GenerationLog.commitWithRetry]]). The partitioned layout
+  * rewrites data files IN PLACE, where optimistic retry is UNSOUND —
+  * writer A can overwrite a shared partition between writer B's
+  * overwrite and B's claim, so even a writer that WINS its claim may
+  * have had its partitions clobbered, and the loser's retry re-merges
+  * against a base that already lost them. Partitioned writers are
+  * therefore serialized through an exclusive writer-lock file (mutual
+  * exclusion, the only sound multi-writer contract for in-place
+  * rewrites) and claim once; the failed-claim
+  * ConcurrentModificationException remains the backstop against
+  * external writers that bypass the lock.
+  *
+  * @param retainVersions how many committed versions (snapshot dirs +
+  *   commit files) GC keeps, newest first. 2 is the single-writer
+  *   minimum (one spare for readers started before the last commit);
+  *   raise it under writer contention — a loser's lazily-scanned
+  *   merge base survives `retainVersions - 1` further commits, and
+  *   for time travel ([[readVersion]]).
+  * @param autoCompact hands-free compaction after each upsert, see
+  *   [[AutoCompact]].
+  * @param bloomCols columns to maintain per-file bloom filters for
   *   (the Delta bloom-index analog, [[FileSkipping.writeBlooms]]):
   *   every commit path that writes a stats manifest also builds
   *   blooms over these columns, and [[scan]]'s pruner consults them
@@ -140,22 +189,22 @@ final case class AutoCompact(files: Int,
   *   range spans the keyspace unless the table is clustered on
   *   exactly that key). Pick them per table like Delta does: the
   *   lookup keys, not everything.
-  */
-/** @param retainHistory (partitioned layout only) keep the files each
+  * @param retainHistory (partitioned layout only) keep the files each
   *   commit replaces, frozen under `_history/v<version>/` by
   *   metadata-only renames, with a per-commit add/remove actions log
-  *   ([[PartitionedHistory]]) — giving the in-place layout the
-  *   versioned layout's whole capability set: time travel
-  *   ([[readVersion]]), change feed ([[changeFeed]]), restore, and —
-  *   as a byproduct of the write-ahead intent + rollback recovery —
-  *   TABLE-granularity crash atomicity (a torn multi-partition batch
-  *   is rolled back to the last commit instead of left partially
-  *   applied). Retention follows `retainVersions`, the versioned
-  *   layout's contract. Cost per commit: O(touched files) renames and
-  *   one small JSON record — never a byte copied; history bytes are
-  *   bounded by the replaced data of the retained commits and
-  *   reclaimed by the same GC. Plain `spark.read.parquet(path)` still
-  *   works: `_history` is underscore-hidden.
+  *   ([[PartitionedHistory]], a write-ahead record keyed by the commit
+  *   version) — giving the in-place layout the versioned layout's
+  *   whole capability set: time travel ([[readVersion]]), change feed
+  *   ([[changeFeed]]), restore, and — as a byproduct of the
+  *   write-ahead intent + rollback recovery — TABLE-granularity crash
+  *   atomicity (a torn multi-partition batch is rolled back to the
+  *   last commit instead of left partially applied). Retention follows
+  *   `retainVersions`, the versioned layout's contract. Cost per
+  *   commit: O(touched files) renames and one small JSON record —
+  *   never a byte copied; history bytes are bounded by the replaced
+  *   data of the retained commits and reclaimed by the same GC. Plain
+  *   `spark.read.parquet(path)` still works: `_history` is
+  *   underscore-hidden.
   */
 class ParquetUpsertSink(path: String, keys: Seq[String],
                         partitionCol: Option[String] = None,
@@ -179,44 +228,63 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
 
   private def commitsDir = new Path(path, "_commits")
 
-  /** (version, batchId, dataDir) of all commits, ascending by
-    * version. The commit file's content is
-    * `<batchId> <dataDir> [<epochMillis> <operation>]` (the trailing
-    * pair feeds [[history]]; partitioned commits carry `-` for the
-    * dir they don't have); dataDir is the UNIQUELY-NAMED snapshot
-    * directory the version points at (absent in the legacy
-    * single-writer format, which used
-    * the fixed name `v<version>` — still parsed for old tables).
-    * Unique names are what make racing writers safe: each attempt
-    * writes its own directory, so a loser can discard its orphan
-    * without ever touching the winner's data. Torn commit files (a
-    * writer died between create and write — possible on stores
-    * without atomic rename) are SKIPPED, not fatal: the table stays
-    * readable at the last good version.
+  /** The commit log. A versioned commit references its snapshot
+    * directory (reference-counted GC); a dropped history commit takes
+    * its frozen files, stage dirs and actions/intent records along.
     */
-  private def commits(spark: SparkSession): Seq[(Long, Long, String)] = {
-    val f = fs(spark)
-    if (!f.exists(commitsDir)) Seq.empty
-    else f.listStatus(commitsDir).toSeq
-      .flatMap { s =>
-        scala.util.Try {
-          val v = s.getPath.getName.toLong
-          val in = f.open(s.getPath)
-          val content = try new String(in.readAllBytes(), "UTF-8").trim
-          finally in.close()
-          val parts = content.split("\\s+")
-          (v, parts(0).toLong,
-            if (parts.length > 1) parts(1) else s"v$v")
-        }.toOption
-      }
-      .sortBy(_._1)
-  }
+  private val log = new GenerationLog[UpsertCommit](path,
+    (v, s) => UpsertCommit.parse(s,
+      if (partitionCol.isEmpty) s"v$v" else "-"),
+    _.serialize,
+    (_, c) => if (partitionCol.isEmpty) Seq(c.dataDir) else Nil,
+    retainVersions,
+    (spark, v) => if (retainHistory)
+      PartitionedHistory.gcVersion(fs(spark), new Path(path), commitsDir, v))
+
+  private type Commits = Seq[(Long, UpsertCommit)]
+
+  /** Next version to claim after `cs`. */
+  private def nextVersion(cs: Commits): Long =
+    cs.lastOption.map(_._1).getOrElse(-1L) + 1
+
+  /** The replay high-water mark: the largest batchId any retained
+    * commit records (-1: none). The max over ALL retained commits,
+    * not the head's, so an interleaved sentinel (-1) commit can never
+    * lower it.
+    */
+  private def lastStreamBatch(cs: Commits): Long =
+    cs.iterator.map(_._2.batchId).foldLeft(-1L)(math.max)
+
+  /** Whether streaming batch `batchId` is already committed — a
+    * crash-redelivered micro-batch (sentinel -1 never is).
+    */
+  private def alreadyApplied(batchId: Long, cs: Commits): Boolean =
+    batchId >= 0 && batchId <= lastStreamBatch(cs)
+
+  /** The batchId a new commit records: a sentinel write carries the
+    * high-water mark forward, so GC of the commits that established it
+    * cannot resurrect replay of a seen batch.
+    */
+  private def recorded(batchId: Long, cs: Commits): Long =
+    if (batchId >= 0) batchId else lastStreamBatch(cs)
+
+  /** Retained commit `version` of `cs`, or the not-available error. */
+  private def committed(cs: Commits, version: Long): UpsertCommit =
+    cs.find(_._1 == version).map(_._2).getOrElse(
+      throw new IllegalArgumentException(
+        s"version $version of $path is not available (GC retains the " +
+          s"newest $retainVersions; present: " +
+          s"${cs.map(_._1).mkString(",")})"))
+
+  /** Snapshot directory of the head version (versioned layout). */
+  private def headDir(spark: SparkSession): Option[String] =
+    log.resolveLatest(spark).map(_._2.dataDir)
 
   def currentVersion(spark: SparkSession): Long =
-    commits(spark).lastOption.map(_._1).getOrElse(-1L)
+    log.resolveLatest(spark).map(_._1).getOrElse(-1L)
 
   def lastBatchId(spark: SparkSession): Long =
-    commits(spark).lastOption.map(_._2).getOrElse(-1L)
+    log.resolveLatest(spark).map(_._2.batchId).getOrElse(-1L)
 
   def exists(spark: SparkSession): Boolean = currentVersion(spark) >= 0
 
@@ -262,17 +330,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
             .parquet(kept.map(k => s"$path/$k"): _*)
             .filter(predicate)
       }
-    case None => commits(spark).lastOption match {
+    case None => headDir(spark) match {
       case None => read(spark).filter(predicate)
-      case Some((_, _, dir)) =>
-        val (kept, total) = scanFileSelection(spark, dir, predicate)
-        if (kept.size == total) // nothing pruned (or no stats)
-          spark.read.parquet(s"$path/$dir").filter(predicate)
-        else if (kept.isEmpty) // stats prove no file can match
-          emptyLike(spark, spark.read.parquet(s"$path/$dir").schema)
-        else
-          spark.read.parquet(kept.map(f => s"$path/$dir/$f"): _*)
-            .filter(predicate)
+      case Some(dir) => prunedScan(spark, dir, predicate)
     }
   }
 
@@ -487,9 +547,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
               .parquet(kept.map(k => s"$path/$k"): _*)
               .filter(predicate))
         }
-      case None => commits(spark).lastOption match {
+      case None => headDir(spark) match {
         case None => rowReduced(read(spark).filter(predicate))
-        case Some((_, _, dir)) =>
+        case Some(dir) =>
           val (kept, total) = scanForJoinSelection(spark, dir, joinKey,
             collected, predicate)
           val reduced =
@@ -542,18 +602,23 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
                   predicate: org.apache.spark.sql.Column): DataFrame = {
     require(partitionCol.isEmpty,
       "time travel requires the versioned layout")
-    commits(spark).find(_._1 == version) match {
-      case None => readVersion(spark, version) // throws the standard error
-      case Some((_, _, dir)) =>
-        val (kept, total) = scanFileSelection(spark, dir, predicate)
-        if (kept.size == total)
-          spark.read.parquet(s"$path/$dir").filter(predicate)
-        else if (kept.isEmpty)
-          emptyLike(spark, spark.read.parquet(s"$path/$dir").schema)
-        else
-          spark.read.parquet(kept.map(f => s"$path/$dir/$f"): _*)
-            .filter(predicate)
-    }
+    prunedScan(spark, committed(log.commits(spark), version).dataDir,
+      predicate)
+  }
+
+  /** [[scan]] of one versioned snapshot directory: only the files its
+    * stats manifest admits for `predicate`, then the predicate itself.
+    */
+  private def prunedScan(spark: SparkSession, dir: String,
+                         predicate: org.apache.spark.sql.Column): DataFrame = {
+    val (kept, total) = scanFileSelection(spark, dir, predicate)
+    if (kept.size == total) // nothing pruned (or no stats)
+      spark.read.parquet(s"$path/$dir").filter(predicate)
+    else if (kept.isEmpty) // stats prove no file can match
+      emptyLike(spark, spark.read.parquet(s"$path/$dir").schema)
+    else
+      spark.read.parquet(kept.map(f => s"$path/$dir/$f"): _*)
+        .filter(predicate)
   }
 
   /** (files kept, total files) the stats manifest admits for
@@ -621,9 +686,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         partitionedFileSelection(spark, pc, predicate)
           .map { case (kept, total) => (kept.size, total) }
           .getOrElse((0, 0))
-      case None => commits(spark).lastOption match {
+      case None => headDir(spark) match {
         case None => (0, 0)
-        case Some((_, _, dir)) =>
+        case Some(dir) =>
           val (kept, total) = scanFileSelection(spark, dir, predicate)
           (kept.size, total)
       }
@@ -637,7 +702,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * fall back to `read(spark).count()`.
     */
   def countRows(spark: SparkSession): Option[Long] = partitionCol match {
-    case None => commits(spark).lastOption.flatMap { case (_, _, dir) =>
+    case None => headDir(spark).flatMap { dir =>
       FileSkipping.readStats(fs(spark), new Path(s"$path/$dir"))
         .map(_.map(_.rows).sum)
     }
@@ -688,7 +753,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   def columnBounds(spark: SparkSession, column: String)
       : Option[(Any, Any)] = partitionCol match {
-    case None => commits(spark).lastOption.flatMap { case (_, _, dir) =>
+    case None => headDir(spark).flatMap { dir =>
       FileSkipping.readStats(fs(spark), new Path(s"$path/$dir"))
         .flatMap(FileSkipping.globalBounds(_, column))
     }
@@ -701,12 +766,14 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         .flatMap(per => FileSkipping.globalBounds(per.flatten, column))
   }
 
+  /** The versioned layout's snapshot at `dir`, or — before the first
+    * commit — the pre-sink external data at the table root.
+    */
+  private def snapshotAt(spark: SparkSession, dir: Option[String]): DataFrame =
+    spark.read.parquet(dir.fold(path)(d => s"$path/$d"))
+
   def read(spark: SparkSession): DataFrame = partitionCol match {
-    case None =>
-      commits(spark).lastOption match {
-        case Some((_, _, dir)) => spark.read.parquet(s"$path/$dir")
-        case None => spark.read.parquet(path) // pre-sink external data
-      }
+    case None => snapshotAt(spark, headDir(spark))
     case Some(pc) =>
       // mergeSchema: after (or mid-crash during) a schema-widening
       // upsert, partitions may carry different footer schemas — without
@@ -722,7 +789,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         // originals — readers see the last COMMITTED state, mutating
         // nothing (recovery proper runs under the writer lock)
         readFileMap(spark, PartitionedHistory.consistentLive(fs(spark),
-          new Path(path), commitsDir, pc, commits(spark).map(_._1).toSet))
+          new Path(path), commitsDir, pc, log.commits(spark).map(_._1).toSet))
   }
 
   /** Versions with a pending (uncommitted) history intent — nonempty
@@ -732,7 +799,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
   private def pendingHistory(spark: SparkSession): Seq[Long] =
     if (!retainHistory) Seq.empty
     else PartitionedHistory.pendingVersions(fs(spark), commitsDir,
-      commits(spark).map(_._1).toSet)
+      log.commits(spark).map(_._1).toSet)
 
   /** Roll back incomplete history commits (writer died between intent
     * and commit claim) — runs at the start of every locked write, so
@@ -808,33 +875,32 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   def readVersion(spark: SparkSession, version: Long): DataFrame =
     partitionCol match {
-      case None => commits(spark).find(_._1 == version) match {
-        case Some((_, _, dir)) => spark.read.parquet(s"$path/$dir")
-        case None => throw new IllegalArgumentException(
-          s"version $version of $path is not available (GC retains the " +
-            s"newest $retainVersions; present: " +
-            s"${commits(spark).map(_._1).mkString(",")})")
-      }
+      case None => snapshotAt(spark,
+        Some(committed(log.commits(spark), version).dataDir))
       case Some(pc) =>
         require(retainHistory,
           "time travel on the partitioned layout requires " +
             "retainHistory = true (the plain layout rewrites in place " +
             "and keeps no history)")
-        val cs = commits(spark)
-        if (!cs.exists(_._1 == version))
-          throw new IllegalArgumentException(
-            s"version $version of $path is not available (GC retains " +
-              s"the newest $retainVersions; present: " +
-              s"${cs.map(_._1).mkString(",")})")
-        val f = fs(spark)
-        val current = PartitionedHistory.consistentLive(f, new Path(path),
-          commitsDir, pc, cs.map(_._1).toSet)
-        val files =
-          if (version == cs.last._1) current
-          else PartitionedHistory.liveAt(f, new Path(path), commitsDir,
-            version, cs.map(_._1).sorted.reverse, current)
-        readFileMap(spark, files)
+        val cs = log.commits(spark)
+        committed(cs, version)
+        readFileMap(spark, fileMapAt(spark, pc, cs)(version))
     }
+
+  /** History layout: the file map (relpath → location under `path`)
+    * of each retained version of `cs`, by backward replay of the
+    * actions records from the consistent current listing
+    * ([[PartitionedHistory.liveAt]]).
+    */
+  private def fileMapAt(spark: SparkSession, pc: String, cs: Commits)
+      : Long => Map[String, String] = {
+    val f = fs(spark)
+    val current = PartitionedHistory.consistentLive(f, new Path(path),
+      commitsDir, pc, cs.map(_._1).toSet)
+    v => if (v == cs.last._1) current
+      else PartitionedHistory.liveAt(f, new Path(path), commitsDir, v,
+        cs.map(_._1).sorted.reverse, current)
+  }
 
   /** Rows of version `to` that are NEW or CHANGED since version
     * `from` — the additive half of the change-data feed. This is what
@@ -933,15 +999,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     partitionCol match {
       case Some(pc) if retainHistory && from < to =>
         try {
-          val cs = commits(spark)
+          val cs = log.commits(spark)
           require(cs.exists(_._1 == from) && cs.exists(_._1 == to))
-          val f = fs(spark)
-          val current = PartitionedHistory.consistentLive(f,
-            new Path(path), commitsDir, pc, cs.map(_._1).toSet)
-          def at(v: Long): Map[String, String] =
-            if (v == cs.last._1) current
-            else PartitionedHistory.liveAt(f, new Path(path), commitsDir,
-              v, cs.map(_._1).sorted.reverse, current)
+          val at = fileMapAt(spark, pc, cs)
           val atTo = at(to)
           val atFrom = at(from)
           Some((readFileMap(spark,
@@ -1006,76 +1066,77 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     }
   }
 
-  /** Atomic commit point with compare-and-swap semantics: write the
-    * full content to a UNIQUE dot-temp name (ignored by the commit
-    * parser; unique so racing writers never clobber each other's
-    * temp), then rename WITHOUT overwrite — `FileContext.rename`
-    * with the default `Rename.NONE` fails if the destination exists.
-    * On stores with atomic rename (HDFS and friends) exactly one
-    * concurrent writer claims each version; the commit file appears
-    * fully written or not at all (rename is metadata-only, so no
-    * reader can observe a torn commit). Local-FS rename does an
-    * existence check rather than a kernel-level exclusive rename, so
-    * the local window is narrow-but-nonzero — the same caveat every
-    * rename-based log protocol carries there.
-    *
-    * Returns false when the version was already claimed by another
-    * writer (the caller's cue to re-merge and retry).
-    */
-  /** Claim `version` with `content` — true iff THIS writer won. The
-    * atomic-exclusive publish (hard-link on local filesystems, where
-    * rename silently replaces; exclusive rename elsewhere) plus the
-    * torn-destination healing both live in [[AtomicClaim]].
-    */
-  private def tryCommit(spark: SparkSession, version: Long,
-                        content: String): Boolean = {
-    val f = fs(spark)
-    val dst = new Path(commitsDir, version.toString)
-    AtomicClaim.claim(f, spark.sparkContext.hadoopConfiguration, dst,
-      content.getBytes("UTF-8"), () => parsesAsCommit(f, dst))
-  }
-
-  /** Whether `p` holds well-formed commit content (first token is the
-    * batchId long) — the same criterion commits() uses to skip torn
-    * files.
-    */
-  private def parsesAsCommit(f: org.apache.hadoop.fs.FileSystem,
-                             p: Path): Boolean =
-    scala.util.Try {
-      val in = f.open(p)
-      val content = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-      content.split("\\s+")(0).toLong
-    }.isSuccess
-
-  /** Drop versions (and their commit files) older than the previous
-    * one — keeps a snapshot for readers started before the last
-    * commit. REFERENCE-COUNTED: a snapshot dir still pointed at by a
-    * retained commit survives its own version's expiry ([[restore]]
-    * re-references an old dir from a new commit, Delta-style zero-copy
-    * rollback — deleting it under the restored version would corrupt
-    * the current table). Partitioned tables have no version
-    * directories, but their commit log is trimmed the same way (only
-    * the max matters for idempotence) so it cannot grow without bound.
-    */
-  private def gc(spark: SparkSession, cs: Seq[(Long, Long, String)]): Unit = {
-    val f = fs(spark)
-    val referenced = cs.takeRight(retainVersions).map(_._3).toSet
-    cs.dropRight(retainVersions).foreach { case (v, _, dir) =>
-      if (partitionCol.isEmpty && !referenced.contains(dir))
-        f.delete(new Path(s"$path/$dir"), true)
-      // a dropped commit's frozen files and actions record can never
-      // be needed again: backward replay from any RETAINED version
-      // only walks newer commits' actions
-      if (retainHistory)
-        PartitionedHistory.gcVersion(f, new Path(path), commitsDir, v)
-      f.delete(new Path(commitsDir, v.toString), false)
-    }
-  }
-
   /** Unique snapshot-directory name for one commit attempt. */
-  private def newDataDir(version: Long): String =
-    s"v$version-${java.util.UUID.randomUUID().toString.take(8)}"
+  private def newDataDir(version: Long): String = s"v$version-${log.uid}"
+
+  private def lostClaim(version: Long, op: String, hint: String) =
+    new java.util.ConcurrentModificationException(
+      s"concurrent writer claimed version $version of $path during $op; " +
+        hint)
+
+  /** The partitioned layout's one commit sequence for `version`; the
+    * caller holds the writer lock. With history on (see
+    * [[PartitionedHistory]]): the write-ahead intent over the
+    * `touched` directories and every file they hold, the freeze of
+    * `frozen` (default: all of those files) under
+    * `_history/v<version>/`, `write`, the actions record (`adds`,
+    * default the touched directories' files after the write; removes,
+    * the frozen files), the claim, and the intent's removal. Without
+    * history: `write`, then the claim. A lock-honouring writer cannot
+    * lose the claim, so a loss means one bypassed the lock — and an
+    * in-place rewrite cannot be rolled back, only surfaced.
+    */
+  private def commitInPlace(spark: SparkSession, version: Long,
+      c: UpsertCommit, touched: Seq[String],
+      frozen: Option[Seq[String]] = None,
+      adds: Option[Seq[String]] = None)(write: => Unit): Unit = {
+    val f = fs(spark)
+    val root = new Path(path)
+    val moved =
+      if (!retainHistory) Nil
+      else {
+        val originals = PartitionedHistory.listDirFiles(f, root, touched)
+        PartitionedHistory.writeIntent(f, commitsDir, version,
+          PartitionedHistory.Intent(touched, originals))
+        val m = frozen.getOrElse(originals)
+        PartitionedHistory.moveToHistory(f, root, version, m)
+        betweenHistoryMoveAndWrite(version)
+        m
+      }
+    write
+    if (retainHistory)
+      PartitionedHistory.writeActions(f, commitsDir, version,
+        PartitionedHistory.Actions(
+          adds.getOrElse(PartitionedHistory.listDirFiles(f, root, touched)),
+          moved))
+    beforeCommit(version)
+    if (!log.commitOnce(spark, version, c))
+      throw lostClaim(version, c.op.getOrElse("commit"),
+        "in-place rewrites cannot be rolled back — route all writers " +
+          "through the sink's writer lock")
+    if (retainHistory) // the write-ahead record has served its term
+      f.delete(PartitionedHistory.intentPath(commitsDir, version), false)
+  }
+
+  /** Write `data` as the versioned layout's new snapshot `dataDir`,
+    * with its footer stats (and blooms, if configured) INSIDE the
+    * directory, so they publish atomically with the version's claim
+    * and power [[scan]]'s file pruning. A merge base GC'd from under
+    * the lazy scan by concurrent writers (retain-2 keeps one spare, so
+    * this takes TWO commits during one merge) is a lost race, not a
+    * failure: the head has already advanced past `version`, so the
+    * claim that follows loses, the partial directory is dropped, and
+    * the retry re-merges against the fresh head.
+    */
+  private def writeSnapshot(spark: SparkSession, version: Long,
+                            dataDir: String, data: DataFrame): Unit =
+    try {
+      data.write.mode("overwrite").parquet(s"$path/$dataDir")
+      writeIndexes(spark, new Path(s"$path/$dataDir"))
+    } catch {
+      case e: Throwable if fnfInChain(e) && currentVersion(spark) >= version =>
+        () // lost race: the claim loses and the retry re-merges
+    }
 
   /** Run `body` under dynamic partition-overwrite mode, restoring the
     * session's previous setting afterwards (don't leak dynamic mode).
@@ -1132,10 +1193,10 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       .foreach(d => writeIndexes(spark, d.getPath))
   }
 
-  /** After a successful upsert: compact immediately when the new state
-    * exceeds the configured small-file budget. Runs OUTSIDE the
-    * committed write (the upsert is already durable; a crash here just
-    * leaves the fragmentation for the next trigger).
+  /** After a successful upsert committing `c`: compact immediately
+    * when the new state exceeds the configured small-file budget. Runs
+    * OUTSIDE the committed write (the upsert is already durable; a
+    * crash here just leaves the fragmentation for the next trigger).
     *
     * Versioned layout: snapshot file count over budget → [[compact]].
     * Partitioned layout: any partition DIRECTORY over budget →
@@ -1145,11 +1206,11 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * (`writerLockEnabled = false`) accepts the same exposure its
     * upserts already have.
     */
-  private def maybeAutoCompact(spark: SparkSession, dataDir: String): Unit =
+  private def maybeAutoCompact(spark: SparkSession, c: UpsertCommit): Unit =
     autoCompact.foreach { ac =>
       partitionCol match {
         case None =>
-          val nFiles = fs(spark).listStatus(new Path(s"$path/$dataDir"))
+          val nFiles = fs(spark).listStatus(new Path(s"$path/${c.dataDir}"))
             .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           if (nFiles > ac.files)
             compact(spark, ac.targetFileBytes, ac.clusterBy, ac.zorder)
@@ -1251,9 +1312,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
               clusterBy: Seq[String] = Nil,
               zorder: Boolean = false): Unit = {
     if (partitionCol.nonEmpty) return
-    val cs = commits(spark)
-    if (cs.isEmpty) return
-    val (cur, lastBatch, curDir) = cs.last
+    val (cur, head) = log.resolveLatest(spark).getOrElse(return)
+    val curDir = head.dataDir
     val bytes = fs(spark).getContentSummary(new Path(s"$path/$curDir")).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val newV = cur + 1
@@ -1283,10 +1343,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     // compaction is an optimization: losing the version race to a
     // concurrent upsert just abandons this attempt (the upsert's
     // snapshot supersedes ours anyway)
-    if (tryCommit(spark, newV,
-        s"$lastBatch $dir ${System.currentTimeMillis()} compact"))
-      gc(spark, cs :+ ((newV, lastBatch, dir)))
-    else fs(spark).delete(new Path(s"$path/$dir"), true)
+    if (!log.commitOnce(spark, newV,
+        UpsertCommit.now(head.batchId, dir, "compact")))
+      fs(spark).delete(new Path(s"$path/$dir"), true)
   }
 
   /** Per-partition compaction — OPTIMIZE for the PARTITIONED layout
@@ -1404,40 +1463,21 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       // layout-only delta — identical fingerprints, an EMPTY change
       // feed across it, exactly Delta's dataChange=false
       val groupDirs = group.map(_._1)
-      val csNow = if (retainHistory) commits(spark) else Seq.empty
-      val newV = csNow.lastOption.map(_._1).getOrElse(-1L) + 1
-      val movedRels =
-        if (!retainHistory) Seq.empty[String]
-        else {
-          val originals = PartitionedHistory.listDirFiles(f, root, groupDirs)
-          PartitionedHistory.writeIntent(f, commitsDir, newV,
-            PartitionedHistory.Intent(groupDirs, originals))
-          PartitionedHistory.moveToHistory(f, root, newV, originals)
-          betweenHistoryMoveAndWrite(newV)
-          originals
+      def rewrite(): Unit = {
+        withDynamicOverwrite(spark) {
+          arranged.write.mode("overwrite").partitionBy(pc).parquet(path)
         }
-      withDynamicOverwrite(spark) {
-        arranged.write.mode("overwrite").partitionBy(pc).parquet(path)
+        refreshPartitionStats(spark, pc, group.map { e =>
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(e._1.drop(pc.length + 1))
+        })
       }
-      refreshPartitionStats(spark, pc, group.map { e =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(e._1.drop(pc.length + 1))
-      })
-      if (retainHistory) {
-        PartitionedHistory.writeActions(f, commitsDir, newV,
-          PartitionedHistory.Actions(
-            PartitionedHistory.listDirFiles(f, root, groupDirs),
-            movedRels))
-        val lastStreamBatch =
-          csNow.iterator.map(_._2).filter(_ >= 0).foldLeft(-1L)(math.max)
-        if (tryCommit(spark, newV,
-            s"$lastStreamBatch - ${System.currentTimeMillis()} compact")) {
-          f.delete(PartitionedHistory.intentPath(commitsDir, newV), false)
-          gc(spark, csNow :+ ((newV, lastStreamBatch, "")))
-        } else throw new java.util.ConcurrentModificationException(
-          s"concurrent writer claimed version $newV of partitioned " +
-            s"table $path during compaction; route all writers through " +
-            "the sink's writer lock")
+      if (!retainHistory) rewrite()
+      else {
+        val cs = log.commits(spark)
+        commitInPlace(spark, nextVersion(cs),
+          UpsertCommit.now(lastStreamBatch(cs), "-", "compact"),
+          groupDirs)(rewrite())
       }
       groupDirs
     }
@@ -1446,7 +1486,6 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
   /** Upsert one batch. Replayed batchIds (crash between sink commit
     * and checkpoint commit) are skipped — the micro-batch output for a
     * given id is deterministic, so skipping preserves exactly-once.
-    * The commit log is read ONCE per call.
     *
     * `batchId` is REQUIRED (a default would let two bare calls
     * silently no-op the second one via the replay check): pass the
@@ -1454,14 +1493,133 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * callers that want no idempotence/replay protection.
     */
   def upsert(spark: SparkSession, updates: DataFrame, batchId: Long): Unit =
-    if (partitionCol.nonEmpty && writerLockEnabled)
+    partitionCol match {
+      case None =>
+        log.commitWithRetry(spark, None, beforeCommit, cleanupPerRace = true) {
+          (newV, head) => upsertVersioned(spark, updates, batchId, newV, head)
+        }.foreach(maybeAutoCompact(spark, _))
       // in-place rewrites: mutual exclusion, not optimistic retry (see
-      // class doc) — the commit-log read inside the attempt happens
-      // under the lock, so each writer merges against the fresh head
-      withWriterLock(spark)(upsertAttempt(spark, updates, batchId,
-        retriesLeft = 0))
-    else
-      upsertAttempt(spark, updates, batchId, retriesLeft = 5)
+      // class doc) — the commit-log read inside happens under the lock,
+      // so each writer merges against the fresh head
+      case Some(pc) if writerLockEnabled =>
+        withWriterLock(spark)(upsertPartitioned(spark, updates, batchId, pc))
+      case Some(pc) => upsertPartitioned(spark, updates, batchId, pc)
+    }
+
+  /** The TABLE effect of a replayed batch must not re-apply — but the
+    * batch must still be CONSUMED: in a streaming foreachBatch the
+    * upstream stateful operators run inside this DataFrame's job, and
+    * returning without an action would leave their state stores
+    * uncommitted for this batch (Spark 4.1's state-store commit
+    * validation fails the restarted query over exactly this). The noop
+    * sink drives every partition at full speed with zero write side
+    * effects.
+    */
+  private def consume(updates: DataFrame): Unit =
+    updates.write.format("noop").mode("overwrite").save()
+
+  /** One versioned-layout upsert attempt at `newV` over `head`: a full
+    * new snapshot in a UNIQUELY-NAMED directory. The previous version
+    * stays readable until the claim lands, so a crash here is
+    * invisible to readers — and a racing writer's snapshot can never
+    * share (or clobber) our path.
+    */
+  private def upsertVersioned(spark: SparkSession, updates: DataFrame,
+      batchId: Long, newV: Long, head: Option[UpsertCommit])
+      : Option[(UpsertCommit, Seq[String])] = {
+    val cs = log.commits(spark)
+    if (alreadyApplied(batchId, cs)) { consume(updates); return None }
+    // An uncommitted table with pre-existing data (external writer or
+    // a pre-commit-log layout) is adopted as the merge base, never
+    // clobbered.
+    val adopt = head.isEmpty && hasExternalData(spark)
+    val dataDir = newDataDir(newV)
+    beforeWrite(newV)
+    val data =
+      if (head.isEmpty && !adopt) updates
+      else {
+        val m = Upsert.merge(snapshotAt(spark, head.map(_.dataDir)),
+          updates, keys)
+        // adopt-case base lives at `path` itself, which the new
+        // snapshot is written under — materialize before writing
+        if (adopt) m.localCheckpoint(true) else m
+      }
+    writeSnapshot(spark, newV, dataDir, data)
+    Some((UpsertCommit.now(recorded(batchId, cs), dataDir, "upsert"),
+      Seq(dataDir)))
+  }
+
+  /** Partitioned-layout upsert body — MUST run under the writer lock
+    * (or external coordination, for lock-bypassing callers).
+    */
+  private def upsertPartitioned(spark: SparkSession, updates: DataFrame,
+                                batchId: Long, pc: String): Unit = {
+    val cs = log.commits(spark)
+    if (alreadyApplied(batchId, cs)) { consume(updates); return }
+    val newV = nextVersion(cs)
+    val adopt = cs.isEmpty && hasExternalData(spark)
+    beforeWrite(newV)
+    val updateVals = updates.select(col(pc).cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    // First batch: create (03_gold_realtime_rides.py:97-99) — via
+    // DYNAMIC overwrite, writing only the batch's own partitions. A
+    // STATIC overwrite here would delete the entire path, including a
+    // concurrent writer's just-committed v0 data and the _commits log
+    // itself — silently clobbering the race this protocol exists to
+    // detect.
+    //
+    // Later batches merge partition-granular: read ONLY the partitions
+    // the batch touches (partition-pruned scan), merge,
+    // dynamic-overwrite just those partitions. Untouched partitions are
+    // never read or rewritten. localCheckpoint materializes the merge
+    // before the history freeze or the overwrite removes its input
+    // files.
+    //
+    // EXCEPT when the batch widens the schema: a touched-only rewrite
+    // would leave untouched partitions' files on the old narrow schema
+    // forever, making every later read depend on schema merging.
+    // Widening is rare, so pay a one-time FULL rewrite: merge against
+    // the whole table and emit every partition (dynamic overwrite then
+    // rewrites them all) so the on-disk schema is uniform again.
+    val (data, widens) =
+      if (newV == 0 && !adopt) (updates, false)
+      else {
+        val baseAll = read(spark)
+        val widens = updates.columns.exists(c => !baseAll.columns.contains(c))
+        val base =
+          if (widens) baseAll
+          else {
+            val touched = updates.select(pc).distinct().collect().map(_.get(0))
+            baseAll.filter(col(pc).isInCollection(touched.toSeq))
+          }
+        (Upsert.merge(base, updates, keys).localCheckpoint(true), widens)
+      }
+    val f = fs(spark)
+    // a widening batch rewrites EVERY partition — its touched set is
+    // every directory on disk plus any the batch creates
+    val touchedDirs =
+      if (!widens) updateVals.map(partDirName(pc, _))
+      else {
+        val onDisk =
+          if (!f.exists(new Path(path))) Seq.empty[String]
+          else f.listStatus(new Path(path)).toSeq
+            .filter(s => s.isDirectory &&
+              s.getPath.getName.startsWith(s"$pc="))
+            .map(_.getPath.getName)
+        (onDisk ++ updateVals.map(partDirName(pc, _))).distinct
+      }
+    val c = UpsertCommit.now(recorded(batchId, cs), "-", "upsert")
+    commitInPlace(spark, newV, c, touchedDirs) {
+      withDynamicOverwrite(spark) {
+        data.write.mode("overwrite").partitionBy(pc).parquet(path)
+      }
+      // touched-partition granularity for the manifest refresh too; a
+      // widening rewrite touched every partition
+      if (widens) refreshAllPartitionStats(spark, pc)
+      else refreshPartitionStats(spark, pc, updateVals)
+    }
+    maybeAutoCompact(spark, c)
+  }
 
   /** Retract every row matching `predicate` in a new committed
     * version — the `MERGE ... WHEN MATCHED DELETE` / `DELETE FROM`
@@ -1477,30 +1635,52 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * dropped explicitly (dynamic overwrite only replaces partitions
     * PRESENT in the output, so an all-rows-deleted partition would
     * otherwise silently resurrect).
+    *
+    * SQL/Delta DELETE retracts only rows where the predicate is TRUE;
+    * a NULL verdict (e.g. `delete(col("status") === "bad")` on a null
+    * status) keeps the row. A bare `!predicate` would treat NULL as
+    * "delete" — coalesce pins the three-valued logic.
     */
   def delete(spark: SparkSession, predicate: org.apache.spark.sql.Column,
              batchId: Long): Unit =
     partitionCol match {
-      case None => deleteAttempt(spark, predicate, batchId, retriesLeft = 5)
+      case None =>
+        log.commitWithRetry(spark, None, beforeCommit, cleanupPerRace = true) {
+          (newV, head) => deleteVersioned(spark, predicate, batchId, newV, head)
+        }
       case Some(pc) if writerLockEnabled =>
         withWriterLock(spark)(deletePartitioned(spark, predicate, batchId, pc))
       case Some(pc) => deletePartitioned(spark, predicate, batchId, pc)
     }
 
+  /** One versioned-layout delete attempt at `newV` over `head`. */
+  private def deleteVersioned(spark: SparkSession,
+      predicate: org.apache.spark.sql.Column, batchId: Long, newV: Long,
+      head: Option[UpsertCommit]): Option[(UpsertCommit, Seq[String])] = {
+    val cs = log.commits(spark)
+    if (alreadyApplied(batchId, cs)) return None
+    val adopt = head.isEmpty && hasExternalData(spark)
+    if (head.isEmpty && !adopt) return None // empty table: nothing to retract
+    val dataDir = newDataDir(newV)
+    val survivors = snapshotAt(spark, head.map(_.dataDir))
+      .filter(not(coalesce(predicate, lit(false))))
+    // adopt-case base lives at `path` itself, under which the new
+    // snapshot is written — materialize first
+    writeSnapshot(spark, newV, dataDir,
+      if (adopt) survivors.localCheckpoint(true) else survivors)
+    Some((UpsertCommit.now(recorded(batchId, cs), dataDir, "delete"),
+      Seq(dataDir)))
+  }
+
   /** Partitioned-layout delete body — MUST run under the writer lock
-    * (or external coordination, for lock-bypassing callers). SQL
-    * three-valued semantics as the versioned path: NULL predicate
-    * verdicts KEEP the row.
+    * (or external coordination, for lock-bypassing callers).
     */
   private def deletePartitioned(spark: SparkSession,
                                 predicate: org.apache.spark.sql.Column,
                                 batchId: Long, pc: String): Unit = {
-    val cs = commits(spark)
-    val lastStreamBatch =
-      cs.iterator.map(_._2).filter(_ >= 0).foldLeft(-1L)(math.max)
-    if (batchId >= 0 && batchId <= lastStreamBatch) return // replay
+    val cs = log.commits(spark)
+    if (alreadyApplied(batchId, cs)) return
     if (cs.isEmpty && !hasExternalData(spark)) return // nothing to retract
-    val newV = cs.lastOption.map(_._1).getOrElse(-1L) + 1
     val base = read(spark)
     val hit = coalesce(predicate, lit(false))
     // only partitions holding at least one matching row are touched;
@@ -1513,331 +1693,32 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     val touched = base.filter(hit)
       .select(col(pc).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val recorded = if (batchId >= 0) batchId else lastStreamBatch
-    val f = fs(spark)
-    if (touched.nonEmpty) {
-      val scoped = base.filter(col(pc).cast("string").isInCollection(touched))
-      // materialize before the overwrite deletes its own input files
-      val survivors = scoped.filter(not(hit)).localCheckpoint(true)
-      val kept = survivors.select(col(pc).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val touchedDirs = touched.map(partDirName(pc, _))
-      val movedRels =
-        if (!retainHistory) Seq.empty[String]
-        else {
-          val originals = PartitionedHistory.listDirFiles(f, new Path(path),
-            touchedDirs)
-          PartitionedHistory.writeIntent(f, commitsDir, newV,
-            PartitionedHistory.Intent(touchedDirs, originals))
-          PartitionedHistory.moveToHistory(f, new Path(path), newV, originals)
-          betweenHistoryMoveAndWrite(newV)
-          originals
-        }
-      withDynamicOverwrite(spark) {
-        survivors.write.mode("overwrite").partitionBy(pc).parquet(path)
-      }
-      // partitions whose every row matched produce no output for the
-      // dynamic overwrite to replace — drop their directories (their
-      // data files, in history mode, are already frozen away)
-      (touched.filterNot(kept)).foreach { v =>
-        f.delete(new Path(path, partDirName(pc, v)), true)
-      }
-      // rewritten-and-surviving directories get fresh stats manifests
-      refreshPartitionStats(spark, pc, kept.toSeq)
-      if (retainHistory)
-        PartitionedHistory.writeActions(f, commitsDir, newV,
-          PartitionedHistory.Actions(
-            PartitionedHistory.listDirFiles(f, new Path(path),
-              touchedDirs), movedRels))
-    } else if (batchId < 0) return // no match, nothing to record
-    else if (retainHistory)
-      // marker commit (replay protection) with no file change — the
-      // actions record must still exist for backward replay
-      PartitionedHistory.writeActions(f, commitsDir, newV,
-        PartitionedHistory.Actions(Nil, Nil))
-    // commit the batchId marker (idempotence); a lost claim means an
-    // external writer bypassed the lock — surface it, as upsert does
-    if (tryCommit(spark, newV,
-        s"$recorded - ${System.currentTimeMillis()} delete")) {
-      if (retainHistory)
-        f.delete(PartitionedHistory.intentPath(commitsDir, newV), false)
-      gc(spark, cs :+ ((newV, recorded, "")))
-    } else {
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent writer claimed version $newV of partitioned table " +
-          s"$path; in-place rewrites cannot be rolled back — route all " +
-          "writers through the sink's writer lock")
-    }
-  }
-
-  @scala.annotation.tailrec
-  private def deleteAttempt(spark: SparkSession,
-                            predicate: org.apache.spark.sql.Column,
-                            batchId: Long, retriesLeft: Int): Unit = {
-    val cs = commits(spark)
-    val lastStreamBatch =
-      cs.iterator.map(_._2).filter(_ >= 0).foldLeft(-1L)(math.max)
-    if (batchId >= 0 && batchId <= lastStreamBatch) return // replay: already applied
-    val adopt = cs.isEmpty && hasExternalData(spark)
-    if (cs.isEmpty && !adopt) return // empty table: nothing to retract
-    val newV = cs.lastOption.map(_._1).getOrElse(-1L) + 1
-    val dataDir = newDataDir(newV)
-    val base = cs.lastOption match {
-      case Some((_, _, dir)) => spark.read.parquet(s"$path/$dir")
-      case None => spark.read.parquet(path) // adopt
-    }
-    val survivors = {
-      // SQL/Delta DELETE retracts only rows where the predicate is
-      // TRUE; a NULL verdict (e.g. delete(col("status") === "bad") on
-      // a null status) keeps the row. A bare !predicate would treat
-      // NULL as "delete" — coalesce pins the three-valued logic.
-      val d = base.filter(not(coalesce(predicate, lit(false))))
-      // adopt-case base lives at `path` itself, under which the new
-      // snapshot is written — materialize first
-      if (adopt) d.localCheckpoint(true) else d
-    }
-    val attemptOk =
-      try {
-        survivors.write.mode("overwrite").parquet(s"$path/$dataDir")
-        writeIndexes(spark, new Path(s"$path/$dataDir"))
-        true
-      } catch {
-        case e: Throwable if fnfInChain(e) &&
-            commits(spark).lastOption.map(_._1).getOrElse(-1L) >
-              cs.lastOption.map(_._1).getOrElse(-1L) =>
-          // merge base GC'd mid-write by concurrent writers — lost race
-          fs(spark).delete(new Path(s"$path/$dataDir"), true)
-          false
-      }
-    val recorded = if (batchId >= 0) batchId else lastStreamBatch
-    if (attemptOk && tryCommit(spark, newV,
-        s"$recorded $dataDir ${System.currentTimeMillis()} delete")) {
-      gc(spark, cs :+ ((newV, recorded, dataDir)))
-    } else {
-      if (attemptOk) // claimed by another writer: drop the orphan snapshot
-        fs(spark).delete(new Path(s"$path/$dataDir"), true)
-      if (retriesLeft <= 0)
-        throw new java.util.ConcurrentModificationException(
-          s"gave up claiming a version of $path after repeated " +
-            "concurrent-writer conflicts")
-      deleteAttempt(spark, predicate, batchId, retriesLeft - 1)
-    }
-  }
-
-  @scala.annotation.tailrec
-  private def upsertAttempt(spark: SparkSession, updates: DataFrame,
-                            batchId: Long, retriesLeft: Int): Unit = {
-    val cs = commits(spark)
-    // Replay guard compares against the max NON-NEGATIVE committed
-    // batchId: an interleaved sentinel (-1) commit must not lower the
-    // high-water mark, or a redelivered streaming batch would re-apply
-    // on top of the ad-hoc write and break exactly-once. Sentinel
-    // commits WRITE the carried-forward mark (not -1) so the mark also
-    // survives commit-log GC of the older entries that established it.
-    val lastStreamBatch =
-      cs.iterator.map(_._2).filter(_ >= 0).foldLeft(-1L)(math.max)
-    if (batchId >= 0 && batchId <= lastStreamBatch) {
-      // The TABLE effect must not re-apply — but the replayed batch
-      // must still be CONSUMED: in a streaming foreachBatch the
-      // upstream stateful operators run inside this DataFrame's job,
-      // and returning without an action would leave their state
-      // stores uncommitted for this batch (Spark 4.1's state-store
-      // commit validation fails the restarted query over exactly
-      // this). The noop sink drives every partition at full speed
-      // with zero write side effects.
-      updates.write.format("noop").mode("overwrite").save()
-      return
-    }
-    val newV = cs.lastOption.map(_._1).getOrElse(-1L) + 1
-    // An uncommitted table with pre-existing data (external writer or
-    // a pre-commit-log layout) is adopted as the merge base, never
-    // clobbered.
-    val adopt = cs.isEmpty && hasExternalData(spark)
-    val dataDir = newDataDir(newV)
-    beforeWrite(newV)
-    val attemptOk: Boolean = partitionCol match {
-      case None =>
-        // Full new snapshot into a UNIQUELY-NAMED directory; the
-        // previous version stays readable until the commit file lands,
-        // so a crash here is invisible to readers — and a racing
-        // writer's snapshot can never share (or clobber) our path.
-        val data =
-          if (newV == 0 && !adopt) updates
-          else {
-            val baseDf = cs.lastOption match {
-              case Some((_, _, dir)) => spark.read.parquet(s"$path/$dir")
-              case None => spark.read.parquet(path) // adopt
-            }
-            val m = Upsert.merge(baseDf, updates, keys)
-            // adopt-case base lives at `path` itself, which the new
-            // snapshot is written under — materialize before writing
-            if (adopt) m.localCheckpoint(true) else m
-          }
-        try {
-          data.write.mode("overwrite").parquet(s"$path/$dataDir")
-          // footer-derived per-file stats (and blooms, if configured)
-          // land INSIDE the snapshot dir before the commit claim —
-          // published atomically with the version, powering [[scan]]'s
-          // file pruning
-          writeIndexes(spark, new Path(s"$path/$dataDir"))
-          true
-        } catch {
-          case e: Throwable if fnfInChain(e) &&
-              commits(spark).lastOption.map(_._1).getOrElse(-1L) >
-                cs.lastOption.map(_._1).getOrElse(-1L) =>
-            // The lazily-scanned merge base was GC'd mid-write by
-            // concurrent writers that advanced the log (retain-2
-            // keeps one spare version, so this takes TWO commits
-            // during one merge). Not a failure — a lost race:
-            // discard the partial snapshot and rebuild from the
-            // fresh head.
-            fs(spark).delete(new Path(s"$path/$dataDir"), true)
-            false
-        }
-      case Some(pc) if newV == 0 && !adopt =>
-        // First batch: create (03_gold_realtime_rides.py:97-99) — via
-        // DYNAMIC overwrite, writing only the batch's own partitions.
-        // A STATIC overwrite here would delete the entire path,
-        // including a concurrent writer's just-committed v0 data and
-        // the _commits log itself — silently clobbering the race this
-        // protocol exists to detect.
-        val vals = updates.select(col(pc).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        val touchedDirs = vals.map(partDirName(pc, _))
-        val f = fs(spark)
-        if (retainHistory) {
-          // nothing to move at create — the intent (with an empty file
-          // list: no committed originals exist) still makes a torn v0
-          // rollbackable (delete whatever was partially written)
-          PartitionedHistory.writeIntent(f, commitsDir, newV,
-            PartitionedHistory.Intent(touchedDirs, Nil))
-          betweenHistoryMoveAndWrite(newV)
-        }
+    if (touched.isEmpty && batchId < 0) return // no match, nothing to record
+    // materialize before the history freeze or the overwrite removes
+    // its own input files
+    val survivors = if (touched.isEmpty) None else Some(
+      base.filter(col(pc).cast("string").isInCollection(touched))
+        .filter(not(hit)).localCheckpoint(true))
+    // with no match, the commit is a batchId marker (replay protection)
+    // with an empty actions record
+    commitInPlace(spark, nextVersion(cs),
+      UpsertCommit.now(recorded(batchId, cs), "-", "delete"),
+      touched.map(partDirName(pc, _))) {
+      survivors.foreach { s =>
+        val kept = s.select(col(pc).cast("string")).distinct()
+          .collect().map(_.getString(0)).toSet
         withDynamicOverwrite(spark) {
-          updates.write.mode("overwrite").partitionBy(pc).parquet(path)
+          s.write.mode("overwrite").partitionBy(pc).parquet(path)
         }
-        refreshPartitionStats(spark, pc, vals)
-        if (retainHistory)
-          PartitionedHistory.writeActions(f, commitsDir, newV,
-            PartitionedHistory.Actions(
-              PartitionedHistory.listDirFiles(f, new Path(path),
-                touchedDirs), Nil))
-        true
-      case Some(pc) =>
-        // Partition-granular merge: read ONLY the partitions the batch
-        // touches (partition-pruned scan), merge, dynamic-overwrite
-        // just those partitions. Untouched partitions are never read
-        // or rewritten. localCheckpoint materializes the merge before
-        // the overwrite deletes its input files.
-        //
-        // EXCEPT when the batch widens the schema: a touched-only
-        // rewrite would leave untouched partitions' files on the old
-        // narrow schema forever, making every later read depend on
-        // schema merging. Widening is rare, so pay a one-time FULL
-        // rewrite: merge against the whole table and emit every
-        // partition (dynamic overwrite then rewrites them all) so the
-        // on-disk schema is uniform again.
-        val baseAll = read(spark)
-        val widens = updates.columns.exists(c => !baseAll.columns.contains(c))
-        val merged =
-          if (widens)
-            Upsert.merge(baseAll, updates, keys).localCheckpoint(true)
-          else {
-            val touched = updates.select(pc).distinct().collect().map(_.get(0))
-            val base = baseAll.filter(col(pc).isInCollection(touched.toSeq))
-            Upsert.merge(base, updates, keys).localCheckpoint(true)
-          }
-        val f = fs(spark)
-        val updateVals = updates.select(col(pc).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        // a widening batch rewrites EVERY partition — its touched set
-        // is every directory on disk plus any the batch creates
-        val touchedDirs =
-          if (!widens) updateVals.map(partDirName(pc, _))
-          else {
-            val onDisk =
-              if (!f.exists(new Path(path))) Seq.empty[String]
-              else f.listStatus(new Path(path)).toSeq
-                .filter(s => s.isDirectory &&
-                  s.getPath.getName.startsWith(s"$pc="))
-                .map(_.getPath.getName)
-            (onDisk ++ updateVals.map(partDirName(pc, _))).distinct
-          }
-        // history protocol: intent (write-ahead), metadata-only
-        // renames of the files this batch replaces, THEN the in-place
-        // write — `merged` is already materialized, so the moves never
-        // pull files out from under a lazy plan
-        val movedRels =
-          if (!retainHistory) Seq.empty[String]
-          else {
-            val originals = PartitionedHistory.listDirFiles(f,
-              new Path(path), touchedDirs)
-            PartitionedHistory.writeIntent(f, commitsDir, newV,
-              PartitionedHistory.Intent(touchedDirs, originals))
-            PartitionedHistory.moveToHistory(f, new Path(path), newV,
-              originals)
-            betweenHistoryMoveAndWrite(newV)
-            originals
-          }
-        withDynamicOverwrite(spark) {
-          merged.write.mode("overwrite").partitionBy(pc).parquet(path)
+        // partitions whose every row matched produce no output for the
+        // dynamic overwrite to replace — drop their directories (their
+        // data files, in history mode, are already frozen away)
+        touched.filterNot(kept).foreach { v =>
+          fs(spark).delete(new Path(path, partDirName(pc, v)), true)
         }
-        // touched-partition granularity for the manifest refresh too;
-        // a widening rewrite touched every partition
-        if (widens) refreshAllPartitionStats(spark, pc)
-        else refreshPartitionStats(spark, pc, updateVals)
-        if (retainHistory)
-          PartitionedHistory.writeActions(f, commitsDir, newV,
-            PartitionedHistory.Actions(
-              PartitionedHistory.listDirFiles(f, new Path(path),
-                touchedDirs), movedRels))
-        true
-    }
-    if (!attemptOk) {
-      // lost during the snapshot write (merge base GC'd from under a
-      // lazy scan) — same recovery as losing the commit claim
-      if (retriesLeft <= 0)
-        throw new java.util.ConcurrentModificationException(
-          s"gave up claiming a version of $path after repeated " +
-            "concurrent-writer conflicts")
-      upsertAttempt(spark, updates, batchId, retriesLeft - 1)
-    } else {
-    // A sentinel write records the carried-forward high-water mark so
-    // GC of older commits cannot resurrect replay of a seen batch.
-    val recorded = if (batchId >= 0) batchId else lastStreamBatch
-    val content =
-      if (partitionCol.isEmpty)
-        s"$recorded $dataDir ${System.currentTimeMillis()} upsert"
-      else s"$recorded - ${System.currentTimeMillis()} upsert"
-    beforeCommit(newV)
-    if (tryCommit(spark, newV, content)) {
-      if (retainHistory) // the write-ahead record has served its term
-        fs(spark).delete(PartitionedHistory.intentPath(commitsDir, newV),
-          false)
-      gc(spark, cs :+ ((newV, recorded, dataDir)))
-      maybeAutoCompact(spark, dataDir)
-    } else partitionCol match {
-      case Some(_) =>
-        // same-protocol writers serialize on the writer lock, so a
-        // lost claim here means an EXTERNAL writer bypassed it; the
-        // in-place dynamic overwrite already rewrote shared data
-        // files — that cannot be rolled back, only surfaced
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent writer claimed version $newV of partitioned table " +
-            s"$path; in-place rewrites cannot be rolled back — route all " +
-            "writers through the sink's writer lock")
-      case None =>
-        // versioned layout: our orphan snapshot is invisible (no commit
-        // points at it) and uniquely named (never the winner's data) —
-        // drop it, re-merge against the winner's state, and try the
-        // next version
-        fs(spark).delete(new Path(s"$path/$dataDir"), true)
-        if (retriesLeft <= 0)
-          throw new java.util.ConcurrentModificationException(
-            s"gave up claiming a version of $path after repeated " +
-              "concurrent-writer conflicts")
-        upsertAttempt(spark, updates, batchId, retriesLeft - 1)
-    }
+        // rewritten-and-surviving directories get fresh stats manifests
+        refreshPartitionStats(spark, pc, kept.toSeq)
+      }
     }
   }
 
@@ -1846,13 +1727,13 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * a writer that died between writing its `v<N>-<uuid>` snapshot and
     * claiming the version (or that lost the claim and crashed before
     * its own cleanup) leaves a directory no commit references —
-    * invisible to readers, leaking disk forever. Commit-time [[gc]]
-    * only trims COMMITTED versions, so it never sees these.
+    * invisible to readers, leaking disk forever. Commit-time GC only
+    * trims COMMITTED versions, so it never sees these.
     *
-    * Safety rails (same two as the IVF index):
+    * Safety rails (same two as the IVF index, [[GenerationLog.vacuum]]):
     *  - an in-flight writer's snapshot looks exactly like an orphan
     *    until its commit lands → only directories older than
-    *    `olderThanMs` (default 1 h ≫ any snapshot write) qualify;
+    *    `olderThanMs` (default 24 h ≫ any snapshot write) qualify;
     *  - a directory referenced by ANY present commit is never touched,
     *    whatever its age — in-retention readers keep working.
     *
@@ -1860,22 +1741,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * layout (data lives in place; there are no snapshot dirs).
     */
   def vacuum(spark: SparkSession,
-             olderThanMs: Long = 86400000L): Seq[String] = {
-    if (partitionCol.nonEmpty) return Seq.empty
-    val f = fs(spark)
-    val root = new Path(path)
-    if (!f.exists(root)) return Seq.empty
-    val referenced = commits(spark).map(_._3).toSet
-    val horizon = System.currentTimeMillis() - olderThanMs
-    val snapshotName = "^v\\d+(-[0-9a-f]{8})?$".r
-    val orphans = f.listStatus(root).toSeq.filter { s =>
-      val n = s.getPath.getName
-      s.isDirectory && snapshotName.matches(n) &&
-        !referenced.contains(n) && s.getModificationTime < horizon
-    }
-    orphans.foreach(s => f.delete(s.getPath, true))
-    orphans.map(_.getPath.getName)
-  }
+             olderThanMs: Long = 86400000L): Seq[String] =
+    if (partitionCol.nonEmpty) Seq.empty
+    else log.vacuum(spark, "^v\\d+(-[0-9a-f]{8})?$".r.matches(_), olderThanMs)
 
   /** One row per RETAINED commit, newest first — the Delta
     * `DESCRIBE HISTORY` analog. Columns: version, batch_id,
@@ -1888,25 +1756,11 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   def history(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
-    val f = fs(spark)
-    val rows =
-      (if (!f.exists(commitsDir)) Seq.empty
-       else f.listStatus(commitsDir).toSeq.flatMap { s =>
-         scala.util.Try {
-           val v = s.getPath.getName.toLong
-           val in = f.open(s.getPath)
-           val content = try new String(in.readAllBytes(), "UTF-8").trim
-           finally in.close()
-           val p = content.split("\\s+")
-           org.apache.spark.sql.Row(v, p(0).toLong,
-             if (p.length > 3) p(3) else null,
-             if (p.length > 2)
-               scala.util.Try(new java.sql.Timestamp(p(2).toLong))
-                 .getOrElse(null)
-             else null,
-             if (p.length > 1 && p(1) != "-") p(1) else null)
-         }.toOption
-       }).sortBy(-_.getLong(0))
+    val rows = log.commits(spark).reverse.map { case (v, c) =>
+      org.apache.spark.sql.Row(v, c.batchId, c.op.orNull,
+        c.epochMillis.map(new java.sql.Timestamp(_)).orNull,
+        if (c.dataDir == "-") null else c.dataDir)
+    }
     val schema = StructType(Seq(
       StructField("version", LongType, nullable = false),
       StructField("batch_id", LongType, nullable = false),
@@ -1927,8 +1781,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * replay protection survives the rollback.
     *
     * Versioned layout: ZERO-COPY — the new commit re-references the
-    * old snapshot directory ([[gc]] is reference-counted, so the
-    * shared dir survives until no retained commit points at it).
+    * old snapshot directory (GC is reference-counted, so the shared
+    * dir survives until no retained commit points at it).
     *
     * Partitioned layout (requires `retainHistory`): a locked commit
     * through the normal history protocol whose delta is computed from
@@ -1942,21 +1796,14 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   def restore(spark: SparkSession, version: Long): Unit = partitionCol match {
     case None =>
-      val cs = commits(spark)
-      val target = cs.find(_._1 == version).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $version of $path is not available (GC retains the " +
-            s"newest $retainVersions; present: ${cs.map(_._1).mkString(",")})"))
+      val cs = log.commits(spark)
+      val target = committed(cs, version)
       if (cs.last._1 == version) return // already current
-      val lastStreamBatch =
-        cs.iterator.map(_._2).filter(_ >= 0).foldLeft(-1L)(math.max)
       val newV = cs.last._1 + 1
-      if (tryCommit(spark, newV,
-          s"$lastStreamBatch ${target._3} ${System.currentTimeMillis()} restore"))
-        gc(spark, cs :+ ((newV, lastStreamBatch, target._3)))
-      else throw new java.util.ConcurrentModificationException(
-        s"concurrent writer claimed version $newV of $path during " +
-          "restore — re-check the table state and retry")
+      if (!log.commitOnce(spark, newV,
+          UpsertCommit.now(lastStreamBatch(cs), target.dataDir, "restore")))
+        throw lostClaim(newV, "restore",
+          "re-check the table state and retry")
     case Some(pc) =>
       require(retainHistory,
         "restore on the partitioned layout requires retainHistory = " +
@@ -1973,25 +1820,19 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   private def restorePartitioned(spark: SparkSession, version: Long,
                                  pc: String): Unit = {
-    val cs = commits(spark)
-    if (!cs.exists(_._1 == version))
-      throw new IllegalArgumentException(
-        s"version $version of $path is not available (GC retains the " +
-          s"newest $retainVersions; present: ${cs.map(_._1).mkString(",")})")
+    val cs = log.commits(spark)
+    committed(cs, version)
     if (cs.last._1 == version) return // already current
     val f = fs(spark)
     val root = new Path(path)
-    val current = PartitionedHistory.consistentLive(f, root, commitsDir,
-      pc, cs.map(_._1).toSet)
-    val targetMap = PartitionedHistory.liveAt(f, root, commitsDir,
-      version, cs.map(_._1).sorted.reverse, current)
+    val at = fileMapAt(spark, pc, cs)
+    val current = at(cs.last._1)
+    val targetMap = at(version)
     // add/remove algebra over uniquely-named immutable files: a
     // relpath live at both versions is the same physical file — only
     // the symmetric difference moves
     val toFreeze = (current.keySet -- targetMap.keySet).toSeq.sorted
     val toAdd = (targetMap.keySet -- current.keySet).toSeq.sorted
-    val lastStreamBatch =
-      cs.iterator.map(_._2).filter(_ >= 0).foldLeft(-1L)(math.max)
     val newV = cs.last._1 + 1
     // parse the copy-parallelism conf BEFORE any mutation: a malformed
     // value must fail the restore as a clean no-op, not abort after
@@ -1999,24 +1840,13 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     val copySlices = spark.conf
       .getOption("graft.upsert.restoreCopySlices").map(_.toInt)
       .getOrElse(math.max(1, spark.sparkContext.defaultParallelism))
-    if (toFreeze.isEmpty && toAdd.isEmpty) {
-      // states identical (only layout-preserving commits since) — the
-      // restore is an empty delta, still recorded for backward replay.
-      // The empty intent keeps the crash window uniform: a death
-      // before the claim is rolled back (actions record included) by
-      // the same recovery as any other commit.
-      PartitionedHistory.writeIntent(f, commitsDir, newV,
-        PartitionedHistory.Intent(Nil, Nil))
-      PartitionedHistory.writeActions(f, commitsDir, newV,
-        PartitionedHistory.Actions(Nil, Nil))
-    } else {
-      val touchedDirs =
-        (toFreeze ++ toAdd).map(_.takeWhile(_ != '/')).distinct.sorted
-      val originals = PartitionedHistory.listDirFiles(f, root, touchedDirs)
-      PartitionedHistory.writeIntent(f, commitsDir, newV,
-        PartitionedHistory.Intent(touchedDirs, originals))
-      PartitionedHistory.moveToHistory(f, root, newV, toFreeze)
-      betweenHistoryMoveAndWrite(newV)
+    // states identical (only layout-preserving commits since) make an
+    // empty delta, still recorded for backward replay
+    val touchedDirs =
+      (toFreeze ++ toAdd).map(_.takeWhile(_ != '/')).distinct.sorted
+    commitInPlace(spark, newV,
+      UpsertCommit.now(lastStreamBatch(cs), "-", "restore"), touchedDirs,
+      frozen = Some(toFreeze), adds = Some(toAdd)) {
       // Re-adds are unlisted in the intent (they were not live), so a
       // crash from here on deletes them and thaws toFreeze — exact
       // pre-restore state. The byte work runs as a SPARK JOB, not a
@@ -2058,18 +1888,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
           if (hasData) writeIndexes(spark, dir) else f.delete(dir, true)
         }
       }
-      PartitionedHistory.writeActions(f, commitsDir, newV,
-        PartitionedHistory.Actions(toAdd, toFreeze))
     }
-    beforeCommit(newV)
-    if (tryCommit(spark, newV,
-        s"$lastStreamBatch - ${System.currentTimeMillis()} restore")) {
-      f.delete(PartitionedHistory.intentPath(commitsDir, newV), false)
-      gc(spark, cs :+ ((newV, lastStreamBatch, "")))
-    } else throw new java.util.ConcurrentModificationException(
-      s"concurrent writer claimed version $newV of partitioned table " +
-        s"$path during restore; route all writers through the sink's " +
-        "writer lock")
   }
 
   /** The restore delta's byte work, DISTRIBUTED: each (src, dst) copy

@@ -577,8 +577,8 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("rebucketAdmitted migrates the layout in place: decisions " +
-    "identical, pruned scan green on the new modulus, pending-marker " +
-    "refusal, resumable across successive migrations") {
+    "identical, pruned scan green on the new modulus, stale-modulus " +
+    "refusal, decisions kept across successive migrations") {
     import spark.implicits._
     val store = tmpDir("ndrebucket")
     val textA = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -800,8 +800,7 @@ class DedupSpec extends SparkTestBase {
 
   test("depth governance: repeated splits accrete probe-chain cost " +
     "until the policy recommends a rebase; executing it collapses " +
-    "chains to single-address reads with decisions unchanged " +
-    "(both publish modes)") {
+    "chains to single-address reads with decisions unchanged") {
     import spark.implicits._
     val store = tmpDir("nddepth")
     def text(i: Int): String =
@@ -857,7 +856,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("admissionStoreStats reflects layout, fragmentation, tail, and " +
-    "pending-migration state") {
+    "an atomic migration") {
     import spark.implicits._
     val store = tmpDir("ndstats")
     val absent = Dedup.admissionStoreStats(spark, tmpDir("ndstats-absent"))

@@ -663,7 +663,7 @@ object EngineProperties extends Properties("graft") {
   } yield (docs, nBatches, rm.toSet)
 
   property("admission with interleaved takedowns ≡ sequential reference " +
-    "that forgets removed docs (both publish modes)") =
+    "that forgets removed docs") =
     Prop.forAll(genAdmRemCorpus) { case (docs, nBatches, rmIds) =>
       val s = spark; import s.implicits._
       val allDF = docs.toDF("doc_id", "text")
@@ -920,8 +920,7 @@ object EngineProperties extends Properties("graft") {
   } yield (docs, nBatches, at)
 
   property("admission with online bucket splits inside every turn ≡ " +
-    "sequential reference (growth without exclusivity; both publish " +
-    "modes)") =
+    "sequential reference (growth without exclusivity)") =
     Prop.forAll(genAdmSplitCorpus) { case (docs, nBatches, at) =>
       val s = spark; import s.implicits._
       val allDF = docs.toDF("doc_id", "text")
@@ -985,8 +984,7 @@ object EngineProperties extends Properties("graft") {
   } yield (docs, nBatches, sinces, at)
 
   property("windowed admission with online splits inside every turn ≡ " +
-    "sequential stamped reference (stamps survive the splits; both " +
-    "publish modes)") =
+    "sequential stamped reference (stamps survive the splits)") =
     Prop.forAll(genAdmWinSplitCorpus) {
       case (docs, nBatches, sinces, at) =>
       val s = spark; import s.implicits._

@@ -19,6 +19,23 @@ class PlanAuditSpec extends SparkTestBase {
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
 
+  test("one commit log: AtomicClaim.claim has exactly one caller in " +
+    "src/main, GenerationLog") {
+    // every versioned store commits through GenerationLog; a second
+    // caller of the claim primitive is a second commit-log spelling
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val call = "AtomicClaim\\s*\\.\\s*claim\\b".r
+    val callers = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        call.findAllIn(new String(java.nio.file.Files.readAllBytes(p),
+          "UTF-8")).size)
+      .filter(_._2 > 0).toSeq.sorted
+    assert(callers === Seq("graft/operators/GenerationLog.scala" -> 1),
+      s"AtomicClaim.claim callers outside GenerationLog: $callers")
+  }
+
   test("q5_region_revenue: all 5 joins broadcast, date + region pushed") {
     val p = plan("q5_region_revenue")
     assert(count(p, "BroadcastHashJoin") === 5,

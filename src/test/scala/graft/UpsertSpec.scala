@@ -641,6 +641,39 @@ class UpsertSpec extends SparkTestBase {
       .trim.startsWith("1"), "healed commit must carry the batch id")
   }
 
+  test("a sink handle reused after its table is deleted and re-created " +
+    "reads the new table, never the dead one's cached commits") {
+    val dir = tmpDir("upsertrecreate") + "/gold"
+    val sink = new ParquetUpsertSink(dir, keys)
+    sink.upsert(spark, base, batchId = 0)
+    sink.upsert(spark, updates, batchId = 1)
+    assert(sink.read(spark).count() === 4)
+    // another process deletes the table and re-creates it at the SAME
+    // path: versions 0 and 1 are re-issued with different content
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(dir), true)
+    val other = new ParquetUpsertSink(dir, keys)
+    other.upsert(spark, updates, batchId = 0)
+    other.upsert(spark, updates.withColumn("total", lit(5L)), batchId = 1)
+    def totals(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val want = Map(("2024-01-01 10:00:00", "DRV001") -> 5L,
+      ("2024-01-01 12:00:00", "DRV003") -> 5L)
+    assert(sink.currentVersion(spark) === 1L)
+    assert(totals(sink.read(spark)) === want,
+      "the reused handle served the dead table's commits")
+    assert(totals(sink.readVersion(spark, 0)).values.toSet === Set(9L, 1L))
+    assert(sink.history(spark).collect().map(_.getString(4)).toSet ===
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("v"))
+        .map(_.getName).toSet)
+    // and the handle's own writes continue the new log
+    sink.upsert(spark, base, batchId = 1) // replay of the NEW table's batch
+    assert(totals(sink.read(spark)) === want)
+    sink.upsert(spark, base, batchId = 2)
+    assert(sink.currentVersion(spark) === 2L)
+    assert(sink.read(spark).count() === 4)
+  }
+
   test("partitioned sink: schema-widening batch rewrites ALL partitions") {
     val dir = tmpDir("upsertpw") + "/gold"
     val sink = new ParquetUpsertSink(dir, keys, Some("window_start"))
