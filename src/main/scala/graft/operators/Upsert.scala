@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Keyed upsert (the reference's Delta `MERGE ... WHEN MATCHED UPDATE
@@ -1491,9 +1492,23 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * silently no-op the second one via the replay check): pass the
     * streaming micro-batch id, or the sentinel -1 for ad-hoc batch
     * callers that want no idempotence/replay protection.
+    *
+    * `updates` is evaluated ONCE per call. The merge reads it twice
+    * (key broadcast and union), the partitioned layout also collects
+    * its partition values, and every lost-race retry reads it again —
+    * all from one MEMORY_AND_DISK materialization, released when the
+    * call returns. The reason is the streaming caller: in a
+    * foreachBatch the upstream stateful operators run, and commit
+    * their state, inside each job that evaluates `updates`, so every
+    * re-read would redo the state store's load, update and snapshot
+    * upload. An evicted block goes to disk, never back to the
+    * upstream plan. A DataFrame the caller already cached is read
+    * through its cache and left cached.
     */
-  def upsert(spark: SparkSession, updates: DataFrame, batchId: Long): Unit =
-    partitionCol match {
+  def upsert(spark: SparkSession, updates: DataFrame, batchId: Long): Unit = {
+    val own = updates.storageLevel == StorageLevel.NONE
+    if (own) updates.persist(StorageLevel.MEMORY_AND_DISK)
+    try partitionCol match {
       case None =>
         log.commitWithRetry(spark, None, beforeCommit, cleanupPerRace = true) {
           (newV, head) => upsertVersioned(spark, updates, batchId, newV, head)
@@ -1504,7 +1519,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       case Some(pc) if writerLockEnabled =>
         withWriterLock(spark)(upsertPartitioned(spark, updates, batchId, pc))
       case Some(pc) => upsertPartitioned(spark, updates, batchId, pc)
-    }
+    } finally if (own) updates.unpersist()
+  }
 
   /** The TABLE effect of a replayed batch must not re-apply — but the
     * batch must still be CONSUMED: in a streaming foreachBatch the
@@ -1559,8 +1575,11 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     val newV = nextVersion(cs)
     val adopt = cs.isEmpty && hasExternalData(spark)
     beforeWrite(newV)
-    val updateVals = updates.select(col(pc).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    // one job: the typed values prune the base scan, their string
+    // forms name the partition directories
+    val touched = updates.select(col(pc), col(pc).cast("string")).distinct()
+      .collect().toSeq
+    val updateVals = touched.map(_.getString(1))
     // First batch: create (03_gold_realtime_rides.py:97-99) — via
     // DYNAMIC overwrite, writing only the batch's own partitions. A
     // STATIC overwrite here would delete the entire path, including a
@@ -1588,10 +1607,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         val widens = updates.columns.exists(c => !baseAll.columns.contains(c))
         val base =
           if (widens) baseAll
-          else {
-            val touched = updates.select(pc).distinct().collect().map(_.get(0))
-            baseAll.filter(col(pc).isInCollection(touched.toSeq))
-          }
+          else baseAll.filter(col(pc).isInCollection(touched.map(_.get(0))))
         (Upsert.merge(base, updates, keys).localCheckpoint(true), widens)
       }
     val f = fs(spark)

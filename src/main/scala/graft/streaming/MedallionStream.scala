@@ -130,6 +130,12 @@ object MedallionStream {
     * `bounded = true` is the scale-safe variant: a 10-minute watermark
     * with update mode, emitting only changed windows per batch — state
     * and per-batch merge work stay O(active windows).
+    *
+    * The window aggregate runs, and commits its state store, inside
+    * each job that evaluates the foreachBatch DataFrame. The sink's
+    * merge reads that DataFrame more than once, so
+    * [[ParquetUpsertSink.upsert]] materializes it once per call: one
+    * state commit per micro-batch, however many times the merge reads.
     */
   def goldQuery(spark: SparkSession, p: Paths,
                 trigger: Trigger = Trigger.ProcessingTime("45 seconds"),

@@ -23,12 +23,20 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
     * is data arriving beyond the lateness bound (silently discarded —
     * the thing an operator must alarm on, reference monitor cell
     * 04_monitor_streams.py).
+    *
+    * `stateCommitMs` / `stateStoreInstances` sum the same entries'
+    * commit time and store count. A stateful operator evaluated once
+    * per batch opens one store per shuffle partition; more instances
+    * than that means a sink re-ran the upstream plan, committing its
+    * state again each time.
     */
   final case class Snapshot(name: String, batchId: Long, numInputRows: Long,
                             rowsPerSec: Double, watermark: String,
                             timestamp: String,
                             stateRows: Long = 0L,
-                            droppedByWatermark: Long = 0L)
+                            droppedByWatermark: Long = 0L,
+                            stateCommitMs: Long = 0L,
+                            stateStoreInstances: Long = 0L)
 
   final case class Termination(id: java.util.UUID, exception: Option[String],
                                lastProgress: Option[Snapshot])
@@ -50,7 +58,10 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
       p.timestamp,
       stateRows = p.stateOperators.map(_.numRowsTotal).sum,
       droppedByWatermark =
-        p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
+        p.stateOperators.map(_.numRowsDroppedByWatermark).sum,
+      stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum,
+      stateStoreInstances =
+        p.stateOperators.map(_.numStateStoreInstances.toLong).sum)
     val ring = progress.computeIfAbsent(p.id,
       _ => new java.util.ArrayDeque[Snapshot]())
     ring.synchronized {
@@ -108,7 +119,9 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
     latest.values.toSeq.sortBy(_.name).map { s =>
       f"${s.name}%-24s batch=${s.batchId}%-5d rows=${s.numInputRows}%-7d " +
         f"rate=${s.rowsPerSec}%10.1f/s state=${s.stateRows}%-7d " +
-        f"late-dropped=${s.droppedByWatermark}%-6d wm=${s.watermark}"
+        f"late-dropped=${s.droppedByWatermark}%-6d " +
+        f"stores=${s.stateStoreInstances}%-4d " +
+        f"commit-ms=${s.stateCommitMs}%-6d wm=${s.watermark}"
     }.mkString("\n")
 }
 

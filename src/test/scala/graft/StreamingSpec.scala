@@ -473,6 +473,58 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("gold commits its window state once per micro-batch under " +
+      "RocksDB, on both sink layouts") {
+    import org.apache.spark.sql.streaming.Trigger
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    MedallionStream.useRocksDbStateStore(spark)
+    val monitor = graft.streaming.QueryMonitor.attach(spark)
+    try Seq(false, true).foreach { partitioned =>
+      val root = tmpDir("streamonce")
+      val p = MedallionStream.Paths(s"$root/raw", s"$root/bronze",
+        s"$root/silver", s"$root/gold", s"$root/ckpt")
+      RideGenerator.writeRaw(spark, p.raw, 2000L)
+      MedallionStream.bronzeQuery(spark, p, Trigger.AvailableNow)
+        .awaitTermination()
+      MedallionStream.silverQuery(spark, p, Trigger.AvailableNow)
+        .awaitTermination()
+      // one silver file per gold batch: batch 0 creates the table,
+      // every later batch runs the merge
+      val gold = MedallionStream.goldQuery(spark, p, Trigger.AvailableNow,
+        partitioned = partitioned, maxFilesPerTrigger = Some(1))
+      gold.awaitTermination()
+      val batches = gold.recentProgress.filter(_.stateOperators.nonEmpty)
+      assert(batches.length >= 2,
+        s"partitioned=$partitioned: need a merge batch, got ${batches.length}")
+      batches.foreach { b =>
+        b.stateOperators.foreach { op =>
+          assert(op.numStateStoreInstances === op.numShufflePartitions,
+            s"partitioned=$partitioned batch ${b.batchId}: " +
+              s"${op.numStateStoreInstances} state stores over " +
+              s"${op.numShufflePartitions} partitions — the sink " +
+              "re-evaluated the stateful aggregate")
+        }
+      }
+      // the monitor surfaces the same count (listener delivery is async)
+      val deadline = System.currentTimeMillis() + 30000
+      def last = monitor.terminations.find(_.id == gold.id)
+        .flatMap(_.lastProgress)
+      while (last.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      val ops = gold.lastProgress.stateOperators
+      assert(last.map(s => (s.stateStoreInstances, s.stateCommitMs)) ===
+        Some((ops.map(_.numShufflePartitions.toLong).sum,
+          ops.map(_.commitTimeMs).sum)))
+    } finally {
+      spark.streams.removeListener(monitor)
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("QueryMonitor listener captures progress and renders a summary") {
     val root = tmpDir("streamm")
     val p = MedallionStream.Paths(s"$root/raw", s"$root/bronze",
@@ -491,6 +543,7 @@ class StreamingSpec extends SparkTestBase {
       assert(snaps.nonEmpty, "no progress captured")
       assert(snaps.exists(_.numInputRows > 0), s"no rows observed: $snaps")
       assert(monitor.render().contains("batch="))
+      assert(monitor.render().contains("stores="))
       // the AvailableNow query has terminated: its ring is evicted and
       // its final snapshot lives in the bounded termination log
       assert(monitor.terminations.nonEmpty)

@@ -868,4 +868,46 @@ class UpsertSpec extends SparkTestBase {
     assert(sink.read(spark).agg(sum(col("v"))).first().getLong(0) ===
       (0L until 600L).map(_ * 5).sum)
   }
+
+  test("upsert evaluates its updates exactly once per call: both layouts, " +
+      "the replay skip, and a caller-cached input that stays cached") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    val rowsSeen = spark.sparkContext.longAccumulator("upsert-input-rows")
+    // each evaluation of the returned DataFrame adds its row count
+    def counted(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.rdd.map { r => rowsSeen.add(1); r }, df.schema)
+    def assertOnePass(sink: ParquetUpsertSink, df: DataFrame, batchId: Long,
+                      callerCached: Boolean = false): Unit = {
+      val in = counted(df)
+      if (callerCached) in.persist()
+      rowsSeen.reset()
+      sink.upsert(spark, in, batchId)
+      assert(rowsSeen.value === df.count(),
+        s"batch $batchId: updates evaluated ${rowsSeen.value} rows, " +
+          s"expected one pass over ${df.count()}")
+      if (callerCached) {
+        assert(in.storageLevel !== StorageLevel.NONE,
+          "the sink dropped the caller's cache")
+        in.unpersist()
+      } else assert(in.storageLevel === StorageLevel.NONE,
+        "the sink's own materialization outlived the call")
+    }
+    Seq(None, Some("window_start")).foreach { layout =>
+      val sink = new ParquetUpsertSink(tmpDir("upsert1") + "/gold", keys,
+        layout)
+      assertOnePass(sink, base, batchId = 0)     // create
+      assertOnePass(sink, updates, batchId = 1)  // merge
+      assertOnePass(sink, updates, batchId = 1)  // replay: consumed, skipped
+      assertOnePass(sink, updates.withColumn("total", lit(7L)), batchId = 2,
+        callerCached = true)
+      val m = sink.read(spark).select(col("window_start").cast("string"),
+          col("driver_id"), col("total"))
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+        .toMap
+      assert(m.size === 4)
+      assert(m(("2024-01-01 10:00:00", "DRV001")) === 7L)
+      assert(m(("2024-01-01 11:00:00", "DRV001")) === 2L)
+    }
+  }
 }
