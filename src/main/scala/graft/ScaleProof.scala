@@ -254,17 +254,15 @@ object ScaleProof {
         // blooms refine
         val dfpKeys: Array[Any] =
           Seq(0L, 3L, 7L, 11L).map(i => (n / 2 + i): Any).toArray
-        val snap = sink.history(spark).first().getString(4)
-        val (jKept, jTotal) = sink.scanForJoinSelection(spark, snap,
-          "doc_id", dfpKeys, lit(true))
+        val j = sink.selectFiles(spark, Some(lit(true)),
+          join = Some(("doc_id", dfpKeys.toSeq))).get
         println(s"""{"op":"dfp_bloom_files","n":$n,""" +
-          s""""kept":${jKept.size},"total":$jTotal}""")
+          s""""kept":${j.kept.size},"total":${j.total}}""")
         val clustered = skipSetup(n, docs)
-        val cSnap = clustered.history(spark).first().getString(4)
-        val (cKept, cTotal) = clustered.scanForJoinSelection(spark, cSnap,
-          "doc_id", dfpKeys, lit(true))
+        val c = clustered.selectFiles(spark, Some(lit(true)),
+          join = Some(("doc_id", dfpKeys.toSeq))).get
         println(s"""{"op":"dfp_clustered_files","n":$n,""" +
-          s""""kept":${cKept.size},"total":$cTotal}""")
+          s""""kept":${c.kept.size},"total":${c.total}}""")
         sink
       })
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -235,23 +235,29 @@ private[graft] object PartitionedHistory {
   def listDirFiles(fs: FileSystem, root: Path,
                    dirs: Seq[String]): Seq[String] =
     dirs.flatMap { d =>
-      val p = new Path(root, d)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => s"$d/${s.getPath.getName}")
+      parquetFiles(fs, new Path(root, d)).map(s => s"$d/${s.getPath.getName}")
     }
 
   /** All live partition-directory parquet files under `root`
     * (relative paths), for directories named `<pc>=...`.
     */
-  def liveRelpaths(fs: FileSystem, root: Path, pc: String): Seq[String] = {
-    if (!fs.exists(root)) return Seq.empty
-    val dirs = fs.listStatus(root).toSeq
+  def liveRelpaths(fs: FileSystem, root: Path, pc: String): Seq[String] =
+    listDirFiles(fs, root, partitionDirs(fs, root, pc))
+
+  /** The parquet files directly in `dir`; none when `dir` is missing. */
+  def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+
+  /** Names of the `<pc>=...` partition directories under `root`; none
+    * when `root` is missing.
+    */
+  def partitionDirs(fs: FileSystem, root: Path, pc: String): Seq[String] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$pc="))
       .map(_.getPath.getName)
-    listDirFiles(fs, root, dirs)
-  }
 
   /** Step 2 of the protocol: rename exactly the intent's listed files
     * into `_history/v<v>/`, preserving the directory structure. The

@@ -213,6 +213,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
                         autoCompact: Option[AutoCompact] = None,
                         bloomCols: Seq[String] = Nil,
                         retainHistory: Boolean = false) {
+  import ParquetUpsertSink.{FileSelection, ListedDir}
+
   require(retainVersions >= 2,
     s"retainVersions must be >= 2 (got $retainVersions): the previous " +
       "version must survive for in-flight readers")
@@ -301,41 +303,20 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     }
   }
 
-  /** Predicate-pruned read (versioned layout): consult the snapshot's
-    * per-file stats manifest ([[FileSkipping]], written atomically
-    * with each commit) and enumerate ONLY files whose min/max/null
-    * stats admit a matching row, then apply the predicate to the
-    * survivors. Semantically identical to `read(spark).filter(pred)`;
-    * at 100 TB the difference is that pruned files cost zero scheduled
-    * tasks, zero opens, zero footer fetches — with a
-    * [[compact]] `clusterBy`/`zorder` layout a point/range query
-    * touches O(matching) files instead of O(table). Tables without
-    * stats (legacy snapshots, collection failures) and the
-    * partitioned layout (where directory-level partition pruning
-    * already does this job) fall back to the full scan + filter.
+  /** Predicate-pruned read: consult the per-file stats manifests
+    * ([[FileSkipping]], written atomically with each commit) and
+    * enumerate ONLY files whose min/max/null stats admit a matching
+    * row, then apply the predicate to the survivors. Semantically
+    * identical to `read(spark).filter(pred)`; at 100 TB the difference
+    * is that pruned files cost zero scheduled tasks, zero opens, zero
+    * footer fetches — with a [[compact]] `clusterBy`/`zorder` layout a
+    * point/range query touches O(matching) files instead of O(table).
+    * On the partitioned layout the partition value prunes whole
+    * directories through the same stats. Both layouts decide in
+    * [[selectFiles]]; files without trustworthy stats are kept.
     */
   def scan(spark: SparkSession, predicate: org.apache.spark.sql.Column)
-      : DataFrame = partitionCol match {
-    case Some(pc) =>
-      partitionedFileSelection(spark, pc, predicate) match {
-        case None => read(spark).filter(predicate)
-        case Some((kept, total)) if kept.size == total =>
-          read(spark).filter(predicate)
-        case Some((kept, _)) if kept.isEmpty =>
-          emptyLike(spark, read(spark).schema)
-        case Some((kept, _)) =>
-          // basePath keeps the partition column derivable from the
-          // kept leaf-file paths
-          spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
-            .parquet(kept.map(k => s"$path/$k"): _*)
-            .filter(predicate)
-      }
-    case None => headDir(spark) match {
-      case None => read(spark).filter(predicate)
-      case Some(dir) => prunedScan(spark, dir, predicate)
-    }
-  }
+      : DataFrame = prunedRead(spark, predicate)
 
   private def emptyLike(spark: SparkSession,
                         schema: org.apache.spark.sql.types.StructType)
@@ -366,123 +347,148 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       .map(PredCond.apply).getOrElse(PredUnknown)
   }
 
-  /** Partitioned-layout pruning decision: (kept file paths relative to
-    * the table root, total files), or None when nothing can be decided
-    * (no partition dirs, pc missing from schema, no Filter derivable)
-    * — the caller then falls back to the plain read + filter.
+  /** The one file-pruning decision behind [[scan]], [[scanVersion]],
+    * [[scanForJoin]], [[scanFileCounts]], [[countRows]] and
+    * [[columnBounds]] on both layouts: `kept` of the `total` live
+    * files, as paths relative to `root` — the snapshot directory
+    * (versioned) or the table path (partitioned) — plus every file's
+    * manifest `stats` when each directory's manifest is fresh. A
+    * versioned snapshot is a table of one directory with no partition
+    * value.
     *
-    * Per directory, the PARTITION VALUE parsed from the dir name
-    * becomes pseudo min=max stats ([[FileSkipping.partitionColStats]])
-    * merged into each file's manifest stats, so one pruner does both
-    * partition pruning and data-column skipping. STALENESS GUARD: a
-    * manifest is trusted only if its file names exactly match the
-    * directory's current parquet listing — dynamic partition overwrite
-    * writes fresh unique names, so a manifest left behind by a
-    * pre-stats writer (or clobbered by one) self-invalidates into
-    * keep-all-in-dir (partition-value pruning still applies via 1-row
-    * surrogates).
+    *  1. The candidate directories are listed once. None (decline, the
+    *     caller falls back to `read`) without a committed version or a
+    *     partition directory, and while a history intent is pending: a
+    *     crashed writer's torn directories make the live listing and
+    *     its manifests untrustworthy, and `read` routes around them.
+    *  2. A manifest is trusted only when its file names exactly match
+    *     its directory's listing — overwrites write fresh unique names,
+    *     so a manifest left behind by a pre-stats writer (or clobbered
+    *     by one) self-invalidates into 1-row surrogates, which prune by
+    *     nothing but the partition value.
+    *  3. The partition value parsed from a directory name becomes
+    *     pseudo min=max stats ([[FileSkipping.partitionColStats]]), so
+    *     one pruner does partition pruning and data-column skipping.
+    *  4. Files are pruned by stats; the survivors are refined by blooms,
+    *     then by the join-key window ([[FileSkipping.mayHoldAnyKey]]).
+    *
+    * `predicate = None` prunes nothing (the metadata-only answers).
+    * Otherwise the predicate is taken from the OPTIMIZED plan over one
+    * sample file ([[effectivePredicate]]): a provably unsatisfiable one
+    * keeps no file, and one with no Filter left keeps every file — or,
+    * without join keys, makes the partitioned layout decline. `join =
+    * Some((joinKey, keys))` adds the key check, with the keys typed
+    * from that same sample schema; keys of a type without a stats
+    * representation prune nothing.
     */
-  private[graft] def partitionedFileSelection(spark: SparkSession, pc: String,
-      predicate: org.apache.spark.sql.Column): Option[(Seq[String], Int)] =
-    partitionedFileSelection(spark, pc, predicate, joinFilter = None)
-
-  /** As above; `joinFilter = Some((joinKey, kind, sortedKeys))`
-    * additionally applies the dynamic-file-pruning key-window check
-    * per file ([[FileSkipping.mayHoldAnyKey]]) — and because each
-    * file's stats are enriched with the partition-value pseudo-stats,
-    * a join ON THE PARTITION COLUMN prunes whole directories through
-    * the same code path. With a join filter present, a predicate the
-    * optimizer absorbs entirely (e.g. `lit(true)`) still prunes by
-    * keys instead of falling back.
-    */
-  private[graft] def partitionedFileSelection(spark: SparkSession, pc: String,
-      predicate: org.apache.spark.sql.Column,
-      joinFilter: Option[(String, String, Array[FileSkipping.SValue])])
-      : Option[(Seq[String], Int)] = {
+  private[graft] def selectFiles(spark: SparkSession,
+      predicate: Option[org.apache.spark.sql.Column],
+      version: Option[Long] = None,
+      join: Option[(String, Seq[Any])] = None): Option[FileSelection] = {
     val f = fs(spark)
-    val root = new Path(path)
-    if (!f.exists(root)) return None
-    // a crashed writer's torn directories make the live listing (and
-    // its manifests) untrustworthy — decline to prune; the row-level
-    // fallback routes through the consistent read
-    if (pendingHistory(spark).nonEmpty) return None
-    val dirs = f.listStatus(root).toSeq.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(s"$pc="))
-    if (dirs.isEmpty) return None
-    // one listing pass per dir (needed for the freshness checks and
-    // surrogates regardless); predicate resolution then uses a single
-    // sample leaf with basePath, so Spark never re-lists the table for
-    // the pruning decision. Post-widening narrow files can fail that
-    // resolution — fall back to the mergeSchema read (rare path).
-    val listed: Seq[(String, Seq[String])] = dirs.map { d =>
-      (d.getPath.getName, f.listStatus(d.getPath).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName))
+    val (root, dirs) = partitionCol match {
+      case None =>
+        val dir = version.map(committed(log.commits(spark), _).dataDir)
+          .orElse(headDir(spark)).getOrElse(return None)
+        (s"$path/$dir", Seq((new Path(s"$path/$dir"), "", None)))
+      case Some(pc) =>
+        if (pendingHistory(spark).nonEmpty) return None
+        val names = PartitionedHistory.partitionDirs(f, new Path(path), pc)
+        if (names.isEmpty) return None
+        (path, names.map(d => (new Path(path, d), s"$d/",
+          Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(d.drop(pc.length + 1))))))
     }
-    val firstLeaf = listed.collectFirst {
-      case (dn, ns) if ns.nonEmpty => s"$path/$dn/${ns.head}"
+    val listed = dirs.map { case (dir, prefix, value) =>
+      val names = PartitionedHistory.parquetFiles(f, dir).map(_.getPath.getName)
+      ListedDir(dir, prefix, value, names, FileSkipping.readStats(f, dir)
+        .filter(_.map(_.file).toSet == names.toSet))
     }
-    if (firstLeaf.isEmpty) return None
+    val total = listed.map(_.files.size).sum
+    val stats =
+      if (listed.exists(_.manifest.isEmpty)) None
+      else Some(listed.flatMap(_.manifest.get))
+    def selection(kept: Seq[String]) =
+      Some(FileSelection(root, kept, total, stats))
+    val all = listed.flatMap(l => l.files.map(l.prefix + _))
+    val pred = predicate.getOrElse(return selection(all))
+    // predicate resolution and key typing use ONE sample file: a
+    // whole-table read would make Spark re-list every file (and, on
+    // the partitioned layout, merge every footer) — O(files) driver
+    // work the pruning exists to avoid. Post-widening narrow files can
+    // fail that resolution; the full read is the rare-path fallback.
+    val sample = listed.collectFirst {
+      case l if l.files.nonEmpty => s"$root/${l.prefix}${l.files.head}"
+    }.getOrElse(return selection(all))
     val schemaDf = scala.util.Try(
-      spark.read.option("basePath", path).parquet(firstLeaf.get))
+      spark.read.option("basePath", root).parquet(sample))
       .getOrElse(read(spark))
-    if (!schemaDf.columns.contains(pc)) return None
-    val eff = scala.util.Try(effectivePredicate(schemaDf, predicate))
-      .orElse(scala.util.Try(effectivePredicate(read(spark), predicate)))
-      .getOrElse(PredUnknown)
-    val condOpt: Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-      eff match {
-        case PredEmpty => return Some((Seq.empty, listed.map(_._2.size).sum))
-        // no Filter derivable: without a join filter nothing can be
-        // decided; with one, key windows still prune (cond = TRUE)
-        case PredUnknown if joinFilter.isEmpty => return None
-        case PredUnknown => None
-        case PredCond(c) => Some(c)
+    if (!partitionCol.forall(schemaDf.columns.contains)) return None
+    val keys = join.flatMap { case (jk, values) =>
+      scala.util.Try(schemaDf.schema(jk).dataType).toOption
+        .flatMap(FileSkipping.keySValues(_, values)).map((jk, _))
+    }
+    val cond = scala.util.Try(effectivePredicate(schemaDf, pred))
+      .orElse(scala.util.Try(effectivePredicate(read(spark), pred)))
+      .getOrElse(PredUnknown) match {
+      case PredEmpty => return selection(Nil)
+      case PredUnknown if keys.isEmpty =>
+        return if (partitionCol.isEmpty) selection(all) else None
+      case PredUnknown => None
+      case PredCond(c) => Some(c)
+    }
+    val pcType = partitionCol.map(pc => (pc, schemaDf.schema(pc).dataType))
+    selection(listed.flatMap { l =>
+      val files = l.manifest.getOrElse(
+        l.files.map(n => FileSkipping.FileStat(n, 1L, Map.empty)))
+      val enriched = (pcType, l.partValue) match {
+        case (Some((pc, dt)), Some(raw)) => files.map(st =>
+          FileSkipping.partitionColStats(dt, raw, st.rows)
+            .fold(st)(p => st.copy(cols = st.cols + (pc -> p))))
+        case _ => files
       }
-    val dt = schemaDf.schema(pc).dataType
-    var total = 0
-    val kept = listed.flatMap { case (dirName, names) =>
-      val raw = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.unescapePathName(
-          dirName.drop(pc.length + 1))
-      val manifest = FileSkipping
-        .readStats(f, new Path(path, dirName))
-        .filter(_.map(_.file).toSet == names.toSet)
-      val files = manifest.getOrElse(
-        // no trustworthy manifest: 1-row surrogates — data columns
-        // cannot prune, the partition value still can
-        names.map(n => FileSkipping.FileStat(n, 1L, Map.empty)))
-      total += files.size
-      val enriched = files.map { fileStat =>
-        FileSkipping.partitionColStats(dt, raw, fileStat.rows)
-          .map(p => fileStat.copy(cols = fileStat.cols + (pc -> p)))
-          .getOrElse(fileStat)
-      }
-      val statsKept = condOpt match {
-        case Some(cond) => enriched.filter(FileSkipping.mayMatch(cond, _))
-        case None => enriched
-      }
-      // bloom refinement of the stats survivors only (lazy per-
-      // file decode); blooms need no freshness guard — data files
-      // are uniquely named, so a stale entry never matches a live
-      // file and a new file without one simply isn't bloom-pruned
-      lazy val blooms = FileSkipping.readBlooms(f, new Path(path, dirName))
-        .filterNot(_.isEmpty)
-      val bloomKept = (condOpt, if (statsKept.isEmpty) None else blooms) match {
-        case (Some(cond), Some(bi)) => statsKept.filter(st =>
-          FileSkipping.mayMatch(cond, st, bi.forFile(st.file)))
+      val statsKept =
+        cond.fold(enriched)(c => enriched.filter(FileSkipping.mayMatch(c, _)))
+      // decoded lazily, per surviving file; blooms need no freshness
+      // guard — a stale entry never matches a uniquely-named live file
+      lazy val blooms = FileSkipping.readBlooms(f, l.dir).filterNot(_.isEmpty)
+      val bloomKept = cond match {
+        case Some(c) if statsKept.nonEmpty => blooms.fold(statsKept)(bi =>
+          statsKept.filter(st =>
+            FileSkipping.mayMatch(c, st, bi.forFile(st.file))))
         case _ => statsKept
       }
-      val keyKept = joinFilter match {
-        case None => bloomKept
-        case Some((jk, kind, keys)) => bloomKept.filter(st =>
-          FileSkipping.mayHoldAnyKey(st, jk, kind, keys,
-            blooms.flatMap(_.forFileCol(st.file, jk))))
+      val keyKept = keys.fold(bloomKept) { case (jk, (kind, sorted)) =>
+        bloomKept.filter(st => FileSkipping.mayHoldAnyKey(st, jk, kind,
+          sorted, blooms.flatMap(_.forFileCol(st.file, jk))))
       }
-      keyKept.map(k => s"$dirName/${k.file}")
-    }
-    Some((kept, total))
+      keyKept.map(l.prefix + _.file)
+    })
   }
+
+  /** The one pruned read: the [[selectFiles]] decision's kept files
+    * under `predicate` — the whole table version when nothing was
+    * pruned, an empty frame of its schema when everything was, and
+    * `read` + filter when the selection declined.
+    */
+  private def prunedRead(spark: SparkSession,
+      predicate: org.apache.spark.sql.Column,
+      version: Option[Long] = None,
+      join: Option[(String, Seq[Any])] = None): DataFrame =
+    selectFiles(spark, Some(predicate), version, join) match {
+      case None => read(spark).filter(predicate)
+      case Some(s) =>
+        // partitioned: mergeSchema as in `read`; basePath keeps the
+        // partition column derivable from the kept leaf-file paths
+        val reader = partitionCol.fold(spark.read)(_ =>
+          spark.read.option("mergeSchema", "true"))
+        if (s.kept.size == s.total) reader.parquet(s.root).filter(predicate)
+        else if (s.kept.isEmpty)
+          emptyLike(spark, reader.parquet(s.root).schema)
+        else reader.option("basePath", s.root)
+          .parquet(s.kept.map(k => s"${s.root}/$k"): _*)
+          .filter(predicate)
+    }
 
   /** DYNAMIC FILE PRUNING for a selective equi-join (the Delta/Photon
     * DFP analog): prune this table's FILES by the build side's join
@@ -495,16 +501,20 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * filter is selective: min/max windows answer in O(log |keys|) per
     * file (a sorted-key binary search, never a per-key sweep), and a
     * [[bloomCols]] index on the join key refines the few in-window
-    * keys per file.
+    * keys per file. On the partitioned layout the partition-value
+    * pseudo-stats mean a join ON the partition column prunes whole
+    * directories.
     *
     * `buildKeys` must be a single-column frame of join values (any
     * column name); it is collected DISTINCT to the driver, gated by
     * `maxKeys` — above the gate (or for key types without a stats
     * representation) the method degrades to the ordinary pruned scan
-    * plus a broadcast semi-join, still correct, just not file-pruned
+    * plus a row-level semi-join, still correct, just not file-pruned
     * by keys. Row-level reduction uses an IN-list for small key sets
-    * (codegen'd set probe) and a broadcast left-semi join for large
-    * ones (a 2M-literal plan would bloat serialization).
+    * (codegen'd set probe), a broadcast left-semi join up to the gate
+    * (a 2M-literal plan would bloat serialization), and a shuffle-hash
+    * left-semi join past it: a build side known to exceed `maxKeys`
+    * distinct keys is never broadcast.
     */
   def scanForJoin(spark: SparkSession, joinKey: String,
                   buildKeys: DataFrame,
@@ -515,82 +525,18 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         buildKeys.columns.mkString(","))
     val bk = buildKeys.columns.head
     val distinctKeys = buildKeys.filter(col(bk).isNotNull).distinct()
+      .withColumnRenamed(bk, joinKey)
     val collected: Array[Any] =
       distinctKeys.limit(maxKeys + 1).collect().map(_.get(0))
-    def semiJoined(df: DataFrame): DataFrame =
-      df.join(broadcast(distinctKeys.withColumnRenamed(bk, joinKey)),
-        Seq(joinKey), "left_semi")
-    def rowReduced(df: DataFrame): DataFrame =
+    if (collected.length > maxKeys) // build side too large
+      scan(spark, predicate)
+        .join(distinctKeys.hint("shuffle_hash"), Seq(joinKey), "left_semi")
+    else {
+      val pruned = prunedRead(spark, predicate,
+        join = Some((joinKey, collected.toSeq)))
       if (collected.length <= 10000)
-        df.filter(col(joinKey).isInCollection(collected.toSeq))
-      else semiJoined(df)
-    if (collected.length > maxKeys)
-      return semiJoined(scan(spark, predicate)) // build side too large
-    partitionCol match {
-      case Some(pc) =>
-        // same key-window + bloom machinery as the versioned layout;
-        // the partition-value pseudo-stats mean a join ON the
-        // partition column prunes whole directories
-        val converted = scala.util.Try(read(spark).schema(joinKey).dataType)
-          .toOption.flatMap(FileSkipping.keySValues(_, collected.toSeq))
-        val selection = converted.flatMap { case (kind, sortedKeys) =>
-          partitionedFileSelection(spark, pc, predicate,
-            joinFilter = Some((joinKey, kind, sortedKeys)))
-        }
-        selection match {
-          case None => rowReduced(scan(spark, predicate))
-          case Some((kept, total)) =>
-            val full = read(spark)
-            if (kept.size == total) rowReduced(full.filter(predicate))
-            else if (kept.isEmpty) emptyLike(spark, full.schema)
-            else rowReduced(spark.read.option("mergeSchema", "true")
-              .option("basePath", path)
-              .parquet(kept.map(k => s"$path/$k"): _*)
-              .filter(predicate))
-        }
-      case None => headDir(spark) match {
-        case None => rowReduced(read(spark).filter(predicate))
-        case Some(dir) =>
-          val (kept, total) = scanForJoinSelection(spark, dir, joinKey,
-            collected, predicate)
-          val reduced =
-            if (kept.size == total)
-              rowReduced(spark.read.parquet(s"$path/$dir").filter(predicate))
-            else if (kept.isEmpty)
-              emptyLike(spark, spark.read.parquet(s"$path/$dir").schema)
-            else rowReduced(spark.read
-              .parquet(kept.map(fl => s"$path/$dir/$fl"): _*)
-              .filter(predicate))
-          reduced
-      }
-    }
-  }
-
-  /** The DFP pruning decision for one snapshot dir: files kept after
-    * BOTH the base-predicate stats pruning and the join-key window +
-    * bloom check, with the total — exposed for tests and skip-ratio
-    * telemetry.
-    */
-  private[graft] def scanForJoinSelection(spark: SparkSession, dir: String,
-      joinKey: String, keys: Array[Any],
-      predicate: org.apache.spark.sql.Column): (Seq[String], Int) = {
-    val (keptBase, total) = scanFileSelection(spark, dir, predicate)
-    val f = fs(spark)
-    val statsByFile = FileSkipping.readStats(f, new Path(s"$path/$dir"))
-      .map(_.map(s => s.file -> s).toMap).getOrElse(Map.empty)
-    val dt = scala.util.Try(read(spark).schema(joinKey).dataType).toOption
-    val converted = dt.flatMap(FileSkipping.keySValues(_, keys.toSeq))
-    converted match {
-      case None => (keptBase, total) // untyped: no key-based pruning
-      case Some((kind, sortedKeys)) =>
-        val blooms = FileSkipping.readBlooms(f, new Path(s"$path/$dir"))
-        val kept = keptBase.filter { fn =>
-          statsByFile.get(fn).forall { st =>
-            FileSkipping.mayHoldAnyKey(st, joinKey, kind, sortedKeys,
-              blooms.flatMap(_.forFileCol(fn, joinKey)))
-          }
-        }
-        (kept, total)
+        pruned.filter(col(joinKey).isInCollection(collected.toSeq))
+      else pruned.join(broadcast(distinctKeys), Seq(joinKey), "left_semi")
     }
   }
 
@@ -603,169 +549,47 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
                   predicate: org.apache.spark.sql.Column): DataFrame = {
     require(partitionCol.isEmpty,
       "time travel requires the versioned layout")
-    prunedScan(spark, committed(log.commits(spark), version).dataDir,
-      predicate)
+    prunedRead(spark, predicate, Some(version))
   }
 
-  /** [[scan]] of one versioned snapshot directory: only the files its
-    * stats manifest admits for `predicate`, then the predicate itself.
-    */
-  private def prunedScan(spark: SparkSession, dir: String,
-                         predicate: org.apache.spark.sql.Column): DataFrame = {
-    val (kept, total) = scanFileSelection(spark, dir, predicate)
-    if (kept.size == total) // nothing pruned (or no stats)
-      spark.read.parquet(s"$path/$dir").filter(predicate)
-    else if (kept.isEmpty) // stats prove no file can match
-      emptyLike(spark, spark.read.parquet(s"$path/$dir").schema)
-    else
-      spark.read.parquet(kept.map(f => s"$path/$dir/$f"): _*)
-        .filter(predicate)
-  }
-
-  /** (files kept, total files) the stats manifest admits for
-    * `predicate` — the pruning decision [[scan]] acts on, exposed for
-    * tests and skip-ratio telemetry. No stats ⇒ everything kept.
-    *
-    * The predicate is taken from the OPTIMIZED plan of
-    * `snapshot.filter(predicate)`: that resolves attributes, folds
-    * literal casts (`=== 500` against a bigint column arrives as a
-    * typed long literal), rewrites null-safe-null to IS NULL, and —
-    * when the optimizer can prove the predicate unsatisfiable —
-    * collapses the plan to an empty relation, which prunes every
-    * file outright. A plan with no Filter left (condition absorbed
-    * some other way) conservatively keeps everything.
-    */
-  private[graft] def scanFileSelection(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): (Seq[String], Int) =
-    FileSkipping.readStats(fs(spark), new Path(s"$path/$dir")) match {
-      case None =>
-        val all = fs(spark).listStatus(new Path(s"$path/$dir")).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.getName)
-        (all, all.size)
-      case Some(stats) =>
-        // predicate resolution against ONE sample file: a versioned
-        // snapshot is schema-uniform (full rewrite per version), and a
-        // whole-directory read here would make Spark re-list every
-        // file — O(files) driver work the pruning exists to avoid
-        val predDf = stats.headOption match {
-          case Some(first) => spark.read.parquet(s"$path/$dir/${first.file}")
-          case None => spark.read.parquet(s"$path/$dir")
-        }
-        effectivePredicate(predDf, predicate) match {
-          case PredEmpty => (Seq.empty, stats.size)
-          case PredUnknown => (stats.map(_.file), stats.size)
-          case PredCond(cond) =>
-            // two passes: stats first, then the bloom index (if the
-            // sink maintains one) refines the SURVIVORS on equality
-            // leaves — so filter deserialization cost is proportional
-            // to files the stats could not prune, never to the table
-            val statsKept = stats.filter(FileSkipping.mayMatch(cond, _))
-            val blooms =
-              if (statsKept.isEmpty) None
-              else FileSkipping.readBlooms(fs(spark),
-                new Path(s"$path/$dir")).filterNot(_.isEmpty)
-            val kept = blooms match {
-              case None => statsKept
-              case Some(bi) => statsKept.filter(st =>
-                FileSkipping.mayMatch(cond, st, bi.forFile(st.file)))
-            }
-            (kept.map(_.file), stats.size)
-        }
-    }
-
-  /** (files kept, total files) the stats manifest admits for
+  /** (files kept, total files) [[scan]]'s pruning decision admits for
     * `predicate` on the CURRENT version — skip-ratio telemetry (the
     * at-scale figure of merit: every pruned file is a task, an open,
-    * and a footer fetch that never happens). (0, 0) when no committed
-    * version or no stats exist.
+    * and a footer fetch that never happens). (0, 0) when the decision
+    * declines ([[selectFiles]]).
     */
   def scanFileCounts(spark: SparkSession,
                      predicate: org.apache.spark.sql.Column): (Int, Int) =
-    partitionCol match {
-      case Some(pc) =>
-        partitionedFileSelection(spark, pc, predicate)
-          .map { case (kept, total) => (kept.size, total) }
-          .getOrElse((0, 0))
-      case None => headDir(spark) match {
-        case None => (0, 0)
-        case Some(dir) =>
-          val (kept, total) = scanFileSelection(spark, dir, predicate)
-          (kept.size, total)
-      }
-    }
+    selectFiles(spark, Some(predicate))
+      .fold((0, 0))(s => (s.kept.size, s.total))
 
-  /** Metadata-only row count of the current snapshot (versioned
-    * layout): the sum of per-file row counts the commit-time stats
-    * manifest already holds — zero tasks, zero file opens, the
-    * `SELECT COUNT(*)` a 100 TB table answers from its log. None when
-    * no stats exist (legacy snapshot, partitioned layout) — callers
+  /** Metadata-only row count of the current state: the sum of per-file
+    * row counts the commit-time stats manifests already hold — zero
+    * tasks, zero file opens, the `SELECT COUNT(*)` a 100 TB table
+    * answers from its log. None unless every directory's manifest is
+    * fresh (its file names match the live listing); one stale or
+    * absent manifest makes the answer None rather than wrong — callers
     * fall back to `read(spark).count()`.
     */
-  def countRows(spark: SparkSession): Option[Long] = partitionCol match {
-    case None => headDir(spark).flatMap { dir =>
-      FileSkipping.readStats(fs(spark), new Path(s"$path/$dir"))
-        .map(_.map(_.rows).sum)
-    }
-    case Some(pc) =>
-      // partitioned layout: sum every directory's manifest, each
-      // trusted only when FRESH (file names match the live listing —
-      // the same staleness guard the pruner applies); one stale or
-      // absent manifest makes the whole answer None rather than wrong
-      freshPartitionManifests(spark, pc).map(_.flatten.map(_.rows).sum)
-  }
+  def countRows(spark: SparkSession): Option[Long] =
+    selectFiles(spark, None).flatMap(_.stats).map(_.map(_.rows).sum)
 
-  /** Per-directory FRESH stats manifests of the partitioned layout —
-    * Some(list of per-dir file stats) only when EVERY partition
-    * directory carries a manifest matching its live parquet listing.
-    * None ⇒ metadata-only answers are unavailable (fall back to a
-    * scan); also None when the table has no partition directories.
-    */
-  private def freshPartitionManifests(spark: SparkSession, pc: String)
-      : Option[Seq[Seq[FileSkipping.FileStat]]] = {
-    val f = fs(spark)
-    val root = new Path(path)
-    if (!f.exists(root)) return None
-    // torn directories from a crashed writer: metadata answers would
-    // describe an uncommitted state — decline, callers recompute
-    if (pendingHistory(spark).nonEmpty) return None
-    val dirs = f.listStatus(root).toSeq.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(s"$pc="))
-    if (dirs.isEmpty) return None
-    val perDir = dirs.map { d =>
-      val names = f.listStatus(d.getPath).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName)
-      FileSkipping.readStats(f, d.getPath)
-        .filter(_.map(_.file).toSet == names.toSet)
-    }
-    if (perDir.exists(_.isEmpty)) None else Some(perDir.map(_.get))
-  }
-
-  /** Metadata-only global [min, max] of `column` on the current
-    * snapshot (versioned layout) — the MIN/MAX a 100 TB table answers
-    * from its log: the fold of the manifest's per-file bounds, zero
-    * tasks. None when stats are absent, the column is unindexed, any
-    * file's bounds are unknown (unknown files could hold the true
-    * extremum), or every file is all-null. Values come back in the
-    * manifest's representation: Long for integral columns, Double,
-    * String, Boolean, days-since-epoch Long for dates, micros Long
-    * for timestamps.
+  /** Metadata-only global [min, max] of data column `column` on the
+    * current state — the MIN/MAX a 100 TB table answers from its log:
+    * the fold of the manifests' per-file bounds, zero tasks. None
+    * when any manifest is stale or absent (the [[countRows]] rule), the
+    * column is unindexed or is the partition column (it lives in
+    * directory names, not footers), any file's bounds are unknown
+    * (unknown files could hold the true extremum), or every file is
+    * all-null. Values come back in the manifest's representation: Long
+    * for integral columns, Double, String, Boolean, days-since-epoch
+    * Long for dates, micros Long for timestamps.
     */
   def columnBounds(spark: SparkSession, column: String)
-      : Option[(Any, Any)] = partitionCol match {
-    case None => headDir(spark).flatMap { dir =>
-      FileSkipping.readStats(fs(spark), new Path(s"$path/$dir"))
-        .flatMap(FileSkipping.globalBounds(_, column))
-    }
-    case Some(pc) =>
-      // data columns only (the partition column itself lives in dir
-      // names, not footers); all manifests must be fresh and every
-      // file's bounds known — the versioned path's soundness rule
-      if (column == pc) None
-      else freshPartitionManifests(spark, pc)
-        .flatMap(per => FileSkipping.globalBounds(per.flatten, column))
-  }
+      : Option[(Any, Any)] =
+    if (partitionCol.contains(column)) None
+    else selectFiles(spark, None).flatMap(_.stats)
+      .flatMap(FileSkipping.globalBounds(_, column))
 
   /** The versioned layout's snapshot at `dir`, or — before the first
     * commit — the pre-sink external data at the table root.
@@ -1186,12 +1010,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   private def refreshAllPartitionStats(spark: SparkSession,
                                        pc: String): Unit = {
-    val f = fs(spark)
-    val root = new Path(path)
-    if (!f.exists(root)) return
-    f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$pc="))
-      .foreach(d => writeIndexes(spark, d.getPath))
+    PartitionedHistory.partitionDirs(fs(spark), new Path(path), pc)
+      .foreach(d => writeIndexes(spark, new Path(path, d)))
   }
 
   /** After a successful upsert committing `c`: compact immediately
@@ -1211,18 +1031,16 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     autoCompact.foreach { ac =>
       partitionCol match {
         case None =>
-          val nFiles = fs(spark).listStatus(new Path(s"$path/${c.dataDir}"))
-            .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          val nFiles = PartitionedHistory.parquetFiles(fs(spark),
+            new Path(s"$path/${c.dataDir}")).size
           if (nFiles > ac.files)
             compact(spark, ac.targetFileBytes, ac.clusterBy, ac.zorder)
         case Some(pc) =>
           val f = fs(spark)
-          val root = new Path(path)
-          val fragmented = f.exists(root) && f.listStatus(root).exists { s =>
-            s.isDirectory && s.getPath.getName.startsWith(s"$pc=") &&
-              f.listStatus(s.getPath).count(x =>
-                x.isFile && x.getPath.getName.endsWith(".parquet")) > ac.files
-          }
+          val fragmented = PartitionedHistory.partitionDirs(f,
+            new Path(path), pc).exists(d =>
+            PartitionedHistory.parquetFiles(f, new Path(path, d)).size >
+              ac.files)
           if (fragmented)
             compactPartitionsLocked(spark, pc, ac.targetFileBytes,
               ac.clusterBy, ac.zorder, ac.maxBytesPerRun)
@@ -1403,17 +1221,13 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       targetFileBytes: Long, clusterBy: Seq[String], zorder: Boolean,
       maxBytesPerRun: Option[Long]): Seq[String] = {
     val f = fs(spark)
-    val root = new Path(path)
-    if (!f.exists(root)) return Seq.empty
-    val eligible = f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$pc="))
+    val eligible = PartitionedHistory.partitionDirs(f, new Path(path), pc)
       .flatMap { d =>
-        val files = f.listStatus(d.getPath).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        val files = PartitionedHistory.parquetFiles(f, new Path(path, d))
         val bytes = files.map(_.getLen).sum
         val want = math.max(1,
           math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        if (files.size > want) Some((d.getPath.getName, want, bytes))
+        if (files.size > want) Some((d, want, bytes))
         else None
       }
     if (eligible.isEmpty) return Seq.empty
@@ -1616,12 +1430,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     val touchedDirs =
       if (!widens) updateVals.map(partDirName(pc, _))
       else {
-        val onDisk =
-          if (!f.exists(new Path(path))) Seq.empty[String]
-          else f.listStatus(new Path(path)).toSeq
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith(s"$pc="))
-            .map(_.getPath.getName)
+        val onDisk = PartitionedHistory.partitionDirs(f, new Path(path), pc)
         (onDisk ++ updateVals.map(partDirName(pc, _))).distinct
       }
     val c = UpsertCommit.now(recorded(batchId, cs), "-", "upsert")
@@ -1899,8 +1708,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       touchedDirs.foreach { d =>
         val dir = new Path(root, d)
         if (f.exists(dir)) {
-          val hasData = f.listStatus(dir).exists(s =>
-            s.isFile && s.getPath.getName.endsWith(".parquet"))
+          val hasData = PartitionedHistory.parquetFiles(f, dir).nonEmpty
           if (hasData) writeIndexes(spark, dir) else f.delete(dir, true)
         }
       }
@@ -2001,6 +1809,20 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
 }
 
 object ParquetUpsertSink {
+
+  /** One candidate directory of [[ParquetUpsertSink.selectFiles]]:
+    * its live parquet files, its stats manifest when that names
+    * exactly those files, and the partition value its name carries
+    * (partitioned layout).
+    */
+  private final case class ListedDir(dir: Path, prefix: String,
+      partValue: Option[String], files: Seq[String],
+      manifest: Option[Seq[FileSkipping.FileStat]])
+
+  /** A [[ParquetUpsertSink.selectFiles]] decision. */
+  private[graft] final case class FileSelection(root: String,
+      kept: Seq[String], total: Int,
+      stats: Option[Seq[FileSkipping.FileStat]])
 
   /** Metadata key stamped on `_change_type` by the pre-image-complete
     * change feed ([[ParquetUpsertSink.changeFeed]] with

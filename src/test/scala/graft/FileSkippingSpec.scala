@@ -47,11 +47,15 @@ class FileSkippingSpec extends SparkTestBase {
     assert(viaScan.toSeq === viaRead.toSeq)
   }
 
+  /** The committed version whose snapshot is [[snapshotDir]]. */
+  private def snapshotVersion(sink: ParquetUpsertSink, dir: String): Long =
+    snapshotDir(sink, dir).drop(1).takeWhile(_ != '-').toLong
+
   private def selection(sink: ParquetUpsertSink, dir: String, pred: Column)
       : (Int, Int) = {
-    val (kept, total) = sink.scanFileSelection(spark,
-      snapshotDir(sink, dir), pred)
-    (kept.size, total)
+    val s = sink.selectFiles(spark, Some(pred),
+      Some(snapshotVersion(sink, dir))).get
+    (s.kept.size, s.total)
   }
 
   test("commit writes a stats manifest with per-kind min/max/nulls") {
@@ -413,8 +417,10 @@ class FileSkippingSpec extends SparkTestBase {
     val bare = new ParquetUpsertSink(noDir, Seq("id"),
       partitionCol = Some("day"))
     bare.upsert(spark, df, batchId = -1)
-    def pkept(s: ParquetUpsertSink, pred: Column): (Seq[String], Int) =
-      s.partitionedFileSelection(spark, "day", pred).get
+    def pkept(s: ParquetUpsertSink, pred: Column): (Seq[String], Int) = {
+      val sel = s.selectFiles(spark, Some(pred)).get
+      (sel.kept, sel.total)
+    }
     val hitKey = df.filter(col("id") === 123L).select("key")
       .first().getString(0) // id 123 is odd → lives in day=b
     // stats alone keep every file in every dir
@@ -510,11 +516,11 @@ class FileSkippingSpec extends SparkTestBase {
       .sortWithinPartitions("k")
     val sink = new ParquetUpsertSink(dir, Seq("k"), bloomCols = Seq("k"))
     sink.upsert(spark, fact, batchId = -1)
-    val snap = snapshotDir(sink, dir)
+    val snap = snapshotVersion(sink, dir)
     def sel(keys: Array[Any]): (Int, Int) = {
-      val (kept, total) = sink.scanForJoinSelection(spark, snap, "k",
-        keys, lit(true))
-      (kept.size, total)
+      val s = sink.selectFiles(spark, Some(lit(true)), Some(snap),
+        Some(("k", keys.toSeq))).get
+      (s.kept.size, s.total)
     }
     // neighboring keys: one file
     val (kNear, total) = sel(Array[Any](10L, 14L, 20L))
@@ -568,9 +574,11 @@ class FileSkippingSpec extends SparkTestBase {
       targetFileBytes = math.max(1L, dirBytes / 4), clusterBy = Seq("k"))
     def sel(jk: String, dt: org.apache.spark.sql.types.DataType,
             keys: Seq[Any]): (Seq[String], Int) = {
-      val Some((kind, sk)) = FileSkipping.keySValues(dt, keys): @unchecked
-      sink.partitionedFileSelection(spark, "day", lit(true),
-        Some((jk, kind, sk))).get
+      // the selection types the keys from the table's own schema
+      assert(sink.read(spark).schema(jk).dataType === dt)
+      val s = sink.selectFiles(spark, Some(lit(true)),
+        join = Some((jk, keys))).get
+      (s.kept, s.total)
     }
     // concentrated data-column keys: a strict file subset per dir
     val (kNear, total) = sel("k", LongType, Seq(10L, 16L, 22L))
@@ -824,5 +832,70 @@ class FileSkippingSpec extends SparkTestBase {
     val reparsed = FileSkipping.statsFromJson(
       FileSkipping.statsToJson(stats))
     assert(reparsed === Some(stats))
+  }
+
+  test("one pruning path: both layouts give the same rows, counts and " +
+    "bounds over a predicate matrix and join-key sets") {
+    // ids 0..399 over four days of 100 contiguous ids each, so a day
+    // and an id range are prunable on either layout
+    val df = spark.range(400).toDF("id")
+      .withColumn("day", concat(lit("d"), (col("id") / 100).cast("long")))
+      .withColumn("v", col("id") * 3)
+      .repartitionByRange(8, col("id"))
+    val versioned = new ParquetUpsertSink(tmpDir("fskip") + "/xv", Seq("id"))
+    versioned.upsert(spark, df, batchId = -1)
+    val partitioned = new ParquetUpsertSink(tmpDir("fskip") + "/xp",
+      Seq("id"), partitionCol = Some("day"))
+    partitioned.upsert(spark, df, batchId = -1)
+    def rows(d: DataFrame): Seq[String] =
+      d.select("id", "day", "v").collect().map(_.toString).sorted.toSeq
+    val preds = Seq(col("day") === "d1", col("id").between(120L, 180L),
+      col("day") === "d2" && col("id") < 230L, lit(false), lit(true))
+    val keySets = Seq(
+      ("id", Seq(10L, 150L, 99999L).toDF("b"), 2000000), // a data key
+      ("day", Seq("d1", "d3").toDF("b"), 2000000),       // the partition key
+      ("id", Seq.empty[Long].toDF("b"), 2000000),        // an empty set
+      ("id", Seq(5L, 105L, 205L, 305L).toDF("b"), 2))    // past the key gate
+    for (pred <- preds) {
+      val want = rows(df.filter(pred))
+      for (sink <- Seq(versioned, partitioned)) {
+        assert(rows(sink.scan(spark, pred)) === want, s"scan($pred)")
+        assert(rows(sink.read(spark).filter(pred)) === want)
+        for ((jk, build, maxKeys) <- keySets) {
+          val keys = build.collect().map(_.get(0)).toSeq
+          assert(rows(sink.scanForJoin(spark, jk, build, pred, maxKeys)) ===
+            rows(sink.read(spark).filter(pred && col(jk).isin(keys: _*))),
+            s"scanForJoin($jk in $keys, $pred, maxKeys = $maxKeys)")
+        }
+      }
+    }
+    // the metadata-only answers agree across layouts
+    assert(versioned.countRows(spark) === Some(400L))
+    assert(partitioned.countRows(spark) === versioned.countRows(spark))
+    for (c <- Seq("id", "v"))
+      assert(partitioned.columnBounds(spark, c) ===
+        versioned.columnBounds(spark, c), c)
+    assert(versioned.columnBounds(spark, "id") === Some((0L, 399L)))
+    // Spark jobs run while CONSTRUCTING a pruned join: the distinct
+    // key collect and the parquet schema inferences (the sample file
+    // and the kept files); no whole-table schema read
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsToConstruct(sink: ParquetUpsertSink): Int = {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0)
+      sink.scanForJoin(spark, "id", Seq(10L, 150L).toDF("b"))
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val counts = (jobsToConstruct(versioned), jobsToConstruct(partitioned))
+      assert(counts === ((4, 4)), "jobs to construct (versioned, partitioned)")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -36,6 +36,23 @@ class PlanAuditSpec extends SparkTestBase {
       s"AtomicClaim.claim callers outside GenerationLog: $callers")
   }
 
+  test("one pruning path: manifests, blooms and key windows each have " +
+    "exactly one call site in src/main") {
+    // both ParquetUpsertSink layouts prune through selectFiles; a
+    // second call site of these readers is a second pruning path
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+    val calls = Seq("readStats", "readBlooms", "mayHoldAnyKey").map { fn =>
+      val call = s"FileSkipping\\s*\\.\\s*$fn\\(".r
+      fn -> sources.map(call.findAllIn(_).size).sum
+    }
+    assert(calls.forall(_._2 == 1), s"FileSkipping call sites: $calls")
+  }
+
   test("q5_region_revenue: all 5 joins broadcast, date + region pushed") {
     val p = plan("q5_region_revenue")
     assert(count(p, "BroadcastHashJoin") === 5,
@@ -429,13 +446,14 @@ class PlanAuditSpec extends SparkTestBase {
     val sink = new graft.operators.ParquetUpsertSink(
       "/root/repo/fixtures/join_prune", Seq("o_orderkey"),
       bloomCols = Seq("o_custkey"))
-    val snap = sink.history(spark).first().getString(4)
+    val snap = sink.history(spark).first().getLong(0)
     val keys: Array[Any] = graft.sources.Tables.read(spark, sf, "customer")
       .filter(col("c_mktsegment") === "BUILDING" && col("c_nationkey") <= 2L)
       .select(col("c_custkey")).collect().map(_.get(0))
     assert(keys.nonEmpty, "dim filter selected no customers at this SF")
-    val (kept, total) = sink.scanForJoinSelection(spark, snap,
-      "o_custkey", keys, lit(true))
+    val sel = sink.selectFiles(spark, Some(lit(true)), Some(snap),
+      Some(("o_custkey", keys.toSeq))).get
+    val (kept, total) = (sel.kept, sel.total)
     assert(total >= 16, s"fixture produced only $total files")
     // the custkey-clustered layout maps the selective key set to a
     // strict file subset — the DFP payoff the 100 TB star join needs;
@@ -443,6 +461,21 @@ class PlanAuditSpec extends SparkTestBase {
     assert(kept.size < total, s"no files pruned: kept ${kept.size} of $total")
     assert(kept.size <= 2 * keys.length,
       s"kept ${kept.size} files for ${keys.length} keys of $total")
+  }
+
+  test("scanForJoin past its key gate shuffle-hashes the semi-join, " +
+    "never broadcasts the oversized build side") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val sink = new graft.operators.ParquetUpsertSink(
+      tmpDir("gate") + "/t", Seq("k"))
+    sink.upsert(spark, spark.range(100).toDF("k")
+      .withColumn("v", col("k") * 2), batchId = -1)
+    val build = Seq(1L, 2L, 3L, 4L).toDF("ck")
+    val p = sink.scanForJoin(spark, "k", build, maxKeys = 2)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("ShuffledHashJoin") && !p.contains("BroadcastHashJoin"),
+      s"a build side past maxKeys must shuffle-hash, never broadcast:\n$p")
   }
 
   test("admission decision: batch keys broadcast up to the model-join " +
