@@ -408,10 +408,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     val stats =
       if (listed.exists(_.manifest.isEmpty)) None
       else Some(listed.flatMap(_.manifest.get))
-    def selection(kept: Seq[String]) =
-      Some(FileSelection(root, kept, total, stats))
     val all = listed.flatMap(l => l.files.map(l.prefix + _))
-    val pred = predicate.getOrElse(return selection(all))
+    val pred = predicate.getOrElse(
+      return Some(FileSelection(root, all, total, stats, None)))
     // predicate resolution and key typing use ONE sample file: a
     // whole-table read would make Spark re-list every file (and, on
     // the partitioned layout, merge every footer) — O(files) driver
@@ -419,10 +418,15 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     // fail that resolution; the full read is the rare-path fallback.
     val sample = listed.collectFirst {
       case l if l.files.nonEmpty => s"$root/${l.prefix}${l.files.head}"
-    }.getOrElse(return selection(all))
-    val schemaDf = scala.util.Try(
-      spark.read.option("basePath", root).parquet(sample))
-      .getOrElse(read(spark))
+    }.getOrElse(return Some(FileSelection(root, all, total, stats, None)))
+    val sampled = scala.util.Try(
+      spark.read.option("basePath", root).parquet(sample)).toOption
+    val schemaDf = sampled.getOrElse(read(spark))
+    // a versioned snapshot is one write's output, so the sample's
+    // schema is every kept file's; partition dirs may differ (widening)
+    val uniform = if (partitionCol.isEmpty) sampled.map(_.schema) else None
+    def selection(kept: Seq[String]) =
+      Some(FileSelection(root, kept, total, stats, uniform))
     if (!partitionCol.forall(schemaDf.columns.contains)) return None
     val keys = join.flatMap { case (jk, values) =>
       scala.util.Try(schemaDf.schema(jk).dataType).toOption
@@ -469,7 +473,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
   /** The one pruned read: the [[selectFiles]] decision's kept files
     * under `predicate` — the whole table version when nothing was
     * pruned, an empty frame of its schema when everything was, and
-    * `read` + filter when the selection declined.
+    * `read` + filter when the selection declined. A versioned read
+    * takes the schema the selection resolved, so it runs no inference
+    * job of its own.
     */
   private def prunedRead(spark: SparkSession,
       predicate: org.apache.spark.sql.Column,
@@ -480,11 +486,12 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       case Some(s) =>
         // partitioned: mergeSchema as in `read`; basePath keeps the
         // partition column derivable from the kept leaf-file paths
-        val reader = partitionCol.fold(spark.read)(_ =>
+        val reader = partitionCol.fold(
+          s.schema.fold(spark.read)(spark.read.schema))(_ =>
           spark.read.option("mergeSchema", "true"))
         if (s.kept.size == s.total) reader.parquet(s.root).filter(predicate)
         else if (s.kept.isEmpty)
-          emptyLike(spark, reader.parquet(s.root).schema)
+          emptyLike(spark, s.schema.getOrElse(reader.parquet(s.root).schema))
         else reader.option("basePath", s.root)
           .parquet(s.kept.map(k => s"${s.root}/$k"): _*)
           .filter(predicate)
@@ -1819,10 +1826,14 @@ object ParquetUpsertSink {
       partValue: Option[String], files: Seq[String],
       manifest: Option[Seq[FileSkipping.FileStat]])
 
-  /** A [[ParquetUpsertSink.selectFiles]] decision. */
+  /** A [[ParquetUpsertSink.selectFiles]] decision; `schema` is the
+    * kept files' schema when one sample file determines it (a
+    * versioned snapshot).
+    */
   private[graft] final case class FileSelection(root: String,
       kept: Seq[String], total: Int,
-      stats: Option[Seq[FileSkipping.FileStat]])
+      stats: Option[Seq[FileSkipping.FileStat]],
+      schema: Option[org.apache.spark.sql.types.StructType])
 
   /** Metadata key stamped on `_change_type` by the pre-image-complete
     * change feed ([[ParquetUpsertSink.changeFeed]] with

@@ -70,6 +70,17 @@ object MedallionStream {
       "true")
   }
 
+  /** Route the chain's local-disk I/O — offset/commit WALs, sink logs,
+    * state-store files, part files — through [[ForklessLocalFs]], which
+    * does Hadoop's `chmod`/`readlink` with `java.nio` instead of a
+    * spawned process per file. Each query clones the session at
+    * `start()`, so its checkpoint manager, state stores and writers all
+    * see these keys through `newHadoopConf()`. Same files, same `.crc`
+    * checksums, same rename-without-overwrite guarantee.
+    */
+  private def useForklessLocalFs(spark: SparkSession): Unit =
+    ForklessLocalFs.hadoopConf.foreach { case (k, v) => spark.conf.set(k, v) }
+
   val silverSchema: StructType =
     StructType(Rides.rideSchema.fields ++ Seq(
       StructField("trip_duration_seconds", LongType),
@@ -86,6 +97,7 @@ object MedallionStream {
                   trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
                   maxFilesPerTrigger: Option[Int] = None)
       : StreamingQuery = {
+    useForklessLocalFs(spark)
     // maxFilesPerTrigger caps each micro-batch's file intake (the
     // file-source analog of Kafka's maxOffsetsPerTrigger) — under
     // Trigger.AvailableNow it splits a backlog drain into bounded
@@ -110,6 +122,7 @@ object MedallionStream {
                   trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
                   maxFilesPerTrigger: Option[Int] = None)
       : StreamingQuery = {
+    useForklessLocalFs(spark)
     val reader = spark.readStream.schema(Rides.bronzeSchema)
     maxFilesPerTrigger.foreach(k => reader.option("maxFilesPerTrigger", k))
     val bronze = reader.parquet(p.bronze)
@@ -153,6 +166,7 @@ object MedallionStream {
     // crash tests: a throw here is exactly the "died between sink
     // write and checkpoint commit" window the sink's batchId replay
     // protection exists for.
+    useForklessLocalFs(spark)
     val reader = spark.readStream.schema(silverSchema)
     maxFilesPerTrigger.foreach(k => reader.option("maxFilesPerTrigger", k))
     val silver = reader.parquet(p.silver)

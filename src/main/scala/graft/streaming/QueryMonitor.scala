@@ -29,6 +29,9 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
     * per batch opens one store per shuffle partition; more instances
     * than that means a sink re-ran the upstream plan, committing its
     * state again each time.
+    *
+    * `logCommitMs` is the batch's checkpoint-log time: the offset WAL
+    * write (`walCommit`) plus the commit-log write (`commitOffsets`).
     */
   final case class Snapshot(name: String, batchId: Long, numInputRows: Long,
                             rowsPerSec: Double, watermark: String,
@@ -36,7 +39,8 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
                             stateRows: Long = 0L,
                             droppedByWatermark: Long = 0L,
                             stateCommitMs: Long = 0L,
-                            stateStoreInstances: Long = 0L)
+                            stateStoreInstances: Long = 0L,
+                            logCommitMs: Long = 0L)
 
   final case class Termination(id: java.util.UUID, exception: Option[String],
                                lastProgress: Option[Snapshot])
@@ -61,7 +65,9 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
         p.stateOperators.map(_.numRowsDroppedByWatermark).sum,
       stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum,
       stateStoreInstances =
-        p.stateOperators.map(_.numStateStoreInstances.toLong).sum)
+        p.stateOperators.map(_.numStateStoreInstances.toLong).sum,
+      logCommitMs = Seq("walCommit", "commitOffsets")
+        .flatMap(k => Option(p.durationMs.get(k))).map(_.longValue).sum)
     val ring = progress.computeIfAbsent(p.id,
       _ => new java.util.ArrayDeque[Snapshot]())
     ring.synchronized {
@@ -121,7 +127,8 @@ class QueryMonitor(keep: Int = 16) extends StreamingQueryListener {
         f"rate=${s.rowsPerSec}%10.1f/s state=${s.stateRows}%-7d " +
         f"late-dropped=${s.droppedByWatermark}%-6d " +
         f"stores=${s.stateStoreInstances}%-4d " +
-        f"commit-ms=${s.stateCommitMs}%-6d wm=${s.watermark}"
+        f"commit-ms=${s.stateCommitMs}%-6d log-ms=${s.logCommitMs}%-6d " +
+        f"wm=${s.watermark}"
     }.mkString("\n")
 }
 

@@ -877,25 +877,32 @@ class FileSkippingSpec extends SparkTestBase {
         versioned.columnBounds(spark, c), c)
     assert(versioned.columnBounds(spark, "id") === Some((0L, 399L)))
     // Spark jobs run while CONSTRUCTING a pruned join: the distinct
-    // key collect and the parquet schema inferences (the sample file
-    // and the kept files); no whole-table schema read
+    // key collect and the parquet schema inferences — the sample file's
+    // and, on the partitioned layout only, the kept files' merged schema
+    // (a versioned snapshot is one write's output: the sample's schema
+    // is every file's); no whole-table schema read. A scan that keeps
+    // no file builds its empty frame from that same schema.
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    def jobsToConstruct(sink: ParquetUpsertSink): Int = {
+    def jobsToConstruct(build: => DataFrame): Int = {
       org.apache.spark.ListenerDrain.drain(spark.sparkContext)
       jobs.set(0)
-      sink.scanForJoin(spark, "id", Seq(10L, 150L).toDF("b"))
+      build
       org.apache.spark.ListenerDrain.drain(spark.sparkContext)
       jobs.get()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val counts = (jobsToConstruct(versioned), jobsToConstruct(partitioned))
-      assert(counts === ((4, 4)), "jobs to construct (versioned, partitioned)")
+      val join = Seq(versioned, partitioned).map(sink => jobsToConstruct(
+        sink.scanForJoin(spark, "id", Seq(10L, 150L).toDF("b"))))
+      assert(join === Seq(3, 4), "jobs to construct (versioned, partitioned)")
+      val none = Seq(versioned, partitioned).map(sink =>
+        jobsToConstruct(sink.scan(spark, col("id") === 99999L)))
+      assert(none === Seq(1, 2), "jobs to construct an all-pruned scan")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -61,6 +61,24 @@ class StreamingSpec extends SparkTestBase {
       .distinct().count())
   }
 
+  test("the chain spawns no chmod/readlink/ls/stat for its checkpoint, " +
+      "bronze or silver files") {
+    val root = tmpDir("streamspawn")
+    val p = MedallionStream.Paths(s"$root/raw", s"$root/bronze",
+      s"$root/silver", s"$root/gold", s"$root/ckpt")
+    RideGenerator.writeRaw(spark, p.raw, 2000L)
+    val commands = ForklessLocalFsSpec.spawns(MedallionStream.runDrain(spark, p))
+    val canon = new java.io.File(root).getCanonicalPath
+    def under(sub: String) = ForklessLocalFsSpec.fsToolSpawns(commands,
+      Seq(s"$root/$sub", s"$canon/$sub"))
+    val chain = Seq("ckpt", "bronze", "silver").flatMap(under)
+    assert(chain.size === 0, s"spawns, e.g. ${chain.take(3)}")
+    // the gold sink's own commit/manifest writes go through
+    // sparkContext.hadoopConfiguration, outside the session keys
+    info(s"gold-table spawns: ${under("gold").size}")
+    assert(new ParquetUpsertSink(p.gold, Rides.goldKey).exists(spark))
+  }
+
   test("partitioned gold (date-partitioned upsert) converges too") {
     val root = tmpDir("streamp")
     val p = MedallionStream.Paths(s"$root/raw", s"$root/bronze",
@@ -533,8 +551,8 @@ class StreamingSpec extends SparkTestBase {
     val monitor = graft.streaming.QueryMonitor.attach(spark)
     try {
       import org.apache.spark.sql.streaming.Trigger
-      MedallionStream.bronzeQuery(spark, p, Trigger.AvailableNow)
-        .awaitTermination()
+      val q = MedallionStream.bronzeQuery(spark, p, Trigger.AvailableNow)
+      q.awaitTermination()
       // listener delivery is async — wait for the progress event
       val deadline = System.currentTimeMillis() + 30000
       while (monitor.latest.isEmpty && System.currentTimeMillis() < deadline)
@@ -544,6 +562,14 @@ class StreamingSpec extends SparkTestBase {
       assert(snaps.exists(_.numInputRows > 0), s"no rows observed: $snaps")
       assert(monitor.render().contains("batch="))
       assert(monitor.render().contains("stores="))
+      // the checkpoint-log layer: offset WAL + commit log, per batch
+      assert(monitor.render().contains("log-ms="))
+      // (the termination event follows the query's last progress event)
+      while (!monitor.terminations.exists(_.id == q.id) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(100)
+      val d = q.lastProgress.durationMs
+      assert(monitor.latest.get(q.id).map(_.logCommitMs) ===
+        Some(d.get("walCommit").longValue + d.get("commitOffsets").longValue))
       // the AvailableNow query has terminated: its ring is evicted and
       // its final snapshot lives in the bounded termination log
       assert(monitor.terminations.nonEmpty)
