@@ -267,8 +267,8 @@ object ScaleProof {
       })
 
     // Partitioned history table per corpus size for the delta-CDC
-    // leg: with retainHistory the feed between adjacent versions is
-    // built from the actions files' add/remove lists and reads ONLY
+    // leg: the feed between adjacent versions is built from the
+    // actions files' add/remove lists and reads ONLY
     // the touched directories' old+new files — so a FIXED-SIZE commit
     // (one directory of 32) must cost ~the same at n and 10n.
     // Contrast `upsert_changes_between`, the versioned snapshot-diff
@@ -298,7 +298,7 @@ object ScaleProof {
         // v0/v1 mid-bench) whenever SPARK_GRAFT_SCALE_REPS >= ~16
         val sink = new graft.operators.ParquetUpsertSink(dir,
           Seq("doc_id"), partitionCol = Some("pt"),
-          retainVersions = 4 * reps + 16, retainHistory = true)
+          retainVersions = 4 * reps + 16)
         // keep the text column: the leg measures BYTE movement, and a
         // narrow 3-column table would make every copy a page-cache
         // blink whatever the parallelism
@@ -336,8 +336,7 @@ object ScaleProof {
       partFeedCache.getOrElseUpdate(n, {
         val dir = s"$work/pfeed_$n"
         val sink = new graft.operators.ParquetUpsertSink(dir,
-          Seq("doc_id"), partitionCol = Some("pt"), retainVersions = 4,
-          retainHistory = true)
+          Seq("doc_id"), partitionCol = Some("pt"), retainVersions = 4)
         val base = docs.select(col("doc_id"), col("source"), col("n_chars"))
           .withColumn("pt", pmod(col("doc_id"), lit(32L)))
         sink.upsert(spark, base, batchId = 0)

@@ -626,7 +626,7 @@ object SparkEntry {
   }
 
   /** Fixture for the `part_history_*` queries: a lang-partitioned
-    * documents store with `retainHistory` — the log-structured history
+    * documents store — the partitioned layout's log-structured history
     * protocol ([[graft.operators.PartitionedHistory]]) under an
     * oracle. Three deterministic commits: v0 the full snapshot, v1 an
     * update (+5 n_chars on the doc_id % 9 == 2 slice) plus an insert
@@ -644,8 +644,7 @@ object SparkEntry {
     val docs = t(s, d, "documents")
       .select("doc_id", "source", "lang", "n_chars")
     val sink = new graft.operators.ParquetUpsertSink(dir, Seq("doc_id"),
-      partitionCol = Some("lang"), retainVersions = retainVersions,
-      retainHistory = true)
+      partitionCol = Some("lang"), retainVersions = retainVersions)
     sink.upsert(s, docs, batchId = 0)
     val updates = docs.filter(col("doc_id") % 9 === 2)
       .withColumn("n_chars", col("n_chars") + 5)

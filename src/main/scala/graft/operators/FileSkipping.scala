@@ -379,7 +379,7 @@ object FileSkipping {
   def writeBlooms(spark: org.apache.spark.sql.SparkSession, dir: Path,
                   cols: Seq[String], fpp: Double = bloomDefaultFpp): Unit =
     try {
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
       val rowsByFile: Map[String, Long] =
         readStats(fs, dir).map(_.map(s => s.file -> s.rows).toMap)
           .getOrElse(Map.empty)
@@ -582,7 +582,7 @@ object FileSkipping {
     * file as prune-nothing).
     */
   def writeStats(spark: org.apache.spark.sql.SparkSession, dir: Path): Unit =
-    try persist(spark.sparkContext.hadoopConfiguration, dir,
+    try persist(spark.sessionState.newHadoopConf(), dir,
       collectStats(spark, dir))
     catch { case scala.util.control.NonFatal(_) => () }
 

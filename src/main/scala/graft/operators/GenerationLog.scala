@@ -48,9 +48,12 @@ private[graft] final class GenerationLog[M](
     s"retainVersions must be >= 2 (got $retainVersions): the previous " +
       "generation must survive for in-flight readers")
 
+  /** The log's filesystem under the session's Hadoop conf, so
+    * filesystem keys set on the session reach commit and claim I/O.
+    */
   def hfs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
   def sub(d: String) = new org.apache.hadoop.fs.Path(s"$path/$d")
   def subPath(d: String): String = s"$path/$d"
   private def commitsDir = sub("_commits")
@@ -136,10 +139,11 @@ private[graft] final class GenerationLog[M](
 
   /** Claim `version` with manifest `m` — true iff THIS writer won. */
   def tryCommit(spark: SparkSession, version: Long, m: M): Boolean = {
-    val f = hfs(spark)
+    val conf = spark.sessionState.newHadoopConf()
+    val f = commitsDir.getFileSystem(conf)
     val dst = new org.apache.hadoop.fs.Path(commitsDir, version.toString)
     val won = AtomicClaim.claim(
-      f, spark.sparkContext.hadoopConfiguration, dst,
+      f, conf, dst,
       serializeM(m).getBytes("UTF-8"),
       () => scala.util.Try {
         val in = f.open(dst)

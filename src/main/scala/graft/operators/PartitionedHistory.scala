@@ -16,7 +16,8 @@ import org.json4s.jackson.JsonMethods
   * partition directories IN PLACE, so its history has to be built from
   * what an in-place rewrite can do cheaply: metadata-only renames.
   *
-  * Protocol (per commit `v`, always under the sink's writer lock):
+  * Protocol (every partitioned commit `v`, always under the sink's
+  * writer lock):
   *
   *  1. write `_commits/actions-<v>.intent` — the WRITE-AHEAD record of
   *     the partition directories this commit will rewrite AND the
@@ -46,10 +47,9 @@ import org.json4s.jackson.JsonMethods
   * therefore deletes only unlisted files, renames the frozen listed
   * ones back, and leaves listed still-live ones alone — restoring the
   * last committed state exactly whether the writer died before, during
-  * or after the history move. That is strictly STRONGER than the plain
-  * partitioned layout, whose dynamic overwrite is atomic only per
-  * partition: with history on, a multi-partition batch is
-  * all-or-nothing at table granularity.
+  * or after the history move. A multi-partition batch is therefore
+  * all-or-nothing at table granularity, where a bare dynamic overwrite
+  * is atomic only per partition.
   *
   * Time travel reads replay the deltas BACKWARD from the current live
   * listing: liveAt(v) = live(head) − Σ adds(w) + Σ removes(w) for
@@ -392,7 +392,7 @@ private[graft] object PartitionedHistory {
   /** Backward replay: the file map of committed `version`, given the
     * consistent current map and the committed version list (ascending).
     * Fails loudly when a needed actions file is missing (a commit made
-    * before history was enabled, or GC'd past the retention horizon).
+    * without history, or GC'd past the retention horizon).
     */
   def liveAt(fs: FileSystem, root: Path, commitsDir: Path,
              version: Long, committedDesc: Seq[Long],
@@ -401,8 +401,8 @@ private[graft] object PartitionedHistory {
       val a = readActions(fs, commitsDir, w).getOrElse(
         throw new IllegalArgumentException(
           s"version $version is not reconstructible: commit $w has no " +
-            "actions record (written before retainHistory was enabled, " +
-            "or GC'd past retainVersions)"))
+            "actions record (a commit written without history, for " +
+            "example by an older writer, or GC'd past retainVersions)"))
       (acc -- a.adds) ++ a.removes.map(rel =>
         rel -> s"$historyDirName/v$w/$rel")
     }

@@ -148,10 +148,19 @@ private[graft] object UpsertCommit {
   *    and safe under concurrent writers (see Concurrency below).
   *  - `partitionCol = Some(c)`: data lives partitioned in place and
   *    merges rewrite only touched partitions (dynamic partition
-  *    overwrite); commits then track batchId for idempotence, with
-  *    atomicity at partition granularity (the overwrite committer's
-  *    guarantee) rather than table granularity — table granularity
-  *    with `retainHistory`.
+  *    overwrite). Every commit keeps the files it replaces, frozen
+  *    under `_history/v<version>/` by metadata-only renames, with a
+  *    per-commit add/remove actions record ([[PartitionedHistory]], a
+  *    write-ahead record keyed by the commit version) — so the in-place
+  *    layout has the versioned layout's whole capability set: time
+  *    travel ([[readVersion]]), change feed ([[changeFeed]]), restore,
+  *    and TABLE-granularity crash atomicity (a torn multi-partition
+  *    batch is rolled back to the last commit, never left partially
+  *    applied). Cost per commit: O(touched files) renames and one small
+  *    JSON record — never a byte copied; history bytes are bounded by
+  *    the replaced data of the retained commits and reclaimed by the
+  *    same GC. Plain `spark.read.parquet(path)` still works: `_history`
+  *    is underscore-hidden.
   *
   * Idempotence per micro-batch: each commit records its batchId;
   * replays are skipped, preserving exactly-once on restart.
@@ -190,29 +199,12 @@ private[graft] object UpsertCommit {
   *   range spans the keyspace unless the table is clustered on
   *   exactly that key). Pick them per table like Delta does: the
   *   lookup keys, not everything.
-  * @param retainHistory (partitioned layout only) keep the files each
-  *   commit replaces, frozen under `_history/v<version>/` by
-  *   metadata-only renames, with a per-commit add/remove actions log
-  *   ([[PartitionedHistory]], a write-ahead record keyed by the commit
-  *   version) — giving the in-place layout the versioned layout's
-  *   whole capability set: time travel ([[readVersion]]), change feed
-  *   ([[changeFeed]]), restore, and — as a byproduct of the
-  *   write-ahead intent + rollback recovery — TABLE-granularity crash
-  *   atomicity (a torn multi-partition batch is rolled back to the
-  *   last commit instead of left partially applied). Retention follows
-  *   `retainVersions`, the versioned layout's contract. Cost per
-  *   commit: O(touched files) renames and one small JSON record —
-  *   never a byte copied; history bytes are bounded by the replaced
-  *   data of the retained commits and reclaimed by the same GC. Plain
-  *   `spark.read.parquet(path)` still works: `_history` is
-  *   underscore-hidden.
   */
 class ParquetUpsertSink(path: String, keys: Seq[String],
                         partitionCol: Option[String] = None,
                         retainVersions: Int = 2,
                         autoCompact: Option[AutoCompact] = None,
-                        bloomCols: Seq[String] = Nil,
-                        retainHistory: Boolean = false) {
+                        bloomCols: Seq[String] = Nil) {
   import ParquetUpsertSink.{FileSelection, ListedDir}
 
   require(retainVersions >= 2,
@@ -222,12 +214,13 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     "autoCompact.files must be positive")
   require(autoCompact.forall(_.maxBytesPerRun.forall(_ > 0)),
     "autoCompact.maxBytesPerRun must be positive")
-  require(!retainHistory || partitionCol.nonEmpty,
-    "retainHistory applies to the partitioned layout; the versioned " +
-      "layout keeps history through its immutable snapshots already")
 
+  /** The table's filesystem under the SESSION's Hadoop conf, so
+    * filesystem keys set on the session (the medallion chain's
+    * fork-free local filesystem) reach the sink's own metadata I/O.
+    */
   private def fs(spark: SparkSession): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def commitsDir = new Path(path, "_commits")
 
@@ -241,7 +234,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     _.serialize,
     (_, c) => if (partitionCol.isEmpty) Seq(c.dataDir) else Nil,
     retainVersions,
-    (spark, v) => if (retainHistory)
+    (spark, v) => if (partitionCol.nonEmpty)
       PartitionedHistory.gcVersion(fs(spark), new Path(path), commitsDir, v))
 
   private type Commits = Seq[(Long, UpsertCommit)]
@@ -375,8 +368,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * `predicate = None` prunes nothing (the metadata-only answers).
     * Otherwise the predicate is taken from the OPTIMIZED plan over one
     * sample file ([[effectivePredicate]]): a provably unsatisfiable one
-    * keeps no file, and one with no Filter left keeps every file — or,
-    * without join keys, makes the partitioned layout decline. `join =
+    * keeps no file, and one with no Filter left keeps every file. `join =
     * Some((joinKey, keys))` adds the key check, with the keys typed
     * from that same sample schema; keys of a type without a stats
     * representation prune nothing.
@@ -436,8 +428,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       .orElse(scala.util.Try(effectivePredicate(read(spark), pred)))
       .getOrElse(PredUnknown) match {
       case PredEmpty => return selection(Nil)
-      case PredUnknown if keys.isEmpty =>
-        return if (partitionCol.isEmpty) selection(all) else None
+      case PredUnknown if keys.isEmpty => return selection(all)
       case PredUnknown => None
       case PredCond(c) => Some(c)
     }
@@ -626,11 +617,9 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
 
   /** Versions with a pending (uncommitted) history intent — nonempty
     * only between a writer crash and the next locked write's recovery.
-    * Zero-cost when history is off.
     */
   private def pendingHistory(spark: SparkSession): Seq[Long] =
-    if (!retainHistory) Seq.empty
-    else PartitionedHistory.pendingVersions(fs(spark), commitsDir,
+    PartitionedHistory.pendingVersions(fs(spark), commitsDir,
       log.commits(spark).map(_._1).toSet)
 
   /** Roll back incomplete history commits (writer died between intent
@@ -652,11 +641,11 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
 
   /** Heal a table whose last writer died mid-commit without waiting
     * for the next write: takes the writer lock (recovery runs on
-    * acquisition) and releases it. No-op when nothing is pending or
-    * history is off.
+    * acquisition) and releases it. No-op when nothing is pending, and
+    * on the versioned layout (whose torn writes are never visible).
     */
   def recoverIncompleteCommit(spark: SparkSession): Unit =
-    if (retainHistory) withWriterLock(spark)(())
+    if (partitionCol.nonEmpty) withWriterLock(spark)(())
 
   /** Read a resolved file map (relpath → location under `path`): live
     * files with basePath at the table root; frozen files grouped per
@@ -698,22 +687,17 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * commits are readable — older snapshots/history are GC'd.
     *
     * Versioned layout: the commit's immutable snapshot directory.
-    * Partitioned layout (requires `retainHistory`): backward replay of
-    * the per-commit add/remove actions from the consistent current
-    * listing — each replaced file reads from its frozen home under
-    * `_history/v<w>/` ([[PartitionedHistory.liveAt]]). Metadata cost
-    * O(live files + retained deltas); no data is ever copied to
-    * travel.
+    * Partitioned layout: backward replay of the per-commit add/remove
+    * actions from the consistent current listing — each replaced file
+    * reads from its frozen home under `_history/v<w>/`
+    * ([[PartitionedHistory.liveAt]]). Metadata cost O(live files +
+    * retained deltas); no data is ever copied to travel.
     */
   def readVersion(spark: SparkSession, version: Long): DataFrame =
     partitionCol match {
       case None => snapshotAt(spark,
         Some(committed(log.commits(spark), version).dataDir))
       case Some(pc) =>
-        require(retainHistory,
-          "time travel on the partitioned layout requires " +
-            "retainHistory = true (the plain layout rewrites in place " +
-            "and keeps no history)")
         val cs = log.commits(spark)
         committed(cs, version)
         readFileMap(spark, fileMapAt(spark, pc, cs)(version))
@@ -810,8 +794,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     changeFeedBetween(newer, older, withPreimages)
   }
 
-  /** DELTA-PROPORTIONAL feed inputs for the partitioned history
-    * layout: the files live at `to` but not at `from`, and vice versa,
+  /** DELTA-PROPORTIONAL feed inputs for the partitioned layout: the
+    * files live at `to` but not at `from`, and vice versa,
     * straight from the per-commit add/remove algebra
     * ([[PartitionedHistory.liveAt]]). The layout's rewrite granularity
     * is whole partition directories — any row whose key persists
@@ -822,39 +806,24 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * equal the full-snapshot computation. At 100 TB that turns CDC
     * over a commit that touched 2 directories from two full table
     * scans into a read of exactly those directories' old and new
-    * files. None (→ full-snapshot fallback) when the layout keeps no
-    * history or a needed actions record is gone — the fallback then
-    * surfaces the loud not-reconstructible error exactly as before.
+    * files. None (→ full-snapshot diff) on the versioned layout, and
+    * for `from == to`. A version that is not retained, or one the
+    * actions records cannot reach (GC'd, or committed without history
+    * by an older writer), fails loudly here.
     */
   private def deltaFrames(spark: SparkSession, from: Long,
                           to: Long): Option[(DataFrame, DataFrame)] =
     partitionCol match {
-      case Some(pc) if retainHistory && from < to =>
-        try {
-          val cs = log.commits(spark)
-          require(cs.exists(_._1 == from) && cs.exists(_._1 == to))
-          val at = fileMapAt(spark, pc, cs)
-          val atTo = at(to)
-          val atFrom = at(from)
-          Some((readFileMap(spark,
-             atTo.filter { case (rel, _) => !atFrom.contains(rel) }),
-           readFileMap(spark,
-             atFrom.filter { case (rel, _) => !atTo.contains(rel) })))
-        } catch {
-          // ONLY the expected not-reconstructible cases degrade to the
-          // full-snapshot path (a version written before retainHistory
-          // was enabled, or whose actions record is GC'd — both raised
-          // as IllegalArgumentException by liveAt / the require
-          // above). Anything else (IO failure, a real bug in
-          // liveAt/consistentLive) must PROPAGATE: silently eating it
-          // would mask the failure behind a 2×-table-scan feed.
-          case e: IllegalArgumentException =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"change feed over $path [$from, $to] falling back to " +
-                s"full-snapshot diff (delta not reconstructible: " +
-                s"${e.getMessage})")
-            None
-        }
+      case Some(pc) if from < to =>
+        val cs = log.commits(spark)
+        committed(cs, to); committed(cs, from)
+        val at = fileMapAt(spark, pc, cs)
+        val atTo = at(to)
+        val atFrom = at(from)
+        Some((readFileMap(spark,
+           atTo.filter { case (rel, _) => !atFrom.contains(rel) }),
+         readFileMap(spark,
+           atFrom.filter { case (rel, _) => !atTo.contains(rel) })))
       case _ => None
     }
 
@@ -906,17 +875,16 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       s"concurrent writer claimed version $version of $path during $op; " +
         hint)
 
-  /** The partitioned layout's one commit sequence for `version`; the
-    * caller holds the writer lock. With history on (see
-    * [[PartitionedHistory]]): the write-ahead intent over the
-    * `touched` directories and every file they hold, the freeze of
-    * `frozen` (default: all of those files) under
-    * `_history/v<version>/`, `write`, the actions record (`adds`,
+  /** The partitioned layout's one commit sequence for `version` (see
+    * [[PartitionedHistory]]); the caller holds the writer lock: the
+    * write-ahead intent over the `touched` directories and every file
+    * they hold, the freeze of `frozen` (default: all of those files)
+    * under `_history/v<version>/`, `write`, the actions record (`adds`,
     * default the touched directories' files after the write; removes,
-    * the frozen files), the claim, and the intent's removal. Without
-    * history: `write`, then the claim. A lock-honouring writer cannot
-    * lose the claim, so a loss means one bypassed the lock — and an
-    * in-place rewrite cannot be rolled back, only surfaced.
+    * the frozen files), the claim, and the intent's removal. A
+    * lock-honouring writer cannot lose the claim, so a loss means one
+    * bypassed the lock — and an in-place rewrite cannot be rolled back,
+    * only surfaced.
     */
   private def commitInPlace(spark: SparkSession, version: Long,
       c: UpsertCommit, touched: Seq[String],
@@ -924,30 +892,24 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       adds: Option[Seq[String]] = None)(write: => Unit): Unit = {
     val f = fs(spark)
     val root = new Path(path)
-    val moved =
-      if (!retainHistory) Nil
-      else {
-        val originals = PartitionedHistory.listDirFiles(f, root, touched)
-        PartitionedHistory.writeIntent(f, commitsDir, version,
-          PartitionedHistory.Intent(touched, originals))
-        val m = frozen.getOrElse(originals)
-        PartitionedHistory.moveToHistory(f, root, version, m)
-        betweenHistoryMoveAndWrite(version)
-        m
-      }
+    val originals = PartitionedHistory.listDirFiles(f, root, touched)
+    PartitionedHistory.writeIntent(f, commitsDir, version,
+      PartitionedHistory.Intent(touched, originals))
+    val moved = frozen.getOrElse(originals)
+    PartitionedHistory.moveToHistory(f, root, version, moved)
+    betweenHistoryMoveAndWrite(version)
     write
-    if (retainHistory)
-      PartitionedHistory.writeActions(f, commitsDir, version,
-        PartitionedHistory.Actions(
-          adds.getOrElse(PartitionedHistory.listDirFiles(f, root, touched)),
-          moved))
+    PartitionedHistory.writeActions(f, commitsDir, version,
+      PartitionedHistory.Actions(
+        adds.getOrElse(PartitionedHistory.listDirFiles(f, root, touched)),
+        moved))
     beforeCommit(version)
     if (!log.commitOnce(spark, version, c))
       throw lostClaim(version, c.op.getOrElse("commit"),
         "in-place rewrites cannot be rolled back — route all writers " +
           "through the sink's writer lock")
-    if (retainHistory) // the write-ahead record has served its term
-      f.delete(PartitionedHistory.intentPath(commitsDir, version), false)
+    // the write-ahead record has served its term
+    f.delete(PartitionedHistory.intentPath(commitsDir, version), false)
   }
 
   /** Write `data` as the versioned layout's new snapshot `dataDir`,
@@ -1066,7 +1028,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     */
   protected def beforeWrite(version: Long): Unit = ()
 
-  /** Test seam (history mode): invoked after the write-ahead intent
+  /** Test seam (partitioned layout): invoked after the write-ahead intent
     * and the renames into `_history/v<version>/`, immediately before
     * the in-place data write — the widest torn window the rollback
     * protocol must heal. No-op in production.
@@ -1092,13 +1054,15 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
 
   /** Serialize in-place partitioned writes: acquire the exclusive
     * lock file (same kernel-atomic create primitive as version
-    * claims), run `body`, release. Waiting writers poll; a lock whose
-    * holder evidently died (age beyond the staleness horizon) is
-    * broken. Both horizons are session-conf-tunable — tests shorten
-    * them, production defaults assume a micro-batch-scale critical
-    * section.
+    * claims), roll back any torn predecessor, run `body`, release.
+    * Waiting writers poll; a lock whose holder evidently died (age
+    * beyond the staleness horizon) is broken. Both horizons are
+    * session-conf-tunable — tests shorten them, production defaults
+    * assume a micro-batch-scale critical section. Without
+    * [[writerLockEnabled]], `body` runs bare.
     */
   private def withWriterLock[T](spark: SparkSession)(body: => T): T = {
+    if (!writerLockEnabled) return body
     val f = fs(spark)
     if (!f.exists(commitsDir)) f.mkdirs(commitsDir)
     def conf(key: String, dflt: Long): Long =
@@ -1120,8 +1084,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     }
     try {
       // under the lock, before any work: heal whatever a crashed
-      // predecessor left half-applied (history mode's rollback)
-      if (retainHistory) recoverIncomplete(spark)
+      // predecessor left half-applied
+      recoverIncomplete(spark)
       body
     } finally f.delete(writerLockPath, false)
   }
@@ -1179,8 +1143,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * holding more files than ⌈bytes / targetFileBytes⌉ is rewritten to
     * that count, IN PLACE under the writer lock (the only sound
     * multi-writer contract for in-place rewrites), through one dynamic
-    * partition overwrite — replaced files are swapped at commit, so a
-    * crash mid-job leaves every partition's old content intact.
+    * partition overwrite committed as a `compact` version — a crash
+    * mid-job is rolled back to every partition's old content.
     * Untouched partitions are never read or rewritten; rewritten ones
     * get fresh stats manifests. The streaming gold sink in its
     * date-partitioned mode re-fragments each touched partition to the
@@ -1279,13 +1243,16 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
           rows.repartitionByRange(total, cols: _*)
             .sortWithinPartitions(cols: _*)
         }).localCheckpoint(true)
-      // history mode: each group is its own recorded commit (intent →
-      // freeze → rewrite → actions → claim), so a crash between
-      // groups loses nothing and time travel sees compaction as a
-      // layout-only delta — identical fingerprints, an EMPTY change
-      // feed across it, exactly Delta's dataChange=false
+      // each group is its own recorded commit (intent → freeze →
+      // rewrite → actions → claim), so a crash between groups loses
+      // nothing and time travel sees compaction as a layout-only delta
+      // — identical fingerprints, an EMPTY change feed across it,
+      // exactly Delta's dataChange=false
       val groupDirs = group.map(_._1)
-      def rewrite(): Unit = {
+      val cs = log.commits(spark)
+      commitInPlace(spark, nextVersion(cs),
+        UpsertCommit.now(lastStreamBatch(cs), "-", "compact"),
+        groupDirs) {
         withDynamicOverwrite(spark) {
           arranged.write.mode("overwrite").partitionBy(pc).parquet(path)
         }
@@ -1293,13 +1260,6 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
             .unescapePathName(e._1.drop(pc.length + 1))
         })
-      }
-      if (!retainHistory) rewrite()
-      else {
-        val cs = log.commits(spark)
-        commitInPlace(spark, nextVersion(cs),
-          UpsertCommit.now(lastStreamBatch(cs), "-", "compact"),
-          groupDirs)(rewrite())
       }
       groupDirs
     }
@@ -1337,9 +1297,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       // in-place rewrites: mutual exclusion, not optimistic retry (see
       // class doc) — the commit-log read inside happens under the lock,
       // so each writer merges against the fresh head
-      case Some(pc) if writerLockEnabled =>
+      case Some(pc) =>
         withWriterLock(spark)(upsertPartitioned(spark, updates, batchId, pc))
-      case Some(pc) => upsertPartitioned(spark, updates, batchId, pc)
     } finally if (own) updates.unpersist()
   }
 
@@ -1480,9 +1439,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         log.commitWithRetry(spark, None, beforeCommit, cleanupPerRace = true) {
           (newV, head) => deleteVersioned(spark, predicate, batchId, newV, head)
         }
-      case Some(pc) if writerLockEnabled =>
+      case Some(pc) =>
         withWriterLock(spark)(deletePartitioned(spark, predicate, batchId, pc))
-      case Some(pc) => deletePartitioned(spark, predicate, batchId, pc)
     }
 
   /** One versioned-layout delete attempt at `newV` over `head`. */
@@ -1544,7 +1502,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         }
         // partitions whose every row matched produce no output for the
         // dynamic overwrite to replace — drop their directories (their
-        // data files, in history mode, are already frozen away)
+        // data files are already frozen away)
         touched.filterNot(kept).foreach { v =>
           fs(spark).delete(new Path(path, partDirName(pc, v)), true)
         }
@@ -1616,8 +1574,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * old snapshot directory (GC is reference-counted, so the shared
     * dir survives until no retained commit points at it).
     *
-    * Partitioned layout (requires `retainHistory`): a locked commit
-    * through the normal history protocol whose delta is computed from
+    * Partitioned layout: a locked commit through the normal history
+    * protocol whose delta is computed from
     * [[PartitionedHistory.liveAt]] — live files absent at the target
     * version are frozen (metadata renames), files the target had that
     * are now frozen are COPIED back out of their `_history/v<w>/`
@@ -1637,13 +1595,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         throw lostClaim(newV, "restore",
           "re-check the table state and retry")
     case Some(pc) =>
-      require(retainHistory,
-        "restore on the partitioned layout requires retainHistory = " +
-          "true (the plain layout rewrites in place and keeps no " +
-          "history to roll back to)")
-      if (writerLockEnabled)
-        withWriterLock(spark)(restorePartitioned(spark, version, pc))
-      else restorePartitioned(spark, version, pc)
+      withWriterLock(spark)(restorePartitioned(spark, version, pc))
   }
 
   /** Partitioned-layout restore body — MUST run under the writer lock

@@ -157,8 +157,7 @@ object MedallionStream {
                 maxFilesPerTrigger: Option[Int] = None,
                 afterBatch: Long => Unit = _ => (),
                 retainVersions: Int = 2,
-                autoCompact: Option[graft.operators.AutoCompact] = None,
-                retainHistory: Boolean = false)
+                autoCompact: Option[graft.operators.AutoCompact] = None)
       : StreamingQuery = {
     // `afterBatch` runs AFTER the sink commit but BEFORE Spark marks
     // the micro-batch complete in the checkpoint — the slot for batch
@@ -187,17 +186,10 @@ object MedallionStream {
     // partitioned layout: per-partition compaction of any directory
     // whose file count exceeds the budget (under the writer lock the
     // upsert already holds).
-    // `retainHistory` (partitioned only): the streaming gold table
-    // keeps per-commit history — time travel / restore / the
-    // delta-built change feed on the LIVE streaming sink, the
-    // reference's Delta gold-table surface (03_gold_realtime_rides.py
-    // reads Delta history on exactly this table). Versioned gold gets
-    // all of that from its snapshots already.
     val sink =
       if (partitioned)
         new ParquetUpsertSink(p.gold, Rides.goldKey, Some("window_date"),
-          retainVersions = retainVersions, autoCompact = autoCompact,
-          retainHistory = retainHistory)
+          retainVersions = retainVersions, autoCompact = autoCompact)
       else new ParquetUpsertSink(p.gold, Rides.goldKey,
         retainVersions = retainVersions, autoCompact = autoCompact)
     val input =

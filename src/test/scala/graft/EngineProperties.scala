@@ -346,14 +346,13 @@ object EngineProperties extends Properties("graft") {
       (b.nonEmpty && u.nonEmpty) ==> {
         val dir = java.nio.file.Files
           .createTempDirectory("graft-pfeed").toString + "/t"
-        // history-keeping PARTITIONED sink: the feed between retained
-        // versions is built from the actions files' add/remove lists
-        // (reading only touched directories' files), and must agree
+        // PARTITIONED sink (it always keeps history): the feed between
+        // retained versions is built from the actions files' add/remove
+        // lists (reading only touched directories' files), and must agree
         // exactly with what the two full snapshots imply. Partition
         // derived from the key, so updates stay in their partition.
         val sink = new graft.operators.ParquetUpsertSink(
-          dir, Seq("k"), partitionCol = Some("p"), retainVersions = 8,
-          retainHistory = true)
+          dir, Seq("k"), partitionCol = Some("p"), retainVersions = 8)
         def ptable(rows: Seq[(Int, Long)]) =
           table(rows).withColumn("p", (col("k") % 3).cast("long"))
         sink.upsert(spark, ptable(b), batchId = 0)
@@ -400,8 +399,7 @@ object EngineProperties extends Properties("graft") {
         val dir = java.nio.file.Files
           .createTempDirectory("graft-gcrest").toString + "/t"
         val sink = new graft.operators.ParquetUpsertSink(
-          dir, Seq("k"), partitionCol = Some("p"), retainVersions = 4,
-          retainHistory = true)
+          dir, Seq("k"), partitionCol = Some("p"), retainVersions = 4)
         def ptable(rows: Seq[(Int, Long)]) =
           table(rows).withColumn("p", (col("k") % 3).cast("long"))
         def m(df: org.apache.spark.sql.DataFrame): Map[Int, Long] =

@@ -868,7 +868,13 @@ class FileSkippingSpec extends SparkTestBase {
             s"scanForJoin($jk in $keys, $pred, maxKeys = $maxKeys)")
         }
       }
+      // one pruning answer: the same (kept, total) on either layout
+      assert(partitioned.scanFileCounts(spark, pred) ===
+        versioned.scanFileCounts(spark, pred), s"scanFileCounts($pred)")
     }
+    // a condition-free predicate keeps every file
+    val (kAll, tAll) = partitioned.scanFileCounts(spark, lit(true))
+    assert(tAll > 0 && kAll === tAll)
     // the metadata-only answers agree across layouts
     assert(versioned.countRows(spark) === Some(400L))
     assert(partitioned.countRows(spark) === versioned.countRows(spark))

@@ -95,7 +95,7 @@ class HistoryRestoreSpec extends SparkTestBase {
       Seq("a-v4", "b-v4", "c-v4"))
   }
 
-  test("partitioned restore (retainHistory): full roundtrip — content, " +
+  test("partitioned restore: full roundtrip — content, " +
       "directories, history row, CDC, replay guard, time travel") {
     val dir = tmpDir("hist") + "/p"
     val hfs = new org.apache.hadoop.fs.Path(dir)
@@ -103,7 +103,7 @@ class HistoryRestoreSpec extends SparkTestBase {
     def exists(sub: String) =
       hfs.exists(new org.apache.hadoop.fs.Path(dir, sub))
     val sink = new ParquetUpsertSink(dir, Seq("id"),
-      partitionCol = Some("dt"), retainVersions = 6, retainHistory = true)
+      partitionCol = Some("dt"), retainVersions = 6)
     def b(tag: String, ids: (Long, String)*) =
       ids.map { case (id, dt) => (id, dt, tag) }.toDF("id", "dt", "payload")
     def content() = sink.read(spark).select("id", "dt", "payload")
@@ -166,8 +166,7 @@ class HistoryRestoreSpec extends SparkTestBase {
     def roundtrip(slices: Option[String]): Set[(Long, String, String)] = {
       val dir = tmpDir("histsl") + "/p"
       val sink = new ParquetUpsertSink(dir, Seq("id"),
-        partitionCol = Some("dt"), retainVersions = 6,
-        retainHistory = true)
+        partitionCol = Some("dt"), retainVersions = 6)
       def b(tag: String, ids: (Long, String)*) =
         ids.map { case (id, dt) => (id, dt, tag) }.toDF("id", "dt", "payload")
       sink.upsert(spark, b("v0", 1L -> "a", 2L -> "a", 3L -> "b"), 0L)
@@ -190,8 +189,7 @@ class HistoryRestoreSpec extends SparkTestBase {
       "mutation (clean no-op, no torn commit to recover)") {
     val dir = tmpDir("histbad") + "/p"
     val sink = new ParquetUpsertSink(dir, Seq("id"),
-      partitionCol = Some("dt"), retainVersions = 6,
-      retainHistory = true)
+      partitionCol = Some("dt"), retainVersions = 6)
     def b(tag: String, ids: (Long, String)*) =
       ids.map { case (id, dt) => (id, dt, tag) }.toDF("id", "dt", "payload")
     sink.upsert(spark, b("v0", 1L -> "a", 2L -> "b"), 0L)
@@ -211,7 +209,8 @@ class HistoryRestoreSpec extends SparkTestBase {
     assert(sink.read(spark).count() === 2L)
   }
 
-  test("restore refuses unknown versions and the partitioned layout") {
+  test("restore refuses unknown versions; the default partitioned " +
+      "layout restores") {
     val dir = tmpDir("hist") + "/t"
     val sink = new ParquetUpsertSink(dir, Seq("id"))
     sink.upsert(spark, docs("v0"), batchId = -1)
@@ -220,7 +219,15 @@ class HistoryRestoreSpec extends SparkTestBase {
     val psink = new ParquetUpsertSink(pdir, Seq("id"),
       partitionCol = Some("payload"))
     psink.upsert(spark, docs("v0"), batchId = -1)
-    intercept[IllegalArgumentException] { psink.restore(spark, 0L) }
+    intercept[IllegalArgumentException] { psink.restore(spark, 99L) }
+    def ids() = psink.read(spark).select("id").collect()
+      .map(_.getLong(0)).toSet
+    val v0 = ids()
+    psink.delete(spark, col("id") === 1L, batchId = -1)
+    assert(ids() === v0 - 1L)
+    psink.restore(spark, 0L)
+    assert(ids() === v0)
+    assert(psink.history(spark).first().getString(2) === "restore")
   }
 
   test("restore to the current version is a no-op") {

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import graft.operators.{ParquetUpsertSink, PartitionedHistory}
 
 /** Crash-ordering tests for the partitioned layout's history protocol
-  * (retainHistory): a writer is killed at every step of the
+  * (on the default partitioned sink): a writer is killed at every step of the
   * intent → freeze → write → actions → claim window, and after each
   * torn state BOTH contracts must hold —
   *
@@ -29,7 +29,7 @@ class PartitionedHistoryCrashSpec extends SparkTestBase {
   /** Sink with injectable crashes at the protocol's two seams. */
   private class CrashSink(path: String)
       extends ParquetUpsertSink(path, Seq("id"), Some("dt"),
-        retainVersions = 6, retainHistory = true) {
+        retainVersions = 6) {
     @volatile var crashAt: String = ""
     override protected def betweenHistoryMoveAndWrite(v: Long): Unit =
       if (crashAt == "afterMove")
@@ -287,7 +287,7 @@ class PartitionedHistoryCrashSpec extends SparkTestBase {
     // directory) takes the writer lock for a normal upsert; recovery
     // of the torn v2 runs on acquisition, then its own commit lands
     val sink2 = new ParquetUpsertSink(dir, Seq("id"), Some("dt"),
-      retainVersions = 6, retainHistory = true)
+      retainVersions = 6)
     sink2.upsert(spark, batch("v2b", 4L -> "c"), 2L)
     assert(content(sink2.read(spark)) ===
       want.filterNot(_._1 == 4L) + ((4L, "c", "v2b")),

@@ -73,9 +73,10 @@ class StreamingSpec extends SparkTestBase {
       Seq(s"$root/$sub", s"$canon/$sub"))
     val chain = Seq("ckpt", "bronze", "silver").flatMap(under)
     assert(chain.size === 0, s"spawns, e.g. ${chain.take(3)}")
-    // the gold sink's own commit/manifest writes go through
-    // sparkContext.hadoopConfiguration, outside the session keys
-    info(s"gold-table spawns: ${under("gold").size}")
+    // the gold sink's own commit, claim and manifest files resolve
+    // their filesystem through the session's Hadoop conf too
+    val gold = under("gold")
+    assert(gold.size === 0, s"gold-table spawns, e.g. ${gold.take(3)}")
     assert(new ParquetUpsertSink(p.gold, Rides.goldKey).exists(spark))
   }
 
@@ -89,14 +90,16 @@ class StreamingSpec extends SparkTestBase {
       .awaitTermination()
     MedallionStream.silverQuery(spark, p, Trigger.AvailableNow)
       .awaitTermination()
+    // one silver file per gold batch, so the table has a merge version
     MedallionStream.goldQuery(spark, p, Trigger.AvailableNow,
-      partitioned = true).awaitTermination()
+      partitioned = true, maxFilesPerTrigger = Some(1)).awaitTermination()
     val silver = spark.read.parquet(p.silver)
-    val gold = new graft.operators.ParquetUpsertSink(p.gold,
-      Rides.goldKey, Some("window_date")).read(spark)
-      .select("window_start", "window_end", "driver_id",
-        "total_rides_hourly", "avg_fare_hourly",
-        "total_suspicious_rides_hourly")
+    val sink = new graft.operators.ParquetUpsertSink(p.gold,
+      Rides.goldKey, Some("window_date"))
+    val cols = Seq("window_start", "window_end", "driver_id",
+      "total_rides_hourly", "avg_fare_hourly",
+      "total_suspicious_rides_hourly").map(col)
+    val gold = sink.read(spark).select(cols: _*)
     val expected = Medallion.goldAggregate(silver)
     assert(gold.except(expected).count() === 0 &&
       expected.except(gold).count() === 0,
@@ -104,10 +107,26 @@ class StreamingSpec extends SparkTestBase {
     // physically partitioned by date
     assert(new java.io.File(p.gold).listFiles()
       .exists(f => f.isDirectory && f.getName.startsWith("window_date=")))
+    // the default partitioned sink keeps history: the head version
+    // time-travels, and the previous version plus the change feed
+    // between them replays to the head
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols: _*).collect().map(_.toString).toSet
+    val head = sink.currentVersion(spark)
+    assert(head >= 1, s"need a merge version, got head $head")
+    assert(rows(sink.readVersion(spark, head)) === rows(gold))
+    val feed = sink.changeFeed(spark, head - 1, head)
+    val replayed = sink.readVersion(spark, head - 1)
+      .join(feed.select(Rides.goldKey.map(col): _*), Rides.goldKey,
+        "left_anti")
+      .unionByName(feed.filter(col("_change_type") =!= "delete")
+        .drop("_change_type"))
+    assert(rows(replayed) === rows(gold),
+      "previous version + change feed must replay to the head")
   }
 
-  test("partitioned gold with retainHistory: the LIVE streaming table " +
-      "time-travels and feeds delta CDC across waves") {
+  test("partitioned gold: the LIVE streaming table time-travels and " +
+      "feeds delta CDC across waves") {
     val root = tmpDir("streamh")
     val p = MedallionStream.Paths(s"$root/raw", s"$root/bronze",
       s"$root/silver", s"$root/gold", s"$root/ckpt")
@@ -118,13 +137,13 @@ class StreamingSpec extends SparkTestBase {
       MedallionStream.silverQuery(spark, p, Trigger.AvailableNow)
         .awaitTermination()
       MedallionStream.goldQuery(spark, p, Trigger.AvailableNow,
-        bounded = true, partitioned = true, retainVersions = 6,
-        retainHistory = true).awaitTermination()
+        bounded = true, partitioned = true, retainVersions = 6)
+        .awaitTermination()
     }
     RideGenerator.writeRaw(spark, p.raw, 3000L)
     drainWave()
     val sink = new ParquetUpsertSink(p.gold, Rides.goldKey,
-      Some("window_date"), retainVersions = 6, retainHistory = true)
+      Some("window_date"), retainVersions = 6)
     val v1 = sink.currentVersion(spark)
     val cols = Seq("window_start", "window_end", "driver_id",
       "total_rides_hourly", "avg_fare_hourly",
@@ -173,13 +192,13 @@ class StreamingSpec extends SparkTestBase {
       MedallionStream.silverQuery(spark, p, Trigger.AvailableNow)
         .awaitTermination()
       MedallionStream.goldQuery(spark, p, Trigger.AvailableNow,
-        bounded = true, partitioned = true, retainVersions = 8,
-        retainHistory = true).awaitTermination()
+        bounded = true, partitioned = true, retainVersions = 8)
+        .awaitTermination()
     }
     RideGenerator.writeRaw(spark, p.raw, 3000L)
     drainWave()
     val sink = new ParquetUpsertSink(p.gold, Rides.goldKey,
-      Some("window_date"), retainVersions = 8, retainHistory = true)
+      Some("window_date"), retainVersions = 8)
     val v1 = sink.currentVersion(spark)
     val cols = Seq("window_start", "window_end", "driver_id",
       "total_rides_hourly", "avg_fare_hourly",

@@ -318,10 +318,10 @@ class UpsertSpec extends SparkTestBase {
 
   test("history-keeping partitioned sink: concurrent writers serialize, " +
       "every intermediate version stays reconstructible") {
-    // the stress twin WITH retainHistory: serialized writers must
-    // leave a replayable actions chain — after the storm, every
-    // retained version time-travels to a state that is a prefix-merge
-    // of the writers that had committed by then
+    // the stress twin with a deeper retention window: serialized
+    // writers must leave a replayable actions chain — after the storm,
+    // every retained version time-travels to a state that is a
+    // prefix-merge of the writers that had committed by then
     val dir = tmpDir("upsertconch") + "/gold"
     val writers = 5
     import scala.concurrent.{Await, Future}
@@ -332,8 +332,7 @@ class UpsertSpec extends SparkTestBase {
       val fs = (0 until writers).map { w =>
         Future {
           val sink = new ParquetUpsertSink(dir, keys,
-            Some("window_start"), retainVersions = 8,
-            retainHistory = true)
+            Some("window_start"), retainVersions = 8)
           val rows = Seq(("2024-01-01 10:00:00", f"DRVH$w%02d",
             w.toLong, w * 1.0))
             .toDF("window_start", "driver_id", "total", "avg_fare")
@@ -343,7 +342,7 @@ class UpsertSpec extends SparkTestBase {
       fs.foreach(Await.result(_, Duration("180s")))
     } finally pool.shutdown()
     val reader = new ParquetUpsertSink(dir, keys, Some("window_start"),
-      retainVersions = 8, retainHistory = true)
+      retainVersions = 8)
     val got = reader.read(spark).collect()
       .map(r => r.getAs[String]("driver_id") -> r.getAs[Long]("total")).toMap
     assert(got === (0 until writers)
@@ -369,7 +368,7 @@ class UpsertSpec extends SparkTestBase {
       "sets and fail reconstruction LOUDLY") {
     val dir = tmpDir("upserthgc") + "/gold"
     val sink = new ParquetUpsertSink(dir, keys, Some("window_start"),
-      retainVersions = 2, retainHistory = true)
+      retainVersions = 2)
     (0 until 4).foreach { i =>
       sink.upsert(spark,
         Seq(("2024-01-01 10:00:00", f"DRV$i%02d", i.toLong, i * 1.0))
@@ -390,6 +389,58 @@ class UpsertSpec extends SparkTestBase {
     // the retained non-head version still travels
     assert(sink.readVersion(spark, 2L).count() === 3L)
     assert(sink.readVersion(spark, 3L).count() === 4L)
+  }
+
+  test("a partitioned table whose early commits have no actions record " +
+      "stays writable; only travel into those versions fails loudly") {
+    val dir = tmpDir("upsertlegacy") + "/gold"
+    val sink = new ParquetUpsertSink(dir, keys, Some("window_start"),
+      retainVersions = 6)
+    sink.upsert(spark, base, batchId = 0)
+    sink.upsert(spark, updates, batchId = 1)
+    // v0 and v1 as a writer without history left them: no actions
+    // records, no frozen files
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (0 to 1).foreach(v => assert(f.delete(
+      new org.apache.hadoop.fs.Path(s"$dir/_commits/actions-$v.json"), false)))
+    f.delete(new org.apache.hadoop.fs.Path(s"$dir/_history"), true)
+    def state(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("window_start").cast("string"), col("driver_id"),
+        col("total"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .toSet
+    val atV1 = state(sink.read(spark))
+    // upserts still work, and the versions they write travel
+    sink.upsert(spark, Seq(("2024-01-01 13:00:00", "DRV004", 4L, 40.0))
+      .toDF("window_start", "driver_id", "total", "avg_fare"), batchId = 2)
+    val atV2 = state(sink.read(spark))
+    sink.upsert(spark, Seq(("2024-01-01 10:00:00", "DRV002", 8L, 80.0))
+      .toDF("window_start", "driver_id", "total", "avg_fare"), batchId = 3)
+    assert(sink.currentVersion(spark) === 3L)
+    assert(state(sink.read(spark)) ===
+      atV2 - (("2024-01-01 10:00:00", "DRV002", 3L)) +
+        (("2024-01-01 10:00:00", "DRV002", 8L)))
+    assert(state(sink.readVersion(spark, 2L)) === atV2)
+    // v1 is reached through v2's and v3's records alone
+    assert(state(sink.readVersion(spark, 1L)) === atV1)
+    val feed = sink.changeFeed(spark, 2L, 3L).collect()
+      .map(r => (r.getAs[String]("driver_id"),
+        r.getAs[String]("_change_type"))).toSet
+    assert(feed === Set(("DRV002", "update_postimage")))
+    // v0 needs v1's missing record: travel and the feed fail loudly
+    val travel = intercept[IllegalArgumentException] {
+      sink.readVersion(spark, 0L).collect()
+    }
+    assert(travel.getMessage.contains("not reconstructible") &&
+      travel.getMessage.contains("without history"), travel.getMessage)
+    val cdc = intercept[IllegalArgumentException] {
+      sink.changeFeed(spark, 0L, 3L).collect()
+    }
+    assert(cdc.getMessage.contains("not reconstructible"), cdc.getMessage)
+    intercept[IllegalArgumentException] {
+      sink.changesBetween(spark, 0L, 2L).collect()
+    }
   }
 
   test("partitioned sink: losing the v0 create race preserves the winner") {
@@ -840,14 +891,13 @@ class UpsertSpec extends SparkTestBase {
       "compaction splits into bounded rounds") {
     import graft.operators.AutoCompact
     val dir = tmpDir("upserts") + "/pautochunk"
-    // retainHistory makes each compaction round its own recorded
-    // commit — the round count is then directly observable: a 1-byte
+    // each compaction round is its own recorded commit — the round
+    // count is then directly observable: a 1-byte
     // budget must put each of the three fragmented dirs in its own
     // round (3 commits after the upsert's), where the unbounded path
     // would take one
     val sink = new ParquetUpsertSink(dir, Seq("k"),
       partitionCol = Some("day"), retainVersions = 8,
-      retainHistory = true,
       autoCompact = Some(AutoCompact(files = 3,
         maxBytesPerRun = Some(1L))))
     val df = spark.range(600).toDF("k")
