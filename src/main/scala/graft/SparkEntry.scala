@@ -425,12 +425,15 @@ object SparkEntry {
   private def h60Sql(e: String) =
     s"('0x' || substring(md5($e), 1, 15))::BIGINT"
 
+  /** Root of every on-disk query fixture (gitignored). */
+  private val fixturesRoot = "/root/repo/fixtures"
+
   /** Parquet fixture the `rides_e2e` query writes its generated bronze
     * batch to (and reads back from), so the DuckDB oracle can mirror
     * the whole medallion pipeline over byte-identical input. Rewritten
-    * on every run; gitignored.
+    * on every run.
     */
-  private val ridesBronzeFixture = "/root/repo/fixtures/rides_bronze"
+  private val ridesBronzeFixture = s"$fixturesRoot/rides_bronze"
 
   /** One build per (process, sf-dir) for fixtures their queries only
     * READ. The first call in a JVM always rebuilds the on-disk store
@@ -504,7 +507,7 @@ object SparkEntry {
                               updWhere: Column, updDelta: Long,
                               delWhere: Column)
       : (graft.operators.ParquetUpsertSink, Long) = {
-    val dir = s"/root/repo/fixtures/ivm_$sub"
+    val dir = s"$fixturesRoot/ivm_$sub"
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     val docs = t(s, d, "documents").select("doc_id", "source", "n_chars")
@@ -529,7 +532,7 @@ object SparkEntry {
   private def skipScanFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink =
     memoFixture("skip_scan", d) {
-    val dir = "/root/repo/fixtures/skip_scan"
+    val dir = s"$fixturesRoot/skip_scan"
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     val docs = t(s, d, "documents").select("doc_id", "source", "lang", "n_chars")
@@ -552,7 +555,7 @@ object SparkEntry {
   private def partSkipFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink =
     memoFixture("skip_scan_part", d) {
-    val dir = "/root/repo/fixtures/skip_scan_part"
+    val dir = s"$fixturesRoot/skip_scan_part"
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fsys.delete(p, true)
@@ -562,7 +565,7 @@ object SparkEntry {
       partitionCol = Some("lang"))
     sink.upsert(s, docs, batchId = 0)
     val bytes = fsys.getContentSummary(p).getLength
-    sink.compactPartitions(s, targetFileBytes = math.max(1L, bytes / 24),
+    sink.compact(s, targetFileBytes = math.max(1L, bytes / 24),
       clusterBy = Seq("doc_id", "n_chars"), zorder = true)
     sink
   }
@@ -579,7 +582,7 @@ object SparkEntry {
   private def bloomScanFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink =
     memoFixture("bloom_scan", d) {
-    val dir = "/root/repo/fixtures/bloom_scan"
+    val dir = s"$fixturesRoot/bloom_scan"
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     val docs = t(s, d, "documents").select("doc_id", "source", "lang", "n_chars")
@@ -610,7 +613,7 @@ object SparkEntry {
   private def partBloomFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink =
     memoFixture("bloom_scan_part", d) {
-    val dir = "/root/repo/fixtures/bloom_scan_part"
+    val dir = s"$fixturesRoot/bloom_scan_part"
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fsys.delete(p, true)
@@ -620,7 +623,7 @@ object SparkEntry {
       partitionCol = Some("lang"), bloomCols = Seq("doc_id"))
     sink.upsert(s, docs, batchId = 0)
     val bytes = fsys.getContentSummary(p).getLength
-    sink.compactPartitions(s, targetFileBytes = math.max(1L, bytes / 24),
+    sink.compact(s, targetFileBytes = math.max(1L, bytes / 24),
       clusterBy = Seq("n_chars"))
     sink
   }
@@ -661,7 +664,7 @@ object SparkEntry {
   private def partHistoryFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink =
     memoFixture("part_history", d)(
-      buildPartHistory(s, d, "/root/repo/fixtures/part_history"))
+      buildPartHistory(s, d, s"$fixturesRoot/part_history"))
 
   /** Fixture for `part_history_restore`: built ONCE like the
     * read-only fixtures, but with a retention window wide enough that
@@ -676,7 +679,7 @@ object SparkEntry {
   private def partRestoreFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink = {
     def get = memoFixture("part_history_restore", d)(
-      buildPartHistory(s, d, "/root/repo/fixtures/part_history_restore",
+      buildPartHistory(s, d, s"$fixturesRoot/part_history_restore",
         retainVersions = 64))
     val sink = get
     // retention headroom: each query call adds ≤2 restore commits, and
@@ -699,7 +702,7 @@ object SparkEntry {
   private def joinPruneFixture(s: SparkSession, d: String)
       : graft.operators.ParquetUpsertSink =
     memoFixture("join_prune", d) {
-    val dir = "/root/repo/fixtures/join_prune"
+    val dir = s"$fixturesRoot/join_prune"
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     val ords = t(s, d, "orders")
@@ -1994,7 +1997,7 @@ object SparkEntry {
 
     // Partitioned-layout skipping end to end: directory pruning on
     // the partition column + per-directory z-curve pruning on BOTH
-    // data columns (the r11 compactPartitions clusterBy/zorder path).
+    // data columns (the partitioned `compact` clusterBy/zorder path).
     // The oracle recomputes the predicate over the base table — a
     // hash match proves neither pruning axis drops a matching row.
     "upsert_scan_prune_part" -> ((s, d) => {

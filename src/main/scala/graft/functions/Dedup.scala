@@ -466,29 +466,7 @@ object Dedup {
       .select(col("doc_id"), fp.as("simhash"))
   }
 
-  /** Hamming distance between two 60-bit fingerprints (bit_count of
-    * xor) — the SimHash near-dup predicate.
-    */
-  def hammingDist(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   // ------------- cross-document exact substring spans -------------
-
-  /** Positional width-`w` token-shingle hashes: one row per (doc,
-    * token offset) — NOT distinct, position is the payload. The base
-    * relation for exact substring-span dedup; ~one 20-byte row per
-    * corpus token, built scan-side with codegen'd array expressions.
-    */
-  def positionalShingleHashes(docs: DataFrame, idCol: String,
-                              textCol: String, w: Int): DataFrame =
-    // fused native window-hash (see [[docShingleHashes]]); posexplode
-    // of the hash array preserves positions — the string shingle
-    // never exists
-    docs
-      .select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("tk"))
-      .select(col("doc_id"),
-        posexplode(graft.plans.ShingleHashesExpr.shingle_hashes(
-          col("tk"), w)).as(Seq("pos", "sh")))
 
   /** The (doc_id, tk) token projection the span operators scan —
     * exposed so a caller that already tokenized the corpus (e.g. the

@@ -79,9 +79,6 @@ object Text {
       .otherwise(lit("und"))
   }
 
-  /** Number of whitespace tokens. */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** BPE-ish token estimate: ceil(chars / 4) — the standard ~4 chars
     * per subword heuristic, as a cheap pre-tokenization size estimate.
     */

@@ -67,19 +67,19 @@ object Upsert {
   * autoCompact analog): after a successful upsert whose new state
   * holds more than `files` small files — in the versioned snapshot, or
   * in any one partition directory of the partitioned layout — the
-  * sink immediately compacts ([[ParquetUpsertSink.compact]] /
-  * [[ParquetUpsertSink.compactPartitions]]) with the given layout
-  * spec, so a streaming sink never accumulates micro-batch
-  * fragmentation without operator intervention. Compaction rides the
-  * normal commit protocol (losing its version race to a concurrent
-  * writer just abandons the attempt), so auto mode adds no new failure
-  * surface.
+  * sink immediately compacts ([[ParquetUpsertSink.compact]]) with the
+  * given layout spec, so a streaming sink never accumulates
+  * micro-batch fragmentation without operator intervention.
+  * Compaction rides the normal commit protocol (losing its version
+  * race to a concurrent writer just abandons the attempt), so auto
+  * mode adds no new failure surface. The four layout fields are
+  * [[ParquetUpsertSink.compact]]'s parameters.
   *
-  * @param maxBytesPerRun (partitioned layout) byte budget per rewrite
-  *   round, the [[ParquetUpsertSink.compactPartitions]] knob — a
-  *   pathologically fragmented table's first hands-free compaction
-  *   then proceeds in bounded groups instead of materializing its
-  *   whole rewrite set in one shot. None = single round.
+  * @param maxBytesPerRun (partitioned layout; the versioned layout
+  *   ignores it) byte budget per rewrite round — a pathologically
+  *   fragmented table's first hands-free compaction then proceeds in
+  *   bounded groups instead of materializing its whole rewrite set in
+  *   one shot. None = single round.
   */
 final case class AutoCompact(files: Int,
                              targetFileBytes: Long = 128L * 1024 * 1024,
@@ -148,19 +148,24 @@ private[graft] object UpsertCommit {
   *    and safe under concurrent writers (see Concurrency below).
   *  - `partitionCol = Some(c)`: data lives partitioned in place and
   *    merges rewrite only touched partitions (dynamic partition
-  *    overwrite). Every commit keeps the files it replaces, frozen
-  *    under `_history/v<version>/` by metadata-only renames, with a
-  *    per-commit add/remove actions record ([[PartitionedHistory]], a
-  *    write-ahead record keyed by the commit version) — so the in-place
-  *    layout has the versioned layout's whole capability set: time
-  *    travel ([[readVersion]]), change feed ([[changeFeed]]), restore,
-  *    and TABLE-granularity crash atomicity (a torn multi-partition
-  *    batch is rolled back to the last commit, never left partially
-  *    applied). Cost per commit: O(touched files) renames and one small
-  *    JSON record — never a byte copied; history bytes are bounded by
-  *    the replaced data of the retained commits and reclaimed by the
-  *    same GC. Plain `spark.read.parquet(path)` still works: `_history`
-  *    is underscore-hidden.
+  *    overwrite, passed as a write option so the caller's session
+  *    conf is never touched). Every in-place write — upsert, delete,
+  *    compact, restore — ends in one tail ([[commitInPlace]]): each
+  *    touched directory that still holds data gets fresh indexes, one
+  *    left empty is dropped. Every commit keeps the files it
+  *    replaces, frozen under `_history/v<version>/` by metadata-only
+  *    renames, with a per-commit add/remove actions record
+  *    ([[PartitionedHistory]], a write-ahead record keyed by the
+  *    commit version) — so the in-place layout has the versioned
+  *    layout's whole capability set: time travel ([[readVersion]]),
+  *    change feed ([[changeFeed]]), restore, and TABLE-granularity
+  *    crash atomicity (a torn multi-partition batch is rolled back to
+  *    the last commit, never left partially applied). Cost per commit:
+  *    O(touched files) renames and one small JSON record — never a
+  *    byte copied; history bytes are bounded by the replaced data of
+  *    the retained commits and reclaimed by the same GC. Plain
+  *    `spark.read.parquet(path)` still works: `_history` is
+  *    underscore-hidden.
   *
   * Idempotence per micro-batch: each commit records its batchId;
   * replays are skipped, preserving exactly-once on restart.
@@ -384,7 +389,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
           .orElse(headDir(spark)).getOrElse(return None)
         (s"$path/$dir", Seq((new Path(s"$path/$dir"), "", None)))
       case Some(pc) =>
-        if (pendingHistory(spark).nonEmpty) return None
+        if (pendingHistory(spark, f).nonEmpty) return None
         val names = PartitionedHistory.partitionDirs(f, new Path(path), pc)
         if (names.isEmpty) return None
         (path, names.map(d => (new Path(path, d), s"$d/",
@@ -538,17 +543,17 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     }
   }
 
-  /** [[scan]] against a RETAINED historical version — time travel and
-    * data skipping compose for free: each snapshot directory carries
-    * its own stats manifest, so a point lookup into last night's
-    * version prunes exactly like one into today's.
+  /** [[scan]] against a RETAINED historical version. Versioned
+    * layout: time travel and data skipping compose for free — each
+    * snapshot directory carries its own stats manifest, so a point
+    * lookup into last night's version prunes exactly like one into
+    * today's. Partitioned layout: [[readVersion]] filtered, unpruned
+    * (the stats manifests describe the live files only).
     */
   def scanVersion(spark: SparkSession, version: Long,
-                  predicate: org.apache.spark.sql.Column): DataFrame = {
-    require(partitionCol.isEmpty,
-      "time travel requires the versioned layout")
-    prunedRead(spark, predicate, Some(version))
-  }
+                  predicate: org.apache.spark.sql.Column): DataFrame =
+    if (partitionCol.isEmpty) prunedRead(spark, predicate, Some(version))
+    else readVersion(spark, version).filter(predicate)
 
   /** (files kept, total files) [[scan]]'s pruning decision admits for
     * `predicate` on the CURRENT version — skip-ratio telemetry (the
@@ -603,23 +608,23 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       // it, whether the evolved column appears depends on which footer
       // Spark samples (nondeterministic reads). Footer-only cost,
       // proportional to file count, not bytes. _commits is _-hidden.
-      val pending = pendingHistory(spark)
-      if (pending.isEmpty)
+      val f = fs(spark)
+      if (pendingHistory(spark, f).isEmpty)
         spark.read.option("mergeSchema", "true").parquet(path)
       else
         // a writer died mid-commit and no locked write has run since:
         // route around the torn directories through the frozen
         // originals — readers see the last COMMITTED state, mutating
         // nothing (recovery proper runs under the writer lock)
-        readFileMap(spark, PartitionedHistory.consistentLive(fs(spark),
+        readFileMap(spark, PartitionedHistory.consistentLive(f,
           new Path(path), commitsDir, pc, log.commits(spark).map(_._1).toSet))
   }
 
   /** Versions with a pending (uncommitted) history intent — nonempty
     * only between a writer crash and the next locked write's recovery.
     */
-  private def pendingHistory(spark: SparkSession): Seq[Long] =
-    PartitionedHistory.pendingVersions(fs(spark), commitsDir,
+  private def pendingHistory(spark: SparkSession, f: FileSystem): Seq[Long] =
+    PartitionedHistory.pendingVersions(f, commitsDir,
       log.commits(spark).map(_._1).toSet)
 
   /** Roll back incomplete history commits (writer died between intent
@@ -627,17 +632,11 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * the table a writer merges against is always the last committed
     * state, whatever happened to its predecessor.
     */
-  private def recoverIncomplete(spark: SparkSession): Unit = {
-    val f = fs(spark)
-    pendingHistory(spark).foreach { v =>
-      val touched =
-        PartitionedHistory.rollback(f, new Path(path), commitsDir, v)
-      touched.foreach { d =>
-        val dir = new Path(path, d)
-        if (f.exists(dir)) writeIndexes(spark, dir)
-      }
+  private def recoverIncomplete(spark: SparkSession, f: FileSystem): Unit =
+    pendingHistory(spark, f).foreach { v =>
+      finishDirs(spark, f,
+        PartitionedHistory.rollback(f, new Path(path), commitsDir, v))
     }
-  }
 
   /** Heal a table whose last writer died mid-commit without waiting
     * for the next write: takes the writer lock (recovery runs on
@@ -879,9 +878,10 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * [[PartitionedHistory]]); the caller holds the writer lock: the
     * write-ahead intent over the `touched` directories and every file
     * they hold, the freeze of `frozen` (default: all of those files)
-    * under `_history/v<version>/`, `write`, the actions record (`adds`,
-    * default the touched directories' files after the write; removes,
-    * the frozen files), the claim, and the intent's removal. A
+    * under `_history/v<version>/`, `write`, the finish of every touched
+    * directory ([[finishDirs]]), the actions record (`adds`, default
+    * the touched directories' files after the write; removes, the
+    * frozen files), the claim, and the intent's removal. A
     * lock-honouring writer cannot lose the claim, so a loss means one
     * bypassed the lock — and an in-place rewrite cannot be rolled back,
     * only surfaced.
@@ -899,6 +899,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     PartitionedHistory.moveToHistory(f, root, version, moved)
     betweenHistoryMoveAndWrite(version)
     write
+    finishDirs(spark, f, touched)
     PartitionedHistory.writeActions(f, commitsDir, version,
       PartitionedHistory.Actions(
         adds.getOrElse(PartitionedHistory.listDirFiles(f, root, touched)),
@@ -932,19 +933,14 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
         () // lost race: the claim loses and the retry re-merges
     }
 
-  /** Run `body` under dynamic partition-overwrite mode, restoring the
-    * session's previous setting afterwards (don't leak dynamic mode).
+  /** The in-place write: a dynamic partition overwrite of exactly the
+    * partitions `data` holds. The mode is a write option, which the
+    * writer reads ahead of the session conf, so the caller's session
+    * (shared by every thread on it) is never touched.
     */
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def overwritePartitions(data: DataFrame, pc: String): Unit =
+    data.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(pc).parquet(path)
 
   /** Commit-time index write for one data directory: the footer-stats
     * manifest, plus per-file blooms when the sink indexes any columns.
@@ -955,33 +951,21 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     if (bloomCols.nonEmpty) FileSkipping.writeBlooms(spark, dir, bloomCols)
   }
 
-  /** Refresh the per-file stats manifest of the partition directories
-    * named by `values` (partition values as path-rendered STRINGS —
-    * the cast-to-string convention the writer's path fragments use;
-    * null → the Hive default dir). Touched-partition granularity:
-    * untouched directories keep their manifests, and a directory this
-    * writer emptied simply no longer exists.
+  /** The in-place tail for the partition directories `dirs` touched:
+    * one still holding parquet files gets fresh indexes, one holding
+    * none is dropped — its files are already frozen under `_history`,
+    * and a dynamic overwrite only replaces partitions present in its
+    * output, so an emptied directory would otherwise linger.
+    * Untouched directories keep their manifests.
     */
-  private def refreshPartitionStats(spark: SparkSession, pc: String,
-                                    values: Seq[String]): Unit = {
-    val f = fs(spark)
-    values.foreach { v =>
-      val dirName = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.getPartitionPathString(pc, v)
-      val dir = new Path(path, dirName)
-      if (f.exists(dir))
+  private def finishDirs(spark: SparkSession, f: FileSystem,
+                         dirs: Seq[String]): Unit =
+    dirs.foreach { d =>
+      val dir = new Path(path, d)
+      if (PartitionedHistory.parquetFiles(f, dir).nonEmpty)
         writeIndexes(spark, dir)
+      else f.delete(dir, true)
     }
-  }
-
-  /** As above for a FULL-table rewrite (schema widening): refresh
-    * every partition directory present on disk.
-    */
-  private def refreshAllPartitionStats(spark: SparkSession,
-                                       pc: String): Unit = {
-    PartitionedHistory.partitionDirs(fs(spark), new Path(path), pc)
-      .foreach(d => writeIndexes(spark, new Path(path, d)))
-  }
 
   /** After a successful upsert committing `c`: compact immediately
     * when the new state exceeds the configured small-file budget. Runs
@@ -990,8 +974,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     *
     * Versioned layout: snapshot file count over budget → [[compact]].
     * Partitioned layout: any partition DIRECTORY over budget →
-    * per-partition compaction — invoked directly on the locked body,
-    * since the enclosing upsert already holds the writer lock
+    * [[compact]]'s per-partition body, invoked directly since the
+    * enclosing upsert already holds the writer lock
     * ([[withWriterLock]] is not reentrant); a lock-bypassing caller
     * (`writerLockEnabled = false`) accepts the same exposure its
     * upserts already have.
@@ -1003,7 +987,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
           val nFiles = PartitionedHistory.parquetFiles(fs(spark),
             new Path(s"$path/${c.dataDir}")).size
           if (nFiles > ac.files)
-            compact(spark, ac.targetFileBytes, ac.clusterBy, ac.zorder)
+            compactVersioned(spark, ac.targetFileBytes, ac.clusterBy, ac.zorder)
         case Some(pc) =>
           val f = fs(spark)
           val fragmented = PartitionedHistory.partitionDirs(f,
@@ -1011,7 +995,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
             PartitionedHistory.parquetFiles(f, new Path(path, d)).size >
               ac.files)
           if (fragmented)
-            compactPartitionsLocked(spark, pc, ac.targetFileBytes,
+            compactPartitioned(spark, pc, ac.targetFileBytes,
               ac.clusterBy, ac.zorder, ac.maxBytesPerRun)
       }
     }
@@ -1085,40 +1069,74 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     try {
       // under the lock, before any work: heal whatever a crashed
       // predecessor left half-applied
-      recoverIncomplete(spark)
+      recoverIncomplete(spark, f)
       body
     } finally f.delete(writerLockPath, false)
   }
 
   /** Compaction (the Delta OPTIMIZE analog, reference D2:
-    * `SET ...optimize.maxFileSize=128MB`, 03_gold_realtime_rides.py:75):
-    * rewrite the current snapshot as ⌈bytes / targetFileBytes⌉ files
-    * in a new committed version. Safe under the same crash protocol
-    * as upserts; no-op on empty or partitioned tables (those
-    * consolidate per-partition via [[compactPartitions]]).
+    * `SET ...optimize.maxFileSize=128MB`, 03_gold_realtime_rides.py:75),
+    * one entry point for both layouts, each rewrite a committed
+    * version under the same crash protocol as upserts.
+    *
+    *  - Versioned layout: the current snapshot is rewritten as
+    *    ⌈bytes / targetFileBytes⌉ files. Returns the new snapshot
+    *    directory, or Nil when the table is empty or the version race
+    *    was lost (the racing upsert's snapshot supersedes ours).
+    *    `maxBytesPerRun` is ignored.
+    *  - Partitioned layout: every partition directory holding more
+    *    files than ⌈bytes / targetFileBytes⌉ is rewritten to that
+    *    count, IN PLACE under the writer lock (the only sound
+    *    multi-writer contract for in-place rewrites), committed as a
+    *    `compact` version — a crash mid-job is rolled back to every
+    *    partition's old content. Untouched partitions are never read
+    *    or rewritten. The streaming gold sink in its date-partitioned
+    *    mode re-fragments each touched partition to the batch's write
+    *    parallelism; this is the periodic consolidation that turns
+    *    those task-count files back into size-targeted ones. Returns
+    *    the rewritten partition directory names.
+    *
+    * @param clusterBy / `zorder`: the layout of each rewrite.
+    *   `clusterBy` range-partitions + sorts on the given data columns,
+    *   so each output file covers a DISJOINT range of the leading key
+    *   and min/max stats let a point/range predicate skip whole files;
+    *   `zorder = true` with ≥ 2 columns interleaves them into a
+    *   space-filling curve ([[ZOrder]]), so predicates on ANY clustered
+    *   column prune. On the partitioned layout both apply within each
+    *   directory, composing with directory pruning on the partition
+    *   column.
+    * @param maxBytesPerRun (partitioned layout) bound on the bytes
+    *   materialized per rewrite round: eligible directories are
+    *   compacted in greedily-packed groups of at most this many input
+    *   bytes, each group its own commit (still one writer-lock
+    *   acquisition for the call). A heavily fragmented 100 TB table
+    *   thus never pins its whole rewrite set in executor storage in
+    *   one shot — a crash between groups leaves every completed group
+    *   compacted and every pending group intact. None = single round.
     */
   def compact(spark: SparkSession,
               targetFileBytes: Long = 128L * 1024 * 1024,
               clusterBy: Seq[String] = Nil,
-              zorder: Boolean = false): Unit = {
-    if (partitionCol.nonEmpty) return
-    val (cur, head) = log.resolveLatest(spark).getOrElse(return)
+              zorder: Boolean = false,
+              maxBytesPerRun: Option[Long] = None): Seq[String] = {
+    require(maxBytesPerRun.forall(_ > 0), "maxBytesPerRun must be positive")
+    partitionCol match {
+      case None => compactVersioned(spark, targetFileBytes, clusterBy, zorder)
+      case Some(pc) => withWriterLock(spark)(compactPartitioned(spark, pc,
+        targetFileBytes, clusterBy, zorder, maxBytesPerRun))
+    }
+  }
+
+  /** [[compact]]'s versioned-layout body. */
+  private def compactVersioned(spark: SparkSession, targetFileBytes: Long,
+      clusterBy: Seq[String], zorder: Boolean): Seq[String] = {
+    val (cur, head) = log.resolveLatest(spark).getOrElse(return Nil)
     val curDir = head.dataDir
     val bytes = fs(spark).getContentSummary(new Path(s"$path/$curDir")).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val newV = cur + 1
     val dir = newDataDir(newV)
     val snapshot = spark.read.parquet(s"$path/$curDir")
-    // clusterBy (the OPTIMIZE ZORDER analog for one key prefix):
-    // range-partition + sort so each output file covers a DISJOINT
-    // range of the cluster key — file-manifest and row-group min/max
-    // stats then let a point/range predicate skip whole files ([[scan]]
-    // prunes them before any task is scheduled), where coalesce would
-    // leave every file spanning the full key range.
-    // zorder=true with >= 2 keys interleaves equal-depth bucket ranks
-    // into a space-filling-curve key ([[ZOrder]]) — each file covers a
-    // hyper-rectangle, so predicates on ANY clustered column prune,
-    // not just the leading one of a lexicographic sort.
     val arranged =
       if (clusterBy.isEmpty) snapshot.coalesce(nFiles)
       else if (zorder && clusterBy.size >= 2)
@@ -1131,64 +1149,17 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     arranged.write.mode("overwrite").parquet(s"$path/$dir")
     writeIndexes(spark, new Path(s"$path/$dir"))
     // compaction is an optimization: losing the version race to a
-    // concurrent upsert just abandons this attempt (the upsert's
-    // snapshot supersedes ours anyway)
-    if (!log.commitOnce(spark, newV,
-        UpsertCommit.now(head.batchId, dir, "compact")))
-      fs(spark).delete(new Path(s"$path/$dir"), true)
+    // concurrent upsert just abandons this attempt
+    if (log.commitOnce(spark, newV,
+        UpsertCommit.now(head.batchId, dir, "compact"))) Seq(dir)
+    else { fs(spark).delete(new Path(s"$path/$dir"), true); Nil }
   }
 
-  /** Per-partition compaction — OPTIMIZE for the PARTITIONED layout
-    * ([[compact]] covers the versioned one): every partition directory
-    * holding more files than ⌈bytes / targetFileBytes⌉ is rewritten to
-    * that count, IN PLACE under the writer lock (the only sound
-    * multi-writer contract for in-place rewrites), through one dynamic
-    * partition overwrite committed as a `compact` version — a crash
-    * mid-job is rolled back to every partition's old content.
-    * Untouched partitions are never read or rewritten; rewritten ones
-    * get fresh stats manifests. The streaming gold sink in its
-    * date-partitioned mode re-fragments each touched partition to the
-    * batch's write parallelism — this is the periodic consolidation
-    * that turns those task-count files back into size-targeted ones.
-    * Returns the rewritten partition directory names.
+  /** [[compact]]'s partitioned-layout body — caller MUST hold the
+    * writer lock (or accept lock-bypass, as the auto-compact path
+    * inside an already-locked upsert does).
     */
-  /** @param clusterBy / `zorder`: in-partition layout, mirroring
-    *   [[compact]]'s options — `clusterBy` range-partitions + sorts
-    *   each directory's rewrite on the given data columns (tight
-    *   min/max on the leading key), `zorder = true` with ≥ 2 columns
-    *   interleaves them into a space-filling curve so predicates on
-    *   ANY clustered column prune files WITHIN a partition directory
-    *   (the partitioned layout's stats manifests + partition-value
-    *   pseudo-stats then compose: directory pruning on the partition
-    *   column, curve pruning inside survivors).
-    * @param maxBytesPerRun bound on the bytes materialized per rewrite
-    *   round: eligible directories are compacted in greedily-packed
-    *   groups of at most this many input bytes, each group its own
-    *   materialize + dynamic overwrite (still one writer-lock
-    *   acquisition for the invocation). A heavily fragmented 100 TB
-    *   table thus never pins its whole rewrite set in executor
-    *   storage in one non-fault-tolerant shot — a crash between
-    *   groups leaves every completed group compacted and every
-    *   pending group intact. None = single round (small tables).
-    */
-  def compactPartitions(spark: SparkSession,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      clusterBy: Seq[String] = Nil,
-      zorder: Boolean = false,
-      maxBytesPerRun: Option[Long] = None): Seq[String] = {
-    val pc = partitionCol.getOrElse(return Seq.empty)
-    require(maxBytesPerRun.forall(_ > 0), "maxBytesPerRun must be positive")
-    withWriterLock(spark) {
-      compactPartitionsLocked(spark, pc, targetFileBytes, clusterBy,
-        zorder, maxBytesPerRun)
-    }
-  }
-
-  /** [[compactPartitions]] body — caller MUST hold the writer lock
-    * (or accept lock-bypass, as the auto-compact path inside an
-    * already-locked upsert does).
-    */
-  private def compactPartitionsLocked(spark: SparkSession, pc: String,
+  private def compactPartitioned(spark: SparkSession, pc: String,
       targetFileBytes: Long, clusterBy: Seq[String], zorder: Boolean,
       maxBytesPerRun: Option[Long]): Seq[String] = {
     val f = fs(spark)
@@ -1252,15 +1223,7 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
       val cs = log.commits(spark)
       commitInPlace(spark, nextVersion(cs),
         UpsertCommit.now(lastStreamBatch(cs), "-", "compact"),
-        groupDirs) {
-        withDynamicOverwrite(spark) {
-          arranged.write.mode("overwrite").partitionBy(pc).parquet(path)
-        }
-        refreshPartitionStats(spark, pc, group.map { e =>
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(e._1.drop(pc.length + 1))
-        })
-      }
+        groupDirs)(overwritePartitions(arranged, pc))
       groupDirs
     }
   }
@@ -1359,7 +1322,6 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     // forms name the partition directories
     val touched = updates.select(col(pc), col(pc).cast("string")).distinct()
       .collect().toSeq
-    val updateVals = touched.map(_.getString(1))
     // First batch: create (03_gold_realtime_rides.py:97-99) — via
     // DYNAMIC overwrite, writing only the batch's own partitions. A
     // STATIC overwrite here would delete the entire path, including a
@@ -1390,25 +1352,15 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
           else baseAll.filter(col(pc).isInCollection(touched.map(_.get(0))))
         (Upsert.merge(base, updates, keys).localCheckpoint(true), widens)
       }
-    val f = fs(spark)
     // a widening batch rewrites EVERY partition — its touched set is
     // every directory on disk plus any the batch creates
+    val batchDirs = touched.map(r => partDirName(pc, r.getString(1)))
     val touchedDirs =
-      if (!widens) updateVals.map(partDirName(pc, _))
-      else {
-        val onDisk = PartitionedHistory.partitionDirs(f, new Path(path), pc)
-        (onDisk ++ updateVals.map(partDirName(pc, _))).distinct
-      }
+      if (!widens) batchDirs
+      else (PartitionedHistory.partitionDirs(fs(spark), new Path(path), pc) ++
+        batchDirs).distinct
     val c = UpsertCommit.now(recorded(batchId, cs), "-", "upsert")
-    commitInPlace(spark, newV, c, touchedDirs) {
-      withDynamicOverwrite(spark) {
-        data.write.mode("overwrite").partitionBy(pc).parquet(path)
-      }
-      // touched-partition granularity for the manifest refresh too; a
-      // widening rewrite touched every partition
-      if (widens) refreshAllPartitionStats(spark, pc)
-      else refreshPartitionStats(spark, pc, updateVals)
-    }
+    commitInPlace(spark, newV, c, touchedDirs)(overwritePartitions(data, pc))
     maybeAutoCompact(spark, c)
   }
 
@@ -1422,10 +1374,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     * [[changeFeed]]. Partitioned layout: same writer-lock mutual
     * exclusion as [[upsert]] (in-place rewrites cannot be rolled
     * back), rewriting ONLY the partitions that hold matching rows —
-    * partition-pruned cost, with fully-emptied partitions' directories
-    * dropped explicitly (dynamic overwrite only replaces partitions
-    * PRESENT in the output, so an all-rows-deleted partition would
-    * otherwise silently resurrect).
+    * partition-pruned cost; a fully-emptied partition's directory is
+    * dropped by the in-place tail ([[finishDirs]]).
     *
     * SQL/Delta DELETE retracts only rows where the predicate is TRUE;
     * a NULL verdict (e.g. `delete(col("status") === "bad")` on a null
@@ -1493,23 +1443,8 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
     // with an empty actions record
     commitInPlace(spark, nextVersion(cs),
       UpsertCommit.now(recorded(batchId, cs), "-", "delete"),
-      touched.map(partDirName(pc, _))) {
-      survivors.foreach { s =>
-        val kept = s.select(col(pc).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSet
-        withDynamicOverwrite(spark) {
-          s.write.mode("overwrite").partitionBy(pc).parquet(path)
-        }
-        // partitions whose every row matched produce no output for the
-        // dynamic overwrite to replace — drop their directories (their
-        // data files are already frozen away)
-        touched.filterNot(kept).foreach { v =>
-          fs(spark).delete(new Path(path, partDirName(pc, v)), true)
-        }
-        // rewritten-and-surviving directories get fresh stats manifests
-        refreshPartitionStats(spark, pc, kept.toSeq)
-      }
-    }
+      touched.map(partDirName(pc, _)))(
+      survivors.foreach(overwritePartitions(_, pc)))
   }
 
   /** Reclaim ORPHAN snapshot directories (versioned layout) — the
@@ -1662,15 +1597,6 @@ class ParquetUpsertSink(path: String, keys: Seq[String],
               s"restore publish failed: $stage/$rel -> $dst")
         }
       } finally f.delete(stage, true)
-      // emptied directories vanish; surviving touched dirs get fresh
-      // index manifests
-      touchedDirs.foreach { d =>
-        val dir = new Path(root, d)
-        if (f.exists(dir)) {
-          val hasData = PartitionedHistory.parquetFiles(f, dir).nonEmpty
-          if (hasData) writeIndexes(spark, dir) else f.delete(dir, true)
-        }
-      }
     }
   }
 

@@ -325,7 +325,7 @@ class FileSkippingSpec extends SparkTestBase {
     sink.upsert(spark, grid.repartition(24), batchId = 0)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(new Path(s"$dir/day=a")).getLength
-    val rewritten = sink.compactPartitions(spark,
+    val rewritten = sink.compact(spark,
       targetFileBytes = math.max(1L, bytes / 8),
       clusterBy = Seq("x", "y"), zorder = true)
     assert(rewritten.toSet === Set("day=a", "day=b"))
@@ -570,7 +570,7 @@ class FileSkippingSpec extends SparkTestBase {
     sink.upsert(spark, df, batchId = 0)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirBytes = fs.getContentSummary(new Path(s"$dir/day=d0")).getLength
-    sink.compactPartitions(spark,
+    sink.compact(spark,
       targetFileBytes = math.max(1L, dirBytes / 4), clusterBy = Seq("k"))
     def sel(jk: String, dt: org.apache.spark.sql.types.DataType,
             keys: Seq[Any]): (Seq[String], Int) = {
@@ -796,28 +796,34 @@ class FileSkippingSpec extends SparkTestBase {
   }
 
   test("scanVersion: time travel and pruning compose") {
-    val dir = tmpDir("fskip") + "/tt"
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val df = spark.range(1000).toDF("id")
       .withColumn("v", col("id") * 2)
+      .withColumn("day", (col("id") % 4).cast("string"))
       .repartitionByRange(8, col("id"))
-    val sink = new ParquetUpsertSink(dir, Seq("id"), retainVersions = 4)
-    sink.upsert(spark, df, batchId = 0)
-    val v0 = sink.currentVersion(spark)
-    sink.delete(spark, col("id") >= 500L, batchId = 1)
-    // the historical version still holds (and prunes for) the
-    // since-deleted range
-    val hist = sink.scanVersion(spark, v0, col("id") === 700L)
-    assert(hist.count() === 1)
-    assert(sink.scan(spark, col("id") === 700L).count() === 0)
-    // parity against the plain historical read
-    val pred = col("id") >= 100L && col("id") < 300L
-    assert(sink.scanVersion(spark, v0, pred).collect()
-      .map(_.toString).sorted.toSeq ===
-      sink.readVersion(spark, v0).filter(pred).collect()
-        .map(_.toString).sorted.toSeq)
-    intercept[IllegalArgumentException] {
-      sink.scanVersion(spark, 99L, pred).count()
+    // both layouts: one partitioned contract serves time travel too
+    for (partitionCol <- Seq(None, Some("day"))) {
+      val dir = tmpDir("fskip") + "/tt"
+      val sink = new ParquetUpsertSink(dir, Seq("id"), partitionCol,
+        retainVersions = 4)
+      sink.upsert(spark, df, batchId = 0)
+      val v0 = sink.currentVersion(spark)
+      sink.delete(spark, col("id") >= 500L, batchId = 1)
+      // the historical version still holds (and prunes for) the
+      // since-deleted range
+      val hist = sink.scanVersion(spark, v0, col("id") === 700L)
+      assert(hist.count() === 1, s"$partitionCol")
+      assert(sink.scan(spark, col("id") === 700L).count() === 0)
+      // parity against the plain historical read
+      val pred = col("id") >= 100L && col("id") < 300L
+      def sorted(d: DataFrame) =
+        d.select("id", "v", "day").collect().map(_.toString).sorted.toSeq
+      assert(sorted(sink.scanVersion(spark, v0, pred)) ===
+        sorted(sink.readVersion(spark, v0).filter(pred)), s"$partitionCol")
+      assert(sorted(sink.scanVersion(spark, v0, pred)).size === 200)
+      intercept[IllegalArgumentException] {
+        sink.scanVersion(spark, 99L, pred).count()
+      }
     }
   }
 

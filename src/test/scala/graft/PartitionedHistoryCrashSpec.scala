@@ -187,7 +187,7 @@ class PartitionedHistoryCrashSpec extends SparkTestBase {
     val postFiles = listing(dir)
     sink.crashAt = "afterMove"
     intercept[RuntimeException] {
-      sink.compactPartitions(spark, 1024L * 1024 * 1024)
+      sink.compact(spark, 1024L * 1024 * 1024)
     }
     sink.crashAt = ""
     assert(content(sink.read(spark)) === post)
@@ -195,7 +195,7 @@ class PartitionedHistoryCrashSpec extends SparkTestBase {
     assert(listing(dir) === postFiles)
     assert(content(sink.read(spark)) === post)
     // and a clean compaction afterwards succeeds with identical rows
-    sink.compactPartitions(spark, 1024L * 1024 * 1024)
+    sink.compact(spark, 1024L * 1024 * 1024)
     assert(content(sink.read(spark)) === post)
   }
 
@@ -330,7 +330,7 @@ class PartitionedHistoryCrashSpec extends SparkTestBase {
     sink.upsert(spark, batch("v1", 2L -> "a", 4L -> "c"), 1L); record()
     sink.delete(spark, col("dt") === "b", 2L); record()
     sink.upsert(spark, batch("v3", 3L -> "b", 5L -> "a"), 3L); record()
-    sink.compactPartitions(spark, 1024L * 1024 * 1024); record()
+    sink.compact(spark, 1024L * 1024 * 1024); record()
     sink.upsert(spark, batch("v5", 1L -> "a"), 4L); record()
     recorded.foreach { case (v, want) =>
       assert(content(sink.readVersion(spark, v)) === want,

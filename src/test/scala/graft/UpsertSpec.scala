@@ -790,7 +790,7 @@ class UpsertSpec extends SparkTestBase {
     assert(sink.read(spark).count() === 200)
   }
 
-  test("compactPartitions consolidates fragmented partition dirs in place") {
+  test("compact consolidates fragmented partition dirs in place") {
     val dir = tmpDir("upserts") + "/pcompact"
     val sink = new ParquetUpsertSink(dir, Seq("k"),
       partitionCol = Some("day"))
@@ -805,7 +805,7 @@ class UpsertSpec extends SparkTestBase {
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/day=$day"))
         .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     assert(filesIn("a") > 1 && filesIn("b") > 1, "fixture not fragmented")
-    val rewritten = sink.compactPartitions(spark,
+    val rewritten = sink.compact(spark,
       targetFileBytes = 1L << 40)
     assert(rewritten.toSet === Set("day=a", "day=b"))
     assert(filesIn("a") === 1 && filesIn("b") === 1,
@@ -820,10 +820,10 @@ class UpsertSpec extends SparkTestBase {
     assert(sink.scan(spark, pred).collect().map(_.toString).sorted.toSeq ===
       sink.read(spark).filter(pred).collect().map(_.toString).sorted.toSeq)
     // idempotent: nothing left over budget
-    assert(sink.compactPartitions(spark, targetFileBytes = 1L << 40).isEmpty)
+    assert(sink.compact(spark, targetFileBytes = 1L << 40).isEmpty)
   }
 
-  test("compactPartitions: maxBytesPerRun bounds each round, same final layout") {
+  test("compact: maxBytesPerRun bounds each round, same final layout") {
     val dir = tmpDir("upserts") + "/pchunk"
     val sink = new ParquetUpsertSink(dir, Seq("k"),
       partitionCol = Some("day"))
@@ -842,7 +842,7 @@ class UpsertSpec extends SparkTestBase {
     // a 1-byte budget forces EVERY eligible dir into its own rewrite
     // round (the at-least-one-dir-per-group rule keeps progress) — the
     // outcome must equal the unbounded single-round run's
-    val rewritten = sink.compactPartitions(spark, targetFileBytes = 1L << 40,
+    val rewritten = sink.compact(spark, targetFileBytes = 1L << 40,
       maxBytesPerRun = Some(1L))
     assert(rewritten.toSet === (0 until 4).map(i => s"day=d$i").toSet)
     (0 until 4).foreach(i =>
@@ -855,7 +855,7 @@ class UpsertSpec extends SparkTestBase {
     assert(sink.scan(spark, pred).collect().map(_.toString).sorted.toSeq ===
       sink.read(spark).filter(pred).collect().map(_.toString).sorted.toSeq)
     // idempotent: nothing left over budget
-    assert(sink.compactPartitions(spark, targetFileBytes = 1L << 40,
+    assert(sink.compact(spark, targetFileBytes = 1L << 40,
       maxBytesPerRun = Some(1L)).isEmpty)
   }
 
