@@ -425,12 +425,8 @@ object SparkEntry {
   private def h60Sql(e: String) =
     s"('0x' || substring(md5($e), 1, 15))::BIGINT"
 
-  /** Root of every on-disk query fixture (gitignored): `$FIXTURES_DIR`,
-    * else `fixtures` under the working directory. Absolute, since the
-    * DuckDB oracle SQL embeds it.
-    */
-  private val fixturesRoot = new java.io.File(
-    sys.env.getOrElse("FIXTURES_DIR", "fixtures")).getAbsolutePath
+  /** Root of every on-disk query fixture (gitignored). */
+  private val fixturesRoot = "/root/repo/fixtures"
 
   /** Parquet fixture the `rides_e2e` query writes its generated bronze
     * batch to (and reads back from), so the DuckDB oracle can mirror
